@@ -3,13 +3,15 @@
 A pass runs every query of the workload once, in the seed's order; a query
 is ``spec.fn(spark, data_dir)`` (the driver-side build) followed by a
 ``noop`` write (the execution), each under its own job group. The run is:
-cold set-up (session + one warm-up pass), timed passes until ``seconds``
-have elapsed (at least three), and last an untimed correctness pass that
-compares every query's result with its recorded oracle digest. A traced
-run inserts, before that check, warm-up and timed passes on a session with
-Spark's event log on (folded into the per-layer metrics) and once more on
-a plain session, so the tracing overhead is the traced pass time against
-the untraced ones on either side.
+cold set-up (session + one warm-up pass), untimed settling passes, timed
+passes until ``seconds`` have elapsed (at least three), and last an untimed
+correctness pass that compares every query's result with its recorded
+oracle digest. A traced
+run inserts, before that check, a warm-up pass and timed passes on a new
+session with Spark's event log on (folded into the per-layer metrics); the
+tracing overhead is the traced pass time against the untraced one. The JVM
+carries over and is warmer by then, so this understates the overhead by
+what the settled JVM still gains.
 """
 
 from __future__ import annotations
@@ -23,6 +25,11 @@ import digests
 import sessions
 from tracing import (Spans, TreeRss, Windows, final_captured, fold_event_log,
                      layer_metrics, read_event_log)
+
+# untimed passes between warm-up and the timed window: the JIT keeps
+# compiling for several passes after the warm-up one (after two settling
+# passes the next pass still ran up to a quarter slower than the ones after)
+SETTLE_PASSES = 3
 
 
 class BatchClient:
@@ -103,39 +110,33 @@ def run(ctx, workload: dict) -> dict:
     client = BatchClient(ctx, ctx.permute(workload["queries"]))
     spans = ctx.spans
 
-    def restart(conf: dict | None, prefix: str) -> list[dict]:
-        nonlocal spark
-        spark.stop()
-        spark = ctx.start_spark(conf)
-        client.run_pass(spark, f"warm-{prefix}")
-        return client.timed_passes(spark, ctx.seconds, prefix)
-
     with TreeRss(ctx.pid) as rss:
         with spans.span("session.start", "setup") as s_start:
             spark = ctx.start_spark()
         with spans.span("session.warm", "setup") as s_warm:
             client.run_pass(spark, "warm")
-        setup_s = time.time() - ctx.process_start
+        setup_s = time.time() - ctx.process_start - ctx.corpus_s
+        for i in range(SETTLE_PASSES):
+            client.run_pass(spark, f"settle{i}")
         passes = client.timed_passes(spark, ctx.seconds, "t")
         traced = None
         if ctx.trace:
-            # untraced, traced, untraced again: the JVM keeps warming across
-            # sessions, so the overhead is measured against both neighbours
-            traced = restart(sessions.event_log_conf(ctx.event_log_dir), "traced")
-            passes += restart(None, "u")
-        client.check(spark)
-        sessions.stop(spark)
-    untraced = [p for p in passes if p["label"].startswith("t")]
-    window_s = sum(p["wall_s"] for p in untraced)
-    times = [r["build_s"] + r["exec_s"] for p in untraced for r in p["queries"]]
-    builds = [r["build_s"] for p in untraced for r in p["queries"]]
+            spark.stop()
+            spark = ctx.start_spark(sessions.event_log_conf(ctx.event_log_dir))
+            client.run_pass(spark, "warm-traced")
+            traced = client.timed_passes(spark, ctx.seconds, "traced")
+        with spans.span("check", "check"):
+            client.check(spark)
+        with spans.span("session.stop", "check"):
+            sessions.stop(spark)
+    window_s = sum(p["wall_s"] for p in passes)
+    times = [r["build_s"] + r["exec_s"] for p in passes for r in p["queries"]]
     result = {
         "end_to_end": {
             "setup_s": setup_s,
-            "pass_s": statistics.median(p["seconds"] for p in untraced),
+            "pass_s": statistics.median(p["seconds"] for p in passes),
             "query_geomean_s": statistics.geometric_mean(times),
             "queries_per_s": len(times) / window_s,
-            "submit_geomean_s": statistics.geometric_mean(builds),
         },
         "passes": passes,
         "attempted": client.attempted,

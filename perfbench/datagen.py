@@ -12,13 +12,10 @@ label structure. Row counts scale with ``sf`` the way the catalog does
 The corpus depends only on ``(sf, seed)``: numpy's PCG64 stream plus
 pyarrow's writer give byte-identical files for identical arguments, so the
 oracle digests recorded against it (``digests.json``) stay valid.
-
-    python3 perfbench/datagen.py OUT_DIR [--sf 0.002] [--seed 7]
 """
 
 from __future__ import annotations
 
-import argparse
 import os
 
 import numpy as np
@@ -95,8 +92,8 @@ def _embeddings(rng: np.random.Generator, n: int) -> dict:
     }
 
 
-def generate(out_dir: str, sf: float, seed: int) -> dict[str, int]:
-    """Write the catalog under ``out_dir``; returns rows per table."""
+def generate(out_dir: str, sf: float, seed: int) -> None:
+    """Write the catalog under ``out_dir``."""
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(seed)
     n_cust, n_supp = int(150_000 * sf), max(int(10_000 * sf), 10)
@@ -168,17 +165,3 @@ def generate(out_dir: str, sf: float, seed: int) -> dict[str, int]:
     })
     _write(out_dir, "documents", _documents(rng, n_docs))
     _write(out_dir, "embeddings", _embeddings(rng, n_emb))
-    return {
-        "customer": n_cust, "supplier": n_supp, "part": n_part,
-        "orders": n_ord, "lineitem": n_line, "events": n_ev,
-        "documents": n_docs, "embeddings": n_emb,
-    }
-
-
-if __name__ == "__main__":
-    ap = argparse.ArgumentParser()
-    ap.add_argument("out_dir")
-    ap.add_argument("--sf", type=float, default=0.002)
-    ap.add_argument("--seed", type=int, default=7)
-    args = ap.parse_args()
-    print(generate(args.out_dir, args.sf, args.seed))

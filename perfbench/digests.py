@@ -25,6 +25,9 @@ import tempfile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 DIGESTS_PATH = os.path.join(HERE, "digests.json")
+# the corpus the digests are recorded on; a run reads them from digests.json
+CORPUS_SF = 0.05
+CORPUS_SEED = 7
 
 
 def norm_cell(v) -> str:
@@ -71,7 +74,7 @@ def record() -> None:
     import datagen
     from go_web_mapreduce_spark.queries import REGISTRY
     from go_web_mapreduce_spark.sources.tables import TABLES
-    from workloads import CORPUS_SEED, CORPUS_SF, WORKLOADS
+    from workloads import WORKLOADS
 
     with tempfile.TemporaryDirectory() as data:
         datagen.generate(data, CORPUS_SF, CORPUS_SEED)

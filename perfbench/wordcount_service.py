@@ -185,8 +185,6 @@ def run(ctx, cfg: dict) -> dict:
             "pass_s": statistics.median(_rounds(ok)),
             "query_geomean_s": statistics.geometric_mean(lat),
             "queries_per_s": len(ok) / wall,
-            "submit_geomean_s": statistics.geometric_mean(
-                r["post_end"] - r["post_start"] for r in ok),
         },
         "algorithms": records,
     }

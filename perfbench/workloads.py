@@ -1,39 +1,27 @@
-"""The benchmark's workloads: which engine entry points each drives, and why.
+"""The benchmark's workloads: which engine entry points each drives.
 
 Every batch workload is one closed-loop client running its queries
 sequentially (``spec.fn`` then a ``noop`` write) over the synthetic corpus
 from ``datagen.py``; the seed permutes the query order of every pass. The
 service workload drives ``http_api.serve_background`` in a server process
-with concurrent HTTP clients; the seed draws the word-count inputs.
+with concurrent HTTP clients; the seed draws the word-count inputs. Why
+each workload was chosen is in ``BENCHMARK.json``.
 
 The query lists are subsets of the registry chosen so that one run (cold
-set-up, a warm-up pass, timed passes, the correctness pass) fits the
-benchmark's per-run budget on a 4-core host; at this corpus size the fixed
-per-query costs (planning, job scheduling, Python worker round trips)
-dominate, which is the regime the service sees too.
+set-up, warm-up and settling passes, timed passes, the correctness pass)
+fits the benchmark's per-run budget on a 4-core host.
 """
 
 from __future__ import annotations
 
-CORPUS_SF = 0.002
-CORPUS_SEED = 7
-
 WORKLOADS: dict[str, dict] = {
     "batch-sql": {
-        "why": "Catalyst-native scan/shuffle/join/agg/window queries, no Python node: "
-               "the control that Python-boundary and driver-build changes must not move",
         "queries": [
             "q_group_agg", "q_multi_join", "q_window_frames", "q_sessionize",
+            "q_stream_topk",
         ],
     },
-    "batch-python-driver": {
-        "why": "a mapInPandas range-prefix kernel and a streaming query run to completion "
-               "by processAllAvailable: loads functions, driver-side build, streaming",
-        "queries": ["q_window_distribution", "q_stream_topk"],
-    },
     "service-wordcount": {
-        "why": "3 closed-loop HTTP clients alternating python/sql word counts "
-               "against one server: the only load on http_api/service/core concurrency",
         "clients": 3,
         "words_per_algo": 2000,
         "vocabulary": 5000,
