@@ -225,36 +225,6 @@ def simhash(toks: Column, bits: int = 60) -> Column:
     return simhash_from_hashes(token_hashes(toks, bits), F.size(toks), bits)
 
 
-def simhash_from_hashes_arrow(hashed: Column, bits: int = 60) -> Column:
-    """Arrow-vectorized SimHash fold over pre-hashed tokens.
-
-    Identical output to :func:`simhash_from_hashes` — integer bit-count +
-    majority vote, exact in any engine — but the fold runs as a numpy
-    popcount matrix per Arrow batch instead of an interpreted
-    ``zip_with``-per-token Catalyst fold (higher-order functions are
-    CodegenFallback, so the Column version pays interpreter dispatch per
-    token×bit; measured ~10× slower than this at sf0.1).
-    """
-    if not 1 <= bits <= 60:
-        raise ValueError("bits must be in [1, 60]")
-
-    @F.pandas_udf("bigint")
-    def fold(hs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        shifts = np.arange(bits, dtype=np.int64)
-        out = np.zeros(len(hs), dtype=np.int64)
-        for row, arr in enumerate(hs):
-            a = np.asarray(arr, dtype=np.int64)
-            if a.size == 0:
-                continue
-            counts = ((a[:, None] >> shifts) & 1).sum(axis=0)
-            out[row] = int(((counts * 2 >= a.size).astype(np.int64) << shifts).sum())
-        return pd.Series(out)
-
-    return fold(hashed)
-
-
 def simhash_from_tokens_arrow(toks: Column, bits: int = 60) -> Column:
     """Arrow-vectorized SimHash straight from the token array: the per-token
     ``bits``-wide md5 hash AND the popcount/majority fold run in one

@@ -93,10 +93,6 @@ def hll_bucket_sql_duckdb(value_expr: str) -> str:
     return f"('0x' || substr(md5({value_expr}), 1, 3))::BIGINT"
 
 
-def hll_bucket_sql_spark(value_expr: str) -> str:
-    return f"CAST(conv(substr(md5({value_expr}), 1, 3), 16, 10) AS BIGINT)"
-
-
 def hll_rank_sql(value_expr: str) -> str:
     """Rank SQL — token-identical in both dialects."""
     return _rank_sql(f"substr(md5({value_expr}), 4, {HLL_RANK_HEX})")

@@ -1254,19 +1254,19 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape (the VERDICT-r11 #1 rewrite): the old plan ranked the
     per-order table with TWO ``Window.partitionBy(flag)`` passes — flag is
     a 3-value key, so at 100 TB each window partition is corpus/3-sized on
-    one task, the textbook straggler. Now both midranks come from value
-    censuses: n_items is a ≤ flags × ~50-value grid (tiny window over the
-    census — the q_kruskal_wallis precedent), and the order-total census
-    (≈ |orders|, corpus-scaled) goes through
-    graph.py::keyed_midrank_census — range shuffle + weighted prefix sum +
-    (pid, flag) offset broadcast, no per-key window anywhere. Midrank
-    doubles are constructed by the exact same operand/operation sequence
-    as the window form (integer rank + (count-1)/2), so every rx/ry — and
-    therefore every decimal moment and the final rho — is bit-identical
-    to the oracle's rank()/count() formulation."""
+    one task, the textbook straggler. Now n_items midranks come from a
+    value census — a ≤ flags × ~50-value grid (tiny window over the
+    census — the q_kruskal_wallis precedent) — and order-total midranks
+    (≈ |orders| distinct, corpus-scaled) from graph.py::range_prefix row
+    positions — range shuffle + (pid, flag) offset broadcast, no per-key
+    window anywhere. Midrank doubles are constructed by the exact same
+    operand/operation sequence as the window form (integer rank +
+    (count-1)/2), so every rx/ry — and therefore every decimal moment and
+    the final rho — is bit-identical to the oracle's rank()/count()
+    formulation."""
     from pyspark.sql import Window as W
 
-    from go_web_mapreduce_spark.operators.graph import keyed_midrank_census
+    from go_web_mapreduce_spark.operators.graph import range_prefix
 
     li = load_table(spark, sf_dir, "lineitem")
     p100 = (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("bigint")
@@ -1276,19 +1276,13 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_items"),
         (F.sum(p100).cast("double") / 100.0).alias("total"),
     )
-    # feeds the two censuses and the rank-attach join — pin so the corpus
-    # aggregation runs once (orders-scaled; the q_rfm_segments discipline)
+    # feeds the value census, the rank pass and the rank-attach join — pin
+    # so the corpus aggregation runs once (the q_rfm_segments discipline)
     per_order = per_order.localCheckpoint(eager=False)
 
-    def census_midrank(cen: DataFrame, val: str) -> F.Column:
-        # midrank over a census: rank = 1 + #smaller (weighted), expressed
-        # with the identical double algebra as the window form
-        wv = (
-            W.partitionBy("flag")
-            .orderBy(val)
-            .rowsBetween(W.unboundedPreceding, -1)
-        )
-        cum_less = F.coalesce(F.sum("c").over(wv), F.lit(0))
+    def midrank(cum_less: F.Column) -> F.Column:
+        # rank = 1 + #smaller, plus half the tie group of size c, with the
+        # identical double algebra as the window form
         return (cum_less + 1).cast("double") + (
             F.col("c").cast("double") - 1
         ) / 2
@@ -1298,15 +1292,22 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     xcen = per_order.groupBy("flag", "n_items").agg(
         F.count(F.lit(1)).alias("c")
     )
-    xr = xcen.select("flag", "n_items", census_midrank(xcen, "n_items").alias("rx"))
-    # order totals are ~|orders| distinct — corpus-scaled: midranks via the
-    # range-shuffled weighted prefix machinery, no 3-partition window
-    ycen = per_order.groupBy("flag", "total").agg(F.count(F.lit(1)).alias("c"))
-    # pin=True: ycen is an orders-scaled aggregation; the census machinery
-    # traverses its input twice (sampler sketch + shuffle write), so the
-    # scratch pin pays the aggregation once (SCALE.md pin rule 3)
-    yr = keyed_midrank_census(ycen, "flag", "total", "c", pin=True).select(
-        "flag", "total", F.col("midrank").alias("ry")
+    wv = W.partitionBy("flag").orderBy("n_items").rowsBetween(
+        W.unboundedPreceding, -1
+    )
+    xr = xcen.select(
+        "flag", "n_items",
+        midrank(F.coalesce(F.sum("c").over(wv), F.lit(0))).alias("rx"),
+    )
+    # order totals are ~|orders| distinct — corpus-scaled: rank the orders
+    # by range shuffle, no 3-partition window. Tied totals are contiguous
+    # in that order, so min(cum_less) per (flag, total) counts the
+    # strictly smaller ones.
+    yr = (
+        range_prefix(per_order, "total", key="flag")
+        .groupBy("flag", "total")
+        .agg(F.min("cum_less").alias("cum_less"), F.count(F.lit(1)).alias("c"))
+        .select("flag", "total", midrank(F.col("cum_less")).alias("ry"))
     )
     ranked = (
         per_order.join(F.broadcast(xr), ["flag", "n_items"])
@@ -1383,7 +1384,7 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sum accumulates in DECIMAL(28,0) (it grows ~cents*n^2/2 per nation "
     "and would wrap a BIGINT around sf~50-100). Plan: one (nation, "
     "customer) aggregation, a range-shuffled keyed row index "
-    "(keyed_midrank_census, c=1 — never a per-nation window), a "
+    "(range_prefix — never a per-nation window), a "
     "nations-sized reduce",
 )
 def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1402,20 +1403,15 @@ def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r12 sibling of the q_spearman rewrite: the per-nation row_number
     # window put corpus/|nations| customer rows on one task at 100 TB.
-    # (cents, cust) is a unique total order within nation, so with c = 1
-    # the keyed weighted prefix gives i = cum_less + 1 exactly; n comes
-    # from the nations-sized census broadcast.
-    from go_web_mapreduce_spark.operators.graph import keyed_midrank_census
+    # (cents, cust) is a unique total order within nation, so the keyed
+    # range prefix gives i = cum_less + 1 exactly; n comes from the
+    # nations-sized census broadcast.
+    from go_web_mapreduce_spark.operators.graph import range_prefix
 
     rev = rev.localCheckpoint(eager=False)  # feeds the rank pass + census
     ncen = rev.groupBy("nation").agg(F.count(F.lit(1)).alias("n"))
     ranked = (
-        keyed_midrank_census(
-            rev.withColumn("c", F.lit(1).cast("long")),
-            "nation",
-            ["cents", "cust"],
-            "c",
-        )
+        range_prefix(rev, ["cents", "cust"], key="nation")
         .join(F.broadcast(ncen), "nation")
         .select(
             "nation", "cents",
@@ -1743,21 +1739,20 @@ def _ntile_from_pos(pos, nn, q: int):
 def _global_ntile(u: DataFrame, metric: str, out: str) -> DataFrame:
     """(user_id, ``out``) with ``out`` = ntile(RFM_Q) over
     (``metric`` DESC, user_id) — computed via the range-partitioned
-    global_sort_index (descending realized by negating the integral
-    metric), never a single-partition window."""
-    from go_web_mapreduce_spark.operators.graph import global_sort_index
+    range_prefix (descending realized by negating the integral metric),
+    never a single-partition window."""
+    from go_web_mapreduce_spark.operators.graph import range_prefix
 
     nn_df = u.agg(F.count(F.lit(1)).alias("nn"))
-    ranked = global_sort_index(
+    ranked = range_prefix(
         u.select("user_id", (-F.col(metric)).alias("neg_m")),
-        "neg_m",
-        "user_id",
+        ["neg_m", "user_id"],
     )
     return (
         ranked.join(F.broadcast(nn_df))
         .select(
             "user_id",
-            _ntile_from_pos(F.col("global_pos"), F.col("nn"), RFM_Q).alias(out),
+            _ntile_from_pos(F.col("cum_less") + 1, F.col("nn"), RFM_Q).alias(out),
         )
     )
 
@@ -1799,7 +1794,7 @@ def _global_ntile(u: DataFrame, metric: str, out: str) -> DataFrame:
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One corpus shuffle to the per-user grid (localCheckpoint-ed: six
     traversals follow); each quintile is then a range-partitioned global
-    rank (graph.py::global_sort_index — range shuffle + local sort +
+    rank (graph.py::range_prefix — range shuffle + local sort +
     partition-count prefix sum) folded through the exact ntile bucket
     arithmetic (_ntile_from_pos), so NO corpus-scaled data ever moves to
     a single partition — the plan that survives billions of users. The
@@ -2024,7 +2019,7 @@ def q_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     the computed integer index — no percentile interpolation anywhere,
     so there is no float surface at all until the final census sums
     (also integers). The corpus rank is the range-partitioned
-    global_sort_index (graph.py) — range shuffle + local sort +
+    range_prefix (graph.py) — range shuffle + local sort +
     partition-count prefix sum — NOT a single-partition row_number, so
     the global order scales to corpus-sized document counts; (n_chars,
     doc_id) is a unique total order so the positions are bit-identical
@@ -2032,12 +2027,12 @@ def q_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition key. The census output is deliberately aggregate (not
     per-doc) so the operator composes as a mixing diagnostic, not a
     corpus rewrite."""
-    from go_web_mapreduce_spark.operators.graph import global_sort_index
+    from go_web_mapreduce_spark.operators.graph import range_prefix
 
     docs = load_table(spark, sf_dir, "documents")
-    corpus = global_sort_index(
-        docs.select(F.col("n_chars").alias("cv"), "doc_id"), "cv", "doc_id"
-    ).select("cv", F.col("global_pos").alias("gr"))
+    corpus = range_prefix(
+        docs.select(F.col("n_chars").alias("cv"), "doc_id"), ["cv", "doc_id"]
+    ).select("cv", (F.col("cum_less") + 1).alias("gr"))
     total = docs.agg(F.count(F.lit(1)).alias("nn"))
     # the index key is computed ENTIRELY on the per-source side (nn rides
     # a 1-row broadcast) so the rank lookup is a hash EQUI-join on gr — a
@@ -2045,20 +2040,15 @@ def q_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join (measured exp 1.52, 21 s at sf1; this form: 0.63 s, exp ~0).
     # The in-source rank is a keyed range-shuffled row index (r12: sibling
     # of the q_spearman rewrite) — the old Window.partitionBy(source)
-    # row_number put corpus/|sources| rows on one task at 100 TB. With
-    # c = 1 per row and the unique (n_chars, doc_id) total order,
-    # cum_less + 1 IS row_number() over (source ORDER BY n_chars, doc_id).
-    from go_web_mapreduce_spark.operators.graph import keyed_midrank_census
-
+    # row_number put corpus/|sources| rows on one task at 100 TB. Under
+    # the unique (n_chars, doc_id) total order, cum_less + 1 IS
+    # row_number() over (source ORDER BY n_chars, doc_id).
     ns_cen = docs.groupBy("source").agg(F.count(F.lit(1)).alias("ns"))
     per_src = (
-        keyed_midrank_census(
-            docs.select(
-                "source", F.col("n_chars").alias("orig"), "doc_id"
-            ).withColumn("c", F.lit(1).cast("long")),
-            "source",
+        range_prefix(
+            docs.select("source", F.col("n_chars").alias("orig"), "doc_id"),
             ["orig", "doc_id"],
-            "c",
+            key="source",
         )
         .join(F.broadcast(ns_cen), "source")
         .where(F.col("ns") > 1)
@@ -2178,9 +2168,9 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (types × 9 doubles) and pivots to fixed bin columns — the float PSI
     sum is ONE in-row expression over exact integers, never a float SUM
     across rows (the q_mutual_info discipline). The reference decile
-    edges are rank-selected from the (type, value) census via the
-    range-shuffled weighted prefix (keyed_midrank_census) — never a
-    per-type row_number window, whose partitions are corpus/|types|-sized
+    edges are rank-selected from the (type, value) census of range-
+    shuffled row positions (range_prefix) — never a per-type row_number
+    window, whose partitions are corpus/|types|-sized
     at 100 TB. PSI's role in the family: q_ks_drift detects ANY
     distributional difference (supremum test), PSI measures HOW MUCH
     mass moved in operating bins — the alerting metric teams page on."""
@@ -2198,15 +2188,16 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |types| rows on one task. The value at row position p of the
     # (value, event_id) order is the value v with rows(< v) < p ≤ rows(≤ v)
     # — the event_id tiebreak never changes WHICH VALUE holds a position —
-    # so rank selection needs only the (type, value) census and its exact
-    # weighted prefix (keyed_midrank_census.cum_less), never per-row ranks.
-    from go_web_mapreduce_spark.operators.graph import keyed_midrank_census
+    # so rank selection needs only the (type, value) census with each
+    # value's rows(< v): tied rows are contiguous in the range-shuffled
+    # value order, so that is min(cum_less) over the value's rows.
+    from go_web_mapreduce_spark.operators.graph import range_prefix
 
-    vcen = ref.groupBy("event_type", "value").agg(
-        F.count(F.lit(1)).alias("c")
+    vpos = (
+        range_prefix(ref, "value", key="event_type")
+        .groupBy("event_type", "value")
+        .agg(F.min("cum_less").alias("cum_less"), F.count(F.lit(1)).alias("c"))
     )
-    # pin=True: vcen is a corpus-pass aggregation (see q_spearman's note)
-    vpos = keyed_midrank_census(vcen, "event_type", "value", "c", pin=True)
     ncen = ref.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     edges = (
         vpos.join(F.broadcast(ncen), "event_type")

@@ -99,12 +99,6 @@ def _sh_sql(k: int = SHINGLE_K) -> str:
 # ---------------------------------------------------------------------------
 
 
-def dedup_exact(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Exact deduplication: keep one row per distinct value of ``cols``
-    (hash-groupBy; Catalyst plans a single shuffle on the hash)."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
-
-
 @query(
     "q_dedup_exact",
     oracle="""

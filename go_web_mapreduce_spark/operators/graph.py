@@ -11,7 +11,10 @@ remaining two as first-class, oracle-verified queries:
   (``repartitionByRange`` samples split points), a per-partition sort, and
   a per-partition-count prefix sum (≤ n_partitions rows — KBs on the
   driver side of the plan, never the corpus) that turns local indices into
-  global ones. No single-partition window anywhere: a naive
+  global ones. ``range_prefix`` builds it; keyed by a column it is also the
+  per-key row index behind every other range-shuffled rank in the engine
+  (q_ndcg, q_rfm_segments, q_quantile_norm, q_gini, q_window_distribution,
+  q_spearman, q_psi_drift). No single-partition window anywhere: a naive
   ``row_number() OVER (ORDER BY ...)`` collapses the whole corpus onto one
   task, which is exactly the plan this module exists to avoid.
 
@@ -25,9 +28,6 @@ remaining two as first-class, oracle-verified queries:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -53,206 +53,69 @@ PR_YEAR = 1995
 # distributed total-order sort (TeraSort shape)
 # ---------------------------------------------------------------------------
 
-def global_sort_index(df: DataFrame, *keys: str,
-                      num_partitions: int = SORT_PARTITIONS) -> DataFrame:
-    """Total order over ``keys`` with a 1-based ``global_pos`` column.
+# monotonically_increasing_id() = (partition index << 33) + row index, so
+# a range partition must hold fewer than 2^33 rows
+_POS_BITS = 33
 
-    Plan: range-shuffle on the keys (split points from Spark's reservoir
-    sample), sort within each partition, assign a local index per partition
-    in one Arrow pass, then add each partition's start offset — computed as
-    a prefix sum over the per-partition counts (a ≤ ``num_partitions``-row
-    aggregate, broadcast back). The result is layout-independent as long as
-    the key tuple is unique: positions come from the total order itself,
-    not from where the sampler happened to place split points.
 
-    At 100 TB: the ranged/sorted subtree feeds both the count aggregate and
-    the output, so on a real cluster persist it (or checkpoint past the
-    range shuffle) to scan the corpus once, not twice; the shuffle files
-    themselves make the second traversal cheap under AQE reuse.
+def range_prefix(df: DataFrame, order: str | list[str], key: str | None = None,
+                 num_partitions: int = SORT_PARTITIONS) -> DataFrame:
+    """``(key?, *order, cum_less)``: each row's 0-based position in the
+    ``order`` sort of its ``key`` group, i.e. the number of same-key rows
+    strictly before it. Under a unique order ``cum_less + 1`` is
+    ``row_number() OVER (PARTITION BY key ORDER BY order)``; under ties
+    the rows of one tie group are contiguous, so their ``min(cum_less)``
+    counts the strictly smaller rows (``rank() - 1``).
+
+    Plan: one range shuffle on ``(key, *order)`` (split points from
+    Spark's sample), a per-partition sort, and ``monotonically_increasing_id``
+    as the row's position inside its range partition. Each ``(pid, key)``
+    run's start offset comes from the ≤ ``num_partitions × |keys|``-row
+    table of run starts and lengths, prefix-summed per key in one array
+    ``aggregate`` and broadcast back. No Python node, no window, and no
+    shuffle of the rows beyond the range shuffle.
+
+    Invariant: only the sort columns cross the range exchange. The
+    exchange partitions on all of them, so column pruning cannot narrow
+    either consumer (rows or run table) below it; both subplans stay
+    identical and read ONE sampled exchange (the second as
+    ``ReusedExchange``). Two separately sampled exchanges would describe
+    different partitionings in the reservoir-sampling regime and give
+    duplicate positions. A caller that needs a payload column appends it
+    to the order or joins it back.
     """
+    order = [order] if isinstance(order, str) else list(order)
+    kcols = [] if key is None else [key]
     ranged = (
-        df.repartitionByRange(num_partitions, *keys)
-        .sortWithinPartitions(*keys)
-        .withColumn("pid", F.spark_partition_id())
+        df.select(*kcols, *order)
+        .repartitionByRange(num_partitions, *kcols, *order)
+        .sortWithinPartitions(*kcols, *order)
+        .withColumn("_pos", F.monotonically_increasing_id())
+        .withColumn("_pid", F.shiftright("_pos", _POS_BITS))
+    )
+    runs = ranged.groupBy("_pid", *kcols).agg(
+        F.min("_pos").alias("_m0"), F.count(F.lit(1)).alias("_n")
     )
 
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in ranged.schema.fields
-    ) + ", local_idx long"
-
-    def add_local_idx(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one call per partition; batches arrive in the partition's sort
-        # order, so a running counter is the local rank
-        seen = 0
-        for pdf in batches:
-            pdf = pdf.assign(local_idx=range(seen, seen + len(pdf)))
-            seen += len(pdf)
-            yield pdf
-
-    indexed = ranged.mapInPandas(add_local_idx, schema=out_schema)
-
-    # ≤ num_partitions rows: the prefix sum runs on ONE partition, but it
-    # is bounded by construction (one row per range partition), unlike a
-    # corpus window. A coalesce(1) + sorted Arrow pass states that
-    # deliberately — and keeps the plan free of partitionless WindowExec
-    # nodes, so the "no global window" plan gates stay meaningful.
-    #
-    # counts MUST aggregate `indexed`, NOT `ranged` (r12 correctness fix):
-    # aggregating `ranged` lets column pruning narrow the counts subtree's
-    # projection below the range exchange, so the two exchange subplans no
-    # longer canonicalize equal and each samples its own split points
-    # (RangePartitioner's reservoir is seeded per RDD id). Divergent
-    # boundaries make the per-pid counts describe a DIFFERENT partitioning
-    # than the one the rows actually got — measured at 3M rows: 98k
-    # position collisions. `indexed` is opaque to pruning (mapInPandas has
-    # a fixed input schema), so both consumers share one identical subplan
-    # and therefore one physical shuffle — tests/test_graph.py locks the
-    # permutation property in the reservoir-sampling regime.
-    counts = indexed.groupBy("pid").agg(F.count(F.lit(1)).alias("n"))
-
-    def prefix_sum(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = 0
-        for pdf in batches:
-            pdf = pdf.sort_values("pid")
-            off = pdf["n"].cumsum().shift(fill_value=0) + acc
-            acc += int(pdf["n"].sum())
-            yield pd.DataFrame({"pid": pdf["pid"], "offset": off})
-
-    offsets = counts.coalesce(1).sortWithinPartitions("pid").mapInPandas(
-        prefix_sum, schema="pid int, offset long"
-    )
-
-    return (
-        indexed.join(F.broadcast(offsets), "pid")
-        .withColumn("global_pos", F.col("offset") + F.col("local_idx") + 1)
-        .drop("pid", "local_idx", "offset")
-    )
-
-
-def keyed_midrank_census(census: DataFrame, key: str,
-                         val: str | list[str], cnt: str,
-                         num_partitions: int = SORT_PARTITIONS,
-                         pin: bool = False) -> DataFrame:
-    """Tie-corrected midranks of ``val`` within ``key`` from a value census.
-
-    Input: one row per DISTINCT ``(key, val)`` carrying ``cnt`` = how many
-    observations share that value. Output: the census plus ``midrank`` —
-    the double every observation of the group would receive from
-    ``rank() OVER (PARTITION BY key ORDER BY val)`` + ``(count OVER
-    (PARTITION BY key, val) - 1) / 2``, computed as
-    ``(cum_less + 1)::double + (cnt::double - 1) / 2`` so the operand
-    doubles (exact integer conversions below 2^53, exact halving) and the
-    single rounding addition are identical to the window formulation —
-    bit-for-bit, which is the oracle-parity contract.
-
-    Plan (the per-key rank-window scale rewrite): range-shuffle the census
-    on ``(key, val)`` — per-key runs are contiguous and every partition is
-    ~census/``num_partitions`` — then compute the within-partition weighted
-    prefix with a JVM window PARTITIONED BY ``(pid, key)``: its partitions
-    are range-partition-sized by construction (pid count scales with the
-    corpus), never the corpus/|keys| partitions that make a naive
-    ``Window.partitionBy(<few-valued key>)`` rank a straggler at 100 TB.
-    A ≤ ``num_partitions × |keys|`` row (pid, key) count table,
-    prefix-summed on one bounded partition and broadcast back, gives each
-    partition's per-key starting offset (the ``global_sort_index`` offset
-    trick generalized to weighted counts and a partition key). Midranks
-    are boundary-independent — cum_less counts strictly-smaller values of
-    the same key, wherever the sampler put the split points.
-
-    Boundary-consistency invariant (r12): the totals subtree derives
-    ``tn = max(local_before + cnt)`` FROM the window output rather than
-    ``sum(cnt)`` from the raw exchange — referencing the window expression
-    keeps the window node (and its ORDER BY ``val`` columns) alive in the
-    totals branch, so both consumers' subplans stay canonically identical
-    and share ONE physically sampled range exchange. An independently
-    pruned totals branch would re-sample its own split points and describe
-    a partitioning the rows never had (see the global_sort_index counts
-    comment; tests/test_graph.py locks the property in the
-    reservoir-sampling regime). ``max(local_before + cnt)`` is exact:
-    local_before is strictly increasing within (pid, key) and cnt ≥ 1, so
-    the max is the last row's running total = Σ cnt over the group.
-
-    ``val`` may be a list of columns (a composite total order). The output
-    also carries ``cum_less`` (the exact BIGINT weighted count of same-key
-    rows ordered strictly before this group) for callers that need row
-    positions or rank-selected order statistics rather than midranks.
-
-    ``pin=True`` writes the census to scratch parquet first (uuid-keyed,
-    in-query — SCALE.md pin rule 3). The machinery necessarily traverses
-    its input twice (the range sampler's sketch pass + the shuffle write),
-    so a caller whose census is itself an expensive aggregation should pin
-    it to pay the computation once; callers whose census is a bare scan
-    should not (re-scanning parquet is cheaper than rewriting it).
-    """
-    from pyspark.sql import Window as W
-
-    vals = [val] if isinstance(val, str) else list(val)
-    if pin:
-        from go_web_mapreduce_spark.operators.pipeline_ops import _scratch_dir
-
-        path = _scratch_dir("midrank_census")
-        census.write.mode("overwrite").parquet(path)
-        census = census.sparkSession.read.parquet(path)
-    ranged = (
-        census.select(key, *vals, cnt)
-        .repartitionByRange(num_partitions, key, *vals)
-        .withColumn("pid", F.spark_partition_id())
-    )
-
-    # the (pid, key) window partitions are bounded by the range-partition
-    # size — pid cardinality scales with the corpus, so this is NOT the
-    # few-valued-key corpus window the helper exists to eliminate
-    wloc = (
-        W.partitionBy("pid", key)
-        .orderBy(*vals)
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    indexed = ranged.withColumn(
-        "local_before", F.coalesce(F.sum(cnt).over(wloc), F.lit(0))
-    )
-
-    # ≤ num_partitions × |keys| rows — bounded by construction, so the
-    # per-key prefix over pid order runs on ONE deliberate partition (the
-    # global_sort_index counts discipline; never a corpus-scaled single
-    # partition). Derived from the WINDOW OUTPUT — see the invariant note
-    # in the docstring.
-    totals = indexed.groupBy("pid", key).agg(
-        F.max(F.col("local_before") + F.col(cnt)).alias("tn")
-    )
-    key_t = census.schema[key].dataType.simpleString()
-
-    def key_prefix(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry_key = None
-        carry = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            t = pdf["tn"].astype("int64")
-            off = t.groupby(pdf[key], sort=False).cumsum() - t
-            if carry_key is not None:
-                off = off + (pdf[key] == carry_key) * carry
-            last_key = pdf[key].iloc[-1]
-            carry = int(t[pdf[key] == last_key].sum()) + (
-                carry if last_key == carry_key else 0
-            )
-            carry_key = last_key
-            yield pd.DataFrame(
-                {"pid": pdf["pid"], key: pdf[key], "offset": off.astype("int64")}
-            )
-
-    offsets = totals.coalesce(1).sortWithinPartitions(key, "pid").mapInPandas(
-        key_prefix, schema=f"pid int, {key} {key_t}, offset long"
-    )
-
-    return (
-        indexed.join(F.broadcast(offsets), ["pid", key])
-        .withColumn("cum_less", F.col("offset") + F.col("local_before"))
-        .withColumn(
-            "midrank",
-            (F.col("cum_less") + 1).cast("double")
-            + (F.col(cnt).cast("double") - 1) / 2,
+    def run_base(x, i):
+        # rows of this key in earlier partitions, minus the run's own
+        # start, so that cum_less = _pos + _base
+        before = F.aggregate(
+            F.slice("_runs", 1, i), F.lit(0).cast("long"),
+            lambda acc, y: acc + y["_n"],
         )
-        .drop("pid", "local_before", "offset")
+        return F.struct(x["_pid"].alias("_opid"), (before - x["_m0"]).alias("_base"))
+
+    on = F.col("_pid") == F.col("_opid")
+    okey = []
+    if key is not None:
+        on = on & F.col(key).eqNullSafe(F.col("_okey"))
+        okey = [F.col(key).alias("_okey")]
+    bases = runs.groupBy(*kcols).agg(
+        F.array_sort(F.collect_list(F.struct("_pid", "_m0", "_n"))).alias("_runs")
+    ).select(*okey, F.inline(F.transform("_runs", run_base)))
+    return ranged.join(F.broadcast(bases), on).select(
+        *kcols, *order, (F.col("_pos") + F.col("_base")).alias("cum_less")
     )
 
 
@@ -275,7 +138,10 @@ def q_global_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
     )
-    return global_sort_index(li, "ship_date", "l_orderkey", "l_linenumber")
+    order = ["ship_date", "l_orderkey", "l_linenumber"]
+    return range_prefix(li, order).select(
+        *order, (F.col("cum_less") + 1).alias("global_pos")
+    )
 
 
 # ---------------------------------------------------------------------------

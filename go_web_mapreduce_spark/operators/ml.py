@@ -1689,9 +1689,8 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-segment ntile window (segments are a 5-value dimension, so each
     window partition would be corpus/5-sized — the exact hazard
     q_rfm_segments eliminated): the grade comes from ONE range-
-    partitioned global_sort_index over (segment, -rev_cents, part) —
-    each segment is a contiguous run in the total order, so in-segment
-    rank = global_pos − segment base + 1, folded through the exact
+    partitioned range_prefix keyed by segment over (-rev_cents, part,
+    qty), so in-segment rank = cum_less + 1, folded through the exact
     _ntile_from_pos bucket arithmetic against the per-segment count (a
     segment-dimension broadcast). Bit-identical to the oracle's ntile.
     The discount table trick is the load-bearing determinism move: NDCG's
@@ -1716,39 +1715,26 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)  # feeds the rank, the count, n_parts
     )
     from go_web_mapreduce_spark.operators.analytics import _ntile_from_pos
-    from go_web_mapreduce_spark.operators.graph import global_sort_index
+    from go_web_mapreduce_spark.operators.graph import range_prefix
 
-    ranked = global_sort_index(
+    # (neg_rc, part) is already unique within segment; qty rides along in
+    # the order because range_prefix returns only its sort columns
+    ranked = range_prefix(
         perf.select(
             "segment", (-F.col("rev_cents")).alias("neg_rc"), "part", "qty"
         ),
-        "segment",
-        "neg_rc",
-        "part",
+        ["neg_rc", "part", "qty"],
+        key="segment",
     )
-    # seg_base MUST come from ranked itself (min over the positions the
-    # grading join actually sees), NOT from a prefix sum over the segment
-    # census: when the input is a lazy localCheckpoint of a shuffled
-    # subtree, the two range exchanges inside global_sort_index are not
-    # guaranteed to reuse one sampled partitioning, so positions are only
-    # exact UP TO a per-evaluation offset profile — min-rebasing within
-    # the same evaluation cancels it, an externally derived 1..N base does
-    # not (r12: the census variant hash-FAILED at sf0.01; measured, not
-    # theoretical).
-    segstats = ranked.groupBy("segment").agg(
-        F.min("global_pos").alias("seg_base"),
-        F.count(F.lit(1)).alias("ns"),
-    )
-    graded = ranked.join(F.broadcast(segstats), "segment").select(
+    segn = perf.groupBy("segment").agg(F.count(F.lit(1)).alias("ns"))
+    graded = ranked.join(F.broadcast(segn), "segment").select(
         "segment",
         "part",
         "qty",
         (
             F.lit(NDCG_GRADES)
             - _ntile_from_pos(
-                F.col("global_pos") - F.col("seg_base") + 1,
-                F.col("ns"),
-                NDCG_GRADES,
+                F.col("cum_less") + 1, F.col("ns"), NDCG_GRADES
             )
         ).alias("rel"),
     )

@@ -1576,8 +1576,8 @@ def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     r12 (the q_spearman-class rewrite): event_type is a 5-value key, so
     the old ``Window.partitionBy(event_type)`` put corpus/5 rows on one
     task at 100 TB. (value, event_id) is a unique total order within
-    type, so with c = 1 the range-shuffled keyed prefix gives
-    rn = cum_less + 1 = row_number exactly, and every distribution
+    type, so the range-shuffled keyed prefix (graph.py::range_prefix)
+    gives rn = cum_less + 1 = row_number exactly, and every distribution
     function is integer arithmetic over (rn, n): rank()==row_number under
     a tie-free order, hence pr = (rn−1)/(n−1) (0.0 when n==1 — Spark's
     guard), cd = rn/n — the same integer operands cast to double and one
@@ -1585,18 +1585,15 @@ def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntile(4) assigns the first n%4 buckets ceil(n/4) rows and the rest
     floor(n/4) (SQL standard, both engines) — reproduced in exact integer
     arithmetic below. n rides a 5-row broadcast census."""
-    from go_web_mapreduce_spark.operators.graph import keyed_midrank_census
+    from go_web_mapreduce_spark.operators.graph import range_prefix
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "event_id", F.col("value").cast("double").alias("value")
     )
     ncen = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("nt"))
     rn = (F.col("cum_less") + 1).alias("rn")
-    ranked = keyed_midrank_census(
-        ev.withColumn("c", F.lit(1).cast("long")),
-        "event_type",
-        ["value", "event_id"],
-        "c",
+    ranked = range_prefix(
+        ev, ["value", "event_id"], key="event_type"
     ).join(F.broadcast(ncen), "event_type").select("event_type", rn, "nt")
     # ntile(4): q = nt div 4 rows per bucket, the first r = nt mod 4
     # buckets take one extra row; cut = r·(q+1) is the last row of the

@@ -289,34 +289,6 @@ FILTER_MIN_TTR = 0.2
 FILTER_MIN_STOPWORD_HITS = 1
 
 
-def corpus_keep_flag(toks: Column) -> Column:
-    """1 if the document passes all quality-filter rules, else 0.
-
-    Rules follow the public C4 (Raffel et al. 2020) / Gopher (Rae et al.
-    2021) heuristic families: minimum length, mean-word-length band, lexical
-    diversity (type-token ratio), and at-least-one-stopword. All ratios are
-    integer-count divisions in float64 — bit-identical across engines.
-
-    NOTE: the band check references ``mean_len`` twice, which re-evaluates
-    the per-token length fold per reference when this Column is used
-    directly; q_corpus_filter stages the fold as a named column first.
-    """
-    n_tok = F.size(toks)
-    tok_chars = F.aggregate(
-        toks, F.lit(0), lambda acc, t: acc + F.length(t)
-    )
-    mean_len = tok_chars.cast("double") / n_tok.cast("double")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / n_tok.cast("double")
-    hits = stopword_hits(toks, ALL_STOPWORDS)
-    keep = (
-        (n_tok >= FILTER_MIN_TOKENS)
-        & mean_len.between(FILTER_MEAN_LEN_LO, FILTER_MEAN_LEN_HI)
-        & (ttr >= FILTER_MIN_TTR)
-        & (hits >= FILTER_MIN_STOPWORD_HITS)
-    )
-    return F.when(keep, F.lit(1)).otherwise(F.lit(0))
-
-
 @query(
     "q_corpus_filter",
     oracle=f"""

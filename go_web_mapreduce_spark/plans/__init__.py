@@ -3,8 +3,13 @@
 The reference has no optimizer and therefore nothing to inspect (SURVEY.md
 §4.1); in this engine the physical plan IS the scale contract: filters must
 reach the scan, dimensions must broadcast, aggregations must be partial,
-top-k must avoid global sorts. These helpers read the *executed* plan (after
-AQE re-planning) so tests assert what actually ran, not what was proposed.
+top-k must avoid global sorts. These helpers read the physical plan string
+of a DataFrame's own QueryExecution. Until that QueryExecution has run, this
+is the AQE *initial* plan (``isFinalPlan=false``), not the plan AQE
+re-plans at run time; ``df.write`` and ``df.count()`` run other
+QueryExecutions and leave it initial. For the final plan, run it first
+(``qe = df._jdf.queryExecution(); qe.toRdd().count()``, then
+``qe.executedPlan()``).
 
 Used by tests/test_plans.py (mechanical gates) and tools/plan_audit.py
 (the reviewable PLANS.md dump).
@@ -18,7 +23,9 @@ from pyspark.sql import DataFrame
 
 
 def executed_plan(df: DataFrame) -> str:
-    """String form of the final (post-AQE) physical plan of ``df``."""
+    """String form of ``df``'s physical plan: the AQE initial plan
+    (``isFinalPlan=false``) unless ``df``'s own QueryExecution has
+    already run."""
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -56,8 +63,3 @@ def is_take_ordered(plan: str) -> bool:
     merge) rather than a global sort."""
     return "TakeOrderedAndProject" in plan
 
-
-def collects_to_driver(plan: str) -> bool:
-    """True if the plan funnels rows through the driver mid-query
-    (CollectLimit aside from the final action is the usual smell)."""
-    return "CollectLimit" in plan

@@ -4,15 +4,16 @@ and the closed-form ML query (operators/ml.py::q_ml_linreg)."""
 from __future__ import annotations
 
 import numpy as np
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.operators.graph import (
     PR_DAMPING,
     PR_ITERS,
     copurchase_edges,
-    global_sort_index,
-    keyed_midrank_census,
     pagerank,
+    range_prefix,
 )
 from go_web_mapreduce_spark.queries import REGISTRY
 
@@ -22,9 +23,9 @@ def test_global_sort_index_is_the_total_order(spark):
     # rank in the total order, 1-based, a permutation of 1..N
     rows = [(k % 7, k) for k in range(200)]
     df = spark.createDataFrame(rows, "a int, b int").repartition(5)
-    out = global_sort_index(df, "a", "b", num_partitions=4).collect()
-    assert sorted(r["global_pos"] for r in out) == list(range(1, 201))
-    by_pos = sorted(out, key=lambda r: r["global_pos"])
+    out = range_prefix(df, ["a", "b"], num_partitions=4).collect()
+    assert sorted(r["cum_less"] + 1 for r in out) == list(range(1, 201))
+    by_pos = sorted(out, key=lambda r: r["cum_less"])
     assert [(r["a"], r["b"]) for r in by_pos] == sorted(rows)
 
 
@@ -32,15 +33,16 @@ def test_global_sort_index_is_layout_independent(spark):
     rows = [(i * 37 % 101,) for i in range(101)]  # unique keys, scrambled
     a = spark.createDataFrame(rows, "k int").repartition(2)
     b = spark.createDataFrame(rows, "k int").repartition(9)
-    ra = {(r["k"], r["global_pos"]) for r in global_sort_index(a, "k").collect()}
-    rb = {(r["k"], r["global_pos"]) for r in global_sort_index(b, "k").collect()}
+    ra = {(r["k"], r["cum_less"]) for r in range_prefix(a, "k").collect()}
+    rb = {(r["k"], r["cum_less"]) for r in range_prefix(b, "k").collect()}
     assert ra == rb
 
 
 def test_keyed_midrank_census_matches_window_formulation(spark):
-    """midrank/cum_less from the range-shuffled weighted prefix must equal
-    rank() + (count-1)/2 from a per-key window, bit-for-bit, on a census
-    with ties, multiple keys and values spanning partition boundaries."""
+    """The (key, value) census of range_prefix positions — min(cum_less)
+    and count per value, the q_spearman shape — must give rank() +
+    (count-1)/2 from a per-key window, bit-for-bit, on observations with
+    ties, multiple keys and values spanning partition boundaries."""
     import random
 
     from pyspark.sql import Window as W
@@ -50,10 +52,17 @@ def test_keyed_midrank_census_matches_window_formulation(spark):
         (k, rng.randrange(40)) for k in ("a", "b", "c") for _ in range(300)
     ]
     obs = spark.createDataFrame(rows, "k string, v int").repartition(7)
-    cen = obs.groupBy("k", "v").agg(F.count(F.lit(1)).alias("c"))
+    cen = (
+        range_prefix(obs, "v", key="k", num_partitions=5)
+        .groupBy("k", "v")
+        .agg(F.min("cum_less").alias("cum_less"), F.count(F.lit(1)).alias("c"))
+    )
+    midrank = (F.col("cum_less") + 1).cast("double") + (
+        F.col("c").cast("double") - 1
+    ) / 2
     got = {
         (r["k"], r["v"]): (r["midrank"], r["cum_less"])
-        for r in keyed_midrank_census(cen, "k", "v", "c", num_partitions=5)
+        for r in cen.select("k", "v", "cum_less", midrank.alias("midrank"))
         .collect()
     }
     win = obs.select(
@@ -65,10 +74,10 @@ def test_keyed_midrank_census_matches_window_formulation(spark):
             / 2
         ).alias("mr"),
     ).collect()
-    assert len(got) == cen.count()
+    assert len(got) == obs.groupBy("k", "v").count().count()
     for r in win:
         assert got[(r["k"], r["v"])][0] == r["mr"]  # exact, not approx
-    # cum_less is the exact weighted strict-predecessor count
+    # min(cum_less) is the exact strict-predecessor count
     local = {}
     for k, v in rows:
         local.setdefault(k, []).append(v)
@@ -77,19 +86,13 @@ def test_keyed_midrank_census_matches_window_formulation(spark):
 
 
 def test_keyed_midrank_census_composite_order_unit_counts(spark):
-    """With c = 1 and a composite unique (val) tuple, cum_less + 1 is
-    row_number() over (key ORDER BY vals) — the q_quantile_norm shape."""
+    """With a composite unique order, cum_less + 1 is row_number() over
+    (key ORDER BY order) — the q_quantile_norm shape."""
     from pyspark.sql import Window as W
 
     rows = [(k % 3, (k * 37) % 50, k) for k in range(150)]
     df = spark.createDataFrame(rows, "k int, v int, i int").repartition(6)
-    out = keyed_midrank_census(
-        df.withColumn("c", F.lit(1).cast("long")),
-        "k",
-        ["v", "i"],
-        "c",
-        num_partitions=4,
-    ).collect()
+    out = range_prefix(df, ["v", "i"], key="k", num_partitions=4).collect()
     got = {(r["k"], r["v"], r["i"]): r["cum_less"] + 1 for r in out}
     win = df.select(
         "k", "v", "i",
@@ -100,47 +103,45 @@ def test_keyed_midrank_census_composite_order_unit_counts(spark):
         assert got[(r["k"], r["v"], r["i"])] == r["rn"]
 
 
-def test_global_sort_index_exact_in_reservoir_regime(spark):
-    """Positions must be exactly 1..N even when RangePartitioner's sample
-    is a true reservoir (rows per input partition >> sample size), where
-    independently sampled boundaries would diverge between the counts and
-    indexed subtrees. This is the r12 regression test for counts being
-    derived from the mapInPandas output (one shared exchange), not from
-    `ranged` (pruned-narrower → separate exchange → its own boundaries):
-    the broken form fails this test deterministically."""
-    base = spark.range(0, 50_000).repartition(8).select(
+def _reservoir_input(spark):
+    # 50k rows over 8 input partitions: each holds far more rows than
+    # RangePartitioner samples, so split points come from a seeded
+    # reservoir and differ between separately sampled exchanges
+    return spark.range(0, 50_000).repartition(8).select(
         (F.col("id") % 5).cast("string").alias("k1"),
         F.pmod(F.xxhash64("id"), F.lit(1_000_000)).alias("k2"),
-        (F.col("id") * 7).alias("payload"),  # forces the pruning mismatch
+        (F.col("id") * 7).alias("payload"),  # a non-sort column
     )
-    out = global_sort_index(base, "k1", "k2", num_partitions=4)
+
+
+def test_global_sort_index_exact_in_reservoir_regime(spark):
+    """Positions must be exactly 1..N even when RangePartitioner's sample
+    is a true reservoir, where independently sampled boundaries would
+    diverge between the rows and the run-table subplans. The payload
+    column must not cross the range exchange: carried through, column
+    pruning narrows the run-table subplan and the two plan separately
+    sampled exchanges (duplicate positions)."""
+    out = range_prefix(_reservoir_input(spark), ["k1", "k2"], num_partitions=4)
     agg = out.agg(
         F.count("*").alias("n"),
-        F.countDistinct("global_pos").alias("d"),
-        F.min("global_pos").alias("mn"),
-        F.max("global_pos").alias("mx"),
+        F.countDistinct("cum_less").alias("d"),
+        F.min("cum_less").alias("mn"),
+        F.max("cum_less").alias("mx"),
     ).collect()[0]
-    assert agg["mn"] == 1
-    assert agg["n"] == agg["d"] == agg["mx"] == 50_000
+    assert agg["mn"] == 0
+    assert agg["n"] == agg["d"] == agg["mx"] + 1 == 50_000
 
 
 def test_keyed_midrank_census_exact_in_reservoir_regime(spark):
-    """cum_less must be the exact weighted strict-predecessor count in the
-    reservoir-sampling regime (see test_global_sort_index_exact_in_...):
-    with c = 1 rows, cum_less + 1 must be a permutation of 1..n_k within
-    every key."""
+    """cum_less must be exact per key in the reservoir-sampling regime
+    (see test_global_sort_index_exact_in_...): under a unique order,
+    cum_less + 1 must be a permutation of 1..n_k within every key."""
     base = spark.range(0, 50_000).repartition(8).select(
         (F.col("id") % 3).cast("string").alias("k"),
         F.pmod(F.xxhash64("id"), F.lit(1_000_000)).alias("v"),
         F.col("id").alias("i"),
     )
-    out = keyed_midrank_census(
-        base.withColumn("c", F.lit(1).cast("long")),
-        "k",
-        ["v", "i"],
-        "c",
-        num_partitions=4,
-    )
+    out = range_prefix(base, ["v", "i"], key="k", num_partitions=4)
     agg = out.groupBy("k").agg(
         F.count("*").alias("n"),
         F.countDistinct("cum_less").alias("d"),
@@ -150,6 +151,105 @@ def test_keyed_midrank_census_exact_in_reservoir_regime(spark):
     for r in agg:
         assert r["mn"] == 0
         assert r["n"] == r["d"] == r["mx"] + 1
+
+
+def test_range_prefix_final_plan_shares_one_range_exchange(spark):
+    """On the final AQE plan of a reservoir-regime input with a payload
+    column: one physical range exchange, read by the second consumer as
+    ReusedExchange; no Python node, no window; only the sort columns and
+    cum_less come out."""
+    out = range_prefix(_reservoir_input(spark), "k2", key="k1", num_partitions=4)
+    qe = out._jdf.queryExecution()
+    qe.toRdd().count()
+    plan = qe.executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    ranges = [ln for ln in final if "Exchange rangepartitioning" in ln]
+    assert len(ranges) == 2, ranges
+    assert sum("ReusedExchange" in ln for ln in ranges) == 1, ranges
+    assert "MapInPandas" not in plan
+    assert "Window [" not in plan
+    assert out.columns == ["k1", "k2", "cum_less"]
+
+
+def _sampling_threshold(num_partitions: int, input_partitions: int) -> int:
+    # RangePartitioner samples every row of an input partition up to
+    # ceil(3 · 100 · num_partitions / input_partitions) rows, and a
+    # reservoir beyond that
+    return -(-3 * 100 * num_partitions // input_partitions)
+
+
+@given(
+    num_partitions=st.integers(2, 8),
+    input_partitions=st.integers(2, 4),
+    n_keys=st.sampled_from([None, 1, 2, 3, 4, 5]),
+    n_values=st.sampled_from([7, 10**9]),  # ties or (almost) none
+    unique=st.booleans(),
+    reservoir=st.booleans(),
+    seed=st.integers(0, 2**16),
+)
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_range_prefix_counts_strictly_smaller_rows(
+    spark, num_partitions, input_partitions, n_keys, n_values, unique,
+    reservoir, seed,
+):
+    """For any partition count, key cardinality (NULL included) and tie
+    pattern, on both sides of the exhaustive/reservoir sampling
+    threshold: every row's cum_less lies within its tie group's span of
+    positions, a tie group's smallest cum_less is the number of same-key
+    rows with a strictly smaller order, and cum_less is a permutation of
+    0..n_k-1 per key. Checked row by row on collected output."""
+    import random
+    from collections import Counter, defaultdict
+
+    rng = random.Random(seed)
+    t = _sampling_threshold(num_partitions, input_partitions)
+    per_part = 2 * t + rng.randrange(t) if reservoir else max(1, t // 2)
+    n = per_part * input_partitions
+
+    def key_of(i):
+        # a keyed run also carries a NULL key group
+        if not n_keys:
+            return 0
+        return None if i % 11 == 0 else i % n_keys
+
+    rows = [(key_of(i), rng.randrange(n_values), i) for i in range(n)]
+    order = ["v", "i"] if unique else ["v"]
+    df = spark.sparkContext.parallelize(rows, input_partitions).toDF(
+        "k long, v long, i long"
+    )
+    key = "k" if n_keys else None
+    out = range_prefix(
+        df, order, key=key, num_partitions=num_partitions
+    ).collect()
+    assert len(out) == n
+
+    counts = defaultdict(Counter)  # key -> order tuple -> rows
+    for k, v, i in rows:
+        counts[k][(v, i)[: len(order)]] += 1
+    less, ties = {}, {}
+    for k, c in counts.items():
+        seen = 0
+        for sk in sorted(c):
+            less[k, sk], ties[k, sk] = seen, c[sk]
+            seen += c[sk]
+
+    got = defaultdict(list)
+    group_min = {}
+    for r in out:
+        k = r["k"] if key else 0
+        sk = tuple(r[c] for c in order)
+        cl = r["cum_less"]
+        assert less[k, sk] <= cl < less[k, sk] + ties[k, sk]
+        group_min[k, sk] = min(group_min.get((k, sk), cl), cl)
+        got[k].append(cl)
+    assert group_min == less
+    for k, cls in got.items():
+        assert sorted(cls) == list(range(sum(counts[k].values())))
 
 
 def test_pagerank_uniform_on_symmetric_complete_graph(spark):

@@ -20,8 +20,7 @@ from go_web_mapreduce_spark.operators.text_analysis import (
 from go_web_mapreduce_spark.queries import REGISTRY
 from go_web_mapreduce_spark.sources.tables import load_table
 from go_web_mapreduce_spark.functions.text import tokens
-
-from test_plans import executed_plan
+from go_web_mapreduce_spark.plans import executed_plan
 
 
 def test_sequence_pack_conserves_tokens_and_docs(spark, sf_dir):
@@ -93,7 +92,7 @@ def test_decontaminate_counts_and_eval_exclusion(spark, sf_dir):
 def test_decontaminate_broadcasts_eval_side(spark, sf_dir):
     """The eval shingle set must broadcast: at 100 TB the train side can
     never be shuffled for this check."""
-    plan = executed_plan(spark, sf_dir, "q_decontaminate")
+    plan = executed_plan(REGISTRY["q_decontaminate"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
 
 

@@ -1,6 +1,8 @@
 """Physical-plan quality gates — the scale properties that matter at 100 TB,
-asserted on the actual executed plans so a regression in plan shape fails CI
-even while results stay correct.
+asserted on each query's physical plan so a regression in plan shape fails
+CI even while results stay correct. The plans are taken before execution:
+the AQE initial plan (``isFinalPlan=false``), which lists every exchange
+each consumer plans, before AQE reuses or re-plans any of them.
 
 What each assertion protects:
 - predicate pushdown + column pruning → a scan reads only the bytes it must;
@@ -14,22 +16,22 @@ from __future__ import annotations
 
 import pytest
 
+from go_web_mapreduce_spark import plans as P
 from go_web_mapreduce_spark.queries import REGISTRY
 
 
-def executed_plan(spark, sf_dir, name: str) -> str:
-    df = REGISTRY[name].fn(spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
+def query_plan(spark, sf_dir, name: str) -> str:
+    return P.executed_plan(REGISTRY[name].fn(spark, sf_dir))
 
 
 def test_filter_pushes_into_scan(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_filter_project")
+    plan = query_plan(spark, sf_dir, "q_filter_project")
     assert "PushedFilters: [" in plan
     assert "GreaterThanOrEqual(l_discount" in plan
 
 
 def test_projection_prunes_scan_columns(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_filter_project")
+    plan = query_plan(spark, sf_dir, "q_filter_project")
     # only the 5 referenced columns reach the parquet reader — not the
     # full 11-column lineitem schema
     read_schema = plan.split("ReadSchema:", 1)[1].splitlines()[0]
@@ -38,25 +40,25 @@ def test_projection_prunes_scan_columns(spark, sf_dir):
 
 
 def test_star_join_broadcasts_dimensions(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_multi_join")
+    plan = query_plan(spark, sf_dir, "q_multi_join")
     assert "BroadcastHashJoin" in plan
     # the orders fact side must NOT be exchanged for the join at this size
     assert plan.count("BroadcastHashJoin") >= 2
 
 
 def test_aggregation_is_partial_then_final(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_group_agg")
+    plan = query_plan(spark, sf_dir, "q_group_agg")
     assert "partial_sum" in plan or "partial_count" in plan
 
 
 def test_topk_avoids_global_sort(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_topk")
+    plan = query_plan(spark, sf_dir, "q_topk")
     assert "TakeOrderedAndProject" in plan
     assert "Sort [" not in plan  # no full Sort node — per-partition top-k only
 
 
 def test_similarity_topk_never_shuffles_corpus(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_similarity_topk")
+    plan = query_plan(spark, sf_dir, "q_similarity_topk")
     assert "TakeOrderedAndProject" in plan
     # single scan of embeddings; probe arrives via broadcast
     assert plan.count("FileScan parquet") == 2
@@ -68,7 +70,7 @@ def test_similarity_topk_never_shuffles_corpus(spark, sf_dir):
     ["q_wordcount", "q_group_agg", "q_repartition_join", "q_multi_join", "q_topk"],
 )
 def test_no_driver_side_collect_in_plans(spark, sf_dir, name):
-    plan = executed_plan(spark, sf_dir, name)
+    plan = query_plan(spark, sf_dir, name)
     assert "CollectLimit" not in plan
 
 
@@ -92,20 +94,20 @@ def test_global_sort_uses_range_partitioning(spark, sf_dir):
 
 def test_window_frames_single_shuffle(spark, sf_dir):
     """Both frames share the user_id partitioning: one exchange total."""
-    plan = executed_plan(spark, sf_dir, "q_window_frames")
+    plan = query_plan(spark, sf_dir, "q_window_frames")
     assert plan.count("Exchange hashpartitioning(user_id") <= 1
     assert "Window" in plan
 
 
 def test_session_window_is_one_aggregation(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_session_window")
+    plan = query_plan(spark, sf_dir, "q_session_window")
     assert "SessionWindow" in plan or "session_window" in plan
     # no self-join formulation
     assert "Join" not in plan
 
 
 def test_salted_join_explodes_small_side_only(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_salted_join")
+    plan = query_plan(spark, sf_dir, "q_salted_join")
     # the salt explode (Generate) feeds the small customer side; the big
     # events side is salted with a projection, never exploded
     assert "Generate explode" in plan
@@ -113,15 +115,13 @@ def test_salted_join_explodes_small_side_only(spark, sf_dir):
 
 
 def test_topk_no_global_sort(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_topk")
+    plan = query_plan(spark, sf_dir, "q_topk")
     assert "TakeOrderedAndProject" in plan
 
 
 def test_plan_utils_agree_with_direct_assertions(spark, sf_dir):
     """The plans package helpers must report the same facts the direct
     string assertions above check — they are the reusable API form."""
-    from go_web_mapreduce_spark import plans as P
-
     fp = P.executed_plan(REGISTRY["q_filter_project"].fn(spark, sf_dir))
     assert P.pushed_filters(fp) and any(
         "l_discount" in f for f in P.pushed_filters(fp)
@@ -144,8 +144,9 @@ def test_plan_utils_agree_with_direct_assertions(spark, sf_dir):
 def test_global_sort_is_range_partitioned_not_single_window(spark, sf_dir):
     """TeraSort shape: a range exchange + per-partition sorts; no global
     (single-partition) Sort and no Window at all — the partition-offset
-    prefix sum is a bounded coalesce(1) Arrow pass, not a window."""
-    plan = executed_plan(spark, sf_dir, "q_global_sort")
+    prefix sum is a higher-order array aggregate over the ≤ P-row run
+    table (graph.py::range_prefix), not a window."""
+    plan = query_plan(spark, sf_dir, "q_global_sort")
     assert "rangepartitioning(ship_date" in plan
     # every Sort node is non-global (the 'false' flag after the ordering)
     for line in plan.splitlines():
@@ -157,22 +158,21 @@ def test_global_sort_is_range_partitioned_not_single_window(spark, sf_dir):
 def test_rfm_segments_has_no_global_window(spark, sf_dir):
     """The three quintiles come from range-partitioned global ranks +
     exact ntile arithmetic — no partitionless ntile window anywhere."""
-    plan = executed_plan(spark, sf_dir, "q_rfm_segments")
+    plan = query_plan(spark, sf_dir, "q_rfm_segments")
     assert "windowspecdefinition" not in plan
     assert "ntile" not in plan
-    # one range shuffle per quintile, each appearing in both the indexed
-    # and the counts subtree until the lazy checkpoint materializes
+    # one range shuffle per quintile, each appearing in both the rows and
+    # the run-table subtree of range_prefix (AQE reuses it at run time)
     assert plan.count("rangepartitioning(neg_m") >= 3
 
 
 def test_quantile_norm_corpus_rank_is_range_partitioned(spark, sf_dir):
-    """The corpus rank must be the global_sort_index shape (range shuffle),
-    never a partitionless row_number over all documents; since r12 the
-    per-source rank is ALSO range-shuffled (keyed_midrank_census with
-    c = 1), so the only windows left are the helper's (pid, key)-
-    partitioned prefixes, whose partitions are range-partition-sized by
-    construction — assert every window carries the pid bound."""
-    plan = executed_plan(spark, sf_dir, "q_quantile_norm")
+    """The corpus rank must be range-shuffled (graph.py::range_prefix),
+    never a partitionless row_number over all documents; the per-source
+    rank is ALSO range-shuffled (range_prefix keyed by source). Any
+    window left must carry the pid bound, i.e. be range-partition-sized
+    by construction (range_prefix itself plans none)."""
+    plan = query_plan(spark, sf_dir, "q_quantile_norm")
     assert "rangepartitioning(cv" in plan
     assert "rangepartitioning(source" in plan
     for line in plan.splitlines():
@@ -184,7 +184,7 @@ def test_ml_linreg_is_one_partial_aggregated_shuffle(spark, sf_dir):
     """Exactly one KEYED shuffle (the group-state exchange). A round-robin
     fan_out exchange is allowed: it widens the decimal partial aggregation
     past a small scan's partitioning and is a no-op at cluster scale."""
-    plan = executed_plan(spark, sf_dir, "q_ml_linreg")
+    plan = query_plan(spark, sf_dir, "q_ml_linreg")
     assert "partial_sum" in plan
     assert plan.count("Exchange hashpartitioning") == 1
     assert plan.count("Exchange rangepartitioning") == 0
@@ -197,13 +197,13 @@ def test_ml_linreg_is_one_partial_aggregated_shuffle(spark, sf_dir):
 def test_knn_graph_rank_is_group_limited(spark, sf_dir):
     """The candidate rank must pre-prune with WindowGroupLimit (per-map-side
     top-k) so the exchange carries <=k rows per (vector, input partition)."""
-    plan = executed_plan(spark, sf_dir, "q_knn_graph")
+    plan = query_plan(spark, sf_dir, "q_knn_graph")
     assert "WindowGroupLimit" in plan
     assert "row_number()" in plan
 
 
 def test_pagerank_aggregates_partially_and_reuses_checkpoints(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_pagerank")
+    plan = query_plan(spark, sf_dir, "q_pagerank")
     assert "partial_sum" in plan
     # the static edge-fraction and node inputs enter as checkpointed RDD
     # scans, not as re-derived join subtrees repeated once per iteration
@@ -215,7 +215,7 @@ def test_dense_grid_cartesian_is_dimension_only(spark, sf_dir):
     """The cross join must be a broadcast nested loop over tiny dims; the
     customer facts arrive pre-aggregated (partial agg present), never as
     a cartesian side."""
-    plan = executed_plan(spark, sf_dir, "q_dense_grid")
+    plan = query_plan(spark, sf_dir, "q_dense_grid")
     assert "BroadcastNestedLoopJoin" in plan
     assert "partial_count" in plan or "partial_sum" in plan
 
@@ -223,13 +223,13 @@ def test_dense_grid_cartesian_is_dimension_only(spark, sf_dir):
 def test_unpivot_reshapes_without_a_shuffle(spark, sf_dir):
     """Melt is an Expand node: one exchange total (the final aggregate),
     none for the reshape itself."""
-    plan = executed_plan(spark, sf_dir, "q_unpivot")
+    plan = query_plan(spark, sf_dir, "q_unpivot")
     assert "Expand" in plan
     assert plan.count("Exchange ") == 1
 
 
 def test_corpus_pipeline_broadcasts_eval_shingles(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_corpus_pipeline")
+    plan = query_plan(spark, sf_dir, "q_corpus_pipeline")
     assert "BroadcastHashJoin" in plan
 
 
@@ -237,7 +237,7 @@ def test_bloom_join_filters_before_broadcast_join(spark, sf_dir):
     """The bloom bit tests must sit in the fact scan's stage (a Filter on
     the lineitem side) with the small side broadcast — the runtime-filter
     shape that cuts probe volume before any join machinery."""
-    plan = executed_plan(spark, sf_dir, "q_bloom_join")
+    plan = query_plan(spark, sf_dir, "q_bloom_join")
     assert "BroadcastHashJoin" in plan
     assert "shiftright" in plan  # the bit test reached the physical plan
 
@@ -249,7 +249,7 @@ def test_lsh_banded_dedup_has_no_cartesian(spark, sf_dir):
     hash-partitioned equi-join on (band_idx, band_value) — and the final
     vector fetch must join back by id (vectors never ride the candidate
     shuffle)."""
-    plan = executed_plan(spark, sf_dir, "q_dedup_embedding_lsh")
+    plan = query_plan(spark, sf_dir, "q_dedup_embedding_lsh")
     assert "CartesianProduct" not in plan
     # the band self-join and both id joins are equi-joins
     assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") \
@@ -259,7 +259,7 @@ def test_lsh_banded_dedup_has_no_cartesian(spark, sf_dir):
 def test_interval_merge_reuses_one_exchange(spark, sf_dir):
     """Both windows and both aggregation pairs must ride ONE hash exchange
     on user_id — and the scan must read only the 3 referenced columns."""
-    plan = executed_plan(spark, sf_dir, "q_interval_merge")
+    plan = query_plan(spark, sf_dir, "q_interval_merge")
     assert plan.count("Exchange hashpartitioning") == 1
     assert "partial_min" in plan and "partial_count" in plan
     read_schema = plan.split("ReadSchema:", 1)[1].splitlines()[0]
@@ -270,7 +270,7 @@ def test_triangle_count_is_equi_joins_only(spark, sf_dir):
     """Degree-ordered wedge counting must never fall back to a cartesian:
     the wedge join and the closure join are equi-joins on packed integer
     keys; the only nested-loop joins are the one-row stat spine."""
-    plan = executed_plan(spark, sf_dir, "q_triangle_count")
+    plan = query_plan(spark, sf_dir, "q_triangle_count")
     assert "CartesianProduct" not in plan
     # the lazy localCheckpoints truncate lineage (upstream edge-derivation
     # joins appear as Scan ExistingRDD), so the final plan shows the wedge
@@ -287,7 +287,7 @@ def test_approx_distinct_registers_aggregate_partially(spark, sf_dir):
     """The HLL register table must partial-aggregate map-side (max per
     bucket) so the shuffle carries <= 4096 rows per group, and no raw
     count(DISTINCT) of the value column may appear in the plan."""
-    plan = executed_plan(spark, sf_dir, "q_approx_distinct")
+    plan = query_plan(spark, sf_dir, "q_approx_distinct")
     assert "partial_max" in plan
     assert "distinct l_orderkey" not in plan.lower()
 
@@ -296,7 +296,7 @@ def test_substring_dedup_single_scan_single_kernel(spark, sf_dir):
     # the round-6 plan fix: global window counts come from a window over
     # gh, not a groupBy+self-join that would duplicate the corpus scan and
     # the Arrow shingle kernel (the dominant cost at scale)
-    plan = executed_plan(spark, sf_dir, "q_substring_dedup")
+    plan = query_plan(spark, sf_dir, "q_substring_dedup")
     assert plan.count("Scan parquet") == 1
     assert plan.count("ArrowEvalPython") == 1
     assert "Window" in plan
@@ -305,7 +305,7 @@ def test_substring_dedup_single_scan_single_kernel(spark, sf_dir):
 def test_embed_quantize_is_pure_codegen_single_shuffle(spark, sf_dir):
     # int8 quantization must stay a map-side Column fold: no Python eval
     # nodes, and the only exchange is the per-label aggregate
-    plan = executed_plan(spark, sf_dir, "q_embed_quantize")
+    plan = query_plan(spark, sf_dir, "q_embed_quantize")
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert plan.count("Exchange") == 1
     assert "partial_count" in plan or "partial_sum" in plan
@@ -314,12 +314,12 @@ def test_embed_quantize_is_pure_codegen_single_shuffle(spark, sf_dir):
 def test_cms_probe_join_is_broadcast(spark, sf_dir):
     # the d*w counter table is <= 2,048 rows — the probe join must
     # broadcast it, never shuffle the probes
-    plan = executed_plan(spark, sf_dir, "q_heavy_hitters_cms")
+    plan = query_plan(spark, sf_dir, "q_heavy_hitters_cms")
     assert "BroadcastHashJoin" in plan
 
 
 def test_adamic_adar_has_no_cartesian_and_prunes_edges(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_adamic_adar")
+    plan = query_plan(spark, sf_dir, "q_adamic_adar")
     # wedge generation is a keyed self-join on the center node plus an
     # anti-join against the edge set — never an unkeyed pair blow-up
     assert "CartesianProduct" not in plan
@@ -333,7 +333,7 @@ def test_adamic_adar_has_no_cartesian_and_prunes_edges(spark, sf_dir):
 
 
 def test_passage_dedup_aggregates_partially(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_passage_dedup")
+    plan = query_plan(spark, sf_dir, "q_passage_dedup")
     # the winner min() and the census both combine map-side: the passage
     # hash shuffle carries states, not instances
     assert "partial_min" in plan or "partial_count" in plan
@@ -341,7 +341,7 @@ def test_passage_dedup_aggregates_partially(spark, sf_dir):
 
 
 def test_naive_bayes_model_joins_stay_bounded(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_naive_bayes")
+    plan = query_plan(spark, sf_dir, "q_naive_bayes")
     # the priors/totals/vocab sides ride broadcasts (5-row / 1-row);
     # the only nested-loop joins are those bounded broadcasts
     assert "CartesianProduct" not in plan
@@ -350,7 +350,7 @@ def test_naive_bayes_model_joins_stay_bounded(spark, sf_dir):
 
 
 def test_image_phash_is_single_pass_then_keyed_aggs(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_image_dedup_phash")
+    plan = query_plan(spark, sf_dir, "q_image_dedup_phash")
     # decode+hash happen inside one Arrow mapInPandas over the scan; the
     # (hash, source) table is localCheckpoint-pinned, so the visible plan
     # references that pinned lineage (0 MapInPandas here) rather than
@@ -360,7 +360,7 @@ def test_image_phash_is_single_pass_then_keyed_aggs(spark, sf_dir):
 
 
 def test_profile_table_scans_are_column_pruned(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_profile_table")
+    plan = query_plan(spark, sf_dir, "q_profile_table")
     # six per-column profiles -> six scans, each reading exactly its column
     for seg in plan.split("ReadSchema:")[1:]:
         schema = seg.splitlines()[0]
@@ -369,7 +369,7 @@ def test_profile_table_scans_are_column_pruned(spark, sf_dir):
 
 
 def test_item_cf_pairs_are_keyed_and_topk_is_windowed(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_item_cf")
+    plan = query_plan(spark, sf_dir, "q_item_cf")
     # basket pairs come from the orderkey-keyed self-join (bounded fan-out),
     # never an unkeyed blow-up; per-item top-k is a vocabulary-sized window
     assert "CartesianProduct" not in plan
@@ -378,7 +378,7 @@ def test_item_cf_pairs_are_keyed_and_topk_is_windowed(spark, sf_dir):
 
 
 def test_ctfidf_census_is_pinned_and_totals_broadcast(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_ctfidf_terms")
+    plan = query_plan(spark, sf_dir, "q_ctfidf_terms")
     # the (source, token) census is localCheckpoint-pinned (one corpus
     # explode); class totals and the 1-row grand total ride broadcasts
     assert "BroadcastExchange" in plan
@@ -422,7 +422,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
 
 
 def test_partitioned_prune_resolves_lang_at_plan_time(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_partitioned_prune")
+    plan = query_plan(spark, sf_dir, "q_partitioned_prune")
     # the lang predicate must be a directory-level PartitionFilter (zero
     # I/O on the other language slices), not a row-level data filter
     assert "PartitionFilters: [" in plan
@@ -431,13 +431,13 @@ def test_partitioned_prune_resolves_lang_at_plan_time(spark, sf_dir):
 
 
 def test_spearman_has_no_corpus_rank_window(spark, sf_dir):
-    """The order-total midranks come from the range-shuffled weighted
-    prefix (keyed_midrank_census) — never a rank window partitioned by
-    the 3-value flag alone, whose partitions are corpus/3-sized at 100 TB.
-    Every surviving window is either the helper's (pid, flag)-bounded
-    prefix or the (flag, n_items) value-grid census window (≤ flags × ~50
-    rows at any SF)."""
-    plan = executed_plan(spark, sf_dir, "q_spearman")
+    """The order-total midranks come from range-shuffled row positions
+    (range_prefix keyed by flag) — never a rank window partitioned by the
+    3-value flag alone, whose partitions are corpus/3-sized at 100 TB.
+    The only surviving window is the (flag, n_items) value-grid census
+    window (≤ flags × ~50 rows at any SF); a pid-bounded one would also
+    pass."""
+    plan = query_plan(spark, sf_dir, "q_spearman")
     assert "rangepartitioning(flag" in plan
     for line in plan.splitlines():
         if "windowspecdefinition" in line:
@@ -445,10 +445,11 @@ def test_spearman_has_no_corpus_rank_window(spark, sf_dir):
 
 
 def test_psi_drift_edges_are_census_rank_selected(spark, sf_dir):
-    """Decile edges come from the (type, value) census weighted prefix —
-    no per-type row_number window over the corpus-scaled reference half;
-    the only window is the helper's (pid, event_type)-bounded prefix."""
-    plan = executed_plan(spark, sf_dir, "q_psi_drift")
+    """Decile edges come from the (type, value) census of range-shuffled
+    row positions (range_prefix keyed by event_type) — no per-type
+    row_number window over the corpus-scaled reference half; any window
+    must carry the pid bound (range_prefix itself plans none)."""
+    plan = query_plan(spark, sf_dir, "q_psi_drift")
     assert "rangepartitioning(event_type" in plan
     for line in plan.splitlines():
         if "windowspecdefinition" in line:
@@ -459,12 +460,12 @@ def test_self_bleu_tokenizes_in_one_scan(spark, sf_dir):
     """The n=1..3 gram streams are concatenated per document and exploded
     once — one documents scan, not one per gram order (r11 VERDICT item 2:
     the claimed pin is now real and gated)."""
-    plan = executed_plan(spark, sf_dir, "q_self_bleu")
+    plan = query_plan(spark, sf_dir, "q_self_bleu")
     assert plan.count("FileScan parquet") == 1
 
 
 def test_quantile_norm_rank_lookup_is_an_equi_join(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_quantile_norm")
+    plan = query_plan(spark, sf_dir, "q_quantile_norm")
     # the corpus-rank lookup must hash-join on the per-source-computed
     # index key; a key expression mixing both sides degrades to a
     # nested-loop theta join (measured exp 1.52 before the fix)
@@ -476,7 +477,7 @@ def test_quantile_norm_rank_lookup_is_an_equi_join(spark, sf_dir):
 
 
 def test_data_contract_scans_each_table_once(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_data_contract")
+    plan = query_plan(spark, sf_dir, "q_data_contract")
     # all expectations against one table fuse into ONE aggregate scan,
     # pinned; the per-check legs project from the pinned 1-row result
     assert plan.count("FileScan parquet") == 0
@@ -487,11 +488,11 @@ def test_ndcg_topk_windows_are_group_limited(spark, sf_dir):
     """Both rank legs must pre-prune with WindowGroupLimit (map-side
     per-segment top-k) so no corpus-scaled partition is fully sorted for
     a top-10; the metric joins stay hash/broadcast, never cartesian.
-    (The relevance-grade subtree — range-partitioned global_sort_index +
+    (The relevance-grade subtree — range_prefix keyed by segment +
     exact ntile arithmetic — sits behind the gains localCheckpoint
     boundary, so it is invisible here; its ntile-equivalence is proven
     by the oracle hash, whose SQL uses ntile verbatim.)"""
-    plan = executed_plan(spark, sf_dir, "q_ndcg")
+    plan = query_plan(spark, sf_dir, "q_ndcg")
     assert plan.count("WindowGroupLimit") >= 2
     assert "ntile" not in plan
     assert "CartesianProduct" not in plan
@@ -502,7 +503,7 @@ def test_kcore_rounds_are_keyed_joins(spark, sf_dir):
     """Every peel round is endpoint-keyed hash joins + a partial-agg
     count — no cartesian anywhere; the per-round census rows are 1-row
     broadcasts."""
-    plan = executed_plan(spark, sf_dir, "q_kcore")
+    plan = query_plan(spark, sf_dir, "q_kcore")
     assert "CartesianProduct" not in plan
     assert "partial_count" in plan
 
@@ -510,7 +511,7 @@ def test_kcore_rounds_are_keyed_joins(spark, sf_dir):
 def test_scene_cut_decodes_once_per_clip(spark, sf_dir):
     """One Arrow pass synthesizes and one decodes+diffs; the rollup is a
     partial-aggregated groupBy — no per-consumer re-decode."""
-    plan = executed_plan(spark, sf_dir, "q_video_scene_cut")
+    plan = query_plan(spark, sf_dir, "q_video_scene_cut")
     assert plan.count("MapInPandas") == 2  # synthesize + decode/diff
     assert "partial_sum" in plan
 
@@ -526,7 +527,7 @@ def test_classification_report_single_corpus_census(spark, sf_dir):
     from go_web_mapreduce_spark.operators.ml import _CLSRPT_PRED_SQL
     from go_web_mapreduce_spark.sources.tables import load_table
 
-    plan = executed_plan(spark, sf_dir, "q_classification_report")
+    plan = query_plan(spark, sf_dir, "q_classification_report")
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert plan.count("orders.parquet") == 0  # behind the checkpoint
@@ -551,7 +552,7 @@ def test_classification_report_single_corpus_census(spark, sf_dir):
 def test_readability_is_map_side_census(spark, sf_dir):
     """Three regex counters fold map-side into a (source, band) census:
     one scan, one partial-agg shuffle, zero Python."""
-    plan = executed_plan(spark, sf_dir, "q_readability")
+    plan = query_plan(spark, sf_dir, "q_readability")
     assert plan.count("documents.parquet") == 1
     assert "partial_count" in plan or "partial_sum" in plan
     assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
@@ -561,7 +562,7 @@ def test_stl_windows_run_on_the_hourly_grid(spark, sf_dir):
     """The moving-average window must sit ABOVE the hourly aggregation
     (grid-sized input, partitioned by event_type) — never over raw
     events; and the final rollup partial-aggregates."""
-    plan = executed_plan(spark, sf_dir, "q_stl_decompose")
+    plan = query_plan(spark, sf_dir, "q_stl_decompose")
     assert "Window" in plan
     # window partition key present: no no-partition global sort
     assert "windowspecdefinition(event_type" in plan
@@ -571,7 +572,7 @@ def test_stl_windows_run_on_the_hourly_grid(spark, sf_dir):
 def test_random_projection_never_shuffles(spark, sf_dir):
     """A stateless projection: no Exchange of any kind, no Python, one
     pruned scan of (vec_id, embedding)."""
-    plan = executed_plan(spark, sf_dir, "q_random_projection")
+    plan = query_plan(spark, sf_dir, "q_random_projection")
     assert "Exchange" not in plan
     assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
     read_schema = plan.split("ReadSchema:", 1)[1].splitlines()[0]
@@ -582,7 +583,7 @@ def test_itemsets3_prunes_with_broadcast_semijoins(spark, sf_dir):
     """The Apriori prune legs are broadcast left-semi joins against the
     frequent-pair set; basket self-joins are key-equi joins (no
     cartesian)."""
-    plan = executed_plan(spark, sf_dir, "q_itemsets3")
+    plan = query_plan(spark, sf_dir, "q_itemsets3")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert plan.count("LeftSemi") >= 3
@@ -595,7 +596,7 @@ def test_ohlc_bars_aggregate_without_windows(spark, sf_dir):
     string ordering key plans as SortAggregate, which sorts within each
     partition — that is map-side work, not a corpus-wide range
     exchange.)"""
-    plan = executed_plan(spark, sf_dir, "q_ohlc_bars")
+    plan = query_plan(spark, sf_dir, "q_ohlc_bars")
     assert "Window" not in plan
     assert "Exchange rangepartitioning" not in plan  # no global sort
     assert plan.count("Exchange") == 1  # the one (type, hour) shuffle
@@ -644,7 +645,7 @@ def test_target_encoding_census_leg_is_pre_aggregated(spark, sf_dir):
     orders per customer BEFORE the dimension join (a corpus-scaled joined
     table must never be cached), the census joins back by broadcast, and
     nothing sits behind an RDD checkpoint."""
-    plan = executed_plan(spark, sf_dir, "q_target_encoding")
+    plan = query_plan(spark, sf_dir, "q_target_encoding")
     assert "Scan ExistingRDD" not in plan  # no corpus localCheckpoint
     assert "BroadcastHashJoin" in plan     # census joins back broadcast
     # the per-customer pre-aggregation exists: a partial aggregate keyed
@@ -657,7 +658,7 @@ def test_weighted_median_window_runs_on_the_value_census(spark, sf_dir):
     """The cumulative window's input must be the (brand, price) census —
     an aggregation sits below the Window, so the window never sees
     corpus rows; and the window carries the brand partition key."""
-    plan = executed_plan(spark, sf_dir, "q_weighted_median")
+    plan = query_plan(spark, sf_dir, "q_weighted_median")
     assert "windowspecdefinition(brand" in plan
     w = plan.index("Window")
     assert "HashAggregate" in plan[w:]  # census (below the window in text)
@@ -673,7 +674,7 @@ def test_kmv_bottom_k_is_window_group_limit(spark, sf_dir):
     """The rank<=k filter must execute as WindowGroupLimit (map tasks
     forward at most k rows per group) — never a full per-group sort of
     the distinct-hash stream."""
-    plan = executed_plan(spark, sf_dir, "q_kmv_distinct")
+    plan = query_plan(spark, sf_dir, "q_kmv_distinct")
     assert "WindowGroupLimit" in plan
     assert "CartesianProduct" not in plan
 
@@ -682,7 +683,7 @@ def test_hhi_folds_per_supplier_before_dimension_joins(spark, sf_dir):
     """Lineitem partial-aggregates to per-supplier revenue before the
     broadcast supplier/nation joins — the join input is |suppliers|,
     never line-level."""
-    plan = executed_plan(spark, sf_dir, "q_hhi")
+    plan = query_plan(spark, sf_dir, "q_hhi")
     assert plan.count("lineitem.parquet") == 1
     assert plan.count("BroadcastHashJoin") >= 2
     assert "SortMergeJoin" not in plan
@@ -695,7 +696,7 @@ def test_cramers_v_census_only_cartesian(spark, sf_dir):
     margins, and grid join all read (three ExistingRDD reads, zero
     customer scans in the final plan) — the q_classification_report
     discipline; the only cross join is the 5x25 margin grid."""
-    plan = executed_plan(spark, sf_dir, "q_cramers_v")
+    plan = query_plan(spark, sf_dir, "q_cramers_v")
     assert plan.count("customer.parquet") == 0  # behind the checkpoint
     assert plan.count("Scan ExistingRDD") == 3  # census read 3x, built once
 
@@ -704,7 +705,7 @@ def test_kruskal_corpus_touched_once(spark, sf_dir):
     """The corpus fold is the single (group, value) census aggregation
     behind a checkpoint; ranks, group rollup, and tie terms all derive
     from census reads — zero fact-table scans in the final plan."""
-    plan = executed_plan(spark, sf_dir, "q_kruskal_wallis")
+    plan = query_plan(spark, sf_dir, "q_kruskal_wallis")
     assert plan.count("lineitem.parquet") == 0  # behind the checkpoint
     assert plan.count("orders.parquet") == 0
     assert plan.count("Scan ExistingRDD") >= 2  # census reads
@@ -713,7 +714,7 @@ def test_kruskal_corpus_touched_once(spark, sf_dir):
 def test_feature_hashing_single_shuffle_no_python(spark, sf_dir):
     """Vocabulary-free: one doc-keyed aggregation shuffle, everything
     else map-side codegen — no Python workers, no second scan."""
-    plan = executed_plan(spark, sf_dir, "q_feature_hashing")
+    plan = query_plan(spark, sf_dir, "q_feature_hashing")
     assert plan.count("documents.parquet") == 1
     assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
     body = plan.split("AdaptiveSparkPlan")[-1]
@@ -723,13 +724,13 @@ def test_feature_hashing_single_shuffle_no_python(spark, sf_dir):
 def test_huber_iterations_are_broadcast_joined(spark, sf_dir):
     """Each IRLS step joins the corpus stream to the |brands| estimate
     table by broadcast — no shuffle of line rows for the lookup."""
-    plan = executed_plan(spark, sf_dir, "q_huber_mean")
+    plan = query_plan(spark, sf_dir, "q_huber_mean")
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 3
 
 
 def test_vocab_coverage_broadcasts_the_vocab(spark, sf_dir):
-    plan = executed_plan(spark, sf_dir, "q_vocab_coverage")
+    plan = query_plan(spark, sf_dir, "q_vocab_coverage")
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     # census pass + membership pass: exactly two document scans
@@ -740,7 +741,7 @@ def test_kneser_ney_top20_is_take_ordered(spark, sf_dir):
     """The bigram census builds once (explode+aggregate behind a
     checkpoint); all three marginals and the final join are census
     reads, and the top-20 is a TakeOrdered."""
-    plan = executed_plan(spark, sf_dir, "q_kneser_ney")
+    plan = query_plan(spark, sf_dir, "q_kneser_ney")
     assert "TakeOrderedAndProject" in plan
     assert plan.count("documents.parquet") == 0  # behind the checkpoint
     assert plan.count("Scan ExistingRDD") >= 3  # census reads
@@ -750,13 +751,13 @@ def test_path_analysis_opening_rank_is_group_limit(spark, sf_dir):
     """The first-PATH_LEN filter runs as WindowGroupLimit so the path
     assembly sees <= PATH_LEN rows per session; the top-10 is a
     TakeOrdered, not a global sort."""
-    plan = executed_plan(spark, sf_dir, "q_path_analysis")
+    plan = query_plan(spark, sf_dir, "q_path_analysis")
     assert "WindowGroupLimit" in plan
     assert "TakeOrderedAndProject" in plan
 
 
 def test_als_bcast_factor_join_is_broadcast(spark, sf_dir):
     """The factor-table lookup must not shuffle the interaction stream."""
-    plan = executed_plan(spark, sf_dir, "q_als_user_step_bcast")
+    plan = query_plan(spark, sf_dir, "q_als_user_step_bcast")
     assert "BroadcastHashJoin" in plan
     assert "partial_sum" in plan

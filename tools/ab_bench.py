@@ -3,7 +3,8 @@
 The sandbox host's speed drifts by 2-3x across minutes, so raw seconds from
 runs taken at different times are not comparable. This harness runs the SAME
 query list in two checkouts in alternating fresh processes, several rounds,
-and reports per-query minima plus a spin stamp per round.
+and reports per-query medians with the min-max range of each side, plus a
+calibration spin and the 1-minute loadavg per round.
 
 Usage: python tools/ab_bench.py --before /tmp/repo_before --after /root/repo \
            --rounds 3 q1 q2 ...
@@ -14,6 +15,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -78,17 +80,22 @@ def main() -> None:
             acc[tag].append(res)
             print(f"# round {r} {tag}: total "
                   f"{sum(v for k, v in res.items() if k != '__spin__'):.1f}s "
-                  f"spin {res['__spin__']:.2f} wall {time.time()-t0:.0f}s",
+                  f"spin {res['__spin__']:.2f} wall {time.time()-t0:.0f}s "
+                  f"loadavg {os.getloadavg()[0]:.2f}",
                   file=sys.stderr, flush=True)
 
-    print(f"{'query':42s} {'before':>8s} {'after':>8s}  ratio")
+    def side(tag: str, n: str) -> tuple[float, str]:
+        xs = [r[n] for r in acc[tag]]
+        return statistics.median(xs), f"{min(xs):.3f}-{max(xs):.3f}"
+
+    print(f"{'query (median, min-max)':32s} {'before':>20s} {'after':>20s}  ratio")
     tb = ta = 0.0
     for n in args.names:
-        b = min(r[n] for r in acc["before"])
-        a = min(r[n] for r in acc["after"])
+        b, rb = side("before", n)
+        a, ra = side("after", n)
         tb += b; ta += a
-        print(f"{n:42s} {b:8.3f} {a:8.3f}  {a/b:5.2f}")
-    print(f"{'TOTAL (min per query)':42s} {tb:8.3f} {ta:8.3f}  {ta/tb:5.2f}")
+        print(f"{n:32s} {b:7.3f} {rb:>12s} {a:7.3f} {ra:>12s}  {a/b:5.2f}")
+    print(f"{'TOTAL (sum of medians)':32s} {tb:7.3f} {'':12s} {ta:7.3f} {'':12s}  {ta/tb:5.2f}")
     spins_b = [r["__spin__"] for r in acc["before"]]
     spins_a = [r["__spin__"] for r in acc["after"]]
     print(f"spins before={spins_b} after={spins_a}")
