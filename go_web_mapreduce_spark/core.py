@@ -1,27 +1,35 @@
 """The reference's programmable MapReduce surface, DataFrame-native.
 
 One "algorithm" in the reference = ``(mapCode, reduceCode, input, inputLen,
-numPartitions)`` (reference: algorithm/algorithm.go:62-65). This module
-re-creates that contract on Spark:
+numPartitions)`` (reference: algorithm/algorithm.go:62-65), run as split →
+map → shuffle → reduce → concat. This module re-creates that contract on
+Spark, in two dialects that share one shuffle:
 
-- **map** (reference: server/static/js/main.js:7-23): strictly 1→1; the UDF
-  returns ``(partition_index, key, value)`` — the partition index is chosen
-  *by user code*, not by hash-of-key (reference: main.js:12-14, example
-  ``o.value.length % 2`` at server/views.go:54).
+- **split** (reference: algorithm/algorithm.go:91-103): the input is dealt
+  round-robin into ``ceil(N / input_len)`` map tasks.
+- **map** (reference: server/static/js/main.js:7-23): strictly 1→1; it
+  returns ``(pi, key, value)`` — the partition index is chosen *by user
+  code*, not by hash-of-key (reference: main.js:12-14, example
+  ``o.value.length % 2`` at server/views.go:54), and wraps into
+  ``[0, num_partitions)``.
 - **shuffle** (reference: algorithm/algorithm.go:170-192): group values by
-  key within each partition → ``{key, values}`` rows.
-- **reduce** (reference: main.js:24-30): one output row per key group.
+  key within each partition → ``{pi, key, [values]}`` rows, one native
+  ``groupBy(pi, key).agg(collect_list)`` exchange (:func:`_shuffle`).
+- **reduce** (reference: main.js:24-30): one output row per group.
 - **results** (reference: algorithm/algorithm.go:337-343): the union of all
   reduce outputs, order-nondeterministic.
+
+``pi`` is a grouping column, not a physical placement: a map callable sees
+one row and a reduce callable one group, so neither can observe which chunk
+a row was dealt to or which physical partition a group landed in. Results
+therefore depend only on the ``(pi, key)`` groups, which both dialects form
+identically.
 
 Everything the reference hand-builds around this (job scheduling, TTL
 re-queue, phase barrier polling, worker transport — SURVEY.md §2.1
 O11-O14/O17) is *deliberately absent*: Spark's DAG scheduler, shuffle
 service, and task retry are those features.
 
-Execution shape: the Python callables are the open-coded slots and run in
-Arrow-batched ``mapInPandas`` stages (the documented slow path); the shuffle
-between them is a native Catalyst ``groupBy(pi, key).agg(collect_list)``.
 Validations mirror the reference's constructor panics
 (algorithm/algorithm.go:68-83; protocol/input.go:18-22) as ``ValueError``.
 """
@@ -41,6 +49,19 @@ MAPPED_SCHEMA = "pi bigint, key string, value string"
 REDUCED_SCHEMA = "key string, value string"
 
 
+def _validate(input_df: DataFrame, num_partitions: int) -> None:
+    if num_partitions <= 0:
+        raise ValueError("num_partitions must be positive")
+    if not {"key", "value"} <= set(input_df.columns):
+        raise ValueError("input must have 'key' and 'value' string columns")
+
+
+def _shuffle(mapped: DataFrame) -> DataFrame:
+    """``(pi, key, value)`` rows → ``{pi, key, [values]}`` groups (reference
+    O6): the one exchange of an algorithm, hash-partitioned on (pi, key)."""
+    return mapped.groupBy("pi", "key").agg(F.collect_list("value").alias("values"))
+
+
 def submit_algorithm(
     map_fn: MapFn,
     reduce_fn: ReduceFn,
@@ -48,38 +69,26 @@ def submit_algorithm(
     input_len: int,
     num_partitions: int,
     total_rows: int | None = None,
-    exact_partitioning: bool = False,
-    contiguous_chunks: bool = False,
 ) -> DataFrame:
-    """Run a reference-style MapReduce algorithm; returns the results
-    DataFrame with schema ``key string, value string``.
+    """Run a reference-style MapReduce algorithm with Python callables in
+    the map and reduce slots; returns the results DataFrame with schema
+    ``key string, value string``.
 
-    ``input_len`` is the reference's map-job chunk size: the input is split
-    into ``ceil(N / input_len)`` map tasks (reference:
-    algorithm/algorithm.go:91-103). ``num_partitions`` is the user-visible
-    shuffle bucket count the map UDF addresses.
+    ``input_len`` is the reference's map-job chunk size: the input is dealt
+    round-robin into ``ceil(N / input_len)`` map tasks (reference:
+    algorithm/algorithm.go:91-103). ``num_partitions`` is the modulus of
+    the ``pi`` the map returns (``int(pi) % num_partitions``). Pass
+    ``total_rows`` when ``N`` is already known; otherwise the input is
+    counted once.
 
-    ``exact_partitioning=True`` additionally places each reduce group in the
-    physical partition equal to its ``pi`` (RDD ``partitionBy`` shim —
-    SURVEY.md §4.3); the default treats ``pi`` as a logical grouping column,
-    which is observationally equivalent for results.
-
-    ``contiguous_chunks=True`` slices the input into the reference's exact
-    *contiguous* ragged chunks — map job *i* sees rows
-    ``[i*input_len, min((i+1)*input_len, N))`` in input order (reference:
-    algorithm/algorithm.go:91-103) — instead of the default round-robin
-    ``repartition``. Only chunk-*sensitive* map UDFs (e.g. per-job numbering)
-    need it; the order-insensitive results are identical either way.
+    The callables run in Arrow-batched ``mapInPandas`` stages on either
+    side of :func:`_shuffle`.
     """
     if map_fn is None or reduce_fn is None:
         raise ValueError("map_fn and reduce_fn are required")  # empty code panics
     if input_len <= 0:
         raise ValueError("input_len must be positive")
-    if num_partitions <= 0:
-        raise ValueError("num_partitions must be positive")
-    cols = set(input_df.columns)
-    if not {"key", "value"} <= cols:
-        raise ValueError("input must have 'key' and 'value' string columns")
+    _validate(input_df, num_partitions)
 
     n = total_rows if total_rows is not None else input_df.count()
     if n == 0:
@@ -87,6 +96,8 @@ def submit_algorithm(
     num_map_jobs = max(1, math.ceil(n / input_len))
 
     def run_map(batches: Iterator) -> Iterator:
+        import pandas as pd
+
         for pdf in batches:
             out = {"pi": [], "key": [], "value": []}
             for k, v in zip(pdf["key"], pdf["value"]):
@@ -99,8 +110,6 @@ def submit_algorithm(
                 out["pi"].append(int(pi) % num_partitions)
                 out["key"].append(None if k2 is None else str(k2))
                 out["value"].append(None if v2 is None else str(v2))
-            import pandas as pd
-
             yield pd.DataFrame(out)
 
     def run_reduce(batches: Iterator) -> Iterator:
@@ -113,58 +122,14 @@ def submit_algorithm(
                 vals.append(str(reduce_fn(k, list(vs))))
             yield pd.DataFrame({"key": keys, "value": vals})
 
-    # map phase: ceil(N/input_len) tasks, the reference's chunking (O3)
-    kv = input_df.select("key", "value")
-    if contiguous_chunks:
-        chunked = _contiguous_chunks(kv, input_len, num_map_jobs)
-    else:
-        chunked = kv.repartition(num_map_jobs)
-    mapped = chunked.mapInPandas(run_map, MAPPED_SCHEMA)
-
-    # shuffle: {(pi, k, v)...} → {pi, k, [v...]} (reference O6), native Catalyst
-    grouped = mapped.groupBy("pi", "key").agg(F.collect_list("value").alias("values"))
-
-    if exact_partitioning:
-        # faithful bucket addressing: physical partition == pi
-        grouped = _partition_by_pi(grouped, num_partitions)
-    else:
-        grouped = grouped.repartition(num_partitions, "pi")
-
-    # reduce phase: one output row per key group (reference O7)
-    return grouped.select("key", "values").mapInPandas(run_reduce, REDUCED_SCHEMA)
-
-
-def _partition_by_pi(grouped: DataFrame, num_partitions: int) -> DataFrame:
-    """RDD shim for exact user-addressed bucketing: DataFrame
-    ``repartition(n, col)`` hashes the column; the reference instead uses the
-    UDF-returned index as the physical bucket id (reference:
-    protocol/message.go:15). Only the compat API pays this RDD round-trip."""
-    spark = grouped.sparkSession
-    schema = grouped.schema
-    rdd = grouped.rdd.map(lambda r: (r["pi"], r)).partitionBy(
-        num_partitions, lambda pi: int(pi)
-    ).map(lambda kv: kv[1])
-    return spark.createDataFrame(rdd, schema)
-
-
-def _contiguous_chunks(kv: DataFrame, input_len: int, num_map_jobs: int) -> DataFrame:
-    """Place row *r* (in input order) in physical partition ``r // input_len``
-    — the reference's contiguous ragged slicing (algorithm/algorithm.go:91-103:
-    ``low := i * inputLen; high := min(low+inputLen, len(input))``).
-
-    ``zipWithIndex`` numbers rows in partition-then-offset order, which is the
-    DataFrame's row order for a deterministic source; the identity
-    ``partitionBy`` then routes chunk *i* to map task *i*. RDD shim confined to
-    the compat API, same trade as :func:`_partition_by_pi`."""
-    spark = kv.sparkSession
-    schema = kv.schema
-    rdd = (
-        kv.rdd.zipWithIndex()
-        .map(lambda ri: (ri[1] // input_len, ri[0]))
-        .partitionBy(num_map_jobs, lambda cid: int(cid))
-        .map(lambda kv_: kv_[1])
+    mapped = (
+        input_df.select("key", "value")
+        .repartition(num_map_jobs)
+        .mapInPandas(run_map, MAPPED_SCHEMA)
     )
-    return spark.createDataFrame(rdd, schema)
+    return _shuffle(mapped).select("key", "values").mapInPandas(
+        run_reduce, REDUCED_SCHEMA
+    )
 
 
 def wordcount_algorithm(input_df: DataFrame, input_len: int = 10, num_partitions: int = 2) -> DataFrame:
@@ -194,11 +159,12 @@ def submit_algorithm_native(
     ``pi_expr``/``key_expr``/``value_expr`` are row expressions over the
     input's ``key``/``value`` columns (the map slot, reference:
     main.js:11-20); ``reduce_expr`` is an aggregate expression over the
-    grouped ``values`` array (the reduce slot, main.js:24-30). Everything
-    compiles to a native Catalyst plan — no Python worker, no Arrow
-    transfer — so an algorithm expressible as expressions runs at
-    built-in-operator speed; drop to :func:`submit_algorithm` only for
-    genuinely open-coded logic.
+    grouped ``values`` array (the reduce slot, main.js:24-30). Both slots
+    compile into the same plan as :func:`submit_algorithm`'s shuffle — no
+    Python worker, no Arrow transfer, no split (a projection needs none) —
+    so an algorithm expressible as expressions runs at built-in-operator
+    speed; drop to :func:`submit_algorithm` only for genuinely open-coded
+    logic.
 
     Example — the reference's demo word count (server/views.go:53-59)::
 
@@ -211,27 +177,20 @@ def submit_algorithm_native(
             num_partitions=2,
         )
     """
-    if num_partitions <= 0:
-        raise ValueError("num_partitions must be positive")
+    _validate(input_df, num_partitions)
     if not all(e and e.strip() for e in (pi_expr, key_expr, value_expr, reduce_expr)):
         raise ValueError("empty expression")  # empty code panics in the reference
-    cols = set(input_df.columns)
-    if not {"key", "value"} <= cols:
-        raise ValueError("input must have 'key' and 'value' string columns")
 
     mapped = input_df.select(
         # pmod, not %: Spark's % keeps the dividend's sign, so a pi_expr like
         # ``hash(value) % 4`` would address negative buckets here while the
-        # Python-compat path (``int(pi) % num_partitions`` above) wraps to
+        # Python dialect (``int(pi) % num_partitions`` above) wraps to
         # [0, n). The reference treats pi as a bucket index where a negative
         # is out of range (protocol/message.go:15).
         F.pmod(F.expr(pi_expr).cast("bigint"), F.lit(num_partitions)).alias("pi"),
         F.expr(key_expr).cast("string").alias("key"),
         F.expr(value_expr).cast("string").alias("value"),
     )
-    grouped = mapped.groupBy("pi", "key").agg(
-        F.collect_list("value").alias("values")
-    )
-    return grouped.select(
+    return _shuffle(mapped).select(
         "key", F.expr(reduce_expr).cast("string").alias("value")
     )

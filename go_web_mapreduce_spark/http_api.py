@@ -83,13 +83,8 @@ class _Api:
     """Request logic, separated from the BaseHTTPRequestHandler plumbing so
     it is unit-testable without sockets."""
 
-    def __init__(self, spark: SparkSession, max_collect_rows: int | None = None):
-        self.spark = spark
-        self.service = (
-            AlgorithmService(spark)
-            if max_collect_rows is None
-            else AlgorithmService(spark, max_collect_rows=max_collect_rows)
-        )
+    def __init__(self, spark: SparkSession):
+        self.service = AlgorithmService(spark)
         # completed handles stay retrievable over HTTP even after the
         # service GCs them from its live pool
         self.handles: dict[str, object] = {}

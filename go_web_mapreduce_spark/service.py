@@ -15,6 +15,11 @@ every distributed-systems concern underneath (scheduling, transport, phase
 barriers, retry) is Spark's (SURVEY.md §7 non-goals). Concurrent algorithms
 share one SparkSession and run in Spark's FAIR scheduler pools, the
 idiomatic replacement for the reference's master pool.
+
+Both code dialects go through one submission body,
+:meth:`AlgorithmService._submit`. A literal-list input is sized by its
+length, so submitting one runs no Spark job on the caller's thread: every
+job of an algorithm runs on the algorithm's own thread and job group.
 """
 
 from __future__ import annotations
@@ -22,6 +27,7 @@ from __future__ import annotations
 import math
 import threading
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -142,12 +148,17 @@ class AlgorithmService:
         num_partitions: int | None = None,
         sink_path: str | None = None,
     ) -> AlgorithmHandle:
-        """``POST /algorithm``. ``input`` is a DataFrame with (key, value)
-        string columns or a literal list of (key, value) pairs — the
+        """``POST /algorithm`` with Python callables in the map/reduce slots
+        (:func:`submit_algorithm`). ``input`` is a DataFrame with (key,
+        value) string columns or a literal list of (key, value) pairs — the
         reference's two ingest shapes (server/api.go:8-13, views.go:43-48).
 
         Validation mirrors the reference's request validation + constructor
         panics recovered to HTTP 400 (server/views.go:93-117) as ValueError.
+        ``num_partitions`` defaults to the reference's ``max(1, mapJobs/10)``
+        (server/views.go:107-108), where ``mapJobs = ceil(N /
+        map_input_length)``. ``N`` is a literal list's length, so submitting
+        one runs no Spark job; a DataFrame input is counted once.
 
         ``sink_path`` switches result delivery from driver ``collect()`` (the
         reference's master-side accumulation, algorithm/algorithm.go:337-343)
@@ -157,29 +168,12 @@ class AlgorithmService:
         cap: above it, ``wait()`` raises :class:`ResultTooLarge` instead of
         materializing an unbounded result on the driver.
         """
-        if isinstance(input, list):
-            if not input:
-                raise ValueError("empty input")  # govalidator: input required
-            input = kv_from_rows(self._spark, input)
-        if map_input_length <= 0:
-            raise ValueError("map_input_length must be positive")
-
-        total = input.count()
-        if total == 0:
-            raise ValueError("empty input")
-        num_map_jobs = max(1, math.ceil(total / map_input_length))
-        if num_partitions is None:
-            # reference: reduceJobs = max(1, mapJobs/10) (server/views.go:107-108)
-            num_partitions = max(1, num_map_jobs // REDUCE_JOBS_DIVISOR)
-        result_df = submit_algorithm(
-            map_fn,
-            reduce_fn,
-            input,
-            input_len=map_input_length,
-            num_partitions=num_partitions,
-            total_rows=total,
+        return self._submit(
+            input, map_input_length, num_partitions, sink_path,
+            lambda df, n, p: submit_algorithm(
+                map_fn, reduce_fn, df, map_input_length, p, total_rows=n
+            ),
         )
-        return self._launch(result_df, num_map_jobs, num_partitions, sink_path)
 
     def submit_native(
         self,
@@ -194,37 +188,37 @@ class AlgorithmService:
     ) -> AlgorithmHandle:
         """``POST /algorithm`` with SQL-expression slots: the same submission
         contract as :meth:`submit` but compiled to pure Catalyst
-        (:func:`submit_algorithm_native`) — no Python workers. Shares the
-        pool/cancel/GC machinery with the Python-dialect path."""
-        if isinstance(input, list):
-            if not input:
-                raise ValueError("empty input")
-            input = kv_from_rows(self._spark, input)
+        (:func:`submit_algorithm_native`) — no Python workers."""
+        return self._submit(
+            input, map_input_length, num_partitions, sink_path,
+            lambda df, n, p: submit_algorithm_native(
+                df, pi_expr, key_expr, value_expr, reduce_expr, p
+            ),
+        )
+
+    def _submit(
+        self,
+        input: DataFrame | list,
+        map_input_length: int,
+        num_partitions: int | None,
+        sink_path: str | None,
+        build: Callable[[DataFrame, int, int], DataFrame],
+    ) -> AlgorithmHandle:
+        """Validate, size, and launch one algorithm; ``build(input_df, N,
+        num_partitions)`` returns its results DataFrame."""
         if map_input_length <= 0:
             raise ValueError("map_input_length must be positive")
-        total = input.count()
+        total = len(input) if isinstance(input, list) else input.count()
         if total == 0:
-            raise ValueError("empty input")
+            raise ValueError("empty input")  # govalidator: input required
+        if isinstance(input, list):
+            input = kv_from_rows(self._spark, input)
         num_map_jobs = max(1, math.ceil(total / map_input_length))
         if num_partitions is None:
+            # reference: reduceJobs = max(1, mapJobs/10) (server/views.go:107-108)
             num_partitions = max(1, num_map_jobs // REDUCE_JOBS_DIVISOR)
-        result_df = submit_algorithm_native(
-            input,
-            pi_expr=pi_expr,
-            key_expr=key_expr,
-            value_expr=value_expr,
-            reduce_expr=reduce_expr,
-            num_partitions=num_partitions,
-        )
-        return self._launch(result_df, num_map_jobs, num_partitions, sink_path)
+        result_df = build(input, total, num_partitions)
 
-    def _launch(
-        self,
-        result_df: DataFrame,
-        num_map_jobs: int,
-        num_partitions: int,
-        sink_path: str | None,
-    ) -> AlgorithmHandle:
         algorithm_id = str(uuid.uuid4())
         handle = AlgorithmHandle(
             algorithm_id=algorithm_id,

@@ -5,6 +5,8 @@ programmable path with the native plan."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -34,22 +36,31 @@ def test_wordcount_algorithm_matches_native(spark, words):
     assert got["bacon"] == "4"
 
 
-def test_exact_partitioning_same_results(spark, words):
-    a = sorted(map(tuple, wordcount_algorithm(words, 5, 2).collect()))
-    b = sorted(
-        map(
-            tuple,
-            submit_algorithm(
-                lambda k, v: (len(v) % 2, v, "1"),
-                lambda k, vs: str(len(vs)),
-                words,
-                input_len=5,
-                num_partitions=2,
-                exact_partitioning=True,
-            ).collect(),
-        )
+def test_python_dialect_runs_one_shuffle(spark):
+    """The Python dialect's final plan carries the reference's one shuffle
+    (algorithm/algorithm.go:170-192): a single hash exchange keyed on
+    (pi, key), no second exchange keyed on pi alone, and no RDD round trip
+    (Scan ExistingRDD / SerializeFromObject) anywhere in the plan. The input
+    is a range scan so that any ExistingRDD scan would be the kernel's own."""
+    df = spark.range(60).select(
+        F.lit("").alias("key"),
+        F.concat(F.lit("w"), (F.col("id") % 7).cast("string")).alias("value"),
     )
-    assert a == b
+    out = wordcount_algorithm(df, 8, 3)
+    qe = out._jdf.queryExecution()
+    qe.toRdd().count()
+    plan = qe.executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    keyed = [
+        [c.split("#")[0] for c in args.split(", ")[:-1]]
+        for args in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", final)
+    ]
+    assert keyed == [["pi", "key"]], keyed
+    assert ["pi"] not in keyed
+    assert "Scan ExistingRDD" not in plan and "SerializeFromObject" not in plan
+    got = {r["key"]: r["value"] for r in out.collect()}
+    assert got == {f"w{i}": str(len(range(i, 60, 7))) for i in range(7)}
 
 
 def test_map_partition_index_wraps(spark, words):

@@ -1,7 +1,7 @@
 """Regression tests for the round-3 fixes (VERDICT/ADVICE r02): pmod bucket
-addressing in the native dispatcher, NULL-token Arrow kernels, contiguous
-input_len chunking, the driver-collect-free all-pairs embedding dedup,
-sample-trained + persisted IVF, and connected-components convergence."""
+addressing in the native dispatcher, NULL-token Arrow kernels, the
+driver-collect-free all-pairs embedding dedup, sample-trained + persisted
+IVF, and connected-components convergence."""
 
 from __future__ import annotations
 
@@ -48,43 +48,6 @@ def test_native_dispatcher_pmod_matches_python_path(spark):
         F.pmod(F.expr("hash(value) % 4").cast("bigint"), F.lit(4)).alias("pi")
     )
     assert mapped.filter((F.col("pi") < 0) | (F.col("pi") >= 4)).count() == 0
-
-
-def test_contiguous_chunks_match_reference_slicing(spark):
-    """contiguous_chunks=True must give map job i exactly rows
-    [i*input_len, min((i+1)*input_len, N)) in input order — the reference's
-    ragged slicing (algorithm/algorithm.go:91-103). The map UDF is made
-    chunk-sensitive on purpose: it emits the set of row keys each physical
-    chunk saw."""
-    n, input_len = 10, 4  # chunks: [0..3], [4..7], [8..9] — ragged tail
-    rows = [(str(i), f"w{i}") for i in range(n)]
-    df = spark.createDataFrame(rows, "key string, value string").coalesce(1)
-
-    out = submit_algorithm(
-        # key = the row's own key, value = constant; reduce returns the
-        # sorted keys seen in the group — chunk membership is observable
-        # through pi because map assigns pi from the first key in the chunk
-        map_fn=lambda k, v: (0, k, v),
-        reduce_fn=lambda k, vs: ",".join(sorted(vs)),
-        input_df=df,
-        input_len=input_len,
-        num_partitions=1,
-        contiguous_chunks=True,
-    )
-    assert out.count() == n  # 1→1 map, per-key reduce
-
-    # direct check of the physical slicing: run the chunker and record which
-    # physical partition each row landed in
-    from go_web_mapreduce_spark.core import _contiguous_chunks
-
-    chunked = _contiguous_chunks(df.select("key", "value"), input_len, 3)
-    per_part = chunked.select(
-        F.spark_partition_id().alias("p"), F.col("key").cast("int").alias("i")
-    ).collect()
-    got = {}
-    for r in per_part:
-        got.setdefault(r["p"], set()).add(r["i"])
-    assert got == {0: {0, 1, 2, 3}, 1: {4, 5, 6, 7}, 2: {8, 9}}
 
 
 def test_arrow_kernels_propagate_null_tokens(spark):

@@ -5,6 +5,8 @@ completion (reference: server/views.go:83-160)."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from go_web_mapreduce_spark.service import AlgorithmService
@@ -55,6 +57,38 @@ def test_concurrent_algorithms(service):
     r2 = {r["key"]: r["value"] for r in h2.wait(timeout=120)}
     assert r1["bacon"] == "3"
     assert r2["bacon"] == str(len("bacon") * 3)
+
+
+def test_literal_submission_runs_no_spark_job(spark, service):
+    """A submission of literal rows is sized from the list's length, so
+    neither dialect runs a Spark job on the submitting thread: every job of
+    an algorithm runs on its own thread, in its own job group."""
+    sc = spark.sparkContext
+    probe = f"submit-probe-{uuid.uuid4()}"
+    sc.setJobGroup(probe, "jobs run by the submitting thread")
+    try:
+        map_fn, reduce_fn = wordcount_fns()
+        rows = [("", w) for w in WORDS]
+        h_py = service.submit(map_fn, reduce_fn, rows, 3)
+        h_sql = service.submit_native(
+            rows,
+            3,
+            pi_expr="length(value) % 2",
+            key_expr="value",
+            value_expr="'1'",
+            reduce_expr="cast(size(values) as string)",
+        )
+        assert list(sc.statusTracker().getJobIdsForGroup(probe)) == []
+        want = {w: str(WORDS.count(w)) for w in WORDS}
+        for h in (h_py, h_sql):
+            assert {r["key"]: r["value"] for r in h.wait(timeout=120)} == want
+        # the listener bus is asynchronous: by now it has seen any job the
+        # submitting thread started
+        assert list(sc.statusTracker().getJobIdsForGroup(probe)) == []
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
 
 
 def test_pool_gc_after_completion(service):
