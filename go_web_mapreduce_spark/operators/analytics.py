@@ -2430,9 +2430,9 @@ def q_itemsets3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at sf100/550M items on a 48g local heap; the parquet pin is
     # disk-backed and column-pruned). Same pattern as pipeline_ops'
     # pinned censuses.
-    from go_web_mapreduce_spark.operators.pipeline_ops import _scratch_dir
+    from go_web_mapreduce_spark.sources.sinks import scratch_dir
 
-    items_path = _scratch_dir("itemsets")
+    items_path = scratch_dir("itemsets")
     (
         li.join(pt, li.l_partkey == pt.p_partkey)
         .select(F.col("l_orderkey").alias("o"), F.col("p_brand").alias("b"))
@@ -2455,7 +2455,7 @@ def q_itemsets3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidates): execute the basket-key join ONCE and pin its output to
     # scratch parquet — disk-backed like the items pin, so nothing
     # corpus-sized sits in the block manager
-    pair_path = _scratch_dir("itemsets_pairs")
+    pair_path = scratch_dir("itemsets_pairs")
     (
         a.join(b, (a.o == b.o2) & (F.col("brand_a") < F.col("brand_b")))
         .select("o", "brand_a", "brand_b")

@@ -34,54 +34,8 @@ from pyspark.sql import functions as F
 from go_web_mapreduce_spark.functions.numeric import dsum
 from go_web_mapreduce_spark.functions.text import tokens
 from go_web_mapreduce_spark.registry import query
+from go_web_mapreduce_spark.sources.sinks import SCRATCH_TABLES, scratch_dir
 from go_web_mapreduce_spark.sources.tables import fan_out, load_table
-
-# ---------------------------------------------------------------------------
-# scratch-artifact management for the interchange/layout queries
-# ---------------------------------------------------------------------------
-
-_SCRATCH_ROOT = None
-_SCRATCH_TABLES: list = []
-
-
-def _scratch_dir(prefix: str) -> str:
-    """Per-invocation scratch directory for the write-then-read-back
-    queries (CSV/JSONL/ORC round trips, partitioned/bucketed layouts).
-
-    A uuid4 nonce keys every invocation, so two concurrent runs of the
-    same query in one process (the FAIR-pool bench shape) can never race
-    on a path or a catalog table; all nonce dirs live under ONE
-    per-process root that an atexit hook removes, so artifacts do not
-    accumulate across processes either. The reads these queries return
-    are lazy — files must outlive the building function — but every
-    action runs before interpreter exit, so exit-time cleanup is safe.
-    """
-    global _SCRATCH_ROOT
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    if _SCRATCH_ROOT is None:
-        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="spark_graft_scratch_")
-
-        def _cleanup() -> None:
-            shutil.rmtree(_SCRATCH_ROOT, ignore_errors=True)
-            # best-effort catalog hygiene; the in-memory catalog dies with
-            # the process anyway, so a stopped session is fine to skip
-            try:
-                from pyspark.sql import SparkSession
-
-                active = SparkSession.getActiveSession()
-                if active is not None:
-                    for t in _SCRATCH_TABLES:
-                        active.sql(f"DROP TABLE IF EXISTS {t}")
-            except Exception:
-                pass
-
-        atexit.register(_cleanup)
-    return os.path.join(_SCRATCH_ROOT, f"{prefix}_{uuid.uuid4().hex[:12]}")
 
 # ---------------------------------------------------------------------------
 # portable expression generators
@@ -848,9 +802,9 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    # nonce-keyed scratch path (see _scratch_dir): no races between
+    # nonce-keyed scratch path (see sinks.scratch_dir): no races between
     # concurrent invocations or processes, removed at interpreter exit
-    path = _scratch_dir("csv")
+    path = scratch_dir("csv")
     # pin the null/empty dialect explicitly on BOTH sides: nulls travel as
     # \N, empty strings as quoted "" — Spark's default read maps empty
     # fields to null, which would silently change n_unique/sum_len for a
@@ -910,8 +864,8 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    # nonce-keyed scratch path (see _scratch_dir): race-free, exit-cleaned
-    path = _scratch_dir("jsonl")
+    # nonce-keyed scratch path (see sinks.scratch_dir): race-free, exit-cleaned
+    path = scratch_dir("jsonl")
     docs.write.mode("overwrite").json(path)
     back = (
         spark.read.schema(
@@ -1802,8 +1756,8 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    # nonce-keyed scratch path (see _scratch_dir): race-free, exit-cleaned
-    path = _scratch_dir("orc")
+    # nonce-keyed scratch path (see sinks.scratch_dir): race-free, exit-cleaned
+    path = scratch_dir("orc")
     docs.write.mode("overwrite").orc(path)
     back = spark.read.schema(
         "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -1859,8 +1813,8 @@ def q_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    # nonce-keyed scratch path (see _scratch_dir): race-free, exit-cleaned
-    path = _scratch_dir("part")
+    # nonce-keyed scratch path (see sinks.scratch_dir): race-free, exit-cleaned
+    path = scratch_dir("part")
     docs.write.mode("overwrite").partitionBy("lang").parquet(path)
     back = spark.read.schema(
         "doc_id bigint, text string, source string, n_chars bigint, lang string"
@@ -1914,13 +1868,13 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bucket merge-sort fan-in on read."""
     import os
 
-    # nonce-keyed path AND table names (see _scratch_dir): two concurrent
+    # nonce-keyed path AND table names (see sinks.scratch_dir): two concurrent
     # invocations can never race on the same catalog table or directory;
     # the tables are registered for best-effort exit-time DROP
-    base = _scratch_dir("bucket")
+    base = scratch_dir("bucket")
     key = os.path.basename(base).rsplit("_", 1)[-1]
     tc, to = f"bkt_customer_{key}", f"bkt_orders_{key}"
-    _SCRATCH_TABLES.extend([tc, to])
+    SCRATCH_TABLES.extend([tc, to])
     customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )

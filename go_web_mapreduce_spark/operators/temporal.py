@@ -830,9 +830,9 @@ def q_lift_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pin it to scratch parquet (the q_itemsets3 discipline — disk-backed,
     # column-pruned, never a corpus-sized block-manager pin) so the events
     # shuffle + session window run exactly once at any scale (guide §2.4).
-    from go_web_mapreduce_spark.operators.pipeline_ops import _scratch_dir
+    from go_web_mapreduce_spark.sources.sinks import scratch_dir
 
-    sess_path = _scratch_dir("lift_sess")
+    sess_path = scratch_dir("lift_sess")
     (
         sessionize(load_table(spark, sf_dir, "events"))
         .select("user_id", "session_id", "event_type")

@@ -50,9 +50,8 @@ def scoped_conf(spark: SparkSession, **pairs: str):
                 spark.conf.set(k, old)
 
 
-@contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Temporarily set spark.sql.shuffle.partitions.
+    """Temporarily set spark.sql.shuffle.partitions (``scoped_conf``).
 
     Used where a plan's natural parallelism is far below the session default:
     streaming state stores sized to key cardinality (streaming/events.py) and
@@ -61,12 +60,7 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int):
     queries instead rely on AQE coalescing, which cannot help streaming state
     (partition count frozen into the checkpoint) and only trims, not
     re-plans, a tiny iterative step."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return scoped_conf(spark, **{"spark.sql.shuffle.partitions": str(n)})
 
 
 def get_spark(

@@ -7,25 +7,35 @@ operators/temporal.py runs here as a real streaming query (file source →
 windowed aggregation → memory sink), so batch/stream parity is testable and
 the registered query ``q_stream_hourly`` shares the batch oracle.
 
+Every streaming query here runs to completion through ONE drain
+(``drain``): state partitions and per-query confs scoped to the query,
+every micro-batch the finite source offers processed, and ``stop`` always
+— the stream analogue of the reference's job sets draining. Memory-sink
+queries go through ``drain_to_memory``, which drops the sink's temp view
+before returning, so no run leaves a view in the session catalog; path
+sinks and their checkpoints live under ``sources.sinks.scratch_dir``, one
+fresh directory per call inside a single exit-removed root.
+
 Scale notes: at production scale the source becomes Kafka/object-store
 listing with ``maxFilesPerTrigger``; the aggregation state is per
 (window, event_type) — thousands of groups, bounded by a watermark when run
-in append mode. Here (finite input) complete mode + processAllAvailable
-drives the query to a deterministic final answer synchronously.
+in append mode. Here (finite input) complete mode + ``drain`` drives the
+query to a deterministic final answer synchronously.
 """
 
 from __future__ import annotations
 
-import itertools
+import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from go_web_mapreduce_spark.registry import query
+from go_web_mapreduce_spark.session import scoped_conf
+from go_web_mapreduce_spark.sources.sinks import scratch_dir
 from go_web_mapreduce_spark.sources.tables import normalize_events
-from go_web_mapreduce_spark.session import scoped_conf, scoped_shuffle_partitions
-
-_counter = itertools.count()
 
 # State-store partition count for the engine's streaming aggregations. A
 # streaming query's shuffle-partition setting is frozen into its checkpoint at
@@ -49,6 +59,39 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events(stream)
 
 
+def drain(writer: DataStreamWriter, spark: SparkSession, **conf: str) -> None:
+    """Run a finite stream to completion: start ``writer``'s query with the
+    state partitions (``STREAM_STATE_PARTITIONS``) and any extra ``conf``
+    scoped to it, process every available micro-batch, and always stop."""
+    with scoped_conf(
+        spark,
+        **{"spark.sql.shuffle.partitions": str(STREAM_STATE_PARTITIONS)},
+        **conf,
+    ):
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+
+def drain_to_memory(df: DataFrame, mode: str, **conf: str) -> DataFrame:
+    """``drain`` ``df`` in output ``mode`` into a uniquely named memory sink
+    and return the sink's final table. The temp view is dropped before
+    returning: the returned DataFrame holds the sink's rows itself, so the
+    catalog keeps nothing once the caller lets go of the result."""
+    spark = df.sparkSession
+    name = f"stream_{uuid.uuid4().hex[:12]}"
+    drain(
+        df.writeStream.outputMode(mode).format("memory").queryName(name),
+        spark,
+        **conf,
+    )
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
+
+
 def hourly_rollup_stream(
     spark: SparkSession, sf_dir: str, watermark: str = "2 hours"
 ) -> DataFrame:
@@ -58,7 +101,6 @@ def hourly_rollup_stream(
     Uses ``window(ts, '1 hour')`` (epoch-aligned → identical buckets to
     ``date_trunc('hour')``), complete output mode, memory sink.
     """
-    name = f"hourly_stream_{next(_counter)}"
     agg = (
         stream_events(spark, sf_dir)
         .withWatermark("ts", watermark)
@@ -70,18 +112,7 @@ def hourly_rollup_stream(
             ),
         )
     )
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name).select(
+    return drain_to_memory(agg, "complete").select(
         F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("hour"),
         "event_type",
         "n",
@@ -123,7 +154,6 @@ def categorized_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The static side re-resolves per micro-batch, so at scale it can be a
     slowly-changing dimension table; Spark plans the join as a broadcast
     against each batch."""
-    name = f"categorized_stream_{next(_counter)}"
     dim = F.broadcast(
         spark.createDataFrame(EVENT_CATEGORIES, "event_type string, category string")
     )
@@ -136,18 +166,7 @@ def categorized_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("total_value"),
         )
     )
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain_to_memory(agg, "complete")
 
 
 @query(
@@ -182,7 +201,6 @@ def deduped_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch. State is hash-partitioned on event_id like any keyed
     state; the downstream count aggregation re-shuffles to event_type.
     """
-    name = f"dedup_stream_{next(_counter)}"
     src = stream_events(spark, sf_dir).withWatermark("ts", "2 hours")
     # simulate at-least-once duplicate delivery. union(src, src) measured
     # FASTER than the one-scan explode(array(1,2)) formulation (4.4s vs
@@ -195,18 +213,7 @@ def deduped_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n"))
     )
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain_to_memory(agg, "complete")
 
 
 @query(
@@ -233,9 +240,6 @@ def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is bounded by ACTIVE sessions, not history. This is the streaming
     shape of the reference-era 'sessionize in reduce' workload.
     """
-    import os
-    import tempfile
-
     agg = (
         stream_events(spark, sf_dir)
         .withColumn("_ts_us", F.expr("ts_ns div 1000"))
@@ -254,25 +258,12 @@ def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sink collects the whole complete-mode table into the DRIVER (blew
     # spark.driver.maxResultSize at sf10 — SCALE.md). foreachBatch writes
     # each complete snapshot distributed; the last snapshot is the result.
-    # PID-keyed path: concurrent processes never race (pipeline_ops rule).
-    out_path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_session_stream_{os.getpid()}_{next(_counter)}",
-    )
+    out_path = scratch_dir("session_stream")
 
     def sink_batch(batch_df, _batch_id):
         batch_df.write.mode("overwrite").parquet(out_path)
 
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(sink_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    drain(agg.writeStream.outputMode("complete").foreachBatch(sink_batch), spark)
     return spark.read.parquet(out_path).select(
         "user_id", "start_us", "n_events", "span_us"
     )
@@ -327,9 +318,6 @@ def session_window_append_stream(
     horizon remain open in state, unemitted — the oracle mirrors that
     boundary to the microsecond, the q_stream_hourly_append pattern.
     """
-    import os
-    import tempfile
-
     agg = (
         stream_events(spark, sf_dir)
         .withColumn("_ts_us", F.expr("ts_ns div 1000"))
@@ -343,10 +331,7 @@ def session_window_append_stream(
             (F.max("_ts_us") - F.min("_ts_us")).alias("span_us"),
         )
     )
-    out_path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_session_append_{os.getpid()}_{next(_counter)}",
-    )
+    out_path = scratch_dir("session_append")
 
     def sink_batch(batch_df, _batch_id):
         # append-mode rows are final: write once, never rewritten
@@ -358,23 +343,15 @@ def session_window_append_stream(
     # RocksDB keeps the session state off-heap/on-disk — the standard
     # production setting for large streaming state, and an implementation
     # detail only (values identical; the sf0.001/0.01 oracle hashes pin it)
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS), scoped_conf(
+    drain(
+        agg.writeStream.outputMode("append").foreachBatch(sink_batch),
         spark,
         **{
             "spark.sql.streaming.stateStore.providerClass":
                 "org.apache.spark.sql.execution.streaming."
                 "state.RocksDBStateStoreProvider"
         },
-    ):
-        q = (
-            agg.writeStream.outputMode("append")
-            .foreachBatch(sink_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    )
     if not os.path.isdir(out_path):  # nothing emitted (all inside horizon)
         return spark.createDataFrame(
             [], "user_id bigint, start_us bigint, n_events bigint, span_us bigint"
@@ -436,7 +413,6 @@ def hourly_rollup_append_stream(
     windows inside the horizon remain open (in state, unemitted) — the
     oracle mirrors that boundary to the microsecond.
     """
-    name = f"hourly_append_stream_{next(_counter)}"
     agg = (
         stream_events(spark, sf_dir)
         .withWatermark("ts", watermark)
@@ -448,18 +424,7 @@ def hourly_rollup_append_stream(
             ),
         )
     )
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name).select(
+    return drain_to_memory(agg, "append").select(
         F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("hour"),
         "event_type",
         "n",
@@ -502,9 +467,6 @@ def purchase_click_attribution_stream(spark: SparkSession, sf_dir: str) -> DataF
     history. An unbounded-condition stream-stream join would grow state
     forever; the time bound is what makes this production-viable.
     """
-    import os
-    import tempfile
-
     purchases = (
         stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
@@ -538,31 +500,22 @@ def purchase_click_attribution_stream(spark: SparkSession, sf_dir: str) -> DataF
     # for a stream whose output grows with the data. The memory sink
     # accumulates every emitted row in the DRIVER (the q_stream_session_
     # window sf10 failure class); the file sink writes distributed with
-    # exactly-once per-batch commits under the checkpoint. PID-keyed paths.
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_attrib_stream_{os.getpid()}_{next(_counter)}",
-    )
+    # exactly-once per-batch commits under the checkpoint.
+    base = scratch_dir("attrib_stream")
     # INNER stream-stream joins emit each match in the micro-batch that
     # reads it; the trailing no-data batch exists only to advance the
     # watermark and evict state, paying a full state-commit round across
     # every (partition x join-side) store for zero output — measured ~1.7 s
     # of this query's ~4.2 s at sf0.1. Skip it. (Append-mode AGGREGATIONS
     # must keep no-data batches — they finalize windows there.)
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS), scoped_conf(
-        spark, **{"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    ):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{base}/out")
-            .option("checkpointLocation", f"{base}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    drain(
+        joined.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", f"{base}/out")
+        .option("checkpointLocation", f"{base}/ckpt"),
+        spark,
+        **{"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
+    )
     return spark.read.parquet(f"{base}/out")
 
 
@@ -606,17 +559,10 @@ def foreachbatch_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-overwrite warehouse dir; `batch_id` is Spark's epoch
     identifier, stable across restarts from the same checkpoint.
     """
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    # PID in the key: two concurrent processes on the same dataset must
-    # not race on rmtree/overwrite of a shared scratch dir
-    key = hashlib.md5(f"{sf_dir}:{os.getpid()}".encode()).hexdigest()[:12]
-    base = f"{tempfile.gettempdir()}/spark_graft_febatch_{key}"
+    # a fresh nonce dir per call: no stale epochs, and a second result
+    # built before the first is read never touches the first's files
+    base = scratch_dir("febatch")
     out_dir, ckpt = f"{base}/out", f"{base}/ckpt"
-    shutil.rmtree(base, ignore_errors=True)  # fresh deterministic run
 
     ev = stream_events(spark, sf_dir).select("event_id", "event_type", "value")
 
@@ -625,16 +571,10 @@ def foreachbatch_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.write.mode("overwrite").parquet(path)
         df.write.mode("overwrite").parquet(path)  # simulated epoch replay
 
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
-            ev.writeStream.foreachBatch(write_epoch)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    drain(
+        ev.writeStream.foreachBatch(write_epoch).option("checkpointLocation", ckpt),
+        spark,
+    )
 
     back = spark.read.option("basePath", out_dir).parquet(out_dir)
     return back.groupBy("event_type").agg(
@@ -726,7 +666,6 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster scale (see q_stream_foreachbatch)."""
     from go_web_mapreduce_spark.functions import hll as _hll
 
-    name = f"hll_stream_{next(_counter)}"
     val = "CAST(user_id AS STRING)"
     ev = stream_events(spark, sf_dir).withWatermark("ts", "2 hours")
     regs = (
@@ -741,18 +680,7 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type", "bucket")
         .agg(F.max("rank").alias("M"))
     )
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
-            regs.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    reg_tbl = spark.table(name)
+    reg_tbl = drain_to_memory(regs, "complete")
     stats = reg_tbl.groupBy("w", "event_type").agg(
         F.sum(F.expr(_hll.hll_term_sql_spark("M"))).alias("_s"),
         F.count("*").alias("_nb"),
@@ -815,26 +743,14 @@ STREAM_TOPK = 3
 def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    name = f"topk_stream_{next(_counter)}"
     agg = (
         stream_events(spark, sf_dir)
         .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
         .agg(F.count("*").alias("n"))
     )
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     wnd = W.partitionBy("hour").orderBy(F.col("n").desc(), "user_id")
     return (
-        spark.table(name)
+        drain_to_memory(agg, "complete")
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("hour"),
             "user_id",
@@ -894,7 +810,6 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same 2-hour watermark genuinely evicts closed windows and state
     is bounded by (open windows × types). State partitions are sized to
     key cardinality per the module's state-store note."""
-    name = f"sliding_stream_{next(_counter)}"
     agg = (
         stream_events(spark, sf_dir)
         .withWatermark("ts", "2 hours")
@@ -908,18 +823,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_value"),
         )
     )
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name).select(
+    return drain_to_memory(agg, "complete").select(
         F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
         "n",

@@ -7,6 +7,10 @@ incrementally-updated aggregate. The streaming-native re-expression is
 Arrow-batched user code — the engine's open-coded *stateful* slot, the
 streaming sibling of ``core.submit_algorithm``'s batch map/reduce slots.
 
+Like every streaming query in the engine, it runs to completion through
+``events.drain_to_memory``: one drain, and the memory sink's temp view is
+dropped before the result is returned.
+
 Scale notes: state lives in the state store (RocksDB/HDFS-backed per
 partition at cluster scale), keyed by the grouping column, so the operator
 scales with distinct keys, not events. ``GroupStateTimeout`` would bound
@@ -16,21 +20,13 @@ timeout is set.
 
 from __future__ import annotations
 
-import itertools
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from go_web_mapreduce_spark.registry import query
-from go_web_mapreduce_spark.streaming.events import (
-    STREAM_STATE_PARTITIONS,
-    scoped_shuffle_partitions,
-    stream_events,
-)
-
-_counter = itertools.count()
+from go_web_mapreduce_spark.streaming.events import drain_to_memory, stream_events
 
 OUTPUT_SCHEMA = "event_type string, n bigint, max_value double"
 STATE_SCHEMA = "n bigint, max_value double"
@@ -68,21 +64,9 @@ def running_event_stats(stream: DataFrame) -> DataFrame:
 def run_to_completion(agg: DataFrame, spark: SparkSession) -> DataFrame:
     """Drive a stateful stream over the finite source and return the final
     per-key state: the latest (largest-n) emission per key."""
-    name = f"stateful_stream_{next(_counter)}"
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     # running counts grow monotonically; max() picks each key's final state
     return (
-        spark.table(name)
+        drain_to_memory(agg, "update")
         .groupBy("event_type")
         .agg(F.max("n").alias("n"), F.max("max_value").alias("max_value"))
     )
