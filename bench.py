@@ -194,7 +194,7 @@ def main() -> None:
     # server/views.go:30-36). Wall clock of the whole batch, not per query.
     # Each worker gets its OWN child session (newSession: isolated SQLConf,
     # shared SparkContext), so queries that scope session conf
-    # (scoped_shuffle_partitions in streaming/dedup_groups) cannot race other
+    # (streaming's drain, dedup_groups' scoped_shuffle_partitions) cannot race other
     # threads' plans or leave the shared session pinned to a tiny value.
     if os.environ.get("SPARK_GRAFT_BENCH_CONCURRENT") == "1":
         from concurrent.futures import ThreadPoolExecutor

@@ -54,12 +54,10 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int):
     """Temporarily set spark.sql.shuffle.partitions (``scoped_conf``).
 
     Used where a plan's natural parallelism is far below the session default:
-    streaming state stores sized to key cardinality (streaming/events.py) and
     iterative fixpoint loops over edge lists orders of magnitude smaller than
     the corpus (operators/dedup.py::connected_components). Batch one-shot
-    queries instead rely on AQE coalescing, which cannot help streaming state
-    (partition count frozen into the checkpoint) and only trims, not
-    re-plans, a tiny iterative step."""
+    queries instead rely on AQE coalescing, which only trims, not re-plans,
+    a tiny iterative step."""
     return scoped_conf(spark, **{"spark.sql.shuffle.partitions": str(n)})
 
 

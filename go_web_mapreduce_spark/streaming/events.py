@@ -75,18 +75,14 @@ def drain(writer: DataStreamWriter, spark: SparkSession, **conf: str) -> None:
             q.stop()
 
 
-def drain_to_memory(df: DataFrame, mode: str, **conf: str) -> DataFrame:
+def drain_to_memory(df: DataFrame, mode: str) -> DataFrame:
     """``drain`` ``df`` in output ``mode`` into a uniquely named memory sink
     and return the sink's final table. The temp view is dropped before
     returning: the returned DataFrame holds the sink's rows itself, so the
     catalog keeps nothing once the caller lets go of the result."""
     spark = df.sparkSession
     name = f"stream_{uuid.uuid4().hex[:12]}"
-    drain(
-        df.writeStream.outputMode(mode).format("memory").queryName(name),
-        spark,
-        **conf,
-    )
+    drain(df.writeStream.outputMode(mode).format("memory").queryName(name), spark)
     out = spark.table(name)
     spark.catalog.dropTempView(name)
     return out

@@ -1,16 +1,20 @@
 """End-to-end golden mechanism (SURVEY.md §5, adopted pattern 3): every
 registered query with a DuckDB oracle must match it at sf0.001 —
 order-insensitive, column-name-sorted, floats normalized — the same
-discipline the driver applies at sf0.01."""
+discipline the driver applies at sf0.01. Every run also checks that the
+query leaves nothing behind once its result has been read."""
 
 from __future__ import annotations
 
 import math
+import os
+import tempfile
 
 import duckdb
 import pytest
 
 from go_web_mapreduce_spark.queries import REGISTRY
+from go_web_mapreduce_spark.sources.sinks import scratch_dir
 from go_web_mapreduce_spark.sources.tables import TABLES
 
 from conftest import SF_DIR
@@ -30,6 +34,37 @@ def norm_rows(cols, rows):
 
 
 @pytest.fixture(scope="module")
+def own_tmp(tmp_path_factory):
+    """A temp dir private to this module: ``tempfile`` users create their
+    entries there, so no other process on the host can add one that the
+    leftover check would see."""
+    prev = tempfile.tempdir
+    tempfile.tempdir = str(tmp_path_factory.mktemp("tmp"))
+    yield
+    tempfile.tempdir = prev
+
+
+def leftovers(spark):
+    """Temp views in the session catalog and top-level ``spark_graft_*``
+    entries in the temp dir — what a query could leave outside its result."""
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    tmp = {e for e in os.listdir(tempfile.gettempdir()) if e.startswith("spark_graft_")}
+    return views, tmp
+
+
+def assert_left_nothing(spark, name, before):
+    """No new top-level temp entry besides the one exit-removed scratch root,
+    for every query. No new temp view for the streaming family, whose memory
+    sinks drop theirs; the SQL-string queries elsewhere replace fixed-name
+    views by design, so those never accumulate."""
+    views, tmp = leftovers(spark)
+    scratch_root = os.path.basename(os.path.dirname(scratch_dir("probe")))
+    assert tmp - before[1] <= {scratch_root}
+    if REGISTRY[name].fn.__module__.startswith("go_web_mapreduce_spark.streaming"):
+        assert views - before[0] == set()
+
+
+@pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
     for t in TABLES:
@@ -42,10 +77,12 @@ ROWS_ONLY_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_query_matches_oracle(spark, duck, name):
+def test_query_matches_oracle(spark, duck, own_tmp, name):
     spec = REGISTRY[name]
+    before = leftovers(spark)
     sdf = spec.fn(spark, SF_DIR)
     scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
+    assert_left_nothing(spark, name, before)
     res = duck.execute(spec.oracle)
     dcols = [d[0] for d in res.description]
     drows = res.fetchall()
@@ -55,8 +92,10 @@ def test_query_matches_oracle(spark, duck, name):
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
-def test_rows_only_query_runs(spark, name):
+def test_rows_only_query_runs(spark, own_tmp, name):
     spec = REGISTRY[name]
+    before = leftovers(spark)
     df = spec.fn(spark, SF_DIR)
     assert df.count() >= 0
     assert df.columns
+    assert_left_nothing(spark, name, before)

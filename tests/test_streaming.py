@@ -1,27 +1,14 @@
 """Batch/stream parity: the Structured Streaming hourly rollup must produce
-exactly the batch plan's answer on the same finite input. Also gates the
-streaming family's drain: no query leaves a temp view or temp directory
-behind, and two results of one query coexist."""
+exactly the batch plan's answer on the same finite input. Also gates that
+two results of one path-sink query coexist (the leftover gate for every
+streaming query sits in test_oracle_parity)."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-
-import pytest
-
 from go_web_mapreduce_spark.operators.temporal import q_events_hourly
-from go_web_mapreduce_spark.queries import REGISTRY
-from go_web_mapreduce_spark.sources.sinks import scratch_dir
 from go_web_mapreduce_spark.streaming.events import (
     hourly_rollup_stream,
     q_stream_foreachbatch,
-)
-
-STREAMING_QUERIES = sorted(
-    name
-    for name, spec in REGISTRY.items()
-    if spec.fn.__module__.startswith("go_web_mapreduce_spark.streaming")
 )
 
 
@@ -428,30 +415,6 @@ def test_stream_hll_registers_equal_batch(spark, sf_dir):
     }
     got = {(r["hour"], r["event_type"]): r["approx_users"] for r in rows}
     assert got == want
-
-
-@pytest.mark.parametrize("name", STREAMING_QUERIES)
-def test_streaming_query_leaves_no_view_or_tmp_dir(spark, sf_dir, name):
-    """A streaming query drains inside its function and leaves nothing
-    behind: no temp view in the session catalog (memory sinks), and no new
-    top-level ``spark_graft_*`` temp entry besides the one scratch root that
-    holds path sinks and checkpoints. The result must still read after the
-    function has returned."""
-
-    def temp_views():
-        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
-
-    def tmp_entries():
-        return {
-            e for e in os.listdir(tempfile.gettempdir()) if e.startswith("spark_graft_")
-        }
-
-    views_before, tmp_before = temp_views(), tmp_entries()
-    df = REGISTRY[name].fn(spark, sf_dir)
-    df.count()
-    assert temp_views() - views_before == set()
-    scratch_root = os.path.basename(os.path.dirname(scratch_dir("probe")))
-    assert tmp_entries() - tmp_before <= {scratch_root}
 
 
 def test_foreachbatch_results_coexist(spark, sf_dir):
