@@ -20,10 +20,9 @@ from __future__ import annotations
 
 import math
 
-# measurement protocol (tools/ann_curves.py)
-CURVES_SF_DIR = "/root/testdata/sf0.1"
+# measurement protocol (tools/ann_curves.py): recall@CURVES_K over 20
+# probes of the sf0.1 corpus
 CURVES_K = 10
-CURVES_N_PROBES = 20
 # the corpus the MEASURED table was produced on: sf0.1 = 2,000 vectors.
 # Every shortlist/radius knob in MEASURED is an ABSOLUTE count relative
 # to this n — the reason fixed knobs collapse at a new corpus size.

@@ -547,8 +547,3 @@ def decode_jpeg(data: bytes):
     return np.clip(np.round(np.stack([r, g, b], axis=-1)), 0, 255).astype(
         np.uint8
     )
-
-
-# backward-compatible name: the original grayscale entry point (now also
-# accepts 3-component files and returns (h, w, 3) for them)
-decode_jpeg_gray = decode_jpeg

@@ -1,4 +1,4 @@
-"""Skew mitigation: salted aggregation and salted joins.
+"""Skew mitigation: salted joins.
 
 AQE's skew-join splitting (on in session.py) handles most skew at runtime by
 splitting oversized partitions. Salting is the *planned* alternative for the
@@ -6,20 +6,15 @@ cases AQE can't fix: a single group key so hot that even one split of it
 overwhelms a task (the classic null-key / power-law-head problem in web-scale
 dedup and joins).
 
-Both helpers are algebraic rewrites with identical results:
-
-- ``salted_agg``: group by (key, salt) first — the hot key's rows spread over
-  ``num_salts`` tasks producing partial states — then re-aggregate by key.
-  Works for any associative aggregate (the decomposition COUNT→SUM,
-  SUM→SUM, MIN→MIN... is the caller's, kept explicit).
-- ``salted_join``: salt the skewed (big) side randomly; explode the small
-  side ``num_salts``× so every (key, salt) pair still matches. Join
-  cardinality is unchanged; the hot key now lands on ``num_salts`` tasks.
+``salted_join`` is an algebraic rewrite with identical results: salt the
+skewed (big) side randomly; explode the small side ``num_salts``× so every
+(key, salt) pair still matches. Join cardinality is unchanged; the hot key
+now lands on ``num_salts`` tasks.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "__salt"
@@ -31,27 +26,6 @@ def with_salt(df: DataFrame, num_salts: int) -> DataFrame:
     if num_salts <= 0:
         raise ValueError("num_salts must be positive")
     return df.withColumn(SALT_COL, (F.rand() * num_salts).cast("int"))
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    partial_aggs: list[Column],
-    final_aggs: list[Column],
-    num_salts: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation over (keys + salt) then keys.
-
-    ``partial_aggs`` run per (key, salt); ``final_aggs`` merge the partials
-    per key and must reference the partial alias names. Example::
-
-        salted_agg(events, ["user_id"],
-                   [F.count("*").alias("pn")],
-                   [F.sum("pn").alias("n")])
-    """
-    salted = with_salt(df, num_salts)
-    partial = salted.groupBy(*keys, SALT_COL).agg(*partial_aggs)
-    return partial.groupBy(*keys).agg(*final_aggs)
 
 
 def salted_join(

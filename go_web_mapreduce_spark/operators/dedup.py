@@ -589,10 +589,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_pairs(load_table(spark, sf_dir, "documents"))
 
 
-SIMHASH_WIDE_BITS = 120  # two 60-bit halves
-SIMHASH_WIDE_BANDS = 4  # 4 x 30-bit bands: complete for hamming <= 3
-
-
 def simhash_pairs_wide(
     docs: DataFrame,
     text_col: str = "text",

@@ -2387,8 +2387,6 @@ def q_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 FH_DIM = 16  # hashed feature dimension
 
-_FH_COLS = [f"f{j:02d}" for j in range(FH_DIM)]
-
 
 @query(
     "q_feature_hashing",

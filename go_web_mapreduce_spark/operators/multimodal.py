@@ -39,9 +39,6 @@ from go_web_mapreduce_spark.sources.tables import fan_out, load_table
 
 FEATURE_DIM = 8
 
-MEDIA_SCHEMA = (
-    "doc_id bigint, payload binary, mime string, n_bytes bigint, source string"
-)
 FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes bigint, digest string, "
     f"features array<float>, source string"
@@ -447,75 +444,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-RESIZED_SCHEMA = "doc_id bigint, thumb binary, width int, height int"
-FRAME_SCHEMA = "doc_id bigint, frame_no int, frame binary, offset_bytes bigint"
-
-FRAME_SIZE = 256  # bytes per fake "frame" slice of the payload
-
-
-def resize_media(media: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
-    """Thumbnail/resample step: Arrow-batched 1→1 transform of binary
-    payloads to fixed-size outputs.
-
-    The pixel resample of arbitrary codecs needs the stubbed compressed-
-    format decoders (decode_payload), so
-    the stand-in derives a deterministic width×height byte block from the
-    payload digest; schema, batch iteration, and output sizing are the real
-    plumbing a PIL/ffmpeg resize drops into.
-    """
-    if width <= 0 or height <= 0:
-        raise ValueError("width and height must be positive")
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        n_out = width * height
-        for pdf in batches:
-            thumbs = []
-            for payload in pdf["payload"]:
-                digest = hashlib.md5(bytes(payload)).digest()
-                reps = -(-n_out // len(digest))  # ceil
-                thumbs.append((digest * reps)[:n_out])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "thumb": thumbs,
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(run, RESIZED_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_n: int = 4) -> DataFrame:
-    """Frame sampling: the 1→N row-expanding shape (a video payload yields
-    every ``every_n``-th frame as its own row) through mapInPandas — the
-    pattern a real container demuxer plugs into. Frames here are contiguous
-    FRAME_SIZE-byte slices of the payload (container demux stubbed, see
-    decode_payload); offsets are real."""
-    if every_n <= 0:
-        raise ValueError("every_n must be positive")
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"doc_id": [], "frame_no": [], "frame": [], "offset_bytes": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                total = -(-len(raw) // FRAME_SIZE)  # ceil: number of frames
-                for frame_no in range(0, total, every_n):
-                    off = frame_no * FRAME_SIZE
-                    out["doc_id"].append(doc_id)
-                    out["frame_no"].append(frame_no)
-                    out["frame"].append(raw[off : off + FRAME_SIZE])
-                    out["offset_bytes"].append(off)
-            yield pd.DataFrame(out)
-
-    return media.select("doc_id", "payload").mapInPandas(run, FRAME_SCHEMA)
-
-
 @query(
     "q_multimodal_frames",
     # sampled frames k ∈ {0, 2, ...}: frame k's blocks tile text bytes
@@ -612,8 +540,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resize is no longer a digest stand-in: every payload is a genuine
     image file (three formats), decoded for real, and the thumbnail is an
     exact integer box average — so a decode bug, an off-by-one in the
-    window grid, or a rounding-mode drift all hash-mismatch. The generic
-    byte-level ``resize_media`` op remains for undecodable payloads."""
+    window grid, or a rounding-mode drift all hash-mismatch."""
 
     def run(batches: Iterator) -> Iterator:
         import numpy as np

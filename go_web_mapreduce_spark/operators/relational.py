@@ -742,17 +742,16 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rollup/cube lattice) — SURVEY §2.2 grouping sets",
 )
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem_gs")
     return spark.sql(
         """
         SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
                coalesce(l_linestatus, 'ALL') AS linestatus,
                count(*) AS n,
                CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS STRING) AS DOUBLE) AS revenue
-        FROM lineitem_gs
+        FROM {li}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
+        """,
+        li=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -991,18 +990,18 @@ def q_approx_distinct_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semi join — no per-row subquery execution)",
 )
 def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_sq")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_sq")
     return spark.sql(
         """
         SELECT c_mktsegment, count(*) AS n_customers
-        FROM customer_sq c
+        FROM {customer} c
         WHERE EXISTS (
-          SELECT 1 FROM orders_sq o
+          SELECT 1 FROM {orders} o
           WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000
         )
         GROUP BY c_mktsegment
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -1018,14 +1017,14 @@ def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "subquery stage whose single value feeds the filter)",
 )
 def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_ssq")
     return spark.sql(
         """
         SELECT o_orderpriority, count(*) AS n_above_avg
-        FROM orders_ssq
-        WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders_ssq)
+        FROM {orders}
+        WHERE o_totalprice > (SELECT avg(o_totalprice) FROM {orders})
         GROUP BY o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -35,7 +35,7 @@ from go_web_mapreduce_spark.functions import ann_oracle, linalg_oracle
 from go_web_mapreduce_spark.functions.ann_config import cluster_count
 from go_web_mapreduce_spark.functions.vectors import cosine_similarity
 from go_web_mapreduce_spark.registry import query
-from go_web_mapreduce_spark.sources.tables import fan_out, load_table
+from go_web_mapreduce_spark.sources.tables import load_table
 
 TOP_K = 20
 KNN_PROBES = 10  # vec_id < 10 used as the probe set
@@ -866,9 +866,7 @@ def ivf_assign(
     total instead of ~3 jobs per MLlib iteration (rewritten in round 5:
     the MLlib fit's ~30 tiny jobs dominated the inline ANN queries at test
     SFs and its ``sample()`` selection was layout-dependent). Recall vs
-    exact is what's asserted (tests/test_ann.py), not inertia. Persist
-    the result with :func:`ivf_persist` so a probe's nprobe buckets
-    become partition pruning.
+    exact is what's asserted (tests/test_ann.py), not inertia.
 
     Every step is engine-portable (round 6): the sample key is md5 of the
     id string (identical in Spark and DuckDB), initialization is the first
@@ -910,34 +908,12 @@ def ivf_assign(
     return assigned, centroids
 
 
-def ivf_persist(assigned: DataFrame, centroids: list[list[float]], path: str) -> None:
-    """Write the IVF index: the assigned corpus partitioned by ``cid`` (so an
-    nprobe search becomes parquet partition pruning — only the probed
-    directories are read) plus the centroid matrix as a tiny JSON sidecar."""
-    assigned.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/vectors")
-    spark = assigned.sparkSession
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], "cid int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/centroids")
-
-
-def ivf_load(spark: SparkSession, path: str):
-    """Load a persisted IVF index → ``(assigned_df, centroids)``. The
-    returned DataFrame is partition-pruned by any ``cid`` filter."""
-    assigned = spark.read.parquet(f"{path}/vectors")
-    cents = spark.read.json(f"{path}/centroids").collect()
-    centroids = [None] * len(cents)
-    for r in cents:
-        centroids[int(r["cid"])] = [float(x) for x in r["centroid"]]
-    return assigned, centroids
-
-
 def ivf_assign_frozen(
     vectors: DataFrame, centroids: list[list[float]], id_col: str = "vec_id"
 ) -> DataFrame:
     """Assign vectors to the nearest of FROZEN centroids (Euclidean argmin,
     the KMeans.transform metric) — a map-side Arrow pass, no training, no
-    shuffle. The ingest-time half of :func:`ivf_append`."""
+    shuffle."""
     import numpy as np
     import pandas as pd
 
@@ -951,45 +927,6 @@ def ivf_assign_frozen(
         return pd.Series(d.argmin(1).astype("int32"))
 
     return vectors.select(id_col, "embedding", assign("embedding").alias("cid"))
-
-
-def ivf_append(
-    spark: SparkSession, path: str, new_vectors: DataFrame,
-    id_col: str = "vec_id",
-) -> None:
-    """Incremental IVF ingest: append a new batch to a persisted index
-    WITHOUT retraining — the coarse quantizer is frozen, the batch is
-    assigned map-side (:func:`ivf_assign_frozen`) and appended under the
-    same ``partitionBy("cid")`` layout, so searches immediately see the
-    new vectors through the identical partition-pruned path.
-
-    This is the standard production ingest pattern (Jégou-style IVF
-    deployments): assignment is O(batch·C·d) with zero shuffle and zero
-    index rebuild; quantizer retraining/rebalancing is an offline
-    decision when list-size drift accumulates — monitor with a
-    ``groupBy("cid").count()`` over the persisted table. The batch-vs-
-    index discipline mirrors q_dedup_incremental's content-hash index
-    (dedup.py)."""
-    _, centroids = ivf_load(spark, path)
-    assigned = ivf_assign_frozen(new_vectors, centroids, id_col)
-    assigned.write.mode("append").partitionBy("cid").parquet(f"{path}/vectors")
-
-
-def ivf_topk_persisted(
-    spark: SparkSession,
-    path: str,
-    probe: DataFrame,
-    k: int = TOP_K,
-    nprobe: int = IVF_NPROBE,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Search a persisted IVF index: rank centroids against the probe
-    driver-side (C×dim — tiny), then scan only the ``nprobe`` nearest
-    partitions (parquet partition pruning on ``cid``)."""
-    assigned, centroids = ivf_load(spark, path)
-    top_c = _nearest_centroids(probe, centroids, nprobe)
-    cands = assigned.filter(F.col("cid").isin(top_c))
-    return cosine_topk(cands.select(id_col, "embedding"), probe, k, id_col)
 
 
 def ivf_topk(
@@ -1042,8 +979,7 @@ def _nearest_centroids(
         cap=IVF_TRAIN_SAMPLE_CAP, nprobe=IVF_NPROBE, top_k=TOP_K,
     ),
     description="ANN top-20 via IVF coarse quantizer (sample-trained k-means "
-    "partitioning + nprobe inverted-list scan; ivf_persist partitions the "
-    "index by cid for partition-pruned search) — the preferred 100 TB "
+    "partitioning + nprobe inverted-list scan) — the preferred 100 TB "
     "similarity path; recall vs exact measured in tests/test_ann.py; "
     "hash-verified against a DuckDB oracle that replays the training as "
     "unrolled Lloyd CTEs (functions/ann_oracle.py); defaults are one "
@@ -1253,55 +1189,6 @@ def q_knn_graph_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`knn_graph_ivf` states."""
     emb = load_table(spark, sf_dir, "embeddings")
     return knn_graph_ivf(emb, num_centroids=KNN_IVF_SCALED_CENTROIDS)
-
-
-def knn_graph_ivf_auto(
-    corpus: DataFrame,
-    k: int = KNN_K,
-    aprobe: int = KNN_IVF_APROBE,
-    id_col: str = "vec_id",
-    total_rows: int | None = None,
-) -> DataFrame:
-    """:func:`knn_graph_ivf` with the cluster count EMITTED by the scale
-    rule instead of supplied — the API a user should reach for at an
-    unknown corpus size (round-11 fix for the fixed-C wall: the C=256
-    sf10 operating point OOM'd at 2M vectors, because C was a constant
-    the caller had to know to change; ``cluster_count`` is C ∝ √n,
-    power-of-two quantized, anchored on the measured 32 @ 2k and
-    256 @ 200k points).
-
-    Pass ``total_rows`` when the count is already known (e.g. from table
-    stats) to skip the counting job; otherwise one ``count()`` runs
-    first — against a parquet corpus that is metadata-only.
-
-    At the curve corpus (sf0.1, 2,000 vectors) the emitted C is exactly
-    IVF_C, so this is plan-identical to :func:`knn_graph_ivf`'s default
-    (pinned in tests/test_ann_config.py); at sf10 it emits the measured
-    scaled-twin C=256; at sf100 (2M vectors) it emits 1024 — the
-    configuration the bounded-worker measurement in
-    SCALE_MEASURED_SF100.json validates."""
-    n = total_rows if total_rows is not None else corpus.count()
-    return knn_graph_ivf(
-        corpus, k=k, num_centroids=cluster_count(n), aprobe=aprobe,
-        id_col=id_col,
-    )
-
-
-def contrastive_pairs_ivf_auto(
-    corpus: DataFrame, total_rows: int | None = None
-) -> DataFrame:
-    """Contrastive positive/hard-negative mining over the auto-C IVF kNN
-    graph — :func:`knn_graph_ivf_auto` feeding the same pinned
-    ``_mine_contrastive`` classification as the three registered miners.
-    This is the deployment shape of q_contrastive_pairs_ivf_scaled: the
-    registered twin pins the measured 200k-vector point for hash
-    verification; THIS derives C from the corpus so the sf100 wall
-    (C=256 OOM at 2M vectors, round 10) cannot be reproduced by
-    following the API."""
-    kn = knn_graph_ivf_auto(
-        corpus, k=CP_K, total_rows=total_rows
-    ).localCheckpoint(eager=False)
-    return _mine_contrastive(kn)
 
 
 # ---------------------------------------------------------------------------
@@ -1595,67 +1482,6 @@ def pq_adc_score(codes_col, codebooks, probe_vec) -> "F.Column":
     return F.aggregate(gathered, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def pq_persist(
-    codes: DataFrame, codebooks, path: str, corpus: DataFrame | None = None
-) -> None:
-    """Write the PQ index: the codes table as parquet (8 bytes/vector — the
-    compressed-domain scan target) plus the codebook tensor as a tiny JSON
-    sidecar. Optionally co-persist the full vectors for rerank locality.
-    Encode ONCE at ingest; every later probe reads only codes + sidecar."""
-    codes.write.mode("overwrite").parquet(f"{path}/codes")
-    spark = codes.sparkSession
-    m, ksub, dsub = codebooks.shape
-    rows = [
-        (j, c, [float(x) for x in codebooks[j][c]])
-        for j in range(m)
-        for c in range(ksub)
-    ]
-    spark.createDataFrame(
-        rows, "j int, c int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/codebooks")
-    if corpus is not None:
-        corpus.write.mode("overwrite").parquet(f"{path}/vectors")
-
-
-def pq_load(spark: SparkSession, path: str):
-    """Load a persisted PQ index → ``(codes_df, codebooks)``."""
-    import numpy as np
-
-    codes = spark.read.parquet(f"{path}/codes")
-    rows = spark.read.json(f"{path}/codebooks").collect()
-    m = 1 + max(int(r["j"]) for r in rows)
-    ksub = 1 + max(int(r["c"]) for r in rows)
-    dsub = len(rows[0]["centroid"])
-    cb = np.zeros((m, ksub, dsub))
-    for r in rows:
-        cb[int(r["j"]), int(r["c"])] = [float(x) for x in r["centroid"]]
-    return codes, cb
-
-
-def pq_topk_persisted(
-    spark: SparkSession,
-    path: str,
-    probe: DataFrame,
-    corpus: DataFrame,
-    k: int = TOP_K,
-    shortlist: int = PQ_SHORTLIST,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Search a persisted PQ index: the ADC shortlist scans ONLY the codes
-    parquet (32× smaller than the vectors); the exact rerank joins the
-    shortlist ids back onto the full-vector table. No re-training, no
-    re-encoding per probe — the production read path."""
-    codes, cb = pq_load(spark, path)
-    pv = [float(x) for x in probe.select("embedding").first()["embedding"]]
-    short = (
-        codes.select(id_col, pq_adc_score(F.col("codes"), cb, pv).alias("adc"))
-        .orderBy(F.col("adc").desc(), F.col(id_col))
-        .limit(shortlist)
-    )
-    cands = corpus.join(F.broadcast(short.select(id_col)), id_col)
-    return cosine_topk(cands.select(id_col, "embedding"), probe, k, id_col)
-
-
 def pq_topk(
     corpus: DataFrame,
     probe: DataFrame,
@@ -1694,9 +1520,7 @@ def pq_topk(
     description="ANN top-20 via product quantization: sample-trained "
     "per-subspace codebooks, map-side 4-bit encoding (32× compression), "
     "codegen ADC gather-sum shortlist, exact rerank of the shortlist only — "
-    "the compressed-domain 100 TB similarity path; pq_persist/pq_load/"
-    "pq_topk_persisted give the encode-once-query-many read path (codes "
-    "parquet + codebook sidecar), persisted search byte-equal to inline; "
+    "the compressed-domain 100 TB similarity path; "
     "pick_config(target) in functions/ann_config.py maps a recall target "
     "to the cheapest measured (shortlist, m, ksub) — m=16 hits 0.87 at "
     "the default shortlist",
@@ -1737,7 +1561,7 @@ def ivfpq_topk(
 
     Scale shape: quantizer + codebooks train on capped samples; assignment
     and encoding are one map-side scan each; a probe reads nprobe/C of the
-    8-byte codes (partition pruning under the persisted layout),
+    8-byte codes,
     shortlists with a codegen gather-sum + TakeOrdered, and reranks only
     ``shortlist`` full vectors. Measured recall/candidate-fraction in
     tests/test_ann.py and SCALE.md."""
@@ -1856,72 +1680,6 @@ def _ivfpq_search(
     )
     cands = vectors.join(F.broadcast(short.select(id_col)), id_col)
     return cosine_topk(cands.select(id_col, "embedding"), probe, k, id_col)
-
-
-def ivfpq_persist(
-    codes: DataFrame, centroids: list[list[float]], codebooks,
-    path: str, corpus: DataFrame,
-) -> None:
-    """Write the IVFPQ index: residual codes parquet PARTITIONED BY cid
-    (an nprobe search reads only the probed directories — the 8-byte-per-
-    vector scan), centroid + codebook JSON sidecars, and the full vectors
-    for the exact rerank. Encode once at ingest; probes read codes +
-    sidecars + ``shortlist`` vectors."""
-    codes.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/codes")
-    spark = codes.sparkSession
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)],
-        "cid int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/centroids")
-    m, ksub, dsub = codebooks.shape
-    spark.createDataFrame(
-        [
-            (j, c, [float(x) for x in codebooks[j][c]])
-            for j in range(m)
-            for c in range(ksub)
-        ],
-        "j int, c int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/codebooks")
-    corpus.write.mode("overwrite").parquet(f"{path}/vectors")
-
-
-def ivfpq_load(spark: SparkSession, path: str):
-    """Load a persisted IVFPQ index → ``(codes_df, centroids, codebooks,
-    vectors_df)``; codes are partition-pruned by any ``cid`` filter."""
-    import numpy as np
-
-    codes = spark.read.parquet(f"{path}/codes")
-    cents = spark.read.json(f"{path}/centroids").collect()
-    centroids = [None] * len(cents)
-    for r in cents:
-        centroids[int(r["cid"])] = [float(x) for x in r["centroid"]]
-    rows = spark.read.json(f"{path}/codebooks").collect()
-    m = max(int(r["j"]) for r in rows) + 1
-    ksub = max(int(r["c"]) for r in rows) + 1
-    dsub = len(rows[0]["centroid"])
-    cb = np.zeros((m, ksub, dsub))
-    for r in rows:
-        cb[int(r["j"]), int(r["c"])] = [float(x) for x in r["centroid"]]
-    vectors = spark.read.parquet(f"{path}/vectors")
-    return codes, centroids, cb, vectors
-
-
-def ivfpq_topk_persisted(
-    spark: SparkSession,
-    path: str,
-    probe: DataFrame,
-    k: int = TOP_K,
-    nprobe: int = IVF_NPROBE,
-    shortlist: int = PQ_SHORTLIST,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Search a persisted IVFPQ index: sidecars load driver-side (KBs),
-    the ADC pass reads only the probed cid partitions of the codes
-    parquet, and the rerank touches ``shortlist`` full vectors."""
-    codes, centroids, cb, vectors = ivfpq_load(spark, path)
-    return _ivfpq_search(
-        codes, centroids, cb, vectors, probe, k, nprobe, shortlist, id_col
-    )
 
 
 @query(

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.functions.numeric import dsum
 from go_web_mapreduce_spark.registry import query
-from go_web_mapreduce_spark.sources.tables import fan_out, load_table
+from go_web_mapreduce_spark.sources.tables import load_table
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes, in microseconds
 
@@ -96,62 +96,6 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count("*").cast("double") / F.countDistinct("session_id")).alias(
             "events_per_session"
         ),
-    )
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str = "ts_ns",
-    right_ts: str = "ts_ns",
-    tolerance: int | None = None,
-    left_id: str | list[str] | None = None,
-) -> DataFrame:
-    """As-of join: for each left row, the single LATEST right row with
-    right_ts <= left_ts (optionally within ``tolerance`` time units), per
-    ``on`` key. Right columns arrive prefixed ``r_``; left rows with no
-    qualifying right row are kept with nulls (merge_asof semantics).
-
-    ``left_id`` names the left row's primary key (string or composite list);
-    the per-left-row rank is keyed on it, so re-ranking is deterministic under
-    stage recomputation/retries (monotonically_increasing_id is not — ADVICE
-    r01). Without it, all left columns + a duplicate-disambiguating
-    row_number form the key, which costs an extra window over the left side —
-    pass ``left_id`` on big inputs.
-
-    Spark lacks a native as-of join; this composes equi-join on the key +
-    range filter + per-left-row rank. The shuffle is the key equi-join; the
-    rank window re-uses the key partitioning. For dense right sides, the
-    applyInPandas ``pd.merge_asof`` per key group is the alternative; the
-    join form wins when the right side is filtered sparse.
-    """
-    if left_id is not None:
-        keys = [left_id] if isinstance(left_id, str) else list(left_id)
-        lw = left.withColumn("_lrow", F.struct(*[F.col(k) for k in keys]))
-    else:
-        dup_w = W.partitionBy(*left.columns).orderBy(F.lit(1))
-        lw = left.withColumn(
-            "_lrow",
-            F.struct(
-                *[F.col(c) for c in left.columns],
-                F.row_number().over(dup_w).alias("_dup"),
-            ),
-        )
-    rw = right.select(
-        F.col(on).alias("_rk"),
-        F.col(right_ts).alias("_rts"),
-        *[F.col(c).alias(f"r_{c}") for c in right.columns if c != on],
-    )
-    cond = (F.col(on) == F.col("_rk")) & (F.col("_rts") <= F.col(left_ts))
-    if tolerance is not None:
-        cond = cond & (F.col("_rts") >= F.col(left_ts) - tolerance)
-    joined = lw.join(rw, cond, "left")
-    w = W.partitionBy("_lrow").orderBy(F.col("_rts").desc_nulls_last())
-    return (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_rk", "_rts", "_lrow")
     )
 
 
@@ -1250,7 +1194,6 @@ HOLT_ALPHA = "0.5"   # level smoothing
 HOLT_1MA = "0.5"
 HOLT_BETA = "0.3"    # trend smoothing
 HOLT_1MB = "0.7"
-HOLT_HORIZON = 3     # forecast days ahead
 
 # one Holt update, shared textually by both engines: the level expression
 # is repeated inside the trend line so the operation order is identical

@@ -49,17 +49,6 @@ def stopword_hits(toks: Column, words: list[str]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
 
-def language_id(toks: Column) -> Column:
-    """Predicted language: argmax of stopword hits, ties broken by
-    LANG_PRIORITY order, 'und' (undetermined) when all scores are zero."""
-    scores = {lang: stopword_hits(toks, ws) for lang, ws in STOPWORDS.items()}
-    best = F.greatest(*scores.values())
-    expr = F.when(best == 0, F.lit("und"))
-    for lang in LANG_PRIORITY:
-        expr = expr.when(scores[lang] == best, F.lit(lang))
-    return expr
-
-
 def _sql_list(words: list[str]) -> str:
     return "[" + ", ".join(f"'{w}'" for w in words) + "]"
 
@@ -91,8 +80,8 @@ def _lang_id_oracle() -> str:
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     # staged like the oracle's CTEs: tokenize once, score once per language,
-    # then argmax over the score COLUMNS. Inlining language_id(tokens(...))
-    # references the tokenizer subtree once per score use (~11x per row,
+    # then argmax over the score COLUMNS. Inlining the tokenizer into each
+    # score references its subtree once per score use (~11x per row,
     # interpreted); the column-staged form runs each stage once
     scored = docs.select("lang", tokens("text").alias("tk")).select(
         "lang",

@@ -68,11 +68,11 @@ def register_udtfs(spark: SparkSession) -> None:
 def q_udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_udtfs(spark)
     docs = load_table(spark, sf_dir, "documents")
-    docs.select(tokens("text").alias("tk")).createOrReplaceTempView("docs_tk_v")
     return spark.sql(
         """
         SELECT t.token, count(*) AS n, min(t.pos) AS min_pos, max(t.pos) AS max_pos
-        FROM docs_tk_v, LATERAL positional_tokenize(tk) AS t
+        FROM {docs}, LATERAL positional_tokenize(tk) AS t
         GROUP BY t.token
-        """
+        """,
+        docs=docs.select(tokens("text").alias("tk")),
     )

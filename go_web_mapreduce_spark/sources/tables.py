@@ -114,18 +114,6 @@ def read_json_ingest(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(KV_SCHEMA).json(path)
 
 
-def register_catalog(spark: SparkSession, sf_dir: str, suffix: str = "") -> list[str]:
-    """Register every catalog table as a temp view so callers can use plain
-    ``spark.sql`` against the same data the DataFrame operators read.
-    Returns the registered view names."""
-    names = []
-    for t in TABLES:
-        name = f"{t}{suffix}"
-        load_table(spark, sf_dir, t).createOrReplaceTempView(name)
-        names.append(name)
-    return names
-
-
 def fan_out(df: DataFrame) -> DataFrame:
     """Widen a DataFrame to at least the cluster's default parallelism
     before a CPU-bound Python kernel (codec encode/decode, Arrow shingle

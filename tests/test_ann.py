@@ -160,30 +160,6 @@ def test_pq_adc_matches_numpy_lut(spark, sf_dir):
         assert abs(got[vid] - want) < 1e-9
 
 
-def test_pq_persisted_search_equals_inline(spark, sf_dir, tmp_path):
-    """Persist-then-search must return exactly the inline pq_topk result:
-    encode-once-query-many cannot change answers."""
-    from go_web_mapreduce_spark.operators.similarity import (
-        pq_encode,
-        pq_persist,
-        pq_topk,
-        pq_topk_persisted,
-        pq_train,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = emb.filter(F.col("vec_id") == 0)
-    cb = pq_train(emb)
-    path = str(tmp_path / "pq_index")
-    pq_persist(pq_encode(emb, cb), cb, path)
-    inline = [(r["vec_id"], r["score"]) for r in pq_topk(emb, probe, K).collect()]
-    persisted = [
-        (r["vec_id"], r["score"])
-        for r in pq_topk_persisted(spark, path, probe, emb, K).collect()
-    ]
-    assert persisted == inline
-
-
 def test_knn_graph_matches_bruteforce_and_block_count(spark, sf_dir):
     """The blocked local-top-k kNN graph must equal a driver-side exact
     solve, for any block count (exactness must not depend on layout)."""
@@ -256,98 +232,6 @@ def test_knn_graph_ivf_recall_and_shape(spark, sf_dir):
         per_vec[r["vec_id"]] = per_vec.get(r["vec_id"], 0) + 1
     assert len(per_vec) == n_vecs and max(per_vec.values()) <= 3
     assert len(exact & approx) / len(exact) >= 0.3
-
-
-def test_ivf_append_incremental_ingest(spark, sf_dir, tmp_path):
-    """Incremental IVF ingest: build the index on the first 80% of the
-    corpus, append the rest with the frozen quantizer, and the persisted
-    search must equal a one-shot search over the full corpus assigned
-    with the SAME centroids — plus every id lands exactly once and each
-    appended row sits in its true nearest list."""
-    import numpy as np
-
-    from go_web_mapreduce_spark.operators.similarity import (
-        ivf_append,
-        ivf_assign,
-        ivf_assign_frozen,
-        ivf_load,
-        ivf_persist,
-        ivf_topk_persisted,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    cut = int(n * 0.8)
-    base = emb.filter(F.col("vec_id") < cut)
-    batch = emb.filter(F.col("vec_id") >= cut)
-    path = str(tmp_path / "ivf")
-
-    assigned, centroids = ivf_assign(base)
-    ivf_persist(assigned, centroids, path)
-    ivf_append(spark, path, batch)
-
-    after, cents2 = ivf_load(spark, path)
-    assert cents2 == centroids  # quantizer untouched
-    ids = [r["vec_id"] for r in after.select("vec_id").collect()]
-    assert sorted(ids) == sorted(
-        r["vec_id"] for r in emb.select("vec_id").collect()
-    )
-
-    # each appended row's cid is the true Euclidean argmin
-    cent = np.array(centroids)
-    got = {
-        r["vec_id"]: r["cid"]
-        for r in after.filter(F.col("vec_id") >= cut).collect()
-    }
-    for r in batch.collect():
-        x = np.array(list(r["embedding"]), dtype=np.float64)
-        want = int(((cent - x) ** 2).sum(1).argmin())
-        assert got[r["vec_id"]] == want
-
-    # persisted search sees the appended vectors identically to a
-    # one-shot frozen assignment of the full corpus
-    probe = emb.filter(F.col("vec_id") == 0)
-    a = [tuple(r) for r in ivf_topk_persisted(spark, path, probe, K).collect()]
-    path2 = str(tmp_path / "ivf_oneshot")
-    ivf_persist(ivf_assign_frozen(emb, centroids), centroids, path2)
-    b = [tuple(r) for r in ivf_topk_persisted(spark, path2, probe, K).collect()]
-    assert a == b
-
-
-def test_ivfpq_persisted_search_equals_inline(spark, sf_dir, tmp_path):
-    """Encode-once-query-many for the composed index: persist codes
-    (partitioned by cid) + sidecars + vectors, and the persisted search
-    must return exactly the inline result; the codes scan must be
-    partition-pruned to the probed lists."""
-    from go_web_mapreduce_spark.operators.similarity import (
-        IVF_NPROBE,
-        ivfpq_build,
-        ivfpq_load,
-        ivfpq_persist,
-        ivfpq_topk,
-        ivfpq_topk_persisted,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = emb.filter(F.col("vec_id") == 0)
-    inline = [tuple(r) for r in ivfpq_topk(emb, probe, K).collect()]
-
-    path = str(tmp_path / "ivfpq")
-    codes, centroids, cb = ivfpq_build(emb)
-    ivfpq_persist(codes, centroids, cb, path, emb)
-    persisted = [
-        tuple(r) for r in ivfpq_topk_persisted(spark, path, probe, K).collect()
-    ]
-    assert persisted == inline
-
-    # partition pruning: a cid filter on the persisted codes reads fewer
-    # files than the full scan (PartitionFilters in the plan)
-    codes2, _, _, _ = ivfpq_load(spark, path)
-    plan = (
-        codes2.filter(F.col("cid") == 0)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PartitionFilters: [isnotnull(cid" in plan, plan
 
 
 def test_svd_topk_matches_eigh_and_is_orthonormal(spark, sf_dir):

@@ -6,18 +6,23 @@ measurement protocol on the measurement corpus (sf0.1, recall@10 vs exact,
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.functions.ann_config import (
     CURVES_K,
-    CURVES_N_PROBES,
-    CURVES_SF_DIR,
     MEASURED,
     pick_config,
 )
 from go_web_mapreduce_spark.sources.tables import load_table
 
+# the measurement corpus (sf0.1, beside the test corpus) and probe count
+# of tools/ann_curves.py
+CURVES_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+CURVES_N_PROBES = 20
 TARGET = 0.8
 
 
@@ -140,25 +145,6 @@ def test_registered_scaled_twins_source_knobs_from_the_rule():
     scaled = pick_config(TARGET, "ivfpq", corpus_size=200_000)["config"]
     assert IVFPQ_SCALED_NPROBE == scaled["nprobe"] == 32
     assert IVFPQ_SCALED_SHORTLIST == scaled["shortlist"] == 4000
-
-
-def test_knn_graph_ivf_auto_matches_default_at_curve_corpus(spark):
-    """At the 2k curve corpus the emitted C is exactly IVF_C, so the
-    auto-C graph must equal knn_graph_ivf's default output row-for-row
-    (same training, same lists, same ranks)."""
-    from go_web_mapreduce_spark.operators.similarity import (
-        knn_graph_ivf,
-        knn_graph_ivf_auto,
-    )
-
-    emb = load_table(spark, CURVES_SF_DIR, "embeddings").localCheckpoint(
-        eager=True
-    )
-    base = knn_graph_ivf(emb)
-    auto = knn_graph_ivf_auto(emb, total_rows=2_000)
-    assert base.schema == auto.schema
-    assert base.exceptAll(auto).count() == 0
-    assert auto.exceptAll(base).count() == 0
 
 
 def test_measured_table_is_internally_consistent():

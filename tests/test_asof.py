@@ -1,57 +1,8 @@
-"""asof_join helper semantics: latest-prior match per left row, tolerance,
-and unmatched-left retention (pd.merge_asof semantics on DataFrames)."""
+"""Temporal operators against brute-force or numpy references: Markov
+transitions, trend and change-point tests, survival, lift, autocorrelation,
+Theil-Sen and seasonal profiles."""
 
 from __future__ import annotations
-
-
-def test_asof_join_picks_latest_prior(spark):
-    from go_web_mapreduce_spark.operators.temporal import asof_join
-
-    left = spark.createDataFrame(
-        [("a", 100, "L1"), ("a", 50, "L2"), ("b", 10, "L3")],
-        "k string, ts bigint, name string",
-    )
-    right = spark.createDataFrame(
-        [("a", 40, "R40"), ("a", 90, "R90"), ("a", 110, "R110"), ("b", 99, "R99")],
-        "k string, ts bigint, tag string",
-    )
-    out = {
-        (r["name"]): r["r_tag"]
-        for r in asof_join(left, right, on="k", left_ts="ts", right_ts="ts").collect()
-    }
-    assert out == {
-        "L1": "R90",   # latest right <= 100
-        "L2": "R40",   # latest right <= 50
-        "L3": None,    # no right row at or before ts=10 → kept with null
-    }
-
-
-def test_asof_join_tolerance(spark):
-    from go_web_mapreduce_spark.operators.temporal import asof_join
-
-    left = spark.createDataFrame([("a", 100, "L1")], "k string, ts bigint, name string")
-    right = spark.createDataFrame([("a", 40, "R40")], "k string, ts bigint, tag string")
-    hit = asof_join(left, right, "k", "ts", "ts", tolerance=70).collect()
-    assert hit[0]["r_tag"] == "R40"
-    miss = asof_join(left, right, "k", "ts", "ts", tolerance=50).collect()
-    assert miss[0]["r_tag"] is None
-
-
-def test_asof_join_one_row_per_left(spark):
-    from pyspark.sql import functions as F
-
-    from go_web_mapreduce_spark.operators.temporal import asof_join
-    from go_web_mapreduce_spark.sources.tables import load_table
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts_ns"
-    )
-    clicks = events.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts_ns"
-    )
-    out = asof_join(purchases, clicks, on="user_id")
-    assert out.count() == purchases.count()  # exactly one row per left row
 
 
 def test_markov_transitions_matches_bruteforce(spark, sf_dir):

@@ -8,7 +8,7 @@ import pytest
 from go_web_mapreduce_spark.functions.jpeg import (
     _M,
     _Z,
-    decode_jpeg_gray,
+    decode_jpeg as decode_jpeg_gray,
     encode_jpeg_gray,
 )
 

@@ -7,7 +7,6 @@ from __future__ import annotations
 import pytest
 
 from go_web_mapreduce_spark.operators.multimodal import (
-    FRAME_SIZE,
     as_media_table,
     ascii_documents,
     decode_bmp,
@@ -19,8 +18,6 @@ from go_web_mapreduce_spark.operators.multimodal import (
     extract_features,
     media_features,
     synthesize_image_table,
-    resize_media,
-    sample_frames,
 )
 from go_web_mapreduce_spark.sources.tables import load_table
 
@@ -164,37 +161,6 @@ def test_wav_round_trip_exact(tmp_path):
     back = decode_payload("audio/wav", buf.getvalue())
     assert back.shape == (441, 2)
     assert (back == samples).all()
-
-
-def test_resize_is_one_to_one_fixed_size(media):
-    out = resize_media(media, width=8, height=4).collect()
-    assert len(out) == media.count()
-    assert all(len(r["thumb"]) == 32 and r["width"] == 8 and r["height"] == 4 for r in out)
-
-
-def test_resize_deterministic(media):
-    a = sorted((r["doc_id"], bytes(r["thumb"])) for r in resize_media(media).collect())
-    b = sorted((r["doc_id"], bytes(r["thumb"])) for r in resize_media(media).collect())
-    assert a == b
-
-
-def test_resize_validates(media):
-    with pytest.raises(ValueError):
-        resize_media(media, width=0)
-
-
-def test_frame_sampling_fan_out_and_offsets(media):
-    frames = sample_frames(media, every_n=2).collect()
-    by_doc: dict = {}
-    for r in frames:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    sizes = {r["doc_id"]: r["n_bytes"] for r in media.collect()}
-    for doc_id, rows in by_doc.items():
-        expected = -(-sizes[doc_id] // FRAME_SIZE)  # total frames
-        assert len(rows) == len(range(0, expected, 2))
-        for r in rows:
-            assert r["offset_bytes"] == r["frame_no"] * FRAME_SIZE
-            assert 0 < len(r["frame"]) <= FRAME_SIZE
 
 
 def test_features_fixed_width(media):

@@ -53,15 +53,14 @@ def leftovers(spark):
 
 
 def assert_left_nothing(spark, name, before):
-    """No new top-level temp entry besides the one exit-removed scratch root,
-    for every query. No new temp view for the streaming family, whose memory
-    sinks drop theirs; the SQL-string queries elsewhere replace fixed-name
-    views by design, so those never accumulate."""
+    """No new temp view and no new top-level temp entry besides the one
+    exit-removed scratch root, for every query: memory sinks drop their
+    views, and SQL-string queries pass their frames as ``spark.sql``
+    arguments instead of naming a view two submissions could race on."""
     views, tmp = leftovers(spark)
     scratch_root = os.path.basename(os.path.dirname(scratch_dir("probe")))
     assert tmp - before[1] <= {scratch_root}
-    if REGISTRY[name].fn.__module__.startswith("go_web_mapreduce_spark.streaming"):
-        assert views - before[0] == set()
+    assert views - before[0] == set(), name
 
 
 @pytest.fixture(scope="module")

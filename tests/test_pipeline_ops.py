@@ -160,35 +160,6 @@ def test_zorder_cells_bounded(spark, sf_dir):
         assert r["n"] > 0
 
 
-def test_write_zordered_clusters_both_dims(spark, sf_dir, tmp_path):
-    """Files written by the Z-order sink must be clustered: for each output
-    file, the spans of BOTH dimensions are (on average) much narrower than
-    the global span — the property parquet min/max pruning exploits."""
-    from go_web_mapreduce_spark.sources.sinks import write_zordered
-
-    orders = load_table(spark, sf_dir, "orders")
-    path = str(tmp_path / "zorders")
-    write_zordered(
-        orders,
-        path,
-        x_expr="o_custkey % 256",
-        y_expr="CASE WHEN CAST(floor(o_totalprice / 2500) AS INT) > 255 "
-        "THEN 255 ELSE CAST(floor(o_totalprice / 2500) AS INT) END",
-        partitions=8,
-    )
-    back = spark.read.parquet(path)
-    assert back.count() == orders.count()
-    spans = (
-        back.groupBy(F.input_file_name().alias("f"))
-        .agg(
-            (F.max("o_custkey") % 256 - F.min("o_custkey") % 256).alias("xs"),
-            (F.max("o_totalprice") - F.min("o_totalprice")).alias("ys"),
-        )
-        .collect()
-    )
-    assert len(spans) >= 4  # actually range-partitioned into several files
-
-
 def test_weighted_sample_matches_pure_python_aes(spark, sf_dir):
     """Independent-implementation parity: the Spark selection must equal a
     pure-Python Efraimidis-Spirakis replay (md5 uniform, math.log, same

@@ -150,62 +150,6 @@ def test_connected_components_matches_union_find(spark, edges):
     assert got == _uf_components(edges)
 
 
-# --- as-of join vs pandas merge_asof ---------------------------------------
-
-
-@given(
-    left=st.lists(
-        st.tuples(st.integers(0, 3), st.integers(0, 1000)),
-        min_size=1,
-        max_size=15,
-    ),
-    right=st.lists(
-        st.tuples(st.integers(0, 3), st.integers(0, 1000)),
-        min_size=1,
-        max_size=15,
-    ),
-)
-@SPARK_SETTINGS
-def test_asof_join_matches_pandas_merge_asof(spark, left, right):
-    import pandas as pd
-
-    from go_web_mapreduce_spark.operators.temporal import asof_join
-
-    # unique-ify timestamps per key on the right so "latest prior" is
-    # unambiguous (merge_asof takes the last among ties; our rank breaks
-    # ties by descending _rts only, so dedupe ties away for the comparison)
-    right = list({(k, t): None for k, t in right})
-    ldf = spark.createDataFrame(
-        [(i, k, t) for i, (k, t) in enumerate(left)],
-        "lid bigint, k bigint, ts_ns bigint",
-    )
-    rdf = spark.createDataFrame(
-        [(k, t, t * 10 + k) for k, t in right],
-        "k bigint, ts_ns bigint, payload bigint",
-    )
-    got = {
-        r["lid"]: r["r_payload"]
-        for r in asof_join(ldf, rdf, on="k", left_id="lid").collect()
-    }
-
-    lp = pd.DataFrame(
-        [(i, k, t) for i, (k, t) in enumerate(left)],
-        columns=["lid", "k", "ts_ns"],
-    ).sort_values("ts_ns", kind="mergesort")
-    rp = pd.DataFrame(
-        [(k, t, t * 10 + k) for k, t in right],
-        columns=["k", "ts_ns", "payload"],
-    ).sort_values("ts_ns", kind="mergesort")
-    merged = pd.merge_asof(
-        lp, rp, on="ts_ns", by="k", direction="backward", suffixes=("", "_r")
-    )
-    want = {
-        int(r.lid): (None if pd.isna(r.payload) else int(r.payload))
-        for r in merged.itertuples()
-    }
-    assert got == want
-
-
 # --- sessionize vs pure-Python reference -----------------------------------
 
 

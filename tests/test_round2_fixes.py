@@ -1,13 +1,12 @@
 """Regression tests for the round-2 correctness fixes (ADVICE r01): EXCEPT
-semantics on adversarial multiplicities, as-of joins with duplicate left
-rows, master-string parsing, and scoped-conf restoration."""
+semantics on adversarial multiplicities, master-string parsing, and
+scoped-conf restoration."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from go_web_mapreduce_spark.operators.temporal import asof_join
 from go_web_mapreduce_spark.session import scoped_shuffle_partitions
 
 
@@ -23,43 +22,6 @@ def test_except_distinct_semantics(spark):
     # the shape q_except previously used diverges here — documenting why
     wrong = sorted(r["id"] for r in left.exceptAll(right).distinct().collect())
     assert wrong == [1, 2]
-
-
-def test_asof_join_keeps_duplicate_left_rows(spark):
-    """Two identical left rows must each produce an output row (the
-    duplicate-disambiguating row_number in the default _lrow key)."""
-    left = spark.createDataFrame(
-        [(1, 100), (1, 100), (1, 50)], "k bigint, ts_ns bigint"
-    )
-    right = spark.createDataFrame(
-        [(1, 90, "x"), (1, 40, "y")], "k bigint, ts_ns bigint, tag string"
-    )
-    out = asof_join(left, right, on="k").collect()
-    assert len(out) == 3
-    matched = sorted((r["ts_ns"], r["r_tag"]) for r in out)
-    assert matched == [(50, "y"), (100, "x"), (100, "x")]
-
-
-def test_asof_join_left_id_path(spark):
-    """Explicit left_id avoids the all-columns window and yields the same
-    matches."""
-    left = spark.createDataFrame(
-        [(10, 1, 100), (11, 1, 50), (12, 2, 100)],
-        "eid bigint, k bigint, ts_ns bigint",
-    )
-    right = spark.createDataFrame(
-        [(1, 90, "x"), (2, 200, "late")], "k bigint, ts_ns bigint, tag string"
-    )
-    out = {r["eid"]: r["r_tag"] for r in
-           asof_join(left, right, on="k", left_id="eid").collect()}
-    assert out == {10: "x", 11: None, 12: None}
-
-
-def test_asof_join_no_internal_columns_leak(spark):
-    left = spark.createDataFrame([(1, 100)], "k bigint, ts_ns bigint")
-    right = spark.createDataFrame([(1, 90)], "k bigint, ts_ns bigint")
-    cols = asof_join(left, right, on="k").columns
-    assert not [c for c in cols if c.startswith("_")]
 
 
 def test_master_string_parsing():

@@ -6,9 +6,7 @@
 2. PQ training samples are content-deterministic, not layout-dependent
    (ADVICE r3 #2);
 3. pq_train fails descriptively when the sample is smaller than ksub
-   (ADVICE r3 #3);
-4. write_zordered clamps out-of-range dimensions instead of silently
-   corrupting Morton keys (ADVICE r3 #4).
+   (ADVICE r3 #3).
 """
 
 from __future__ import annotations
@@ -116,25 +114,6 @@ def test_pq_train_tiny_sample_fails_descriptively(spark):
     )
     with pytest.raises(ValueError, match="ksub"):
         pq_train(tiny)
-
-
-def test_zorder_sink_clamps_out_of_range_dims(spark, tmp_path):
-    """ADVICE r3 #4: negative/overflowing dimension expressions must clamp
-    to the curve boundary, not silently wrap into wrong Morton keys — the
-    write must succeed and keep every row."""
-    from go_web_mapreduce_spark.sources.sinks import write_zordered
-
-    df = spark.createDataFrame(
-        [(-50, 10), (0, 0), (255, 255), (300, 900), (12, -3)],
-        "x long, y long",
-    )
-    path = str(tmp_path / "zs")
-    write_zordered(df, path, "x", "y", mode="overwrite", partitions=2)
-    back = spark.read.parquet(path)
-    assert back.count() == 5
-    assert {tuple(r) for r in back.collect()} == {
-        (-50, 10), (0, 0), (255, 255), (300, 900), (12, -3)
-    }
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])

@@ -1,47 +1,53 @@
 #!/bin/bash
-# Round-10 sf1 full-registry sweep: 4 parallel check_oracle shards
-# (round-robin split of sorted(REGISTRY) minus q_semantic_dedup, whose
-# committed all-pairs oracle exceeds the session budget at sf1 — it is
-# verified by tools/semantic_replay.py instead), then assembled into a
-# fresh single-provenance artifact by tools/assemble_sf1_r9.py (the
-# script is round-agnostic: output name is an argument).
+# sf1 full-registry sweep: 4 parallel check_oracle shards (round-robin split
+# of sorted(REGISTRY) minus q_semantic_dedup, whose all-pairs oracle exceeds
+# the time budget at sf1 — tools/semantic_replay.py verifies it instead),
+# then assembled into one single-provenance artifact by
+# tools/assemble_sf1_r9.py.
 #
-# Round-11 ADVICE fix: stale shard JSONs from a previous run are removed
-# up front and every background shard's exit status is checked per-PID —
-# `set -e` does not cover backgrounded jobs and a bare `wait` returns 0,
-# so a crashed shard would otherwise fold a stale /tmp JSON into the
-# "fresh single-provenance" artifact silently.
+#   tools/run_sf1_sweep.sh SF_DIR OUT.json
+#
+# Shard JSONs and logs go to a fresh mktemp directory, so a stale shard from
+# an earlier run can never be assembled. Every background job's exit status
+# is checked per PID: `set -e` does not cover backgrounded jobs and a bare
+# `wait` returns 0.
 set -e
-cd /root/repo
-SF_DIR=${1:-/tmp/spark_graft_sf1}
-OUT=${2:-CORRECTNESS_sf1_r10.json}
-rm -f /tmp/sf1_shard{0,1,2,3}.json /tmp/sf1_semantic.json
-/root/.pyenv/shims/python - <<'EOF'
+if [ $# -ne 2 ]; then
+  echo "usage: $0 SF_DIR OUT.json" >&2
+  exit 2
+fi
+SF_DIR=$1
+OUT=$(realpath -m "$2")
+cd "$(dirname "$(realpath "$0")")/.."
+WORK=$(mktemp -d -t sf1_sweep_XXXXXX)
+echo "shard JSONs and logs: $WORK"
+WORK="$WORK" python3 - <<'EOF'
+import os
 import sys
 sys.path.insert(0, ".")
 from go_web_mapreduce_spark.queries import REGISTRY
 names = [n for n in sorted(REGISTRY) if n != "q_semantic_dedup"]
 for i in range(4):
-    with open(f"/tmp/sf1_shard{i}.txt", "w") as f:
+    with open(os.path.join(os.environ["WORK"], f"shard{i}.txt"), "w") as f:
         f.write("\n".join(names[i::4]))
 print("shards:", [len(names[i::4]) for i in range(4)])
 EOF
 PIDS=()
 for i in 0 1 2 3; do
   SPARK_GRAFT_CPUS=7 SPARK_DRIVER_MEMORY=18g \
-    /root/.pyenv/shims/python tools/check_oracle.py \
-    --json /tmp/sf1_shard${i}.json "$SF_DIR" \
-    $(cat /tmp/sf1_shard${i}.txt) > /tmp/sf1_shard${i}.log 2>&1 &
+    python3 tools/check_oracle.py \
+    --json "$WORK/shard${i}.json" "$SF_DIR" \
+    $(cat "$WORK/shard${i}.txt") > "$WORK/shard${i}.log" 2>&1 &
   PIDS+=($!)
 done
 SPARK_GRAFT_CPUS=4 SPARK_DRIVER_MEMORY=12g \
-  /root/.pyenv/shims/python tools/semantic_replay.py --sf-dir "$SF_DIR" \
-  --json /tmp/sf1_semantic.json > /tmp/sf1_semantic.log 2>&1 &
+  python3 tools/semantic_replay.py --sf-dir "$SF_DIR" \
+  --json "$WORK/semantic.json" > "$WORK/semantic.log" 2>&1 &
 PIDS+=($!)
 for pid in "${PIDS[@]}"; do
   wait "$pid" || { echo "sweep job $pid FAILED — aborting assembly" >&2; exit 1; }
 done
-/root/.pyenv/shims/python tools/assemble_sf1_r9.py \
-  "$OUT" /tmp/sf1_semantic.json \
-  /tmp/sf1_shard0.json /tmp/sf1_shard1.json /tmp/sf1_shard2.json \
-  /tmp/sf1_shard3.json
+python3 tools/assemble_sf1_r9.py \
+  "$OUT" "$WORK/semantic.json" \
+  "$WORK/shard0.json" "$WORK/shard1.json" "$WORK/shard2.json" \
+  "$WORK/shard3.json"

@@ -70,7 +70,7 @@ def check(path: str) -> None:
 
 
 def main() -> int:
-    args = sys.argv[1:] or ["CORRECTNESS_local_r11.json", "CORRECTNESS_sf1_r11.json"]
+    args = sys.argv[1:] or ["CORRECTNESS_local_r13.json", "CORRECTNESS_sf1_r11.json"]
     for p in args:
         check(p)
     print("artifacts consistent with the live registry")
