@@ -164,7 +164,8 @@ def submit_algorithm_native(
     Python worker, no Arrow transfer, no split (a projection needs none) —
     so an algorithm expressible as expressions runs at built-in-operator
     speed; drop to :func:`submit_algorithm` only for genuinely open-coded
-    logic.
+    logic. A literal-list input keeps that true: ``kv_from_rows`` makes it
+    a local relation, which needs no Python worker to produce its rows.
 
     Example — the reference's demo word count (server/views.go:53-59)::
 

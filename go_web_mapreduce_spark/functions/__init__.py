@@ -12,7 +12,6 @@ from go_web_mapreduce_spark.functions.hashing import (  # noqa: F401
     band_keys,
     hamming_distance,
     md5_bucket,
-    minhash_signature,
     salted_md5,
     simhash,
 )

@@ -36,23 +36,6 @@ def md5_bucket(value: Column, num_buckets: int, salt: int = 0) -> Column:
     )
 
 
-def minhash_signature(shingle_set: Column, num_hashes: int) -> Column:
-    """MinHash signature of an ``array<string>`` shingle set.
-
-    Component ``i`` = lexicographic min over shingles of ``md5(i || ':' || s)``.
-    Returns ``array<string>`` of length ``num_hashes``. Pure Column
-    expression — scales as a map-side pass, no shuffle, no UDF.
-
-    NOTE: costs ``num_hashes`` md5 calls per shingle; prefer
-    :func:`shingle_hashes` + :func:`minhash_from_hashes` (one md5 per
-    shingle + cheap integer mixing) in hot paths.
-    """
-    def component(i: int) -> Column:
-        return F.array_min(F.transform(shingle_set, lambda s: salted_md5(s, i)))
-
-    return F.array(*[component(i) for i in range(num_hashes)])
-
-
 # universal-hash family for MinHash: component_i(h) = (A_i*h + B_i) mod P.
 # P = 2^31-1 (Mersenne prime); A_i,B_i are md5-derived 28-bit constants so
 # A*h + B < 2^60 — no bigint overflow in either engine. Deterministic and

@@ -25,7 +25,8 @@ Endpoints (stdlib ``http.server`` — no framework dependency):
   - ``"sql"``: ``map_code`` is ``{"pi": expr, "key": expr, "value": expr}``
     and ``reduce_code`` an aggregate expression over ``values`` — compiled
     straight to Catalyst (:func:`submit_algorithm_native`), no Python
-    workers.
+    workers: the ``input`` list becomes a local relation, part of the
+    plan, so not even the input needs one.
 
   Responses: 200 ``{"algorithm_id": id, "num_map_jobs": n,
   "num_partitions": p}``; 400 ``{"error": msg}`` on validation failure —

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.registry import query
-from go_web_mapreduce_spark.sources.tables import fan_out, load_table
+from go_web_mapreduce_spark.sources.tables import fan_out, load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # q_ivm_merge — incremental (algebraic) view maintenance
@@ -487,7 +487,7 @@ def q_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").over(w_cum).alias("cum"),
         F.sum("n").over(w_all).alias("total"),
     )
-    qs = spark.createDataFrame([(q,) for q in QH_QUANTILES], "q double")
+    qs = local_frame(spark, [(q,) for q in QH_QUANTILES], "q double")
     return (
         qs.join(cum, F.col("cum") >= F.ceil(F.col("q") * F.col("total")))
         .groupBy("q")

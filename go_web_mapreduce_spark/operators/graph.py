@@ -33,7 +33,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.registry import query
-from go_web_mapreduce_spark.sources.tables import load_table
+from go_web_mapreduce_spark.sources.tables import load_table, local_frame
 
 SORT_PARTITIONS = 32  # range-shuffle width; at 100 TB size so each ≲ executor memory
 PR_DAMPING = 0.85
@@ -1325,7 +1325,8 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     if m2 is None:
         # zero edges under the ship-date filter: sum() is NULL — return
         # the empty result with the declared schema instead of TypeError
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "community string, n_nodes bigint, in_w bigint, deg_w bigint, "
             "q_num bigint, q_contrib double",

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from go_web_mapreduce_spark.functions import linalg_oracle
 from go_web_mapreduce_spark.functions.numeric import dsum
 from go_web_mapreduce_spark.registry import query
-from go_web_mapreduce_spark.sources.tables import fan_out, load_table
+from go_web_mapreduce_spark.sources.tables import fan_out, load_table, local_frame
 
 ML_DIM = 64  # embeddings table dimension
 ML_ITERS = 8  # fixed Newton iterations — deterministic, no convergence races
@@ -318,7 +318,7 @@ def q_ml_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     data = labeled_embeddings(emb)
     w = logreg_fit(data)
     rows = [(i, w[i]) for i in range(len(w))]
-    return spark.createDataFrame(rows, "component bigint, weight double")
+    return local_frame(spark, rows, "component bigint, weight double")
 
 
 # ---------------------------------------------------------------------------
@@ -536,7 +536,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = logreg_fit(data, dim=QC_DIM, feat_col="features")
     rows = [(i, w[i]) for i in range(len(w))]
-    return spark.createDataFrame(rows, "component bigint, weight double")
+    return local_frame(spark, rows, "component bigint, weight double")
 
 
 # ---------------------------------------------------------------------------

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from go_web_mapreduce_spark.functions.numeric import davg, dsum
 from go_web_mapreduce_spark.functions.text import token_count, tokens
 from go_web_mapreduce_spark.registry import query
-from go_web_mapreduce_spark.sources.tables import fan_out, load_table
+from go_web_mapreduce_spark.sources.tables import fan_out, load_table, local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -715,7 +715,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     BroadcastNestedLoopJoin with no shuffle of the big side."""
     part = load_table(spark, sf_dir, "part")
     bands = F.broadcast(
-        spark.createDataFrame(PRICE_BANDS, "band string, lo double, hi double")
+        local_frame(spark, PRICE_BANDS, "band string, lo double, hi double")
     )
     return (
         part.join(

@@ -35,7 +35,7 @@ from go_web_mapreduce_spark.functions import ann_oracle, linalg_oracle
 from go_web_mapreduce_spark.functions.ann_config import cluster_count
 from go_web_mapreduce_spark.functions.vectors import cosine_similarity
 from go_web_mapreduce_spark.registry import query
-from go_web_mapreduce_spark.sources.tables import load_table
+from go_web_mapreduce_spark.sources.tables import load_table, local_frame
 
 TOP_K = 20
 KNN_PROBES = 10  # vec_id < 10 used as the probe set
@@ -1284,8 +1284,10 @@ def q_svd_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (int(i), float(top[i]), sv, explained) for i in range(len(top))
     ]
-    return emb.sparkSession.createDataFrame(
-        rows, "component bigint, loading double, singular_value double, explained_variance double"
+    return local_frame(
+        emb.sparkSession,
+        rows,
+        "component bigint, loading double, singular_value double, explained_variance double",
     )
 
 
@@ -1323,7 +1325,8 @@ def q_svd_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (c, int(i), float(v[i]), sv, explained) for i in range(len(v))
         ]
         g = g - lam * np.outer(v, v)
-    return emb.sparkSession.createDataFrame(
+    return local_frame(
+        emb.sparkSession,
         rows,
         "comp bigint, component bigint, loading double, "
         "singular_value double, explained_variance double",
@@ -1610,7 +1613,8 @@ def ivfpq_build(
     assigned, centroids = ivf_assign(unit, num_centroids, id_col=id_col)
 
     cent_df = F.broadcast(
-        corpus.sparkSession.createDataFrame(
+        local_frame(
+            corpus.sparkSession,
             [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
             "cid int, centroid array<double>",
         )
@@ -2630,7 +2634,7 @@ def q_kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             cur = cur.withColumn(
                 "md", F.least(F.col("md"), F.expr(d2_to(list(top["v"]))))
             )
-    return spark.createDataFrame(rows, "round int, vec_id bigint, dist2 bigint")
+    return local_frame(spark, rows, "round int, vec_id bigint, dist2 bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -2769,6 +2773,6 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             s = sum(a * b for a, b in zip(c["v"], best["v"]))
             if s > c["ms"]:
                 c["ms"] = s
-    return spark.createDataFrame(
-        picks, "round int, vec_id bigint, rel bigint, max_sim bigint, mmr10 bigint"
+    return local_frame(
+        spark, picks, "round int, vec_id bigint, rel bigint, max_sim bigint, mmr10 bigint"
     )

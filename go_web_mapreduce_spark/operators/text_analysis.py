@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.functions.text import token_count, tokens, word_shingles
 from go_web_mapreduce_spark.registry import query
-from go_web_mapreduce_spark.sources.tables import fan_out, load_table
+from go_web_mapreduce_spark.sources.tables import fan_out, load_table, local_frame
 
 # tiny per-language stopword lists (public common words); scoring = number of
 # tokens present in each list, argmax with fixed priority order for ties
@@ -821,7 +821,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("wf"))
     )
     merges, _ = bpe_train(freq, BPE_TRAIN_STEPS)
-    return spark.createDataFrame(merges, "step int, pair string, cnt bigint")
+    return local_frame(spark, merges, "step int, pair string, cnt bigint")
 
 
 def bpe_train(

@@ -24,6 +24,7 @@ job of an algorithm runs on the algorithm's own thread and job group.
 
 from __future__ import annotations
 
+import itertools
 import math
 import threading
 import uuid
@@ -137,6 +138,13 @@ class AlgorithmService:
         self._spark = spark
         self._max_collect_rows = max_collect_rows
         self._pool: dict[str, AlgorithmHandle] = {}
+        # FAIR pool names not in use. Spark creates a pool for every new
+        # name and never drops it, so running algorithms borrow names and
+        # give them back: the pool count is bounded by peak concurrency.
+        # The prefix keeps two services on one session in separate pools.
+        self._idle_fair_pools: list[str] = []
+        prefix = uuid.uuid4().hex[:8]
+        self._new_fair_pool = (f"algorithms-{prefix}-{i}" for i in itertools.count())
         self._lock = threading.Lock()
 
     def submit(
@@ -188,7 +196,9 @@ class AlgorithmService:
     ) -> AlgorithmHandle:
         """``POST /algorithm`` with SQL-expression slots: the same submission
         contract as :meth:`submit` but compiled to pure Catalyst
-        (:func:`submit_algorithm_native`) — no Python workers."""
+        (:func:`submit_algorithm_native`). No Python worker runs: a literal
+        list input is a local relation (:func:`kv_from_rows`), not an RDD
+        of pickled rows."""
         return self._submit(
             input, map_input_length, num_partitions, sink_path,
             lambda df, n, p: submit_algorithm_native(
@@ -228,11 +238,14 @@ class AlgorithmService:
         )
 
         def run() -> None:
-            # one FAIR pool per algorithm = the reference's master-per-
-            # algorithm concurrency (server/views.go:30-36); the job group
-            # makes the whole algorithm addressable for cancel()
+            # one FAIR pool per running algorithm = the reference's master-
+            # per-algorithm concurrency (server/views.go:30-36); the job
+            # group makes the whole algorithm addressable for cancel()
+            with self._lock:
+                fair_pool = (self._idle_fair_pools.pop() if self._idle_fair_pools
+                             else next(self._new_fair_pool))
             sc = self._spark.sparkContext
-            sc.setLocalProperty("spark.scheduler.pool", algorithm_id)
+            sc.setLocalProperty("spark.scheduler.pool", fair_pool)
             sc.setJobGroup(algorithm_id, f"algorithm {algorithm_id}",
                            interruptOnCancel=True)
             try:
@@ -258,6 +271,7 @@ class AlgorithmService:
                 with self._lock:
                     # completed masters are GC'd (server/views.go:134-157)
                     self._pool.pop(algorithm_id, None)
+                    self._idle_fair_pools.append(fair_pool)
 
         thread = threading.Thread(target=run, name=f"algorithm-{algorithm_id}")
         handle._thread = thread

@@ -2,6 +2,4 @@ from go_web_mapreduce_spark.sources.tables import (  # noqa: F401
     TABLES,
     kv_from_rows,
     load_table,
-    load_tables,
-    read_json_ingest,
 )

@@ -1,11 +1,13 @@
-"""Sources: parquet tables, JSON ingest, in-memory literals.
+"""Sources: parquet tables and in-memory literals.
 
 The reference has exactly two sources — a JSON POST body
 (reference: server/api.go:8-13, server/views.go:83-160) and a built-in
 in-memory word list (reference: server/views.go:43-48). Both arrive as
 row-lists of ``{key, value}`` strings. Here the native substrate is columnar
 parquet read through the DataFrameReader (scan pushdown + column pruning for
-free); the reference's two ingest shapes are kept as thin constructors.
+free). The reference's two ingest shapes both reach the engine as a
+literal row list (``http_api`` parses the POST body) and become a local
+relation through ``kv_from_rows``.
 
 Scale note: ``load_table`` never infers schemas and never collects; a scan of
 a 100 TB table stays a lazy ``FileScan parquet`` node with
@@ -15,9 +17,11 @@ top.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # the full driver-generated catalog (TESTDATA.md)
 TABLES = (
@@ -90,11 +94,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load several tables at once: ``load_tables(spark, d, 'orders', 'customer')``."""
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
 def kv_from_rows(spark: SparkSession, rows: list[tuple[str | None, str | None]]) -> DataFrame:
     """The reference's in-memory literal source (reference: server/views.go:43-48):
     a list of ``(key, value)`` string pairs. Rejects rows where both sides are
@@ -103,15 +102,30 @@ def kv_from_rows(spark: SparkSession, rows: list[tuple[str | None, str | None]])
     for k, v in rows:
         if not k and not v:
             raise ValueError("input row with both key and value empty")
-    return spark.createDataFrame(rows, KV_SCHEMA)
+    return local_frame(spark, rows, KV_SCHEMA)
 
 
-def read_json_ingest(spark: SparkSession, path: str) -> DataFrame:
-    """The reference's HTTP ingest shape (reference: server/api.go:8-13): a JSON
-    array of ``{"key": ..., "value": ...}`` objects, read with an explicit
-    schema (no inference — inference is a full extra scan at scale).
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType | str) -> DataFrame:
+    """A driver-side literal (``rows`` of tuples in ``schema``'s field
+    order; ``schema`` a StructType or DDL string) as a DataFrame.
+
+    The rows travel to the JVM as one Arrow table typed from ``schema``,
+    which Spark plans as a ``LocalRelation``: the literal is part of the
+    plan, and no Python worker runs to produce it. ``createDataFrame`` on
+    a Python list instead parallelizes the pickled rows through a
+    ``PythonRDD`` identity stage (one Python worker per task) before the
+    query's first operator. Above
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark parallelizes
+    the Arrow batches JVM-side, still without a Python worker.
     """
-    return spark.read.schema(KV_SCHEMA).json(path)
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def fan_out(df: DataFrame) -> DataFrame:

@@ -35,7 +35,7 @@ from pyspark.sql.streaming import DataStreamWriter
 from go_web_mapreduce_spark.registry import query
 from go_web_mapreduce_spark.session import scoped_conf
 from go_web_mapreduce_spark.sources.sinks import scratch_dir
-from go_web_mapreduce_spark.sources.tables import normalize_events
+from go_web_mapreduce_spark.sources.tables import local_frame, normalize_events
 
 # State-store partition count for the engine's streaming aggregations. A
 # streaming query's shuffle-partition setting is frozen into its checkpoint at
@@ -151,7 +151,7 @@ def categorized_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     slowly-changing dimension table; Spark plans the join as a broadcast
     against each batch."""
     dim = F.broadcast(
-        spark.createDataFrame(EVENT_CATEGORIES, "event_type string, category string")
+        local_frame(spark, EVENT_CATEGORIES, "event_type string, category string")
     )
     agg = (
         stream_events(spark, sf_dir)
@@ -349,8 +349,8 @@ def session_window_append_stream(
         },
     )
     if not os.path.isdir(out_path):  # nothing emitted (all inside horizon)
-        return spark.createDataFrame(
-            [], "user_id bigint, start_us bigint, n_events bigint, span_us bigint"
+        return local_frame(
+            spark, [], "user_id bigint, start_us bigint, n_events bigint, span_us bigint"
         )
     return spark.read.parquet(out_path).select(
         "user_id", "start_us", "n_events", "span_us"

@@ -12,7 +12,6 @@ from go_web_mapreduce_spark.functions.hashing import (
     band_keys,
     hamming_distance,
     md5_bucket,
-    minhash_signature,
     simhash,
 )
 from go_web_mapreduce_spark.functions.numeric import davg, dsum
@@ -72,21 +71,6 @@ def test_md5_bucket_range_and_determinism(spark):
     assert all(0 <= r["b"] < 8 for r in rows)
     again = df.select(md5_bucket(F.col("s"), 8).alias("b")).collect()
     assert rows == again
-
-
-def test_minhash_similar_sets_share_components(spark):
-    df = spark.createDataFrame(
-        [
-            ("a", ["w1", "w2", "w3", "w4"]),
-            ("b", ["w1", "w2", "w3", "w4"]),   # identical → identical signature
-            ("c", ["z1", "z2", "z3", "z4"]),   # disjoint → (a.s == c.s) unlikely
-        ],
-        "id string, sh array<string>",
-    )
-    out = {r["id"]: r["sig"] for r in df.select("id", minhash_signature(F.col("sh"), 8).alias("sig")).collect()}
-    assert out["a"] == out["b"]
-    assert out["a"] != out["c"]
-    assert len(out["a"]) == 8
 
 
 def test_band_keys_shape(spark):

@@ -4,10 +4,11 @@ a registered query, the service, ``__spark_entry__`` or the benchmark.
 A pure-AST census, no Spark. The roots are every ``@query`` function, the
 modules ``core``, ``service``, ``http_api``, ``session``, ``registry`` and
 ``queries``, ``__spark_entry__.py``, ``bench.py`` and ``perfbench/*.py``,
-plus each engine module's import-time statements and the names a package
-``__init__`` re-exports. From the roots the walk
-follows code identifiers (names and attribute names) to top-level
-definitions of the same name anywhere in ``go_web_mapreduce_spark/``. Name
+plus each engine module's import-time statements. A package ``__init__``'s
+re-exports are not roots: re-exporting a name is not using it. From the
+roots the walk follows code identifiers (names and attribute names) to
+top-level definitions of the same name anywhere in
+``go_web_mapreduce_spark/``. Name
 matching over-approximates reach, so whatever it still leaves unreached is
 code only tests or tools call — or nothing does. Strings (descriptions,
 docstrings, SQL) are not references.
@@ -28,8 +29,10 @@ ALLOWED = {
     "plans": {"executed_plan", "pushed_filters", "read_schemas",
               "count_exchanges", "has_broadcast_join",
               "has_partial_aggregation", "is_take_ordered"},
-    # Column reference that the Arrow minhash kernel is compared against
-    "functions.hashing": {"minhash_from_hashes", "shingle_hashes"},
+    # Column references that the Arrow minhash and simhash kernels are
+    # compared against
+    "functions.hashing": {"minhash_from_hashes", "shingle_hashes", "simhash",
+                          "simhash_from_hashes", "token_hashes"},
 }
 
 
@@ -88,9 +91,7 @@ def census() -> list[str]:
                 seeds |= _names(stmt) | {stmt.name}
             elif isinstance(stmt, ast.ImportFrom):
                 for a in stmt.names:
-                    if path.name == "__init__.py":  # a package's public names
-                        seeds.add(a.name)
-                    elif a.asname:  # `import x as y`: reaching y reaches x
+                    if a.asname:  # `import x as y`: reaching y reaches x
                         aliases.setdefault(a.asname, set()).add(a.name)
             elif not names and not isinstance(stmt, ast.Import):
                 seeds |= _names(stmt)  # runs at import time

@@ -5,6 +5,7 @@ completion (reference: server/views.go:83-160)."""
 
 from __future__ import annotations
 
+import sys
 import uuid
 
 import pytest
@@ -155,3 +156,40 @@ def test_bench_helpers_importable():
     spec.loader.exec_module(mod)
     spin = mod._calibration_spin(10_000)
     assert isinstance(spin, float) and spin >= 0.0
+
+
+def test_fair_pools_bounded_by_concurrency(spark):
+    """Spark keeps a FAIR pool for every pool name it is ever given; the
+    service lends each running algorithm a name and takes it back, so the
+    pool count follows peak concurrency: a wave of 6 concurrent algorithms
+    and then 20 sequential ones add at most 6 pools, not 26."""
+    pools = spark.sparkContext._jsc.sc().getAllPools
+    before = pools().size()
+    service = AlgorithmService(spark)
+
+    def wave(n):
+        handles = [
+            service.submit_native(
+                [("", w) for w in WORDS],
+                3,
+                pi_expr="0",
+                key_expr="value",
+                value_expr="'1'",
+                reduce_expr="cast(size(values) as string)",
+            )
+            for _ in range(n)
+        ]
+        for h in handles:
+            assert len(h.wait(timeout=120)) == len(set(WORDS))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        wave(6)
+    finally:
+        sys.setswitchinterval(interval)
+    for _ in range(20):
+        wave(1)
+    idle = service._idle_fair_pools  # every name lent out came back once
+    assert len(idle) == len(set(idle)) <= 6
+    assert pools().size() <= before + len(idle)

@@ -27,21 +27,3 @@ def test_with_salt_bounds(spark, sf_dir):
     assert all(0 <= r["__salt"] < 4 for r in salts)
     with pytest.raises(ValueError):
         with_salt(ev, 0)
-
-
-def test_json_ingest_reads_reference_wire_shape(spark, tmp_path):
-    """read_json_ingest parses the reference's POST-body row shape
-    (reference: server/api.go:8-13) with an explicit schema, no inference."""
-    import json
-
-    from go_web_mapreduce_spark.sources.tables import read_json_ingest
-
-    p = tmp_path / "ingest.jsonl"
-    rows = [{"key": "", "value": "bacon"}, {"key": "k2", "value": None}]
-    p.write_text("\n".join(json.dumps(r) for r in rows))
-    df = read_json_ingest(spark, str(p))
-    assert df.columns == ["key", "value"]
-    got = sorted((r["key"], r["value"]) for r in df.collect())
-    assert got == [("", "bacon"), ("k2", None)]
-
-
