@@ -200,38 +200,17 @@ def _blk_lru(unpack_fn):
     return blk
 
 
-def embedding_near_dup_pairs(
-    corpus: DataFrame,
-    threshold: float = NEAR_DUP_COS,
-    id_col: str = "vec_id",
-    num_blocks: int | None = None,
-) -> DataFrame:
-    """Exact all-pairs cosine near-dup: every (a, b) with ``id_a < id_b`` and
-    ``cos(a, b) >= threshold``.
+def _block_grid(corpus: DataFrame, id_col: str, num_blocks: int | None) -> DataFrame:
+    """The exact kernels' distributed block nested loop: one
+    ``(blk_a, blk_b, rows_a, rows_b)`` row per unordered block pair.
 
-    Distribution shape — **distributed block nested loop, nothing touches the
-    driver**: vectors are hashed into ``num_blocks`` blocks and packed one
-    block per row (``groupBy(blk).collect_list``); the left side explodes
-    each block *i* against partner keys ``j ∈ [i, B)``, so a plain equi-join
-    on ``j`` materializes every unordered block pair exactly once; each
-    (block_i, block_j) row is scored as one vectorized numpy product inside
-    ``mapInPandas``. No ``collect()``, no broadcast: peak memory anywhere is
-    the live block pair plus a ≤ ``_BLK_CACHE_CAP``-entry unpack LRU,
-    and shuffle volume is corpus_bytes × (B+1)/2 — the inherent
-    replication of exact all-pairs (``num_blocks`` now ADAPTS to corpus
-    size via :func:`grid_num_blocks` so a block always fits a task — the
-    round-8 fix after fixed B=16 produced 40-minute straggler kernels at
-    sf10; the replication factor is the price of exactness; the
-    sub-quadratic scale path is ``ann_lsh_buckets`` + per-bucket exact
-    verification).
-
-    Bit-parity discipline: products and accumulations run in float64
-    *dimension-sequentially* (``acc += a[:, i] * b[:, i]``), the identical
-    operation order as the Column-expression fold and the DuckDB
-    ``list_reduce`` oracle, so scores are bit-identical across all three.
-    """
-    import numpy as np
-
+    Vectors hash into :func:`grid_num_blocks` blocks, packed one block per
+    row (``groupBy(blk).collect_list``); the left side explodes each block
+    *i* against partner keys ``j ∈ [i, B)``, so a plain equi-join on ``j``
+    materializes every unordered block pair exactly once. Nothing touches
+    the driver (no ``collect()``, no broadcast); shuffle volume is
+    corpus_bytes × (B+1)/2, the inherent replication of exact all-pairs —
+    the sub-quadratic paths are the LSH and IVF operators below."""
     num_blocks = grid_num_blocks(corpus, num_blocks)
     packed = (
         corpus.select(
@@ -249,75 +228,145 @@ def embedding_near_dup_pairs(
         F.explode(F.sequence(F.col("blk"), F.lit(num_blocks - 1))).alias("blk_b"),
     )
     right = packed.select(F.col("blk").alias("blk_b"), F.col("rows").alias("rows_b"))
-    joined = left.join(right, "blk_b").select("blk_a", "blk_b", "rows_a", "rows_b")
+    return left.join(right, "blk_b").select("blk_a", "blk_b", "rows_a", "rows_b")
 
-    def unpack(rows):
-        """Block → (ids, dim-major matrix, norms). Same float64 values as the
-        original row-loop form (float32→float64 widening is exact; vstack
-        copies bits), just vectorized: the per-row list() conversion was the
-        kernel's hidden Python loop. ``matT`` is dim-major so the sequential
-        per-dimension accumulation below touches contiguous memory; the
-        norm fold keeps the exact dimension-sequential operation order."""
-        ids = np.fromiter((r["id"] for r in rows), dtype=np.int64, count=len(rows))
-        matT = np.ascontiguousarray(
-            np.vstack([r["emb"] for r in rows]).astype(np.float64).T
-        )
-        acc = np.zeros(matT.shape[1])
-        for i in range(matT.shape[0]):
-            acc = acc + matT[i] * matT[i]
-        return ids, matT, np.sqrt(acc)
 
-    def dots_seq(matT_a, matT_b):
-        """Σ_i outer(a_i, b_i) accumulated dimension-sequentially — the
-        IDENTICAL ieee operation order as the Column fold and the DuckDB
-        list_reduce oracle (a BLAS gemm reassociates and diverges in the
-        last ulp — measured, not hypothetical). in-place add + a reused
-        product buffer removes two allocations per dimension without
-        touching the summation order."""
-        dots = np.zeros((matT_a.shape[1], matT_b.shape[1]))
-        buf = np.empty_like(dots)
-        for i in range(matT_a.shape[0]):
-            np.multiply.outer(matT_a[i], matT_b[i], out=buf)
-            dots += buf
-        return dots
+def _fold(matT_a, matT_b, outer: bool = True):
+    """Σ_i a_i·b_i over dim-major float64 operands, accumulated
+    dimension-sequentially: the IDENTICAL IEEE operation order as the Column
+    fold and the DuckDB ``list_reduce`` oracle (a BLAS gemm reassociates and
+    diverges in the last ulp — measured, not hypothetical), which keeps every
+    exact score bit-identical across all three. ``outer`` gives a block
+    pair's all-pairs matrix; otherwise column j pairs with column j (the
+    norm fold and the IVF survivor rescore). In-place add into a reused
+    product buffer saves two allocations per dimension without touching the
+    summation order."""
+    import numpy as np
 
-    def score_block(batches):
+    if outer:
+        combine, shape = np.multiply.outer, (matT_a.shape[1], matT_b.shape[1])
+    else:
+        combine, shape = np.multiply, (matT_a.shape[1],)
+    acc = np.zeros(shape)
+    buf = np.empty_like(acc)
+    for a, b in zip(matT_a, matT_b):
+        combine(a, b, out=buf)
+        acc += buf
+    return acc
+
+
+def _unpack(rows):
+    """Packed block → ``(ids, matT, norms)``: ids ascending, ``matT`` the
+    dim-major float64 matrix (columns in id order; float32→float64
+    widening is exact and vstack copies bits, so the values equal a per-row
+    ``list()`` loop's, without its Python loop) and norms from the
+    sequential :func:`_fold`. Dim-major keeps each fold step on contiguous
+    memory."""
+    import numpy as np
+
+    ids = np.fromiter((r["id"] for r in rows), dtype=np.int64, count=len(rows))
+    order = np.argsort(ids, kind="stable")
+    matT = np.ascontiguousarray(
+        np.vstack([r["emb"] for r in rows]).astype(np.float64)[order].T
+    )
+    return ids[order], matT, np.sqrt(_fold(matT, matT, outer=False))
+
+
+def _cosine(dots, denom):
+    """``dots / denom``, 0 where the denominator is 0: a zero vector scores 0
+    against everything, never NaN."""
+    import numpy as np
+
+    return np.divide(dots, denom, out=np.zeros_like(dots), where=denom != 0.0)
+
+
+def _local_topk(ids_q, ids_c, score, k: int):
+    """Per row of ``score``: the top-k columns by (score desc, id asc), self
+    (equal ids) excluded. Columns are sorted by id, so a STABLE argsort on
+    −score breaks ties id-ascending — the total order of
+    :func:`_rank_topk`, so every global top-k element survives its local
+    cut (the top-k union argument, tie-safe). Returns (row index, column
+    index, score); self slots left when a block has ≤ k columns drop out."""
+    import numpy as np
+
+    score = np.where(ids_q[:, None] == ids_c[None, :], -np.inf, score)
+    kk = min(k, score.shape[1])
+    order = np.argsort(-score, axis=1, kind="stable")[:, :kk]
+    q = np.repeat(np.arange(len(ids_q)), kk)
+    c = order.reshape(-1)
+    s = np.take_along_axis(score, order, axis=1).reshape(-1)
+    finite = np.isfinite(s)
+    return q[finite], c[finite], s[finite]
+
+
+def _rank_topk(cands: DataFrame, k: int) -> DataFrame:
+    """The kNN candidate rank: each ``vec_id``'s first k ``(nbr, score)``
+    rows by (score desc, nbr asc), as ``(vec_id, nbr, score, rnk)``."""
+    w = W.partitionBy("vec_id").orderBy(F.col("score").desc(), F.col("nbr"))
+    return (
+        cands.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("vec_id", "nbr", "score", "rnk")
+    )
+
+
+def _grid_map(grid: DataFrame, emit, schema: str) -> DataFrame:
+    """Score every block pair of :func:`_block_grid` in one ``mapInPandas``:
+    each pair's exact cosine matrix goes to ``emit(ids_a, ids_b, score,
+    diagonal)``, which yields output column dicts. Peak memory per task is
+    the live pair plus the :func:`_blk_lru` cache."""
+
+    def run(batches):
+        import numpy as np
         import pandas as pd
 
-        # bounded LRU (r11 ADVICE): reuse without retaining every partner
-        # block a task's join partition happens to stream past
-        blk = _blk_lru(unpack)
-
+        blk = _blk_lru(_unpack)
         for pdf in batches:
             for rows_a, rows_b, ba, bb in zip(
                 pdf["rows_a"], pdf["rows_b"], pdf["blk_a"], pdf["blk_b"]
             ):
                 ids_a, matT_a, na = blk(ba, rows_a)
                 ids_b, matT_b, nb = blk(bb, rows_b)
-                dots = dots_seq(matT_a, matT_b)
-                denom = np.outer(na, nb)
-                score = np.divide(
-                    dots, denom, out=np.zeros_like(dots), where=denom != 0.0
-                )
-                if ba == bb:
-                    # diagonal: both orientations present in the grid — keep
-                    # the upper triangle only
-                    keep = (ids_a[:, None] < ids_b[None, :]) & (score >= threshold)
-                    ai, bj = np.nonzero(keep)
-                    va, vb = ids_a[ai], ids_b[bj]
-                else:
-                    # off-diagonal: each unordered cross-block pair appears
-                    # exactly once (the join emits block pair (i, j≥i) once),
-                    # in whichever orientation the hash placed it — normalize
-                    ai, bj = np.nonzero(score >= threshold)
-                    va = np.minimum(ids_a[ai], ids_b[bj])
-                    vb = np.maximum(ids_a[ai], ids_b[bj])
-                yield pd.DataFrame(
-                    {"vec_a": va, "vec_b": vb, "score": score[ai, bj]}
-                )
+                score = _cosine(_fold(matT_a, matT_b), np.outer(na, nb))
+                for cols in emit(ids_a, ids_b, score, ba == bb):
+                    yield pd.DataFrame(cols)
 
-    return joined.mapInPandas(
-        score_block, "vec_a bigint, vec_b bigint, score double"
+    return grid.mapInPandas(run, schema)
+
+
+def embedding_near_dup_pairs(
+    corpus: DataFrame,
+    threshold: float = NEAR_DUP_COS,
+    id_col: str = "vec_id",
+    num_blocks: int | None = None,
+) -> DataFrame:
+    """Exact all-pairs cosine near-dup: every (a, b) with ``id_a < id_b`` and
+    ``cos(a, b) >= threshold``.
+
+    Runs on the shared exact kernel — :func:`_block_grid` (distributed
+    block nested loop, nothing touches the driver), :func:`_grid_map` and
+    the bit-parity :func:`_fold` — and thresholds each block pair's scores.
+    """
+    import numpy as np
+
+    def emit(ids_a, ids_b, score, diagonal):
+        keep = score >= threshold
+        if diagonal:
+            # both orientations of a pair lie in the block: upper triangle
+            keep &= ids_a[:, None] < ids_b[None, :]
+        # off the diagonal each unordered pair appears once, in whichever
+        # orientation the hash placed it
+        ai, bj = np.nonzero(keep)
+        yield {
+            "vec_a": np.minimum(ids_a[ai], ids_b[bj]),
+            "vec_b": np.maximum(ids_a[ai], ids_b[bj]),
+            "score": score[ai, bj],
+        }
+
+    return _grid_map(
+        _block_grid(corpus, id_col, num_blocks),
+        emit,
+        "vec_a bigint, vec_b bigint, score double",
     )
 
 
@@ -351,119 +400,27 @@ def knn_graph(
     primitive (each doc's nearest neighbors feed near-dup grouping and
     diversity sampling).
 
-    Same distributed block grid as :func:`embedding_near_dup_pairs`, but
-    instead of thresholded pairs each (block_i, block_j) kernel emits only
-    each vector's LOCAL top-k against the partner block, in both
-    orientations. Shuffle volume is n·B·k candidate rows instead of the
-    n²/2 a materialize-then-rank plan would carry; the final window rank
-    per vector runs on that bounded candidate set. B adapts to corpus
-    size (grid_num_blocks) so each kernel task stays O(BLOCK_ROWS²·dims). Exactness: local selection uses the same
-    total order as the global rank (score desc, id asc), so every global
-    top-k element survives its local cut — the standard top-k union
-    argument, tie-safe.
-
-    Bit-parity: per-dimension sequential accumulation (the
-    embedding_near_dup_pairs discipline), so scores hash-match the DuckDB
-    list_reduce fold.
+    Same exact kernel as :func:`embedding_near_dup_pairs`, but each block
+    pair emits only each vector's :func:`_local_topk` against the partner
+    block, in both orientations, and :func:`_rank_topk` ranks that bounded
+    candidate set. Shuffle volume is n·B·k candidate rows instead of the
+    n²/2 a materialize-then-rank plan would carry.
     """
-    import numpy as np
 
-    num_blocks = grid_num_blocks(corpus, num_blocks)
-    packed = (
-        corpus.select(
-            F.pmod(F.hash(F.col(id_col)), F.lit(num_blocks)).alias("blk"),
-            F.struct(
-                F.col(id_col).alias("id"), F.col("embedding").alias("emb")
-            ).alias("s"),
-        )
-        .groupBy("blk")
-        .agg(F.collect_list("s").alias("rows"))
+    def emit(ids_a, ids_b, score, diagonal):
+        sides = [(ids_a, ids_b, score)]
+        if not diagonal:
+            sides.append((ids_b, ids_a, score.T))
+        for ids_q, ids_c, s in sides:
+            qi, ci, top = _local_topk(ids_q, ids_c, s, k)
+            yield {"vec_id": ids_q[qi], "nbr": ids_c[ci], "score": top}
+
+    cands = _grid_map(
+        _block_grid(corpus, id_col, num_blocks),
+        emit,
+        "vec_id bigint, nbr bigint, score double",
     )
-    left = packed.select(
-        F.col("blk").alias("blk_a"),
-        F.col("rows").alias("rows_a"),
-        F.explode(F.sequence(F.col("blk"), F.lit(num_blocks - 1))).alias("blk_b"),
-    )
-    right = packed.select(F.col("blk").alias("blk_b"), F.col("rows").alias("rows_b"))
-    joined = left.join(right, "blk_b").select("blk_a", "blk_b", "rows_a", "rows_b")
-
-    def unpack_sorted(rows):
-        """Same float64 matrix/values as the original per-row list() loop
-        (vstack + exact float32→float64 widening), vectorized; rows sorted
-        id-ascending (stable ties), dim-major for contiguous access, norms
-        folded dimension-sequentially — identical ieee order throughout."""
-        ids = np.fromiter((r["id"] for r in rows), dtype=np.int64, count=len(rows))
-        order = np.argsort(ids)  # id-ascending → stable sort keeps tie order
-        ids = ids[order]
-        matT = np.ascontiguousarray(
-            np.vstack([r["emb"] for r in rows]).astype(np.float64)[order].T
-        )
-        acc = np.zeros(matT.shape[1])
-        for i in range(matT.shape[0]):
-            acc = acc + matT[i] * matT[i]
-        return ids, matT, np.sqrt(acc)
-
-    def dots_seq(matT_a, matT_b):
-        # dimension-sequential accumulation — see embedding_near_dup_pairs:
-        # the op order must match the oracle's fold; no gemm
-        dots = np.zeros((matT_a.shape[1], matT_b.shape[1]))
-        buf = np.empty_like(dots)
-        for i in range(matT_a.shape[0]):
-            np.multiply.outer(matT_a[i], matT_b[i], out=buf)
-            dots += buf
-        return dots
-
-    def local_topk(ids_q, ids_c, score, self_mask):
-        """Per row of ``score``: top-k columns by (score desc, id asc) —
-        columns are pre-sorted by id, so a STABLE sort on -score breaks
-        ties id-ascending, matching the window/oracle order exactly."""
-        if self_mask is not None:
-            score = score.copy()
-            score[self_mask] = -np.inf
-        kk = min(k, score.shape[1])
-        order = np.argsort(-score, axis=1, kind="stable")[:, :kk]
-        q = np.repeat(ids_q, kk)
-        c = ids_c[order].reshape(-1)
-        s = np.take_along_axis(score, order, axis=1).reshape(-1)
-        finite = np.isfinite(s)  # drops self slots when block size ≤ k
-        return q[finite], c[finite], s[finite]
-
-    def score_block(batches):
-        import pandas as pd
-
-        # bounded LRU (r11 ADVICE): see embedding_near_dup_pairs
-        blk = _blk_lru(unpack_sorted)
-
-        for pdf in batches:
-            for rows_a, rows_b, ba, bb in zip(
-                pdf["rows_a"], pdf["rows_b"], pdf["blk_a"], pdf["blk_b"]
-            ):
-                ids_a, matT_a, na = blk(ba, rows_a)
-                ids_b, matT_b, nb = blk(bb, rows_b)
-                dots = dots_seq(matT_a, matT_b)
-                denom = np.outer(na, nb)
-                score = np.divide(
-                    dots, denom, out=np.zeros_like(dots), where=denom != 0.0
-                )
-                outs = []
-                if ba == bb:
-                    self_mask = ids_a[:, None] == ids_b[None, :]
-                    outs.append(local_topk(ids_a, ids_b, score, self_mask))
-                else:
-                    outs.append(local_topk(ids_a, ids_b, score, None))
-                    outs.append(local_topk(ids_b, ids_a, score.T, None))
-                for q, c, s in outs:
-                    yield pd.DataFrame({"vec_id": q, "nbr": c, "score": s})
-
-    cands = joined.mapInPandas(
-        score_block, "vec_id bigint, nbr bigint, score double"
-    )
-    w = W.partitionBy("vec_id").orderBy(F.col("score").desc(), F.col("nbr"))
-    return (
-        cands.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("vec_id", "nbr", "score", "rnk")
-    )
+    return _rank_topk(cands, k)
 
 
 SEMANTIC_COS = 0.35  # looser than NEAR_DUP_COS: the synthetic embeddings
@@ -629,6 +586,23 @@ def ann_topk_lsh(
     )
 
 
+def _sign_bucket_sql(planes: list[list[float]]) -> str:
+    """DuckDB mirror of :func:`ann_lsh_buckets` over ``embedding``: bit j is
+    set iff the left-fold dot product with plane j is >= 0."""
+
+    def dot(plane: list[float]) -> str:
+        arr = "[" + ", ".join(repr(v) for v in plane) + "]"
+        return (
+            "list_reduce(list_transform(range(len(embedding)), "
+            f"i -> embedding[i+1]::DOUBLE * {arr}[i+1]), (x, y) -> x + y)"
+        )
+
+    return " + ".join(
+        f"(CASE WHEN {dot(p)} >= 0 THEN {1 << j} ELSE 0 END)"
+        for j, p in enumerate(planes)
+    )
+
+
 def _ann_lsh_oracle() -> str:
     """Full DuckDB oracle for the ANN-LSH pipeline. The hyperplanes are
     md5-derived constants, so the entire candidate generation (sign buckets,
@@ -638,18 +612,7 @@ def _ann_lsh_oracle() -> str:
     'approximate' here means approximate vs exact top-k, not
     nondeterministic."""
     planes = _hyperplanes()
-
-    def dot(e: str, plane: list[float]) -> str:
-        arr = "[" + ", ".join(repr(v) for v in plane) + "]"
-        return (
-            f"list_reduce(list_transform(range(len({e})), "
-            f"i -> {e}[i+1]::DOUBLE * {arr}[i+1]), (x, y) -> x + y)"
-        )
-
-    bucket_expr = " + ".join(
-        f"(CASE WHEN {dot('embedding', p)} >= 0 THEN {1 << j} ELSE 0 END)"
-        for j, p in enumerate(planes)
-    )
+    bucket_expr = _sign_bucket_sql(planes)
     probe_buckets = ", ".join(
         ["pb"] + [f"xor(pb, {1 << j})" for j in range(len(planes))]
     )
@@ -697,8 +660,8 @@ def embedding_near_dup_pairs_lsh(
     num_planes: int = LSH_DEDUP_PLANES,
     bands: int = LSH_DEDUP_BANDS,
 ) -> DataFrame:
-    """Sub-quadratic near-dup pairs: the LSH-BUCKETED scale path that
-    :func:`embedding_near_dup_pairs`'s docstring promises (sign-LSH
+    """Sub-quadratic near-dup pairs: the LSH-BUCKETED scale path for
+    :func:`embedding_near_dup_pairs` (sign-LSH
     banding + per-candidate exact verification) — the SimHash/MinHash
     banding trick applied to the embedding domain (Charikar 2002 sign
     hashes + the LSH banding construction, Mining of Massive Datasets
@@ -772,21 +735,9 @@ def _lsh_near_dup_oracle() -> str:
     planes = _hyperplanes(LSH_DEDUP_PLANES)
     width = LSH_DEDUP_PLANES // LSH_DEDUP_BANDS
     mask = (1 << width) - 1
-
-    def dot(e: str, plane: list[float]) -> str:
-        arr = "[" + ", ".join(repr(v) for v in plane) + "]"
-        return (
-            f"list_reduce(list_transform(range(len({e})), "
-            f"i -> {e}[i+1]::DOUBLE * {arr}[i+1]), (x, y) -> x + y)"
-        )
-
-    bucket_expr = " + ".join(
-        f"(CASE WHEN {dot('embedding', p)} >= 0 THEN {1 << j} ELSE 0 END)"
-        for j, p in enumerate(planes)
-    )
     return f"""
     WITH sig AS (
-      SELECT vec_id, ({bucket_expr}) AS bucket FROM embeddings
+      SELECT vec_id, ({_sign_bucket_sql(planes)}) AS bucket FROM embeddings
     ), bnd AS (
       SELECT vec_id, t.bi, (bucket >> (t.bi * {width})) & {mask} AS bv
       FROM sig, range(0, {LSH_DEDUP_BANDS}) t(bi)
@@ -1018,11 +969,11 @@ def knn_graph_ivf(
     6 → 0.57, 8 → 0.66 — linear in the candidate fraction aprobe/C, the
     knob a user turns (floor pinned in tests/test_ann.py).
 
-    Determinism: per-list blocks sort by id, local top-k uses a stable
-    argsort on (−score), and the final window rank uses the same
-    (score desc, id asc) order as the exact graph. Scores accumulate
-    dimension-sequentially (the embedding_near_dup_pairs discipline), so
-    they are bit-identical to the Column fold and the DuckDB oracle.
+    Determinism and parity: lists unpack id-sorted (:func:`_unpack`),
+    selection is :func:`_local_topk` and the rank :func:`_rank_topk`, the
+    exact graph's (score desc, id asc) order; emitted scores come from the
+    sequential :func:`_fold`, so they are bit-identical to the Column fold
+    and the DuckDB oracle.
 
     Row-size bound: each packed list row is ~(n/C)·dim doubles, so C must
     scale with the corpus to keep a list inside a task (and under the 2 GB
@@ -1056,9 +1007,7 @@ def knn_graph_ivf(
         assigned.select(
             "cid",
             F.pmod(F.hash(F.col(id_col)), F.lit(index_shards)).alias("shard"),
-            F.struct(
-                F.col(id_col).alias("id"), F.col("embedding").alias("emb")
-            ).alias("s"),
+            member.alias("s"),
         )
         .groupBy("cid", "shard")
         .agg(F.collect_list("s").alias("irows"))
@@ -1067,77 +1016,41 @@ def knn_graph_ivf(
     # arises exactly once (nbr lives in one shard of its one list)
     joined = qpacked.join(ipacked, "cid")
 
-    def _norms_seq(m: "np.ndarray") -> "np.ndarray":
-        acc = np.zeros(m.shape[0])
-        for i in range(m.shape[1]):
-            acc = acc + m[:, i] * m[:, i]
-        return np.sqrt(acc)
-
-    def score_block(batches):
+    def score_lists(batches):
         for pdf in batches:
             for qrows, irows in zip(pdf["qrows"], pdf["irows"]):
-                # vectorized unpack — same float64 bits as the per-row
-                # list() loop (float32→float64 widening is exact)
-                qi = np.fromiter((r["id"] for r in qrows), dtype=np.int64,
-                                 count=len(qrows))
-                qm = np.vstack([r["emb"] for r in qrows]).astype(np.float64)
-                ii = np.fromiter((r["id"] for r in irows), dtype=np.int64,
-                                 count=len(irows))
-                im = np.vstack([r["emb"] for r in irows]).astype(np.float64)
-                qo, io = np.argsort(qi), np.argsort(ii)
-                qi, qm, ii, im = qi[qo], qm[qo], ii[io], im[io]
-                # SELECTION uses one BLAS gemm (a 64-pass dimension-
-                # sequential outer-product loop was measured memory-
-                # bandwidth-bound at sf10 — ~GBs of traffic per list);
-                # the EMITTED scores of the selected n·k pairs are then
-                # recomputed with the sequential fold, so output values
+                qi, qT, qn = _unpack(qrows)
+                ii, iT, inn = _unpack(irows)
+                # SELECTION uses one BLAS gemm on row-major copies (a 64-pass
+                # dimension-sequential outer-product loop was measured
+                # memory-bandwidth-bound at sf10 — ~GBs of traffic per
+                # list); the EMITTED scores of the selected n·k pairs are
+                # then recomputed with the sequential fold, so output values
                 # stay bit-identical to the Column fold / DuckDB oracle.
                 # Selection-order ties between the two float forms differ
                 # only below ~1e-15 — the measure-zero class the ANN
                 # oracles already accept (functions/ann_oracle.py).
-                qn = np.linalg.norm(qm, axis=1)
-                inn = np.linalg.norm(im, axis=1)
-                denom = np.outer(qn, inn)
-                score = np.divide(
-                    qm @ im.T, denom, out=np.zeros((len(qi), len(ii))),
-                    where=denom != 0.0,
+                qm, im = np.ascontiguousarray(qT.T), np.ascontiguousarray(iT.T)
+                denom = np.outer(
+                    np.linalg.norm(qm, axis=1), np.linalg.norm(im, axis=1)
                 )
-                score[qi[:, None] == ii[None, :]] = -np.inf  # self
-                kk = min(k, score.shape[1])
-                order = np.argsort(-score, axis=1, kind="stable")[:, :kk]
-                q_idx = np.repeat(np.arange(len(qi)), kk)
-                c_idx = order.reshape(-1)
-                s_sel = np.take_along_axis(score, order, axis=1).reshape(-1)
-                finite = np.isfinite(s_sel)
-                q_idx, c_idx = q_idx[finite], c_idx[finite]
+                q_idx, c_idx, _ = _local_topk(qi, ii, _cosine(qm @ im.T, denom), k)
                 # fold-exact rescore of the survivors only (n·k pairs)
-                sq, si = qm[q_idx], im[c_idx]
-                acc = np.zeros(len(q_idx))
-                for d in range(qm.shape[1]):
-                    acc = acc + sq[:, d] * si[:, d]
-                dn = _norms_seq(qm)[q_idx] * _norms_seq(im)[c_idx]
-                s_exact = np.divide(
-                    acc, dn, out=np.zeros(len(q_idx)), where=dn != 0.0
-                )
+                dots = _fold(qT[:, q_idx], iT[:, c_idx], outer=False)
                 yield pd.DataFrame(
                     {
                         "vec_id": qi[q_idx],
                         "nbr": ii[c_idx],
-                        "score": s_exact,
+                        "score": _cosine(dots, qn[q_idx] * inn[c_idx]),
                     }
                 )
 
     # no dedup needed: the index side is single-assignment, so a (vec, nbr)
     # pair can only arise from the one list that indexes nbr
     cands = joined.mapInPandas(
-        score_block, "vec_id bigint, nbr bigint, score double"
+        score_lists, "vec_id bigint, nbr bigint, score double"
     )
-    w = W.partitionBy("vec_id").orderBy(F.col("score").desc(), F.col("nbr"))
-    return (
-        cands.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("vec_id", "nbr", "score", "rnk")
-    )
+    return _rank_topk(cands, k)
 
 
 @query(
@@ -2271,27 +2184,16 @@ def _mine_contrastive(kn: DataFrame) -> DataFrame:
     """Positive/hard-negative classification over a pinned kNN table —
     shared by the exact miner and both IVF twins (identical mining, the
     twins differ only in where the neighborhood comes from)."""
-    w = W.partitionBy("vec_id").orderBy(F.col("score").desc(), F.col("nbr"))
-    pos = (
-        kn.filter(F.col("score") >= CP_POS_T)
-        .withColumn("pr", F.row_number().over(w))
-        .filter(F.col("pr") == 1)
-        .select(
-            "vec_id",
-            F.col("nbr").alias("pos_id"),
-            F.col("score").alias("pos_score"),
-        )
+    pos = _rank_topk(kn.filter(F.col("score") >= CP_POS_T), 1).select(
+        "vec_id",
+        F.col("nbr").alias("pos_id"),
+        F.col("score").alias("pos_score"),
     )
-    neg = (
-        kn.filter(F.col("score") < CP_POS_T)
-        .withColumn("nr", F.row_number().over(w))
-        .filter(F.col("nr") <= CP_NEG_K)
-        .select(
-            "vec_id",
-            F.col("nbr").alias("neg_id"),
-            F.col("score").alias("neg_score"),
-            F.col("nr").cast("int").alias("neg_rank"),
-        )
+    neg = _rank_topk(kn.filter(F.col("score") < CP_POS_T), CP_NEG_K).select(
+        "vec_id",
+        F.col("nbr").alias("neg_id"),
+        F.col("score").alias("neg_score"),
+        F.col("rnk").cast("int").alias("neg_rank"),
     )
     return pos.join(neg, "vec_id").select(
         F.col("vec_id").alias("anchor"),

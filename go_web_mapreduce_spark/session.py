@@ -4,7 +4,7 @@ The reference runs one Go process per master with GOMAXPROCS=NumCPU and a
 goroutine per connection (reference: server/server.go:29-31); concurrency and
 scheduling there are hand-built. Here a single SparkSession with AQE replaces
 all of it. Every knob below is chosen for the 100 TB design point and scales
-down to local[32] tests:
+down to a local[<host cores>] session:
 
 - AQE on (runtime coalescing, skew-join splitting, dynamic join selection):
   at cluster scale this is what turns a 100k-partition shuffle plan into a
@@ -69,12 +69,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so
-    the same entry points serve tests and the bench driver; on a real cluster
-    callers pass ``master=None`` with ``spark.master`` set by spark-submit.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, and that variable to
+    the cores this process may run on, so the same entry points serve tests
+    and the bench driver; a cluster deployment passes its own ``master``.
+    ``shuffle_partitions`` defaults to the local slot count.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = 32

@@ -88,15 +88,23 @@ def test_embedding_near_dup_no_driver_collect(spark):
     + absence of any collect() in the implementation path is asserted by
     running on a corpus whose pairs are known."""
     import inspect
+    import math
 
     from go_web_mapreduce_spark.operators import similarity
     from go_web_mapreduce_spark.operators.similarity import (
         embedding_near_dup_pairs,
+        knn_graph,
     )
 
-    # source-level guard: no .collect( inside the operator
-    src = inspect.getsource(similarity.embedding_near_dup_pairs)
-    assert ".collect(" not in src and "broadcast(" not in src
+    # source-level guard: no .collect( inside the operator or the shared
+    # block-grid kernel it runs on
+    for fn in (
+        similarity.embedding_near_dup_pairs,
+        similarity._block_grid,
+        similarity._grid_map,
+    ):
+        src = inspect.getsource(fn)
+        assert ".collect(" not in src and "broadcast(" not in src, fn.__name__
 
     rows = [
         (1, [1.0, 0.0, 0.0]),
@@ -115,6 +123,48 @@ def test_embedding_near_dup_no_driver_collect(spark):
     all_pairs = embedding_near_dup_pairs(emb, threshold=-1.0, num_blocks=3)
     assert all_pairs.count() == 10  # C(5,2)
     assert all_pairs.distinct().count() == 10
+
+    # edge rows: an all-zero vector (6) and an exact duplicate of 3 (7);
+    # every block layout must give the same pairs, graph and scores
+    edge = spark.createDataFrame(
+        rows + [(6, [0.0, 0.0, 0.0]), (7, [0.0, 1.0, 0.0])],
+        "vec_id bigint, embedding array<double>",
+    )
+    pairs, graphs = [], []
+    for blocks in (1, 3, 7):
+        dup = {
+            (r["vec_a"], r["vec_b"]): r["score"]
+            for r in embedding_near_dup_pairs(
+                edge, threshold=0.9, num_blocks=blocks
+            ).collect()
+        }
+        assert sorted(dup) == [(1, 2), (3, 4), (3, 7), (4, 7)], blocks
+        assert dup[(3, 7)] == 1.0  # the duplicate scores exactly 1
+        everything = embedding_near_dup_pairs(
+            edge, threshold=-1.0, num_blocks=blocks
+        ).collect()
+        assert len(everything) == 21  # C(7,2), each pair once
+        assert not any(math.isnan(r["score"]) for r in everything)
+        # the zero vector scores 0 against everything, never NaN
+        assert {r["score"] for r in everything if 6 in (r["vec_a"], r["vec_b"])} == {0.0}
+        pairs.append(sorted((r["vec_a"], r["vec_b"], r["score"]) for r in everything))
+        graph = {}
+        for r in sorted(
+            knn_graph(edge, k=3, num_blocks=blocks).collect(),
+            key=lambda r: (r["vec_id"], r["rnk"]),
+        ):
+            graph.setdefault(r["vec_id"], []).append((r["nbr"], r["score"]))
+        graphs.append(graph)
+    assert pairs[0] == pairs[1] == pairs[2]
+    assert graphs[0] == graphs[1] == graphs[2]
+    graph = graphs[0]
+    # ties break id-ascending: six neighbors tie at 0 for the zero vector,
+    # 3 and 7 tie exactly for 4, four tie at 0 behind 2 for 1
+    assert graph[6] == [(1, 0.0), (2, 0.0), (3, 0.0)]
+    assert [n for n, _ in graph[4]][:2] == [3, 7]
+    assert graph[4][0][1] == graph[4][1][1]
+    assert [n for n, _ in graph[1]] == [2, 3, 4]
+    assert graph[3][0] == (7, 1.0) and graph[7][0] == (3, 1.0)
 
 
 def test_ivf_sample_training_and_persist(spark, sf_dir):
