@@ -188,30 +188,6 @@ def main() -> None:
     if failed:
         summary["failed"] = failed
 
-    # optional throughput pass: all queries submitted concurrently into the
-    # FAIR scheduler pools — the engine's multi-algorithm surface
-    # (service.AlgorithmService; reference runs N masters concurrently,
-    # server/views.go:30-36). Wall clock of the whole batch, not per query.
-    # Each worker gets its OWN child session (newSession: isolated SQLConf,
-    # shared SparkContext), so queries that scope session conf
-    # (streaming's drain, dedup_groups' scoped_shuffle_partitions) cannot race other
-    # threads' plans or leave the shared session pinned to a tiny value.
-    if os.environ.get("SPARK_GRAFT_BENCH_CONCURRENT") == "1":
-        from concurrent.futures import ThreadPoolExecutor
-
-        def run(item):
-            name, spec = item
-            sess = spark.newSession()
-            sess.sparkContext.setLocalProperty("spark.scheduler.pool", name)
-            spec.fn(sess, sf_dir).write.mode("overwrite").format("noop").save()
-
-        t0 = time.time()
-        with ThreadPoolExecutor(max_workers=8) as ex:
-            list(ex.map(run, sorted(REGISTRY.items())))
-        summary["concurrent_wall_clock"] = round(time.time() - t0, 3)
-        print(f"# concurrent batch: {summary['concurrent_wall_clock']:.1f}s",
-              file=sys.stderr)
-
     detail = dict(summary)
     detail["queries"] = per_query
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),

@@ -916,40 +916,6 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(edges)
 
 
-@query(
-    "q_dedup_groups_star",
-    oracle=f"""
-    WITH RECURSIVE {_MINHASH_CAND_CTE},
-    edges AS (
-      SELECT doc_a, doc_b FROM cand WHERE {_N_MATCH_SQL} >= {MIN_MATCHING}
-    ),
-    und AS (
-      SELECT doc_a AS a, doc_b AS b FROM edges
-      UNION
-      SELECT doc_b, doc_a FROM edges
-    ),
-    reach(x, r) AS (
-      SELECT a, a FROM und
-      UNION
-      SELECT u.b, reach.r FROM reach JOIN und u ON u.a = reach.x
-    )
-    SELECT x AS doc_id, min(r) AS root FROM reach GROUP BY x
-    """,
-    description="the same dedup-cluster assignment computed by the "
-    "diameter-independent algorithm: alternating large-star/small-star "
-    "contraction (Kiveris et al. 2014), O(log n) rounds on any graph "
-    "shape — the 100 TB path when near-dup chains run deep; identical "
-    "recursive-CTE oracle as q_dedup_groups",
-    variant_of="q_dedup_groups",
-)
-def q_dedup_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cands = minhash_candidates(_shingled_docs(spark, sf_dir))
-    edges = cands.filter(F.col("n_matching") >= MIN_MATCHING).select(
-        "doc_a", "doc_b"
-    )
-    return connected_components_star(edges)
-
-
 # ---------------------------------------------------------------------------
 # incremental dedup: new batch vs an existing (already-ingested) corpus
 # ---------------------------------------------------------------------------

@@ -221,6 +221,11 @@ def _block_grid(corpus: DataFrame, id_col: str, num_blocks: int | None) -> DataF
         )
         .groupBy("blk")
         .agg(F.collect_list("s").alias("rows"))
+        # always true (pmod of a hash is never NULL), but stated here the
+        # join's inferred isnotnull(blk) reaches BOTH sides' scans: without
+        # it only the right side carries it, the two packing subplans
+        # differ, and AQE reuses neither exchange (two scans, two packs)
+        .where(F.col("blk").isNotNull())
     )
     left = packed.select(
         F.col("blk").alias("blk_a"),

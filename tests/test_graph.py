@@ -11,6 +11,9 @@ from pyspark.sql import functions as F
 from go_web_mapreduce_spark.operators.graph import (
     PR_DAMPING,
     PR_ITERS,
+    SSSP_SCALE,
+    _counted_edges,
+    _nodes,
     copurchase_edges,
     pagerank,
     range_prefix,
@@ -289,12 +292,44 @@ def test_pagerank_matches_dense_numpy_iteration(spark):
 def test_copurchase_edges_weights_and_symmetry(spark):
     # order 1 holds parts {10, 20, 20}, order 2 holds {10, 20}: the pair
     # (10,20) co-occurs in two distinct orders → weight 2, both directions
-    li = spark.createDataFrame(
-        [(1, 10), (1, 20), (1, 20), (2, 10), (2, 20), (3, 30)],
-        "l_orderkey long, l_partkey long",
-    )
+    rows = [(1, 10), (1, 20), (1, 20), (2, 10), (2, 20), (3, 30)]
+    li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
     got = {(r["src"], r["dst"]): r["w"] for r in copurchase_edges(li).collect()}
     assert got == {(10, 20): 2.0, (20, 10): 2.0}
+
+    # every graph query reads this one edge list through a view; with one
+    # more part (40, in order 2 only) each view must equal the pure-Python
+    # graph: orders → distinct parts → ordered pairs counted once per order
+    rows.append((2, 40))
+    li = spark.createDataFrame(rows, li.schema)
+    baskets: dict[int, set] = {}
+    for o, p in rows:
+        baskets.setdefault(o, set()).add(p)
+    want_w: dict[tuple, int] = {}
+    for parts in baskets.values():
+        for s in parts:
+            for d in parts - {s}:
+                want_w[(s, d)] = want_w.get((s, d), 0) + 1
+    assert want_w[(10, 20)] == 2 and want_w[(10, 40)] == 1
+
+    edges = copurchase_edges(li)
+    directed = [(r["src"], r["dst"]) for r in edges.select("src", "dst").collect()]
+    assert sorted(directed) == sorted(want_w)  # no duplicate pair
+    und = edges.where(F.col("src") < F.col("dst")).select("src", "dst").collect()
+    assert sorted((r["src"], r["dst"]) for r in und) == sorted(
+        (s, d) for s, d in want_w if s < d
+    )
+    counted = _counted_edges(li)
+    assert dict(counted.dtypes)["w"] == "bigint"
+    assert {(r["src"], r["dst"]): r["w"] for r in counted.collect()} == want_w
+    lengths = counted.select(
+        "src", "dst", F.expr(f"CAST({SSSP_SCALE} DIV w AS BIGINT)").alias("len")
+    ).collect()
+    assert {(r["src"], r["dst"]): r["len"] for r in lengths} == {
+        e: SSSP_SCALE // w for e, w in want_w.items()
+    }
+    # the vertex set keeps the singleton order's edgeless part 30
+    assert sorted(r["node"] for r in _nodes(li).collect()) == [10, 20, 30, 40]
 
 
 def test_ml_linreg_matches_numpy_lstsq(spark, sf_dir):

@@ -202,6 +202,21 @@ def test_knn_graph_rank_is_group_limited(spark, sf_dir):
     assert "row_number()" in plan
 
 
+def test_block_grid_packs_the_corpus_once(spark, sf_dir):
+    """Both sides of the exact kernels' block-pair join read ONE packing
+    of the embeddings: on the final AQE plan the corpus is scanned once
+    and the second side's collect_list exchange is a ReusedExchange."""
+    df = REGISTRY["q_knn_graph"].fn(spark, sf_dir)
+    qe = df._jdf.queryExecution()
+    qe.toRdd().count()
+    plan = qe.executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    scans = [ln for ln in final.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 1 and "embedding:array<float>" in scans[0], scans
+    assert final.count("ReusedExchange") == 1
+
+
 def test_pagerank_aggregates_partially_and_reuses_checkpoints(spark, sf_dir):
     plan = query_plan(spark, sf_dir, "q_pagerank")
     assert "partial_sum" in plan
