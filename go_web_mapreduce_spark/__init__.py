@@ -15,6 +15,9 @@ only for the genuinely open-coded surfaces (the user map/reduce callables).
 
 Layout:
   session.py    SparkSession factory (AQE on, UTC, Arrow on)
+  worker_daemon.py  the session's Python worker daemon: pyspark.daemon
+                with each task's zip-archive refresh skipped when the
+                archive did not change
   core.py       submit_algorithm() — the reference's programmable
                 MapReduce surface, DataFrame-native
   sources/      table loaders and ingest (parquet/json/in-memory)

@@ -3,8 +3,9 @@
 The sandbox host's speed drifts by 2-3x across minutes, so raw seconds from
 runs taken at different times are not comparable. This harness runs the SAME
 query list in two checkouts in alternating fresh processes, several rounds,
-and reports per-query medians with the min-max range of each side, plus a
-calibration spin and the 1-minute loadavg per round.
+and reports per-query medians with the min-max range and every round's
+seconds of each side, plus a calibration spin and the 1-minute loadavg per
+round. A query name may be listed once.
 
 Usage: python tools/ab_bench.py --before /tmp/repo_before --after /root/repo \
            --rounds 3 q1 q2 ...
@@ -66,6 +67,10 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
+    repeated = sorted({n for n in args.names if args.names.count(n) > 1})
+    if repeated:
+        # results are keyed by name: a repeat would keep only its last timing
+        ap.error(f"query listed more than once: {', '.join(repeated)}")
 
     acc = {"before": [], "after": []}
     for r in range(args.rounds):
@@ -84,17 +89,20 @@ def main() -> None:
                   f"loadavg {os.getloadavg()[0]:.2f}",
                   file=sys.stderr, flush=True)
 
-    def side(tag: str, n: str) -> tuple[float, str]:
+    def side(tag: str, n: str) -> tuple[float, str, str]:
         xs = [r[n] for r in acc[tag]]
-        return statistics.median(xs), f"{min(xs):.3f}-{max(xs):.3f}"
+        return (statistics.median(xs), f"{min(xs):.3f}-{max(xs):.3f}",
+                " ".join(f"{x:.3f}" for x in xs))
 
-    print(f"{'query (median, min-max)':32s} {'before':>20s} {'after':>20s}  ratio")
+    print(f"{'query (median, min-max)':32s} {'before':>20s} {'after':>20s}  ratio"
+          "  per round: before | after")
     tb = ta = 0.0
     for n in args.names:
-        b, rb = side("before", n)
-        a, ra = side("after", n)
+        b, rb, xb = side("before", n)
+        a, ra, xa = side("after", n)
         tb += b; ta += a
-        print(f"{n:32s} {b:7.3f} {rb:>12s} {a:7.3f} {ra:>12s}  {a/b:5.2f}")
+        print(f"{n:32s} {b:7.3f} {rb:>12s} {a:7.3f} {ra:>12s}  {a/b:5.2f}"
+              f"  {xb} | {xa}")
     print(f"{'TOTAL (sum of medians)':32s} {tb:7.3f} {'':12s} {ta:7.3f} {'':12s}  {ta/tb:5.2f}")
     spins_b = [r["__spin__"] for r in acc["before"]]
     spins_a = [r["__spin__"] for r in acc["after"]]
