@@ -24,7 +24,13 @@ from go_web_mapreduce_spark import queries as _q  # noqa: E402
 
 def _prepare(spark: SparkSession) -> None:
     """Confs the engine needs that the driver's session may not set.
-    All are runtime-settable SQL confs — safe on a vanilla session."""
+    All are runtime-settable SQL confs — safe on a vanilla session.
+
+    The Python worker daemon is not among them: Spark reads
+    ``spark.python.daemon.module`` once, when the SparkContext starts, so a
+    session not built by ``get_spark`` keeps the stock ``pyspark.daemon``
+    and each Python task pays its zip-archive refresh (README, "Sessions
+    not built by get_spark"). Results do not depend on the daemon."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # right-size shuffles for the test scale factors (a vanilla session's

@@ -2,7 +2,9 @@
 sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 stdout layout (machine-parseable): first a JSON line carrying the per-query
-seconds map (``{"metric": "per_query_seconds", ...}``), then — LAST — a
+seconds map (``{"metric": "per_query_seconds", ...}``) and the number of
+Spark jobs each query's build (``spec.fn``, before any action) ran
+(``"build_jobs"``), then — LAST — a
 compact totals-only summary line (``{"metric": "total_query_wall_clock",
 ...}``). The summary is last and small so a bounded tail capture always
 holds one complete JSON object (round 2's single fat line outgrew the
@@ -133,13 +135,20 @@ def main() -> None:
         F.element_at(F.from_json(F.lit("[1.0,2.0]"), "array<double>"), 1)
     ).limit(1).write.mode("overwrite").format("noop").save()
 
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     per_query: dict[str, float] = {}
+    build_jobs: dict[str, int] = {}
     total = 0.0
     failed: list[str] = []
     for name, spec in sorted(REGISTRY.items()):
         t0 = time.time()
         try:
+            # the build under its own job group: the jobs it runs before the
+            # query's action (schema inference, plan-time collects, pins)
+            sc.setJobGroup(f"bench:{name}:build", name)
             df = spec.fn(spark, sf_dir)
+            sc.setJobGroup(f"bench:{name}", name)
             df.write.mode("overwrite").format("noop").save()
         except Exception as ex:  # noqa: BLE001 — one bad query must not
             # zero out the whole round's bench record
@@ -150,6 +159,12 @@ def main() -> None:
         per_query[name] = dt
         total += dt
         n = df.count()  # untimed, pruned pass — for the log line only
+        # the listener bus is asynchronous, but in order: once the tracker
+        # has seen the noop write's job, it has seen every build job too
+        deadline = time.time() + 10
+        while not tracker.getJobIdsForGroup(f"bench:{name}") and time.time() < deadline:
+            time.sleep(0.01)
+        build_jobs[name] = len(tracker.getJobIdsForGroup(f"bench:{name}:build"))
         print(f"# {name}: {dt:.3f}s ({n} rows)", file=sys.stderr)
         # drop py4j refs promptly so the ContextCleaner can release the
         # finished query's broadcasts/checkpoint blocks instead of letting
@@ -190,6 +205,7 @@ def main() -> None:
 
     detail = dict(summary)
     detail["queries"] = per_query
+    detail["build_jobs"] = build_jobs
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BENCH_detail.json"), "w") as f:
         json.dump(detail, f, indent=1)
@@ -197,7 +213,7 @@ def main() -> None:
     # per-query map on its own line first; compact totals-only summary LAST
     # so a bounded tail capture always ends with one complete JSON object
     print(json.dumps({"metric": "per_query_seconds", "unit": "sec",
-                      "queries": per_query}))
+                      "queries": per_query, "build_jobs": build_jobs}))
     print(json.dumps(summary))
 
 

@@ -2433,14 +2433,13 @@ def q_itemsets3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_web_mapreduce_spark.sources.sinks import scratch_dir
 
     items_path = scratch_dir("itemsets")
-    (
+    basket_items = (
         li.join(pt, li.l_partkey == pt.p_partkey)
         .select(F.col("l_orderkey").alias("o"), F.col("p_brand").alias("b"))
         .distinct()
-        .write.mode("overwrite")
-        .parquet(items_path)
     )
-    items = spark.read.parquet(items_path)
+    basket_items.write.mode("overwrite").parquet(items_path)
+    items = spark.read.schema(basket_items.schema).parquet(items_path)
     n_baskets = items.select("o").distinct().count()
     # threshold computed in Python: lit(n_baskets) arrives as an int32
     # literal, and int32 * MINSUP_PPM overflowed in ANSI constant
@@ -2456,13 +2455,11 @@ def q_itemsets3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scratch parquet — disk-backed like the items pin, so nothing
     # corpus-sized sits in the block manager
     pair_path = scratch_dir("itemsets_pairs")
-    (
-        a.join(b, (a.o == b.o2) & (F.col("brand_a") < F.col("brand_b")))
-        .select("o", "brand_a", "brand_b")
-        .write.mode("overwrite")
-        .parquet(pair_path)
-    )
-    pair_rows = spark.read.parquet(pair_path)
+    pair_join = a.join(
+        b, (a.o == b.o2) & (F.col("brand_a") < F.col("brand_b"))
+    ).select("o", "brand_a", "brand_b")
+    pair_join.write.mode("overwrite").parquet(pair_path)
+    pair_rows = spark.read.schema(pair_join.schema).parquet(pair_path)
     pairs = pair_rows.groupBy("brand_a", "brand_b").agg(
         F.count(F.lit(1)).alias("sp")
     )

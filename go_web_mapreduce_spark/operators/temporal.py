@@ -777,14 +777,13 @@ def q_lift_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_web_mapreduce_spark.sources.sinks import scratch_dir
 
     sess_path = scratch_dir("lift_sess")
-    (
+    baskets = (
         sessionize(load_table(spark, sf_dir, "events"))
         .select("user_id", "session_id", "event_type")
         .distinct()
-        .write.mode("overwrite")
-        .parquet(sess_path)
     )
-    sess = spark.read.parquet(sess_path)
+    baskets.write.mode("overwrite").parquet(sess_path)
+    sess = spark.read.schema(baskets.schema).parquet(sess_path)
     n_baskets = sess.select("user_id", "session_id").distinct().count()
     item = sess.groupBy("event_type").agg(F.count(F.lit(1)).alias("c"))
     a = sess.select("user_id", "session_id", F.col("event_type").alias("ante"))

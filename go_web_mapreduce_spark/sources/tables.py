@@ -9,13 +9,17 @@ free). The reference's two ingest shapes both reach the engine as a
 literal row list (``http_api`` parses the POST body) and become a local
 relation through ``kv_from_rows``.
 
-Scale note: ``load_table`` never infers schemas and never collects; a scan of
-a 100 TB table stays a lazy ``FileScan parquet`` node with
-``PushedFilters``/``ReadSchema`` supplied by whatever the caller composes on
-top.
+Scale note: ``load_table`` never collects; a scan of a 100 TB table stays a
+lazy ``FileScan parquet`` node with ``PushedFilters``/``ReadSchema`` supplied
+by whatever the caller composes on top. Its schema is inferred once per
+process (``parquet_schema``): Spark's inference is a footer-merge job of its
+own, and every later read of the same unchanged file reuses the result.
 """
 
 from __future__ import annotations
+
+import os
+import stat
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -47,6 +51,48 @@ KV_SCHEMA = T.StructType(
         T.StructField("value", T.StringType(), True),
     ]
 )
+
+
+# Session confs that change what parquet schema inference returns for the
+# same file: a cached schema is valid only under the values it was read with.
+INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# path -> ((file stamp, inference confs), schema); one entry per path
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _stamp(path: str) -> tuple:
+    """Identity of ``path``'s contents: inode, mtime, ctime and size, and
+    for a directory the same over every entry below it, in name order."""
+    st = os.stat(path)
+    own = (st.st_ino, st.st_mtime_ns, st.st_ctime_ns, st.st_size)
+    if not stat.S_ISDIR(st.st_mode):
+        return own
+    names = sorted(os.listdir(path))
+    return own + tuple((n, _stamp(os.path.join(path, n))) for n in names)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    process. The entry is replaced when the file (or any file under the
+    directory) changes, or when one of ``INFERENCE_CONFS`` does. A path
+    that is not on the local file system is inferred on every call."""
+    try:
+        key = (_stamp(path), tuple(spark.conf.get(k, None) for k in INFERENCE_CONFS))
+    except OSError:
+        return spark.read.parquet(path).schema
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[path] = (key, schema)
+    return schema
 
 
 def normalize_events(df: DataFrame) -> DataFrame:
@@ -83,7 +129,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_events(df)
     if name in BROADCAST_DIMS:

@@ -35,7 +35,11 @@ from pyspark.sql.streaming import DataStreamWriter
 from go_web_mapreduce_spark.registry import query
 from go_web_mapreduce_spark.session import scoped_conf
 from go_web_mapreduce_spark.sources.sinks import scratch_dir
-from go_web_mapreduce_spark.sources.tables import local_frame, normalize_events
+from go_web_mapreduce_spark.sources.tables import (
+    local_frame,
+    normalize_events,
+    parquet_schema,
+)
 
 # State-store partition count for the engine's streaming aggregations. A
 # streaming query's shuffle-partition setting is frozen into its checkpoint at
@@ -45,27 +49,31 @@ from go_web_mapreduce_spark.sources.tables import local_frame, normalize_events
 # state partitions is the right size — 32+ would mean 32 mostly-empty RocksDB/
 # HDFS stores doing per-batch commits. At 100 TB scale this knob is set per
 # query to O(distinct keys / target-keys-per-store), not to the batch
-# shuffle default.
+# shuffle default. ``drain`` caps it at the cluster's task slots, so each
+# stateful micro-batch runs its state stores in one wave of tasks.
 STREAM_STATE_PARTITIONS = 8
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream view of the events parquet (schema from the batch reader,
-    never inferred — inference is illegal on streams anyway)."""
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    """readStream view of the events parquet (schema from the batch
+    reader's cached inference, ``parquet_schema`` — inference is illegal on
+    streams anyway)."""
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     # the file-stream source wants a directory/glob, not a bare file path —
     # a wildcard makes sf_dir the basePath and matches just the events file
-    stream = spark.readStream.schema(batch.schema).parquet(f"{sf_dir}/events.parqu*")
+    stream = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parqu*")
     return normalize_events(stream)
 
 
 def drain(writer: DataStreamWriter, spark: SparkSession, **conf: str) -> None:
-    """Run a finite stream to completion: start ``writer``'s query with the
-    state partitions (``STREAM_STATE_PARTITIONS``) and any extra ``conf``
-    scoped to it, process every available micro-batch, and always stop."""
+    """Run a finite stream to completion: start ``writer``'s query with
+    ``STREAM_STATE_PARTITIONS`` state partitions (at most the default
+    parallelism) and any extra ``conf`` scoped to it, process every
+    available micro-batch, and always stop."""
+    parts = min(STREAM_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
     with scoped_conf(
         spark,
-        **{"spark.sql.shuffle.partitions": str(STREAM_STATE_PARTITIONS)},
+        **{"spark.sql.shuffle.partitions": str(parts)},
         **conf,
     ):
         q = writer.start()
@@ -260,7 +268,7 @@ def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_df.write.mode("overwrite").parquet(out_path)
 
     drain(agg.writeStream.outputMode("complete").foreachBatch(sink_batch), spark)
-    return spark.read.parquet(out_path).select(
+    return spark.read.schema(agg.schema).parquet(out_path).select(
         "user_id", "start_us", "n_events", "span_us"
     )
 
@@ -352,7 +360,7 @@ def session_window_append_stream(
         return local_frame(
             spark, [], "user_id bigint, start_us bigint, n_events bigint, span_us bigint"
         )
-    return spark.read.parquet(out_path).select(
+    return spark.read.schema(agg.schema).parquet(out_path).select(
         "user_id", "start_us", "n_events", "span_us"
     )
 
@@ -512,7 +520,7 @@ def purchase_click_attribution_stream(spark: SparkSession, sf_dir: str) -> DataF
         spark,
         **{"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
     )
-    return spark.read.parquet(f"{base}/out")
+    return spark.read.schema(joined.schema).parquet(f"{base}/out")
 
 
 @query(
