@@ -60,80 +60,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
 
-    # warm the JVM + parquet footers once so per-query numbers measure the
-    # queries, not session start-up
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    # ...and the Python/Arrow worker pool: the first pandas_udf in a session
-    # pays worker spawn + Arrow init (~1-2s) that would otherwise land on
-    # whichever Python-backed query happens to sort first
-    from pyspark.sql import functions as F
-
-    _warm = F.pandas_udf("long")(lambda s: s)
-    spark.range(1000).select(_warm("id")).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    # ...and the codegen/janino path for higher-order functions: the first
-    # HOF-heavy query otherwise absorbs the compiler cold start (observed on
-    # q_array_fns, alphabetically early — 1.8 s warm vs 3-30 s cold under
-    # neighbor load)
-    spark.range(1000).select(
-        F.aggregate(
-            F.transform(F.array_repeat("id", 4), lambda x: x + 1),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("s")
-    ).write.mode("overwrite").format("noop").save()
-    # ...and the Expand + multi-count-distinct codegen paths: the round-4
-    # three-run protocol showed the FIRST grouping-sets execution pays
-    # +1.2 s and the first count-distinct +0.5 s of janino compilation
-    # (warm runs spin-normalize to the r2 yardstick exactly) — warm both
-    # here so q_grouping_sets/q_count_distinct measure the queries
-    warm_df = spark.range(1000).select(
-        (F.col("id") % 7).cast("string").alias("a"),
-        (F.col("id") % 3).cast("string").alias("b"),
-        (F.col("id") % 100).cast("decimal(18,4)").alias("d"),
-        "id",
-    )
-    warm_df.createOrReplaceTempView("bench_warm")
-    spark.sql(
-        "SELECT coalesce(a, 'ALL') a, coalesce(b, 'ALL') b, count(*) n,"
-        " CAST(CAST(sum(d) AS STRING) AS DOUBLE) s FROM bench_warm"
-        " GROUP BY GROUPING SETS ((a), (b), ())"
-    ).write.mode("overwrite").format("noop").save()
-    warm_df.groupBy("a").agg(
-        F.countDistinct("id").alias("nd"), F.count("*").alias("n")
-    ).write.mode("overwrite").format("noop").save()
-    # ...and the md5-bucket bit-test + broadcast-nested-loop shapes: the
-    # round-6 three-run protocol showed q_bloom_join pays ~+2.9 s and
-    # q_dense_grid ~+0.6 s of janino compilation on their first execution
-    # (warm runs land back at the r4 yardstick — BASELINE.md table); warm
-    # the md5/conv/shiftright-element_at projection and a both-sides-
-    # broadcast cross join so the timed loop measures those queries
-    from go_web_mapreduce_spark.functions.hashing import md5_bucket
-
-    lits = "array(" + ", ".join(f"{v}L" for v in range(16)) + ")"
-    warm_df.select(
-        md5_bucket(F.col("a"), 1024, salt=1).alias("_p1"),
-        md5_bucket(F.col("a"), 1024, salt=2).alias("_p2"),
-    ).filter(
-        F.expr(
-            f"((shiftright(element_at({lits}, cast(_p1 / 64 AS int) + 1),"
-            f" cast(_p1 % 64 AS int)) & 1L) = 1L)"
-        )
-        | F.expr(
-            f"((shiftright(element_at({lits}, cast(_p2 / 64 AS int) + 1),"
-            f" cast(_p2 % 64 AS int)) & 1L) = 1L)"
-        )
-    ).write.mode("overwrite").format("noop").save()
-    warm_df.select("a").limit(5).crossJoin(
-        warm_df.select("b").distinct().limit(5)
-    ).write.mode("overwrite").format("noop").save()
-    # ...and the from_json array<double> parser (round 8: the HLL
-    # linear-counting table ships as one JSON string literal — the first
-    # from_json evaluation pays Jackson parser init)
-    warm_df.select(
-        F.element_at(F.from_json(F.lit("[1.0,2.0]"), "array<double>"), 1)
-    ).limit(1).write.mode("overwrite").format("noop").save()
+    warm_up(spark, sf_dir)
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -215,6 +142,87 @@ def main() -> None:
     print(json.dumps({"metric": "per_query_seconds", "unit": "sec",
                       "queries": per_query, "build_jobs": build_jobs}))
     print(json.dumps(summary))
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Run each one-time session cost once, untimed: the JVM and parquet
+    footers, the Python worker pool, and the janino codegen families whose
+    first execution would otherwise land on whichever query meets it
+    first. Every timing tool calls this before its timed loop."""
+    # warm the JVM + parquet footers once so per-query numbers measure the
+    # queries, not session start-up
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    # ...and the Python/Arrow worker pool: the first pandas_udf in a session
+    # pays worker spawn + Arrow init (~1-2s) that would otherwise land on
+    # whichever Python-backed query happens to sort first
+    from pyspark.sql import functions as F
+
+    _warm = F.pandas_udf("long")(lambda s: s)
+    spark.range(1000).select(_warm("id")).write.mode("overwrite").format(
+        "noop"
+    ).save()
+    # ...and the codegen/janino path for higher-order functions: the first
+    # HOF-heavy query otherwise absorbs the compiler cold start (observed on
+    # q_array_fns, alphabetically early — 1.8 s warm vs 3-30 s cold under
+    # neighbor load)
+    spark.range(1000).select(
+        F.aggregate(
+            F.transform(F.array_repeat("id", 4), lambda x: x + 1),
+            F.lit(0).cast("long"),
+            lambda acc, v: acc + v,
+        ).alias("s")
+    ).write.mode("overwrite").format("noop").save()
+    # ...and the Expand + multi-count-distinct codegen paths: the round-4
+    # three-run protocol showed the FIRST grouping-sets execution pays
+    # +1.2 s and the first count-distinct +0.5 s of janino compilation
+    # (warm runs spin-normalize to the r2 yardstick exactly) — warm both
+    # here so q_grouping_sets/q_count_distinct measure the queries
+    warm_df = spark.range(1000).select(
+        (F.col("id") % 7).cast("string").alias("a"),
+        (F.col("id") % 3).cast("string").alias("b"),
+        (F.col("id") % 100).cast("decimal(18,4)").alias("d"),
+        "id",
+    )
+    warm_df.createOrReplaceTempView("bench_warm")
+    spark.sql(
+        "SELECT coalesce(a, 'ALL') a, coalesce(b, 'ALL') b, count(*) n,"
+        " CAST(CAST(sum(d) AS STRING) AS DOUBLE) s FROM bench_warm"
+        " GROUP BY GROUPING SETS ((a), (b), ())"
+    ).write.mode("overwrite").format("noop").save()
+    warm_df.groupBy("a").agg(
+        F.countDistinct("id").alias("nd"), F.count("*").alias("n")
+    ).write.mode("overwrite").format("noop").save()
+    # ...and the md5-bucket bit-test + broadcast-nested-loop shapes: the
+    # round-6 three-run protocol showed q_bloom_join pays ~+2.9 s and
+    # q_dense_grid ~+0.6 s of janino compilation on their first execution
+    # (warm runs land back at the r4 yardstick — BASELINE.md table); warm
+    # the md5/conv/shiftright-element_at projection and a both-sides-
+    # broadcast cross join so the timed loop measures those queries
+    from go_web_mapreduce_spark.functions.hashing import md5_bucket
+
+    lits = "array(" + ", ".join(f"{v}L" for v in range(16)) + ")"
+    warm_df.select(
+        md5_bucket(F.col("a"), 1024, salt=1).alias("_p1"),
+        md5_bucket(F.col("a"), 1024, salt=2).alias("_p2"),
+    ).filter(
+        F.expr(
+            f"((shiftright(element_at({lits}, cast(_p1 / 64 AS int) + 1),"
+            f" cast(_p1 % 64 AS int)) & 1L) = 1L)"
+        )
+        | F.expr(
+            f"((shiftright(element_at({lits}, cast(_p2 / 64 AS int) + 1),"
+            f" cast(_p2 % 64 AS int)) & 1L) = 1L)"
+        )
+    ).write.mode("overwrite").format("noop").save()
+    warm_df.select("a").limit(5).crossJoin(
+        warm_df.select("b").distinct().limit(5)
+    ).write.mode("overwrite").format("noop").save()
+    # ...and the from_json array<double> parser (round 8: the HLL
+    # linear-counting table ships as one JSON string literal — the first
+    # from_json evaluation pays Jackson parser init)
+    warm_df.select(
+        F.element_at(F.from_json(F.lit("[1.0,2.0]"), "array<double>"), 1)
+    ).limit(1).write.mode("overwrite").format("noop").save()
 
 
 if __name__ == "__main__":

@@ -752,13 +752,10 @@ def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the DuckDB oracle replays the exact same sketch, cell for cell.
     """
     from go_web_mapreduce_spark.functions.hashing import md5_bucket
-    from go_web_mapreduce_spark.functions.text import tokens
+    from go_web_mapreduce_spark.operators.relational import token_counts
 
-    docs = load_table(spark, sf_dir, "documents")
     wc = (
-        docs.select(F.explode(tokens("text")).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
+        token_counts(load_table(spark, sf_dir, "documents"))
         # wc feeds BOTH the sketch cells and the true top-k probe set;
         # without this, Catalyst duplicates the corpus scan + word explode
         # (lazy localCheckpoint = compute once on first action, reuse after
@@ -770,42 +767,42 @@ def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # agg bounds the shuffle at d*w rows per partition
     rows = F.array(*[F.lit(j) for j in range(CMS_DEPTH)])
     cells = (
-        wc.select("c", F.explode(rows).alias("j"), "w")
+        wc.select("n", F.explode(rows).alias("j"), "word")
         .select(
             "j",
             # md5_bucket(word, w, salt=j) replayed per row j; salt equals j
             # so the oracle's CAST(j AS VARCHAR)||':'||w matches exactly
-            F.when(F.col("j") == 0, md5_bucket(F.col("w"), CMS_WIDTH, salt=0))
-            .when(F.col("j") == 1, md5_bucket(F.col("w"), CMS_WIDTH, salt=1))
-            .when(F.col("j") == 2, md5_bucket(F.col("w"), CMS_WIDTH, salt=2))
-            .otherwise(md5_bucket(F.col("w"), CMS_WIDTH, salt=3))
+            F.when(F.col("j") == 0, md5_bucket(F.col("word"), CMS_WIDTH, salt=0))
+            .when(F.col("j") == 1, md5_bucket(F.col("word"), CMS_WIDTH, salt=1))
+            .when(F.col("j") == 2, md5_bucket(F.col("word"), CMS_WIDTH, salt=2))
+            .otherwise(md5_bucket(F.col("word"), CMS_WIDTH, salt=3))
             .alias("b"),
-            "c",
+            "n",
         )
         .groupBy("j", "b")
-        .agg(F.sum("c").alias("cnt"))
+        .agg(F.sum("n").alias("cnt"))
     )
-    top = wc.orderBy(F.desc("c"), "w").limit(CMS_TOPK)
+    top = wc.orderBy(F.desc("n"), "word").limit(CMS_TOPK)
     probes = top.select(
-        "w",
-        "c",
+        "word",
+        "n",
         F.explode(rows).alias("j"),
     ).select(
-        "w",
-        "c",
+        "word",
+        "n",
         "j",
-        F.when(F.col("j") == 0, md5_bucket(F.col("w"), CMS_WIDTH, salt=0))
-        .when(F.col("j") == 1, md5_bucket(F.col("w"), CMS_WIDTH, salt=1))
-        .when(F.col("j") == 2, md5_bucket(F.col("w"), CMS_WIDTH, salt=2))
-        .otherwise(md5_bucket(F.col("w"), CMS_WIDTH, salt=3))
+        F.when(F.col("j") == 0, md5_bucket(F.col("word"), CMS_WIDTH, salt=0))
+        .when(F.col("j") == 1, md5_bucket(F.col("word"), CMS_WIDTH, salt=1))
+        .when(F.col("j") == 2, md5_bucket(F.col("word"), CMS_WIDTH, salt=2))
+        .otherwise(md5_bucket(F.col("word"), CMS_WIDTH, salt=3))
         .alias("b"),
     )
     # the counter table is <= d*w = 2,048 rows -> broadcast the probe join
     return (
         probes.join(F.broadcast(cells), ["j", "b"])
-        .groupBy(F.col("w").alias("word"))
+        .groupBy("word")
         .agg(
-            F.min("c").alias("true_cnt"),
+            F.min("n").alias("true_cnt"),
             F.min("cnt").alias("cms_est"),
         )
     )

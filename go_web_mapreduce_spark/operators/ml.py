@@ -360,15 +360,29 @@ def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands on a half-way point at scale 9 — dyadic denominators can't
     carry the 5^9 factor — so both engines round identically).
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    comp = emb.select(
-        "label", F.posexplode("embedding").alias("pos", "v")
-    )
+    return _label_centroids(load_table(spark, sf_dir, "embeddings"))
+
+
+def _label_centroids(emb: DataFrame) -> DataFrame:
+    """``(label, pos bigint, centroid, n)``: each label's mean embedding,
+    one row per component — decimal component sums over ``count``."""
+    comp = emb.select("label", F.posexplode("embedding").alias("pos", "v"))
     return comp.groupBy("label", F.col("pos").cast("bigint").alias("pos")).agg(
         (
             dsum(F.col("v").cast("double"), CENTROID_SCALE) / F.count(F.lit(1))
         ).alias("centroid"),
         F.count(F.lit(1)).alias("n"),
+    )
+
+
+def _centroid_arrays(emb: DataFrame) -> DataFrame:
+    """``(label, carr)``: each label's centroid packed into one
+    ``array<double>`` in component order (labels × dim — broadcast-sized)."""
+    return _label_centroids(emb).groupBy("label").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "centroid"))),
+            lambda s: s["centroid"],
+        ).alias("carr")
     )
 
 
@@ -425,20 +439,7 @@ def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    comp = emb.select("label", F.posexplode("embedding").alias("pos", "v"))
-    cent = comp.groupBy(
-        F.col("label").alias("clabel"), F.col("pos").cast("bigint").alias("pos")
-    ).agg(
-        (
-            dsum(F.col("v").cast("double"), CENTROID_SCALE) / F.count(F.lit(1))
-        ).alias("cv")
-    )
-    centarr = cent.groupBy("clabel").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-            lambda s: s["cv"],
-        ).alias("carr")
-    )
+    centarr = _centroid_arrays(emb).withColumnRenamed("label", "clabel")
     vec = emb.select(
         "vec_id",
         "label",
@@ -1163,8 +1164,6 @@ CONF_ALPHA = 0.1  # target miscoverage: coverage guarantee >= 1 - alpha
 def q_conformal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from go_web_mapreduce_spark.functions.numeric import dsum
-
     emb = load_table(spark, sf_dir, "embeddings")
     part = (
         F.conv(
@@ -1180,16 +1179,8 @@ def q_conformal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coverage guarantee with it — measured 0.40 vs the 0.9 target before
     # this fix; the guarantee holds after (tests).
     split = emb.select("vec_id", "label", "embedding", part.alias("part"))
-    comp = split.filter(F.col("part") <= 1).select(
-        "label", F.posexplode("embedding").alias("pos", "v")
-    )
-    cent = comp.groupBy("label", F.col("pos").cast("bigint").alias("pos")).agg(
-        (dsum(F.col("v").cast("double"), CENTROID_SCALE) / F.count(F.lit(1))).alias("cv")
-    )
-    centarr = cent.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cv"))), lambda s: s["cv"]
-        ).alias("carr")
+    centarr = _centroid_arrays(
+        split.filter(F.col("part") <= 1)
     ).localCheckpoint(eager=False)  # ≤|labels| rows; broadcast twice (the
     # calibration and evaluation legs each re-reference scored's subtree)
     scored = split.join(F.broadcast(centarr), "label").select(
@@ -1547,20 +1538,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: no vector leaves its partition until the top-k shuffle, whose
     carried rows are already label-bounded; AQE handles the label skew."""
     emb = load_table(spark, sf_dir, "embeddings")
-    comp = emb.select("label", F.posexplode("embedding").alias("pos", "v"))
-    cent = comp.groupBy(
-        F.col("label").alias("clabel"), F.col("pos").cast("bigint").alias("pos")
-    ).agg(
-        (
-            dsum(F.col("v").cast("double"), CENTROID_SCALE) / F.count(F.lit(1))
-        ).alias("cv")
-    )
-    centarr = cent.groupBy("clabel").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-            lambda s: s["cv"],
-        ).alias("carr")
-    )
+    centarr = _centroid_arrays(emb).withColumnRenamed("label", "clabel")
     vec = emb.select(
         "vec_id",
         "label",
@@ -1923,6 +1901,57 @@ def _als_factor_sql(salt: str, key: str, dialect: str) -> str:
     return f"({h} % {ALS_FMOD} - {ALS_FMOD // 2})"
 
 
+def _als_solve(orders: DataFrame, lines: DataFrame) -> DataFrame:
+    """The ALS user half-step's solve from ``orders`` ``(o_orderkey,
+    o_custkey)`` and ``lines`` ``(l_orderkey, x1, x2, y)``: per-order Gram
+    partials, the per-user re-sum with the ``ALS_LAMBDA`` ridge on the
+    diagonal, then the closed-form 2×2 solve."""
+    per_order = lines.groupBy("l_orderkey").agg(
+        F.count(F.lit(1)).alias("pn"),
+        F.sum(F.col("x1") * F.col("x1")).alias("pa"),
+        F.sum(F.col("x1") * F.col("x2")).alias("pb"),
+        F.sum(F.col("x2") * F.col("x2")).alias("pd"),
+        F.sum(F.col("x1") * F.col("y")).alias("p1"),
+        F.sum(F.col("x2") * F.col("y")).alias("p2"),
+    )
+    g = (
+        orders.join(per_order, orders.o_orderkey == per_order.l_orderkey)
+        .groupBy(F.col("o_custkey").alias("u"))
+        .agg(
+            F.sum("pn").alias("n_obs"),
+            (F.sum("pa") + ALS_LAMBDA).alias("a"),
+            F.sum("pb").alias("b"),
+            (F.sum("pd") + ALS_LAMBDA).alias("d"),
+            F.sum("p1").alias("sxy1"),
+            F.sum("p2").alias("sxy2"),
+        )
+    )
+    det_d = F.col("a").cast("double") * F.col("d") - F.col("b").cast(
+        "double"
+    ) * F.col("b")
+    return g.select(
+        F.col("u").alias("custkey"),
+        "n_obs",
+        "sxy1",
+        "sxy2",
+        (F.col("a") * F.col("d") - F.col("b") * F.col("b")).alias("det"),
+        (
+            (
+                F.col("d").cast("double") * F.col("sxy1")
+                - F.col("b").cast("double") * F.col("sxy2")
+            )
+            / det_d
+        ).alias("w1"),
+        (
+            (
+                F.col("a").cast("double") * F.col("sxy2")
+                - F.col("b").cast("double") * F.col("sxy1")
+            )
+            / det_d
+        ).alias("w2"),
+    )
+
+
 @query(
     "q_als_user_step",
     oracle=f"""
@@ -1987,50 +2016,7 @@ def q_als_user_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_als_factor_sql("alsf2", "l_partkey", "spark")).alias("x2"),
         "y",
     )
-    per_order = li.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("pn"),
-        F.sum(F.col("x1") * F.col("x1")).alias("pa"),
-        F.sum(F.col("x1") * F.col("x2")).alias("pb"),
-        F.sum(F.col("x2") * F.col("x2")).alias("pd"),
-        F.sum(F.col("x1") * F.col("y")).alias("p1"),
-        F.sum(F.col("x2") * F.col("y")).alias("p2"),
-    )
-    g = (
-        o.join(per_order, o.o_orderkey == per_order.l_orderkey)
-        .groupBy(F.col("o_custkey").alias("u"))
-        .agg(
-            F.sum("pn").alias("n_obs"),
-            (F.sum("pa") + ALS_LAMBDA).alias("a"),
-            F.sum("pb").alias("b"),
-            (F.sum("pd") + ALS_LAMBDA).alias("d"),
-            F.sum("p1").alias("sxy1"),
-            F.sum("p2").alias("sxy2"),
-        )
-    )
-    det_d = F.col("a").cast("double") * F.col("d") - F.col("b").cast(
-        "double"
-    ) * F.col("b")
-    return g.select(
-        F.col("u").alias("custkey"),
-        "n_obs",
-        "sxy1",
-        "sxy2",
-        (F.col("a") * F.col("d") - F.col("b") * F.col("b")).alias("det"),
-        (
-            (
-                F.col("d").cast("double") * F.col("sxy1")
-                - F.col("b").cast("double") * F.col("sxy2")
-            )
-            / det_d
-        ).alias("w1"),
-        (
-            (
-                F.col("a").cast("double") * F.col("sxy2")
-                - F.col("b").cast("double") * F.col("sxy1")
-            )
-            / det_d
-        ).alias("w2"),
-    )
+    return _als_solve(o, li)
 
 
 # ---------------------------------------------------------------------------
@@ -2109,50 +2095,7 @@ def q_als_user_step_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(pt), F.col("l_partkey") == pt.p_partkey)
     )
-    per_order = li.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("pn"),
-        F.sum(F.col("x1") * F.col("x1")).alias("pa"),
-        F.sum(F.col("x1") * F.col("x2")).alias("pb"),
-        F.sum(F.col("x2") * F.col("x2")).alias("pd"),
-        F.sum(F.col("x1") * F.col("y")).alias("p1"),
-        F.sum(F.col("x2") * F.col("y")).alias("p2"),
-    )
-    g = (
-        o.join(per_order, o.o_orderkey == per_order.l_orderkey)
-        .groupBy(F.col("o_custkey").alias("u"))
-        .agg(
-            F.sum("pn").alias("n_obs"),
-            (F.sum("pa") + ALS_LAMBDA).alias("a"),
-            F.sum("pb").alias("b"),
-            (F.sum("pd") + ALS_LAMBDA).alias("d"),
-            F.sum("p1").alias("sxy1"),
-            F.sum("p2").alias("sxy2"),
-        )
-    )
-    det_d = F.col("a").cast("double") * F.col("d") - F.col("b").cast(
-        "double"
-    ) * F.col("b")
-    return g.select(
-        F.col("u").alias("custkey"),
-        "n_obs",
-        "sxy1",
-        "sxy2",
-        (F.col("a") * F.col("d") - F.col("b") * F.col("b")).alias("det"),
-        (
-            (
-                F.col("d").cast("double") * F.col("sxy1")
-                - F.col("b").cast("double") * F.col("sxy2")
-            )
-            / det_d
-        ).alias("w1"),
-        (
-            (
-                F.col("a").cast("double") * F.col("sxy2")
-                - F.col("b").cast("double") * F.col("sxy1")
-            )
-            / det_d
-        ).alias("w2"),
-    )
+    return _als_solve(o, li)
 
 
 # ---------------------------------------------------------------------------

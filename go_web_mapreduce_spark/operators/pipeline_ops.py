@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.functions.numeric import dsum
 from go_web_mapreduce_spark.functions.text import tokens
+from go_web_mapreduce_spark.operators.relational import token_counts
 from go_web_mapreduce_spark.registry import query
 from go_web_mapreduce_spark.sources.sinks import SCRATCH_TABLES, scratch_dir
 from go_web_mapreduce_spark.sources.tables import fan_out, load_table
@@ -1341,23 +1342,19 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     docs = load_table(spark, sf_dir, "documents")
-    cnt = (
-        docs.select(F.explode(tokens("text")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    wt = F.sqrt(F.sqrt(F.col("c").cast("double") * F.col("c") * F.col("c")))
+    cnt = token_counts(docs)
+    wt = F.sqrt(F.sqrt(F.col("n").cast("double") * F.col("n") * F.col("n")))
     wt_dec = wt.cast("decimal(18,6)")
-    w = W.orderBy("token").rowsBetween(W.unboundedPreceding, W.currentRow)
+    w = W.orderBy("word").rowsBetween(W.unboundedPreceding, W.currentRow)
     vocab = cnt.select(
-        "token",
+        "word",
         (F.sum(wt_dec).over(w) - wt_dec).cast("double").alias("cp"),
         F.sum(wt_dec).over(w).cast("double").alias("cm"),
     ).localCheckpoint(eager=False)
     tot_w, n_vocab = vocab.agg(F.max("cm"), F.count(F.lit(1))).first()
     bw = F.lit(tot_w) / F.lit(n_vocab)
     seg = vocab.select(
-        "token", "cp", "cm",
+        "word", "cp", "cm",
         F.explode(
             F.sequence(
                 F.floor(F.col("cp") / bw).cast("bigint"),
@@ -1403,7 +1400,7 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.col("i").cast("int").alias("draw"),
-            F.col("token").alias("neg_token"),
+            F.col("word").alias("neg_token"),
         )
     )
 
@@ -1464,25 +1461,20 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from go_web_mapreduce_spark.functions.numeric import dsum
 
-    docs = load_table(spark, sf_dir, "documents")
-    st = (
-        fan_out(docs.select("source", "text"))
-        .select("source", F.explode(tokens("text")).alias("token"))
-        .groupBy("source", "token")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)  # vocabulary-bounded census, FOUR
-        # consumers (stot, ct, the total scalar, terms) — unpinned, the
-        # corpus tokenize+explode replays once per reference
-    )
-    stot = st.groupBy("source").agg(F.sum("c").alias("ts"))
-    ct = st.groupBy("token").agg(F.sum("c").alias("g"))
-    total = st.agg(F.sum("c")).first()[0]
+    st = token_counts(
+        load_table(spark, sf_dir, "documents"), "source"
+    ).localCheckpoint(eager=False)  # vocabulary-bounded census, FOUR
+    # consumers (stot, ct, the total scalar, terms) — unpinned, the
+    # corpus tokenize+explode replays once per reference
+    stot = st.groupBy("source").agg(F.sum("n").alias("ts"))
+    ct = st.groupBy("word").agg(F.sum("n").alias("g"))
+    total = st.agg(F.sum("n")).first()[0]
     terms = (
         st.join(F.broadcast(stot), "source")
-        .join(F.broadcast(ct), "token")
+        .join(F.broadcast(ct), "word")
         .select(
             "source",
-            (F.col("c").cast("double") / F.col("ts")).alias("p"),
+            (F.col("n").cast("double") / F.col("ts")).alias("p"),
             (F.col("g").cast("double") / F.lit(float(total))).alias("q"),
         )
     )
@@ -1544,26 +1536,21 @@ XENT_ALPHA = 1  # Laplace smoothing count for the corpus unigram LM
 def q_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_web_mapreduce_spark.functions.numeric import dsum
 
-    docs = load_table(spark, sf_dir, "documents")
-    st = (
-        fan_out(docs.select("source", "text"))
-        .select("source", F.explode(tokens("text")).alias("token"))
-        .groupBy("source", "token")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)  # vocabulary-bounded, feeds ct + terms
-    )
-    ct = st.groupBy("token").agg(F.sum("c").alias("g")).localCheckpoint(
+    st = token_counts(
+        load_table(spark, sf_dir, "documents"), "source"
+    ).localCheckpoint(eager=False)  # vocabulary-bounded, feeds ct + terms
+    ct = st.groupBy("word").agg(F.sum("n").alias("g")).localCheckpoint(
         eager=False  # vocabulary-bounded, feeds the totals scalar + the join
     )
     t_total, vocab = ct.agg(F.sum("g"), F.count(F.lit(1))).first()
     # H = ln(T + aV) - sum(c ln(g + a))/n : the smoothing denominator folds
     # into one constant, so the per-term join carries only ln(g + a)
-    terms = st.join(F.broadcast(ct), "token").select(
-        "source", "c", F.log(F.col("g") + XENT_ALPHA).alias("lg")
+    terms = st.join(F.broadcast(ct), "word").select(
+        "source", "n", F.log(F.col("g") + XENT_ALPHA).alias("lg")
     )
     agg = terms.groupBy("source").agg(
-        F.sum("c").cast("bigint").alias("n_tokens"),
-        dsum(F.col("c") * F.col("lg"), 8).alias("sum_clg"),
+        F.sum("n").cast("bigint").alias("n_tokens"),
+        dsum(F.col("n") * F.col("lg"), 8).alias("sum_clg"),
     )
     ce = (
         F.log(F.lit(float(t_total + XENT_ALPHA * vocab)))

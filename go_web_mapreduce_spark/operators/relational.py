@@ -33,17 +33,27 @@ from go_web_mapreduce_spark.sources.tables import fan_out, load_table, local_fra
 # ---------------------------------------------------------------------------
 
 
-def tokenized_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents exploded to one row per (doc_id, word). The map phase of the
-    reference's word count (reference: server/views.go:53-55) as a projection;
-    only (doc_id, text) are read from the scan (column pruning)."""
-    docs = load_table(spark, sf_dir, "documents")
+def tokenized(docs: DataFrame, *keys: str) -> DataFrame:
+    """``(keys…, word)``: one row per token of ``docs.text``. The map phase
+    of the reference's word count (reference: server/views.go:53-55) as a
+    projection; only the keys and ``text`` are read from the scan (column
+    pruning)."""
     # split+lower+explode is map-side CPU over the scan: fan_out the pruned
-    # (doc_id, text) projection so tokenization runs cluster-wide instead of
-    # on the single effective task a one-row-group benchmark file yields
-    # (no-op at scale — the scan is already thousands of splits there)
-    return fan_out(docs.select("doc_id", "text")).select(
-        "doc_id", F.explode(tokens("text")).alias("word")
+    # projection so tokenization runs cluster-wide instead of on the single
+    # effective task a one-row-group benchmark file yields (no-op at scale —
+    # the scan is already thousands of splits there)
+    return fan_out(docs.select(*keys, "text")).select(
+        *keys, F.explode(tokens("text")).alias("word")
+    )
+
+
+def token_counts(docs: DataFrame, *keys: str) -> DataFrame:
+    """``(keys…, word, n bigint)``: the word-count census of ``docs.text``
+    per key (map-side combined: partial counts cross the shuffle)."""
+    return (
+        tokenized(docs, *keys)
+        .groupBy(*keys, "word")
+        .agg(F.count("*").alias("n"))
     )
 
 
@@ -58,11 +68,8 @@ def tokenized_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="flagship map→shuffle→reduce word count (reference: server/views.go:51-61)",
 )
 def q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        tokenized_documents(spark, sf_dir)
-        .groupBy("word")
-        .agg(F.count("*").alias("cnt"))
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    return token_counts(docs).withColumnRenamed("n", "cnt")
 
 
 @query(
@@ -81,7 +88,7 @@ def q_parity_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics: the bucket is a computed grouping column; physical placement is
     Catalyst's job (hash partitioning on the group keys) — observationally
     equivalent under the order-insensitive oracle (SURVEY.md §4.3)."""
-    words = tokenized_documents(spark, sf_dir)
+    words = tokenized(load_table(spark, sf_dir, "documents"))
     return (
         words.withColumn("pi", (F.length("word") % 2).cast("bigint"))
         .groupBy("pi", "word")
@@ -106,7 +113,7 @@ def q_parity_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        tokenized_documents(spark, sf_dir)
+        tokenized(load_table(spark, sf_dir, "documents"), "doc_id")
         .distinct()
         .groupBy("word")
         .agg(
@@ -1340,12 +1347,12 @@ def q_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "plan is two aggregations + one broadcast-able join on word",
 )
 def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    words = tokenized_documents(spark, sf_dir)
-    tf = words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
+    docs = load_table(spark, sf_dir, "documents")
+    tf = token_counts(docs, "doc_id").withColumnRenamed("n", "tf")
     df = tf.select("doc_id", "word").distinct().groupBy("word").agg(
         F.count("*").alias("df")
     )
-    n_docs = load_table(spark, sf_dir, "documents").select("doc_id").distinct().count()
+    n_docs = docs.select("doc_id").distinct().count()
     score = F.col("tf") * (F.lit(float(n_docs)) / F.col("df"))
     w = W.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("word"))
     return (
@@ -1361,11 +1368,10 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_TOP = 3
 
-
-@query(
-    "q_bm25",
-    oracle=f"""
-    WITH toks AS (
+# DuckDB mirror of _bm25_scored: the corpus statistics CTE chain (tf, dl,
+# df, stats) and the score expression over it, shared by the q_bm25 and
+# q_rank_fusion oracles
+BM25_STATS_SQL = """WITH toks AS (
       SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word FROM documents
     ), tf AS (
       SELECT doc_id, word, count(*) AS tf FROM toks WHERE word <> '' GROUP BY 1, 2
@@ -1375,45 +1381,29 @@ BM25_TOP = 3
       SELECT word, count(*) AS df FROM (SELECT DISTINCT doc_id, word FROM tf) GROUP BY word
     ), stats AS (
       SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS sum_dl FROM dl
-    ), scored AS (
-      SELECT tf.doc_id, tf.word, tf.tf, df.df, dl.dl,
-             ((CAST(stats.n_docs - df.df AS DOUBLE) + 0.5)
+    )"""
+BM25_SCORE_SQL = f"""((CAST(stats.n_docs - df.df AS DOUBLE) + 0.5)
               / (CAST(df.df AS DOUBLE) + 0.5))
              * (CAST(tf.tf AS DOUBLE) * {BM25_K1 + 1.0}
                 / (CAST(tf.tf AS DOUBLE)
                    + {BM25_K1} * ({1.0 - BM25_B} + {BM25_B}
                       * (CAST(dl.dl AS DOUBLE)
                          / (CAST(stats.sum_dl AS DOUBLE)
-                            / CAST(stats.n_docs AS DOUBLE)))))) AS score
-      FROM tf JOIN df USING (word) JOIN dl USING (doc_id), stats
-    )
-    SELECT doc_id, word, tf, df, dl, score
-    FROM (
-      SELECT *, row_number() OVER (PARTITION BY doc_id
-                                   ORDER BY score DESC, word) AS rn
-      FROM scored
-    ) WHERE rn <= {BM25_TOP} AND doc_id < 50
-    """,
-    description=f"BM25 ranking (Robertson-Sparck Jones; k1={BM25_K1}, "
-    f"b={BM25_B}): the production IR scorer built from the same tf/df/dl "
-    "statistics as q_tfidf, with length normalization. Rational idf "
-    "(N-df+0.5)/(df+0.5) keeps the whole score inside IEEE +-*/ — no "
-    "transcendental libm calls — so floats hash-match cross-engine; "
-    "top-3 terms per doc (SURVEY named workload: inverted index / IR)",
-)
-def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same scale shape as TF-IDF: two corpus aggregations (tf, and df over
-    distinct pairs), a per-doc length table, one broadcast-able join on
-    word, one window per doc. The corpus-level scalars (N, Σdl) collect as
-    two integers; avgdl is derived with the IDENTICAL operation order as
+                            / CAST(stats.n_docs AS DOUBLE))))))"""
+
+
+def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, word, tf, df, dl, score)``: every (document, term) pair of
+    the corpus with its BM25 score. Two corpus aggregations (tf, and df
+    counted over tf's rows, which are distinct (doc_id, word) pairs) and a
+    per-doc length table; the corpus-level scalars (N, Σdl) collect as two
+    integers, and avgdl is derived with the IDENTICAL operation order as
     the oracle so the doubles match bit-for-bit."""
-    words = tokenized_documents(spark, sf_dir)
-    tf = words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
+    docs = load_table(spark, sf_dir, "documents")
+    tf = token_counts(docs, "doc_id").withColumnRenamed("n", "tf")
     tf = tf.localCheckpoint(eager=False)  # feeds tf, dl, df — scan once
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
-    df = tf.select("doc_id", "word").distinct().groupBy("word").agg(
-        F.count("*").alias("df")
-    )
+    df = tf.groupBy("word").agg(F.count("*").alias("df"))
     stats = dl.agg(
         F.count("*").alias("n_docs"), F.sum("dl").cast("bigint").alias("sum_dl")
     ).first()
@@ -1435,11 +1425,42 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    w = W.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("word"))
     return (
         tf.join(df, "word")
         .join(dl, "doc_id")
-        .withColumn("score", idf * norm)
+        .select("doc_id", "word", "tf", "df", "dl", (idf * norm).alias("score"))
+    )
+
+
+@query(
+    "q_bm25",
+    oracle=f"""
+    {BM25_STATS_SQL}, scored AS (
+      SELECT tf.doc_id, tf.word, tf.tf, df.df, dl.dl,
+             {BM25_SCORE_SQL} AS score
+      FROM tf JOIN df USING (word) JOIN dl USING (doc_id), stats
+    )
+    SELECT doc_id, word, tf, df, dl, score
+    FROM (
+      SELECT *, row_number() OVER (PARTITION BY doc_id
+                                   ORDER BY score DESC, word) AS rn
+      FROM scored
+    ) WHERE rn <= {BM25_TOP} AND doc_id < 50
+    """,
+    description=f"BM25 ranking (Robertson-Sparck Jones; k1={BM25_K1}, "
+    f"b={BM25_B}): the production IR scorer built from the same tf/df/dl "
+    "statistics as q_tfidf, with length normalization. Rational idf "
+    "(N-df+0.5)/(df+0.5) keeps the whole score inside IEEE +-*/ — no "
+    "transcendental libm calls — so floats hash-match cross-engine; "
+    "top-3 terms per doc (SURVEY named workload: inverted index / IR)",
+)
+def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Same scale shape as TF-IDF: the corpus statistics of
+    :func:`_bm25_scored`, one broadcast-able join on word, one window per
+    doc."""
+    w = W.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("word"))
+    return (
+        _bm25_scored(spark, sf_dir)
         .withColumn("rn", F.row_number().over(w))
         .filter((F.col("rn") <= BM25_TOP) & (F.col("doc_id") < 50))
         .select("doc_id", "word", "tf", "df", "dl", "score")

@@ -1692,34 +1692,19 @@ RRF_PROBE = 0  # the vector query: embedding of vec_id 0 (query-by-example)
 
 
 def _rrf_oracle() -> str:
-    from go_web_mapreduce_spark.operators.relational import BM25_B, BM25_K1
+    from go_web_mapreduce_spark.operators.relational import (
+        BM25_SCORE_SQL,
+        BM25_STATS_SQL,
+    )
 
-    score = f"""((CAST(stats.n_docs - df.df AS DOUBLE) + 0.5)
-              / (CAST(df.df AS DOUBLE) + 0.5))
-             * (CAST(tf.tf AS DOUBLE) * {BM25_K1 + 1.0}
-                / (CAST(tf.tf AS DOUBLE)
-                   + {BM25_K1} * ({1.0 - BM25_B} + {BM25_B}
-                      * (CAST(dl.dl AS DOUBLE)
-                         / (CAST(stats.sum_dl AS DOUBLE)
-                            / CAST(stats.n_docs AS DOUBLE))))))"""
     terms_in = ", ".join(f"'{t}'" for t in RRF_TERMS)
     fold = " + ".join(
         f"coalesce(max(CASE WHEN word = '{t}' THEN s END), CAST(0 AS DOUBLE))"
         for t in RRF_TERMS
     )
     return f"""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word FROM documents
-    ), tf AS (
-      SELECT doc_id, word, count(*) AS tf FROM toks WHERE word <> '' GROUP BY 1, 2
-    ), dl AS (
-      SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id
-    ), df AS (
-      SELECT word, count(*) AS df FROM (SELECT DISTINCT doc_id, word FROM tf) GROUP BY word
-    ), stats AS (
-      SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS sum_dl FROM dl
-    ), term_scores AS (
-      SELECT tf.doc_id, tf.word, {score} AS s
+    {BM25_STATS_SQL}, term_scores AS (
+      SELECT tf.doc_id, tf.word, {BM25_SCORE_SQL} AS s
       FROM tf JOIN df USING (word) JOIN dl USING (doc_id), stats
       WHERE tf.word IN ({terms_in})
     ), lex_scored AS (
@@ -1779,51 +1764,15 @@ def q_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _rrf_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fused RRF top-{RRF_TOP} list — shared by q_rank_fusion (which
     returns it) and q_cross_rerank (which rescores it)."""
-    from go_web_mapreduce_spark.operators.relational import (
-        BM25_B,
-        BM25_K1,
-        tokenized_documents,
-    )
+    from go_web_mapreduce_spark.operators.relational import _bm25_scored
 
     # ---- lexical leg: BM25 over the full corpus stats, scored for TERMS
-    words = tokenized_documents(spark, sf_dir)
-    tf = words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
-    tf = tf.localCheckpoint(eager=False)  # feeds tf, dl, df — scan once
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
-    dfreq = tf.select("doc_id", "word").distinct().groupBy("word").agg(
-        F.count("*").alias("df")
-    )
-    st = dl.agg(
-        F.count("*").alias("n_docs"), F.sum("dl").cast("bigint").alias("sum_dl")
-    ).first()
-    n_docs, sum_dl = int(st["n_docs"]), int(st["sum_dl"])
-    avgdl = float(sum_dl) / float(n_docs)
-
-    tf_d = F.col("tf").cast("double")
-    idf = (
-        (F.col("df") * F.lit(-1) + F.lit(n_docs)).cast("double") + F.lit(0.5)
-    ) / (F.col("df").cast("double") + F.lit(0.5))
-    norm = (
-        tf_d
-        * F.lit(BM25_K1 + 1.0)
-        / (
-            tf_d
-            + F.lit(BM25_K1)
-            * (
-                F.lit(1.0 - BM25_B)
-                + F.lit(BM25_B) * (F.col("dl").cast("double") / F.lit(avgdl))
-            )
-        )
-    )
-    term_scores = (
-        tf.filter(F.col("word").isin(list(RRF_TERMS)))
-        .join(dfreq, "word")
-        .join(dl, "doc_id")
-        .withColumn("s", idf * norm)
+    term_scores = _bm25_scored(spark, sf_dir).filter(
+        F.col("word").isin(list(RRF_TERMS))
     )
     per_term = term_scores.groupBy("doc_id").agg(
         *[
-            F.max(F.when(F.col("word") == t, F.col("s"))).alias(f"_s{i}")
+            F.max(F.when(F.col("word") == t, F.col("score"))).alias(f"_s{i}")
             for i, t in enumerate(RRF_TERMS)
         ]
     )

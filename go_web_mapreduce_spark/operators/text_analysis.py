@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.functions.text import token_count, tokens, word_shingles
+from go_web_mapreduce_spark.operators.relational import token_counts
 from go_web_mapreduce_spark.registry import query
 from go_web_mapreduce_spark.sources.tables import fan_out, load_table, local_frame
 
@@ -687,24 +688,19 @@ def q_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge iterations rewrite the (tiny) vocab table and repeat the second
     aggregate only.
     """
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    freq = (
-        docs.select(F.explode(tokens("text")).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wf"))
-    )
-    pairs = freq.filter(F.length("w") >= 2).select(
+    freq = token_counts(load_table(spark, sf_dir, "documents"))
+    pairs = freq.filter(F.length("word") >= 2).select(
         F.explode(
             F.transform(
-                F.sequence(F.lit(1), F.length("w") - 1),
-                lambda i: F.substring(F.col("w"), i, F.lit(2)),
+                F.sequence(F.lit(1), F.length("word") - 1),
+                lambda i: F.substring(F.col("word"), i, F.lit(2)),
             )
         ).alias("pair"),
-        "wf",
+        "n",
     )
     return (
         pairs.groupBy("pair")
-        .agg(F.sum("wf").alias("cnt"))
+        .agg(F.sum("n").alias("cnt"))
         .orderBy(F.col("cnt").desc(), "pair")
         .limit(BPE_TOP)
     )
@@ -814,12 +810,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoints for long trainings and is property-tested against a pure-
     Python reference implementation (tests/test_llm_ops.py).
     """
-    docs = load_table(spark, sf_dir, "documents")
-    freq = (
-        docs.select(F.explode(tokens("text")).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wf"))
-    )
+    freq = token_counts(load_table(spark, sf_dir, "documents"))
     merges, _ = bpe_train(freq, BPE_TRAIN_STEPS)
     return local_frame(spark, merges, "step int, pair string, cnt bigint")
 
@@ -830,7 +821,8 @@ def bpe_train(
     checkpoint_every: int | None = None,
     checkpoint_dir: str | None = None,
 ):
-    """The BPE merge loop over a ``(w, wf)`` word-frequency table.
+    """The BPE merge loop over a ``(word, n)`` word-frequency table
+    (:func:`token_counts`'s census).
 
     Returns ``(merges, vocab)``: ``merges`` is ``[(step, pair, cnt)]`` and
     ``vocab`` the final \\x01-delimited encoding of every distinct word —
@@ -849,10 +841,10 @@ def bpe_train(
     if checkpoint_every and checkpoint_dir:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
     vocab = freq.select(
-        F.regexp_replace("w", "(?s)(.)", f"{_BPE_SEP}$1{_BPE_SEP}").alias(
+        F.regexp_replace("word", "(?s)(.)", f"{_BPE_SEP}$1{_BPE_SEP}").alias(
             "enc"
         ),
-        "wf",
+        "n",
     ).localCheckpoint(eager=False)
 
     merges: list[tuple[int, str, int]] = []
@@ -861,18 +853,18 @@ def bpe_train(
             F.split(F.btrim("enc", F.lit(_BPE_SEP)), _BPE_SEP * 2).alias(
                 "syms"
             ),
-            "wf",
+            "n",
         ).select(
             F.slice("syms", 1, F.size("syms") - 1).alias("l"),
             F.slice("syms", 2, F.size("syms") - 1).alias("r"),
-            "wf",
+            "n",
         )
         pairs = sy.select(
-            F.explode(F.arrays_zip("l", "r")).alias("p"), "wf"
-        ).select(F.col("p.l").alias("l"), F.col("p.r").alias("r"), "wf")
+            F.explode(F.arrays_zip("l", "r")).alias("p"), "n"
+        ).select(F.col("p.l").alias("l"), F.col("p.r").alias("r"), "n")
         best = (
             pairs.groupBy("l", "r")
-            .agg(F.sum("wf").alias("cnt"))
+            .agg(F.sum("n").alias("cnt"))
             .orderBy(F.col("cnt").desc(), "l", "r")
             .first()
         )
@@ -940,22 +932,17 @@ def _bpe_encode_oracle(k: int) -> str:
     "the final rewrite",
 )
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    freq = (
-        docs.select(F.explode(tokens("text")).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wf"))
-    )
+    freq = token_counts(load_table(spark, sf_dir, "documents"))
     _, vocab = bpe_train(freq, BPE_TRAIN_STEPS)
     sym = vocab.select(
         F.explode(
             F.split(F.btrim("enc", F.lit(_BPE_SEP)), _BPE_SEP * 2)
         ).alias("symbol"),
-        "wf",
+        "n",
     )
     return (
         sym.groupBy("symbol")
-        .agg(F.sum("wf").alias("cnt"))
+        .agg(F.sum("n").alias("cnt"))
         .select("symbol", "cnt", (F.length("symbol") > 1).alias("merged"))
         .orderBy(F.col("cnt").desc(), "symbol")
         .limit(BPE_TOP)
@@ -1231,19 +1218,14 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from go_web_mapreduce_spark.functions.numeric import dsum
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    cnt = (
-        docs.select(F.explode(tokens("text")).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("c"))
-    )
-    w = Window.orderBy(F.col("c").desc(), "token")
+    cnt = token_counts(load_table(spark, sf_dir, "documents"))
+    w = Window.orderBy(F.col("n").desc(), "word")
     pts = (
         cnt.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= ZIPF_MAX_RANK)
         .select(
             F.log(F.col("rk").cast("double")).alias("x"),
-            F.log(F.col("c").cast("double")).alias("y"),
+            F.log(F.col("n").cast("double")).alias("y"),
         )
     )
     s = pts.agg(
@@ -1828,11 +1810,9 @@ CTFIDF_TOPK = 5
 def q_ctfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
     cls = (
-        docs.select("source", F.explode(tokens("text")).alias("token"))
-        .groupBy("source", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
+        token_counts(load_table(spark, sf_dir, "documents"), "source")
+        .withColumnsRenamed({"word": "token", "n": "tf"})
         # feeds three aggregations + the score join — pin the
         # (source, token) census so the corpus explode runs once
         .localCheckpoint(eager=False)

@@ -580,7 +580,12 @@ def foreachbatch_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
     )
 
-    back = spark.read.option("basePath", out_dir).parquet(out_dir)
+    # the stream's schema plus the partition column: no inference job
+    back = (
+        spark.read.schema(ev.schema.add("batch_id", "integer"))
+        .option("basePath", out_dir)
+        .parquet(out_dir)
+    )
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("event_id").alias("n_distinct"),

@@ -229,18 +229,14 @@ def test_bpe_deep_training_matches_python_reference(spark, sf_dir, tmp_path):
     identical final encoding of every vocabulary word — including merges
     whose symbols span earlier merges (asserted present, i.e. the test
     really reaches the interesting regime)."""
+    from go_web_mapreduce_spark.operators.relational import token_counts
     from go_web_mapreduce_spark.operators.text_analysis import (
         _BPE_SEP,
         bpe_train,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    freq_df = (
-        docs.select(F.explode(tokens("text")).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wf"))
-    )
-    freq = {r["w"]: int(r["wf"]) for r in freq_df.collect()}
+    freq_df = token_counts(load_table(spark, sf_dir, "documents"))
+    freq = {r["word"]: int(r["n"]) for r in freq_df.collect()}
 
     ckpt = str(tmp_path / "bpe_ckpt")
     merges, vocab_df = bpe_train(

@@ -14,6 +14,8 @@ What each assertion protects:
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from go_web_mapreduce_spark import plans as P
@@ -776,3 +778,21 @@ def test_als_bcast_factor_join_is_broadcast(spark, sf_dir):
     plan = query_plan(spark, sf_dir, "q_als_user_step_bcast")
     assert "BroadcastHashJoin" in plan
     assert "partial_sum" in plan
+
+
+@pytest.mark.parametrize("name", ["q_bm25", "q_rank_fusion"])
+def test_bm25_df_reads_the_census_without_a_distinct(spark, sf_dir, name):
+    """BM25's df counts the pinned (doc_id, word, tf) census per word: its
+    rows are already distinct pairs, and a pinned scan carries no distinct
+    keys Catalyst could use to drop a distinct. On the final AQE plan no
+    group-only (doc_id, word) aggregate is left."""
+    df = REGISTRY[name].fn(spark, sf_dir)
+    qe = df._jdf.queryExecution()
+    qe.toRdd().count()
+    plan = qe.executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert "Scan ExistingRDD" in final
+    assert not re.search(
+        r"HashAggregate\(keys=\[doc_id#\d+L?, word#\d+\], functions=\[\]", final
+    ), final

@@ -15,11 +15,22 @@ from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.core import submit_algorithm
 from go_web_mapreduce_spark.functions.hashing import hash_family, minhash_from_hashes, shingle_hashes
-from go_web_mapreduce_spark.sources.tables import kv_from_rows
+from go_web_mapreduce_spark.operators.relational import token_counts
+from go_web_mapreduce_spark.sources.tables import kv_from_rows, local_frame
 
 WORDS = st.text(
     alphabet=st.characters(whitelist_categories=("Ll", "Nd")), min_size=1, max_size=8
 )
+
+# mixed-case words glued to runs of spaces; a drawn text may be empty or
+# only spaces
+TEXTS = st.lists(
+    st.one_of(
+        st.text(alphabet="abAB", min_size=1, max_size=3),
+        st.text(alphabet=" ", min_size=1, max_size=3),
+    ),
+    max_size=6,
+).map("".join)
 
 SPARK_SETTINGS = settings(
     max_examples=8,
@@ -502,3 +513,23 @@ def test_mmr_integer_lambda_matches_rational_lambda(rel, sims):
         lambda r, m: Fraction(7, 10) * r - Fraction(3, 10) * (m or 0)
     )
     assert int_pick == frac_pick
+
+
+@given(texts=st.lists(st.tuples(st.sampled_from(["s0", "s1"]), TEXTS), max_size=8))
+@SPARK_SETTINGS
+def test_token_counts_match_counter(spark, texts):
+    """token_counts == collections.Counter over lower-cased, single-space
+    split, empty-dropped tokens, unkeyed and keyed; an empty text and an
+    only-spaces text are always in the frame and contribute nothing."""
+    from collections import Counter
+
+    rows = texts + [("s0", ""), ("s1", "   ")]
+    docs = local_frame(spark, rows, "source string, text string")
+    toks = [(src, t) for src, text in rows for t in text.lower().split(" ") if t]
+    got = {r["word"]: r["n"] for r in token_counts(docs).collect()}
+    assert got == Counter(t for _, t in toks)
+    got = {(r["source"], r["word"]): r["n"] for r in token_counts(docs, "source").collect()}
+    assert got == Counter(toks)
+    assert token_counts(docs, "source").dtypes == [
+        ("source", "string"), ("word", "string"), ("n", "bigint"),
+    ]

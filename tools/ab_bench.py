@@ -22,34 +22,38 @@ import sys
 import time
 
 RUNNER = r"""
-import json, os, sys, time
+import importlib.util, json, os, sys, time
 sys.path.insert(0, sys.argv[1])
 os.chdir(sys.argv[1])
 names = json.loads(sys.argv[2])
 from go_web_mapreduce_spark.queries import REGISTRY
 from go_web_mapreduce_spark.session import get_spark
+spec = importlib.util.spec_from_file_location("ab_bench_warm", sys.argv[3])
+bench = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(bench)
 spark = get_spark("ab")
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-from pyspark.sql import functions as F
-_w = F.pandas_udf("long")(lambda s: s)
-spark.range(1000).select(_w("id")).write.mode("overwrite").format("noop").save()
+bench.warm_up(spark, sf_dir)
 out = {}
 for n in names:
     t0 = time.time()
     df = REGISTRY[n].fn(spark, sf_dir)
     df.write.mode("overwrite").format("noop").save()
     out[n] = round(time.time() - t0, 3)
-t0 = time.time(); x = 0
-for i in range(10_000_000): x += i
-out["__spin__"] = round(time.time() - t0, 3)
+out["__spin__"] = bench._calibration_spin()
 print("ABRESULT " + json.dumps(out))
 """
+
+# this checkout's bench.py: both trees warm up and spin with the same code,
+# whichever commit --before names
+BENCH_PY = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py"
+)
 
 
 def run_tree(tree: str, names: list[str]) -> dict:
     p = subprocess.run(
-        [sys.executable, "-c", RUNNER, tree, json.dumps(names)],
+        [sys.executable, "-c", RUNNER, tree, json.dumps(names), BENCH_PY],
         capture_output=True, text=True, timeout=3600,
     )
     for line in p.stdout.splitlines():

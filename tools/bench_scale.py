@@ -30,16 +30,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _calibration_spin, warm_up  # noqa: E402
 from go_web_mapreduce_spark.queries import REGISTRY  # noqa: E402
 from go_web_mapreduce_spark.session import get_spark  # noqa: E402
-
-
-def _spin(n: int = 10_000_000) -> float:
-    t0 = time.time()
-    x = 0
-    for i in range(n):
-        x += i
-    return round(time.time() - t0, 3)
 
 
 def _run(spark, name: str, sf_dir: str) -> float:
@@ -74,15 +67,8 @@ def main() -> None:
     spark = get_spark(
         "bench-scale", shuffle_partitions=args.shuffle_partitions
     )
-    # warm scans + python worker pool + codegen families (mirrors bench.py)
-    from pyspark.sql import functions as F
-
     for d in (args.small, args.big):
-        spark.read.parquet(f"{d}/lineitem.parquet").count()
-    _w = F.pandas_udf("long")(lambda s: s)
-    spark.range(1000).select(_w("id")).write.mode("overwrite").format(
-        "noop"
-    ).save()
+        warm_up(spark, d)
 
     out: dict[str, dict] = {}
     for name in names:
@@ -90,10 +76,10 @@ def main() -> None:
         try:
             _run(spark, name, args.small)          # warm (untimed)
             rec["small_sec"] = _run(spark, name, args.small)
-            rec["spin_small"] = _spin()
+            rec["spin_small"] = _calibration_spin()
             _run(spark, name, args.big)            # warm (untimed)
             rec["big_sec"] = _run(spark, name, args.big)
-            rec["spin_big"] = _spin()
+            rec["spin_big"] = _calibration_spin()
         except Exception as ex:  # noqa: BLE001 — record, keep measuring
             rec["err"] = f"{type(ex).__name__}: {ex}"[:300]
             out[name] = rec
