@@ -56,6 +56,10 @@ def _procs_running() -> int | None:
 
 
 def main() -> None:
+    # imported here, not at the top: tools/ab_bench.py loads this file for
+    # warm_up into trees whose sinks predate released()
+    from go_web_mapreduce_spark.sources.sinks import released
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
@@ -71,21 +75,24 @@ def main() -> None:
     for name, spec in sorted(REGISTRY.items()):
         t0 = time.time()
         try:
-            # the build under its own job group: the jobs it runs before the
-            # query's action (schema inference, plan-time collects, pins)
-            sc.setJobGroup(f"bench:{name}:build", name)
-            df = spec.fn(spark, sf_dir)
-            sc.setJobGroup(f"bench:{name}", name)
-            df.write.mode("overwrite").format("noop").save()
+            # the query's pins and scratch are freed after its last action
+            with released():
+                # the build under its own job group: the jobs it runs before
+                # the query's action (schema inference, plan-time collects,
+                # pins)
+                sc.setJobGroup(f"bench:{name}:build", name)
+                df = spec.fn(spark, sf_dir)
+                sc.setJobGroup(f"bench:{name}", name)
+                df.write.mode("overwrite").format("noop").save()
+                dt = round(time.time() - t0, 3)
+                n = df.count()  # untimed, pruned pass — for the log line only
         except Exception as ex:  # noqa: BLE001 — one bad query must not
             # zero out the whole round's bench record
             failed.append(name)
             print(f"# {name}: FAILED {type(ex).__name__}: {ex}", file=sys.stderr)
             continue
-        dt = round(time.time() - t0, 3)
         per_query[name] = dt
         total += dt
-        n = df.count()  # untimed, pruned pass — for the log line only
         # the listener bus is asynchronous, but in order: once the tracker
         # has seen the noop write's job, it has seen every build job too
         deadline = time.time() + 10
@@ -94,8 +101,8 @@ def main() -> None:
         build_jobs[name] = len(tracker.getJobIdsForGroup(f"bench:{name}:build"))
         print(f"# {name}: {dt:.3f}s ({n} rows)", file=sys.stderr)
         # drop py4j refs promptly so the ContextCleaner can release the
-        # finished query's broadcasts/checkpoint blocks instead of letting
-        # the pressure land as a GC pause inside a later query's timing
+        # finished query's broadcasts instead of letting the pressure land
+        # as a GC pause inside a later query's timing
         gc.collect()
 
     # documented-slower alternative plans (registry variant_of) count toward

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.registry import query
+from go_web_mapreduce_spark.sources.sinks import pin
 from go_web_mapreduce_spark.sources.tables import fan_out, load_table, local_frame
 
 # ---------------------------------------------------------------------------
@@ -353,13 +354,12 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             e = e.join(prev, "user_id").filter(F.col("_us") > F.col(prev_t))
         return e.groupBy("user_id").agg(F.min("_us").alias(t))
 
-    # each frontier feeds the next stage AND its own census count: pinned,
-    # the cascade executes each stage once (unpinned, s1's subtree replayed
-    # under s2, s3, and all three counts — 6 scans for a 3-step funnel).
     # Frontier state is one (user_id, ts) row per surviving user — the
-    # funnel's inherent state, monotonically shrinking per stage.
-    s1 = stage(FUNNEL_STEPS[0], None, "", "t1").localCheckpoint(eager=False)
-    s2 = stage(FUNNEL_STEPS[1], s1, "t1", "t2").localCheckpoint(eager=False)
+    # funnel's inherent state, monotonically shrinking per stage. Each
+    # frontier ends in its groupBy exchange, which AQE reuses for the next
+    # stage and the census count.
+    s1 = stage(FUNNEL_STEPS[0], None, "", "t1")
+    s2 = stage(FUNNEL_STEPS[1], s1, "t1", "t2")
     s3 = stage(FUNNEL_STEPS[2], s2, "t2", "t3")
     rows = [
         ("view", s1),
@@ -553,7 +553,6 @@ def q_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.orderBy(F.col("o_totalprice").desc(), "o_orderkey")
         .limit(BLOOM_TOP)
         .select("o_orderkey", "o_orderpriority")
-        .localCheckpoint(eager=False)  # reused: bloom build + join probe
     )
     okey = F.col("o_orderkey").cast("string")
     positions = top.select(
@@ -658,20 +657,16 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole chain hash-verifies against DuckDB (F.percentile ≡
     percentile_cont, the q_percentiles-proven pairing)."""
     events = load_table(spark, sf_dir, "events")
-    # med and mad are ≤|event-types| rows but feed two consumers each —
-    # pinned, so each broadcast ships a computed tiny table instead of
-    # replaying its corpus-scan subtree per reference (was 4 event scans;
-    # the honest two-pass shape is exactly 2 + the flag pass)
     med = events.groupBy("event_type").agg(
         F.percentile("value", F.lit(0.5)).alias("med")
-    ).localCheckpoint(eager=False)
+    )
     dev = events.join(F.broadcast(med), "event_type").select(
         "event_type", "med", F.abs(F.col("value") - F.col("med")).alias("ad")
     )
     mad = dev.groupBy("event_type").agg(
         F.max("med").alias("med"),
         F.percentile("ad", F.lit(0.5)).alias("mad"),
-    ).localCheckpoint(eager=False)
+    )
     flagged = dev.select("event_type", "ad").join(F.broadcast(mad), "event_type")
     return flagged.groupBy("event_type", "med", "mad").agg(
         F.count("*").alias("n"),
@@ -754,14 +749,7 @@ def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_web_mapreduce_spark.functions.hashing import md5_bucket
     from go_web_mapreduce_spark.operators.relational import token_counts
 
-    wc = (
-        token_counts(load_table(spark, sf_dir, "documents"))
-        # wc feeds BOTH the sketch cells and the true top-k probe set;
-        # without this, Catalyst duplicates the corpus scan + word explode
-        # (lazy localCheckpoint = compute once on first action, reuse after
-        # — the q_bloom_join discipline)
-        .localCheckpoint(eager=False)
-    )
+    wc = token_counts(load_table(spark, sf_dir, "documents"))
     # build the d x w counter table from the reduced (word, count) set:
     # one row per (hash row j, bucket) — explode is x4 map-side, partial
     # agg bounds the shuffle at d*w rows per partition
@@ -892,8 +880,7 @@ def q_jackknife_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         (F.sum("p100").cast("double") / 100.0).alias("s"),
         F.count(F.lit(1)).alias("n"),
-    ).localCheckpoint(eager=False)  # ≤ flags×64 rows, feeds tot AND loo —
-    # unpinned, the corpus md5 aggregation replays once per reference
+    )
     tot = bkt.groupBy("flag").agg(
         dsum("s").alias("st"), F.sum("n").alias("nt"), F.count(F.lit(1)).alias("nb")
     )
@@ -901,7 +888,7 @@ def q_jackknife_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "flag",
         ((F.col("st") - F.col("s")) / (F.col("nt") - F.col("n"))).alias("m"),
         "st", "nt", "nb",
-    ).localCheckpoint(eager=False)  # dimension-sized, feeds jk AND se
+    )
     jk = loo.groupBy("flag", "st", "nt", "nb").agg(
         (dsum("m", 8) / F.col("nb")).alias("mbar")
     ).select("flag", "mbar")
@@ -1273,9 +1260,6 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_items"),
         (F.sum(p100).cast("double") / 100.0).alias("total"),
     )
-    # feeds the value census, the rank pass and the rank-attach join — pin
-    # so the corpus aggregation runs once (the q_rfm_segments discipline)
-    per_order = per_order.localCheckpoint(eager=False)
 
     def midrank(cum_less: F.Column) -> F.Column:
         # rank = 1 + #smaller, plus half the tie group of size c, with the
@@ -1405,7 +1389,6 @@ def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nations-sized census broadcast.
     from go_web_mapreduce_spark.operators.graph import range_prefix
 
-    rev = rev.localCheckpoint(eager=False)  # feeds the rank pass + census
     ncen = rev.groupBy("nation").agg(F.count(F.lit(1)).alias("n"))
     ranked = (
         range_prefix(rev, ["cents", "cust"], key="nation")
@@ -1789,8 +1772,8 @@ def _global_ntile(u: DataFrame, metric: str, out: str) -> DataFrame:
     "assignment is engine-identical and the census hash-verifies",
 )
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One corpus shuffle to the per-user grid (localCheckpoint-ed: six
-    traversals follow); each quintile is then a range-partitioned global
+    """One corpus shuffle to the per-user grid (six traversals follow);
+    each quintile is then a range-partitioned global
     rank (graph.py::range_prefix — range shuffle + local sort +
     partition-count prefix sum) folded through the exact ntile bucket
     arithmetic (_ntile_from_pos), so NO corpus-scaled data ever moves to
@@ -1811,7 +1794,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("value") * 100).cast("long"),
             ).otherwise(0)
         ).alias("cents"),
-    ).localCheckpoint(eager=False)
+    )
     scored = (
         u.select("user_id", "cents")
         .join(_global_ntile(u, "last_us", "r_q"), "user_id")
@@ -1900,9 +1883,9 @@ def _hll_overlap_oracle() -> str:
 def q_hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inclusion–exclusion is the canonical sketch-set-algebra workload
     (audience overlap, cross-source contamination, A/B exposure leaks).
-    Registers are built ONCE (one corpus shuffle, ≤ types×4096 rows) and
-    pinned: singles estimate, pair-union estimate, and the exact check
-    all read the same state. The estimate arithmetic (a + b − u, /u) is
+    Registers are built ONCE (one corpus shuffle, ≤ types×4096 rows,
+    reused by AQE): singles estimate, pair-union estimate, and the exact
+    check all read the same state. The estimate arithmetic (a + b − u, /u) is
     two IEEE ops in one documented order on deterministic doubles, so
     the result hash-verifies; a negative estimate for truly disjoint
     sets is possible (sketch noise exceeding the tiny intersection) and
@@ -1912,9 +1895,7 @@ def q_hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_web_mapreduce_spark.functions import hll as _hll
 
     events = load_table(spark, sf_dir, "events")
-    regs = _hll.hll_registers(
-        events, ["event_type"], F.col("user_id")
-    ).localCheckpoint(eager=False)
+    regs = _hll.hll_registers(events, ["event_type"], F.col("user_id"))
     single = _hll.hll_estimate_from_registers(regs, ["event_type"])
     types = events.select("event_type").distinct()
     pairs = (
@@ -2328,7 +2309,6 @@ def q_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = parts[0]
     for p in parts[1:]:
         stats = stats.unionByName(p)
-    stats = stats.localCheckpoint(eager=False)  # feeds agg + hot
     agg = stats.groupBy("key_col").agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum("c").alias("n_rows"),
@@ -2811,12 +2791,12 @@ def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
         .groupBy(F.col("c_mktsegment").alias("seg"), "nat")
         .agg(F.count(F.lit(1)).alias("o"))
-        # the 125-row census feeds three subtrees (row margins, column
-        # margins, the grid join): pin it so the corpus aggregation runs
-        # ONCE — without this the customer scan executed three times
-        # (caught by tests/test_plans.py::test_cramers_v_census_only_cartesian)
-        .localCheckpoint(eager=False)
     )
+    # the 125-row census feeds three subtrees (row margins, column margins,
+    # the grid join), which prune it differently, so AQE reuses only one
+    # exchange: pinned, the corpus aggregation runs ONCE (gated in
+    # tests/test_plans.py::test_cramers_v_census_only_cartesian)
+    cells = pin(cells)
     rt = cells.groupBy("seg").agg(F.sum("o").alias("rt"))
     ct = cells.groupBy("nat").agg(F.sum("o").alias("ct"))
     grid = (
@@ -2946,14 +2926,12 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_orderpriority").alias("grp")
     )
-    gcen = (
+    # the <=|groups|x|values| census feeds the value census, the rank join
+    # and the group rollup: pinned, measured paying (1.29x unpinned, sf0.1)
+    gcen = pin(
         li.join(od, li.l_orderkey == od.o_orderkey)
         .groupBy("grp", "q")
         .agg(F.count(F.lit(1)).alias("cg"))
-        # the <=|groups|x|values| census feeds the value census, the
-        # rank join, and the group rollup: pin it so the corpus join
-        # executes once
-        .localCheckpoint(eager=False)
     )
     vcen = gcen.groupBy("q").agg(F.sum("cg").alias("c"))
     wv = Window.orderBy("q").rowsBetween(Window.unboundedPreceding, -1)

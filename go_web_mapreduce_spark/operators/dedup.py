@@ -41,6 +41,7 @@ from go_web_mapreduce_spark.functions.text import (
     tokens,
 )
 from go_web_mapreduce_spark.registry import query
+from go_web_mapreduce_spark.sources.sinks import pin
 from go_web_mapreduce_spark.sources.tables import fan_out, load_table
 
 # MinHash-LSH configuration (shared by the Spark pipeline and the oracle)
@@ -320,12 +321,6 @@ def _cooccurrence_scored(
         .filter(F.size("docs") <= max_df)
         .select(F.sort_array("docs").alias("docs"))
     )
-    # posting feeds both the sizes branch and the pair branch. persist() was
-    # measured WORSE (columnar cache encode/decode of array<bigint> costs
-    # more than recompute); localCheckpoint stores deserialized partitions
-    # and measured faster than either. At durable-cluster scale, checkpoint
-    # postings to parquet instead (executor-local blocks don't survive loss).
-    posting = posting.localCheckpoint(eager=False)
     sizes = (
         posting.select(F.explode("docs").alias(id_col))
         .groupBy(id_col)
@@ -413,7 +408,6 @@ def jaccard_pairs_prefix(
             F.size("fs").alias("sz"),
             F.slice(F.col("fs.s"), F.lit(1), plen).alias("pre"),
         )
-        .localCheckpoint(eager=False)
     )
     # candidate generation is a streaming self-equi-join on the prefix
     # postings (round 6: the packed collect_list + in-row C(n,2) flatten
@@ -707,7 +701,7 @@ def connected_components(
 
     Distribution shape: each round is one equi-join (labels onto edge
     endpoints) + one min-aggregation — all hash-partitioned on vertex id, no
-    driver-side graph. ``localCheckpoint`` per round truncates the lineage
+    driver-side graph. A ``pin`` per round truncates the lineage
     (an iterative plan otherwise grows by one join per round and replans
     from scratch). Convergence detection: sum(label) strictly decreases
     while anything changes, so one cheap scalar action per round decides
@@ -730,17 +724,15 @@ def connected_components(
     # produced it; the fixpoint loop runs on few partitions so each round is
     # a handful of tasks, not 32 near-empty ones
     with scoped_shuffle_partitions(spark, 8):
-        und = (
+        und = pin(
             edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
             .union(edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
             .distinct()
-            .localCheckpoint(eager=False)
         )
-        labels = (
+        labels = pin(
             und.select(F.col("src").alias("id"))
             .distinct()
             .withColumn("lbl", F.col("id"))
-            .localCheckpoint(eager=False)
         )
         prev_sum = labels.agg(F.sum("lbl")).first()[0]
         converged = False
@@ -750,7 +742,7 @@ def connected_components(
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min("lbl").alias("nlbl"))
             )
-            labels = (
+            labels = pin(
                 labels.join(msgs, "id", "left")
                 .select(
                     "id",
@@ -758,7 +750,6 @@ def connected_components(
                         "lbl"
                     ),
                 )
-                .localCheckpoint(eager=False)
             )
             s = labels.agg(F.sum("lbl")).first()[0]
             if s == prev_sum:
@@ -808,18 +799,16 @@ def connected_components_star(
 
     spark = edges.sparkSession
     with scoped_shuffle_partitions(spark, 8):
-        e = (
+        e = pin(
             edges.select(
                 F.col(a_col).alias("u"), F.col(b_col).alias("v")
             )
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=False)
         )
-        verts = (
+        verts = pin(
             e.select(F.explode(F.array("u", "v")).alias("id"))
             .distinct()
-            .localCheckpoint(eager=False)
         )
         prev_chk = None
         converged = e.limit(1).count() == 0  # no edges → nothing to contract
@@ -833,13 +822,12 @@ def connected_components_star(
                 .agg(F.min("v").alias("mv"))
                 .select("u", F.least("u", "mv").alias("m"))
             )
-            e = (
+            e = pin(
                 nb.filter(F.col("v") > F.col("u"))
                 .join(mn, "u")
                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
                 .filter(F.col("u") != F.col("v"))
                 .distinct()
-                .localCheckpoint(eager=False)
             )
             # small-star: key each edge by its larger endpoint, contract the
             # smaller side (and the key itself) onto m(u)
@@ -847,7 +835,7 @@ def connected_components_star(
                 F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
             )
             mn2 = nb2.groupBy("u").agg(F.min("v").alias("m"))
-            e = (
+            e = pin(
                 nb2.join(mn2, "u")
                 .select(
                     F.explode(F.array(F.col("v"), F.col("u"))).alias("n"),
@@ -856,7 +844,6 @@ def connected_components_star(
                 .filter(F.col("n") != F.col("m"))
                 .select(F.col("n").alias("u"), F.col("m").alias("v"))
                 .distinct()
-                .localCheckpoint(eager=False)
             )
             chk = tuple(
                 e.agg(
@@ -1168,9 +1155,7 @@ def verify_candidates_exact(
     "exact score emitted side by side (extension mandate: dedup)",
 )
 def q_dedup_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # shingled feeds the candidate pipeline AND both sides of the verify
-    # join — checkpoint once instead of three Arrow-kernel evaluations
-    shingled = _shingled_docs(spark, sf_dir).localCheckpoint(eager=False)
+    shingled = _shingled_docs(spark, sf_dir)
     cands = minhash_candidates(shingled).filter(
         F.col("n_matching") >= MIN_MATCHING
     )
@@ -1476,7 +1461,6 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sh = sh.localCheckpoint(eager=False)  # feeds sizes + pair expansion
     sizes = sh.groupBy("source").agg(F.count(F.lit(1)).alias("n_grams"))
     # per-gram sorted source set; ordered pairs expand inside the row
     # (two-arg transform gives (element, index); slice is 1-based)
@@ -1775,8 +1759,8 @@ def q_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         # survivors. Pinning the candidate set keeps the DP where the
         # plan means it: once per banded candidate, after every cheap
         # filter. The pinned table is candidate-sized, never corpus-sized.
-        .localCheckpoint(eager=False)
     )
+    cand = pin(cand)
     # thresholded DP: the keep predicate floor((m-d)·10⁶/m) >= 9·10⁵ is
     # exactly d <= m DIV 10 (integer d), so running Spark's banded
     # early-exit levenshtein at that threshold returns the true distance
@@ -1891,8 +1875,8 @@ def q_dedup_edit_distance_snm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.greatest("la", "lb") > 0)
         # same load-bearing barrier as the exact variant: keep the DP out
         # of the join condition
-        .localCheckpoint(eager=False)
     )
+    cand = pin(cand)
     scored = cand.select(
         F.least("ida", "idb").alias("doc_a"),
         F.greatest("ida", "idb").alias("doc_b"),

@@ -41,6 +41,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.registry import query
+from go_web_mapreduce_spark.sources.sinks import pin
 from go_web_mapreduce_spark.sources.tables import load_table, local_frame
 
 SORT_PARTITIONS = 32  # range-shuffle width; at 100 TB size so each ≲ executor memory
@@ -177,22 +178,20 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     """Directed weighted edges between parts that share an order: weight =
     number of distinct orders the pair co-occurs in. Self-join on
     l_orderkey — bounded fan-out (TPC-H orders hold ≤ 7 lines), so the
-    pair blow-up is a small constant factor, never corpus². The dedup and
-    the weight count fuse into ONE ``count_distinct`` aggregate (partial
-    map-side dedup) instead of a distinct + groupBy pair of shuffles.
+    pair blow-up is a small constant factor, never corpus². The baskets
+    ``(l_orderkey, l_partkey)`` are deduplicated once before the join (a
+    part repeated within one order still contributes that order once), so
+    the weight is a plain count.
 
-    The graph queries' edge derivation (all but ``q_item_cf``, which
-    counts over its distinct baskets); each reads it through one view: ``select("src", "dst")`` for the directed pairs (the pruned
-    aggregate is a plain distinct), ``where(src < dst)`` for the
-    undirected pairs (the edge list is symmetric), and ``w`` cast to
-    bigint for the exact co-purchase counts."""
-    a = lineitem.select("l_orderkey", F.col("l_partkey").alias("src"))
-    b = lineitem.select("l_orderkey", F.col("l_partkey").alias("dst"))
+    The graph queries' edge derivation; each reads it through one view:
+    ``select("src", "dst")`` for the directed pairs, ``where(src < dst)``
+    for the undirected pairs (the edge list is symmetric), and ``w`` cast
+    to bigint for the exact co-purchase counts."""
+    baskets = lineitem.select("l_orderkey", "l_partkey").distinct()
+    a = baskets.select("l_orderkey", F.col("l_partkey").alias("src"))
+    b = baskets.select("l_orderkey", F.col("l_partkey").alias("dst"))
     pairs = a.join(b, "l_orderkey").where(F.col("src") != F.col("dst"))
-    return pairs.groupBy("src", "dst").agg(
-        # a part repeated within one order still contributes that order once
-        F.count_distinct("l_orderkey").cast("double").alias("w")
-    )
+    return pairs.groupBy("src", "dst").agg(F.count(F.lit(1)).cast("double").alias("w"))
 
 
 def _counted_edges(lineitem: DataFrame) -> DataFrame:
@@ -213,8 +212,8 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = PR_ITERS,
 
     Each iteration: join ranks to out-normalized edges (shuffle on src),
     then groupBy(dst) (shuffle on dst) — rank state stays distributed,
-    O(|nodes|). ``frac`` is static across iterations, so it is lazily
-    ``localCheckpoint``-ed: without it every iteration re-evaluates the
+    O(|nodes|). ``frac`` is static across iterations, so it is pinned
+    (``sources.sinks.pin``): without it every iteration re-evaluates the
     whole edge-derivation subtree (the co-purchase self-join + two
     shuffles), tripling the plan — measured 14.6 s → ~5 s at sf0.1. At
     durable-cluster scale checkpoint to parquet instead (executor-local
@@ -229,13 +228,12 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = PR_ITERS,
     ranks are bit-identical — no output rounding anywhere.
     """
     wout = edges.groupBy("src").agg(F.sum("w").alias("wout"))
-    frac = (
+    frac = pin(
         edges.join(wout, "src")
         .select("src", "dst", (F.col("w") / F.col("wout")).alias("frac"))
-        .localCheckpoint(eager=False)
     )
     # nodes joins into every round too — pin it once for the same reason
-    nodes = nodes.localCheckpoint(eager=False)
+    nodes = pin(nodes)
     ranks = nodes.select("node", F.lit(1.0).alias("r"))
     for _ in range(iters):
         contrib = (
@@ -406,13 +404,9 @@ def triangle_stats(und: DataFrame) -> DataFrame:
     known triangle counts.
 
     ``und`` and ``oriented`` feed several of the final one-row aggregates,
-    so both are lazily ``localCheckpoint``-ed (the pagerank discipline):
-    without it each aggregate re-derives the edge list — the co-occurrence
-    self-join plus a distinct — once per count (measured at sf0.1:
-    8.5 s -> 7.6 s on a cold session, 1.6 s warm — the remaining cold
-    cost is codegen, not re-derivation). On a durable cluster checkpoint
-    to parquet instead."""
-    und = und.localCheckpoint(eager=False)
+    so both are pinned: unpinned, each aggregate re-derives the oriented
+    edge list (measured 1.79x slower at sf0.1)."""
+    und = pin(und)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -428,9 +422,9 @@ def triangle_stats(und: DataFrame) -> DataFrame:
             (F.col("dv") * shift + F.col("v")).alias("kv"),
         )
     )
-    oriented = keyed.select(
+    oriented = pin(keyed.select(
         F.least("ku", "kv").alias("src"), F.greatest("ku", "kv").alias("dst")
-    ).localCheckpoint(eager=False)
+    ))
     e1 = oriented.select(F.col("src"), F.col("dst").alias("a"))
     e2 = oriented.select(F.col("src"), F.col("dst").alias("b"))
     wedges = e1.join(e2, "src").where(F.col("a") < F.col("b")).select("a", "b")
@@ -516,7 +510,7 @@ def _lpa_oracle() -> str:
     "the hash check has no float surface at all. Per iteration: one "
     "shuffle on src (labels join) + one on (node, label) votes — state "
     "is O(|nodes|), the edge fan-out is bounded by TPC-H's <=7 lines per "
-    "order, and the static edge table is localCheckpoint-pinned exactly "
+    "order, and the static edge table is pinned exactly "
     "like q_pagerank",
 )
 def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -524,8 +518,8 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer weights on purpose (vs copurchase_edges' doubles): LPA's only
     # arithmetic is this sum and its argmax ordering — keeping it in BIGINT
     # makes every iteration exactly order-independent with no decimal cast
-    edges = _counted_edges(li).localCheckpoint(eager=False)
-    nodes = _nodes(li).localCheckpoint(eager=False)
+    edges = pin(_counted_edges(li))
+    nodes = pin(_nodes(li))
     labels = nodes.select("node", F.col("node").alias("lab"))
     for _ in range(LPA_ITERS):
         votes = (
@@ -630,13 +624,13 @@ def _hits_oracle() -> str:
 )
 def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _year_lines(spark, sf_dir)
-    nodes = _nodes(li).localCheckpoint(eager=False)
-    edges = copurchase_edges(li).localCheckpoint(eager=False)
+    nodes = pin(_nodes(li))
+    edges = pin(copurchase_edges(li))
 
     def half_step(scores: DataFrame, col: str, key: str, other: str) -> DataFrame:
         """One mutual-reinforcement half-step: new[key-side node] =
         max-normalized Σ w · scores[other-side node]."""
-        raw = (
+        raw = pin(
             nodes.join(edges, nodes.node == edges[key], "left")
             .join(
                 scores.select(F.col("node").alias("_sn"), F.col(col).alias("_sv")),
@@ -656,7 +650,6 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit(0.0),
                 ).alias("v")
             )
-            .localCheckpoint(eager=False)  # referenced twice (max + ratio)
         )
         mx = raw.agg(F.max("v").alias("m"))
         # m == 0 (window has nodes but zero co-purchase edges) would yield
@@ -748,13 +741,12 @@ def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     = local clustering; this = missing-edge scoring). Reference scope: the
     reference's graph surface is whatever user JS computed over k/v pairs
     (views.go:53-59); this is the extension-mandate shape for it."""
-    und = (
+    # referenced three times (adjacency both ways + the anti-join):
+    # pinned, measured paying (1.26x unpinned, sf0.1)
+    und = pin(
         copurchase_edges(_year_lines(spark, sf_dir))
         .where(F.col("src") < F.col("dst"))
         .select(F.col("src").alias("pa"), F.col("dst").alias("pb"))
-        # referenced three times (adjacency both ways + the anti-join) —
-        # pin it so the lineitem self-join runs once
-        .localCheckpoint(eager=False)
     )
     adj = und.select(F.col("pa").alias("node"), F.col("pb").alias("nb")).unionAll(
         und.select(F.col("pb").alias("node"), F.col("pa").alias("nb"))
@@ -851,21 +843,12 @@ def q_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     this ranks existing co-purchase strength). Extension mandate — the
     reference's data plane computes whatever user JS maps/reduces emit
     (views.go:53-59); this is the canonical basket workload for it."""
-    baskets = _year_lines(spark, sf_dir).distinct().localCheckpoint(eager=False)
-    deg = baskets.groupBy(F.col("l_partkey").alias("item")).agg(
+    li = _year_lines(spark, sf_dir)
+    deg = li.distinct().groupBy(F.col("l_partkey").alias("item")).agg(
         F.count(F.lit(1)).alias("d")
     )
-    # the co-purchase count without copurchase_edges: over the already
-    # distinct baskets count(*) is the count, while count_distinct would
-    # add an exchange behind the broadcast self-join (+11% to +27% at
-    # sf0.1, measured on a 4-core host)
-    a = baskets.select("l_orderkey", F.col("l_partkey").alias("item"))
-    b = baskets.select("l_orderkey", F.col("l_partkey").alias("rec"))
-    co = (
-        a.join(b, "l_orderkey")
-        .where(F.col("item") != F.col("rec"))
-        .groupBy("item", "rec")
-        .agg(F.count(F.lit(1)).alias("w"))
+    co = _counted_edges(li).select(
+        F.col("src").alias("item"), F.col("dst").alias("rec"), "w"
     )
     da = deg.select(F.col("item"), F.col("d").alias("da"))
     db = deg.select(F.col("item").alias("rec"), F.col("d").alias("db"))
@@ -940,7 +923,7 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     set' shape: per hop one join (frontier ⋈ edges, shuffle on src) + one
     anti-join against the visited set (shuffle on node) — state is
     O(reached nodes), never edges². The static edge table and each new
-    frontier are localCheckpoint-pinned (same lineage discipline as
+    frontier are pinned (same lineage discipline as
     q_pagerank/q_lpa_communities: without it hop h re-evaluates hops
     1..h-1, turning a linear loop quadratic). Depth is a fixed constant so
     the plan, like the oracle's recursion bound, is finite by
@@ -948,12 +931,11 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     visited set as the vertex state, and the bounded-depth variant is the
     one that matters in practice (k-hop neighborhoods for feature
     extraction, blast-radius queries)."""
-    edges = (
+    edges = pin(
         copurchase_edges(_year_lines(spark, sf_dir))
         .select("src", "dst")
-        .localCheckpoint(eager=False)
     )
-    seed = edges.agg(F.min("src").alias("node")).localCheckpoint(eager=False)
+    seed = pin(edges.agg(F.min("src").alias("node")))
     visited = seed.withColumn("hops", F.lit(0))
     frontier = seed
     for h in range(1, BFS_HOPS + 1):
@@ -962,10 +944,9 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("dst").alias("node"))
             .distinct()
         )
-        new = (
+        new = pin(
             nxt.join(visited.select("node"), "node", "left_anti")
             .withColumn("hops", F.lit(h))
-            .localCheckpoint(eager=False)
         )
         visited = visited.union(new)
         frontier = new.select("node")
@@ -1029,36 +1010,33 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     one min-aggregate on dst — after k rounds the table holds the exact
     minimum over all ≤k-edge paths, which is what the bounded oracle
     enumerates. State stays O(reached nodes); the edge table and each
-    round's distances are localCheckpoint-pinned (q_pagerank lineage
+    round's distances are pinned (q_pagerank lineage
     discipline — without it round k re-derives rounds 1..k-1). Integer
     lengths make every comparison exact: no float path-sum can tie-break
     differently across engines. At 100 TB this is the standard
     Pregel/GraphFrames SSSP shape; the hop bound is the practical form
     (k-hop influence radius) and the convergence-loop variant just runs
     the same round until a round changes nothing."""
-    edges = (
+    edges = pin(
         _counted_edges(_year_lines(spark, sf_dir))
         .select(
             "src", "dst",
             F.expr(f"CAST({SSSP_SCALE} DIV w AS BIGINT)").alias("len"),
         )
-        .localCheckpoint(eager=False)
     )
-    dist = (
+    dist = pin(
         edges.agg(F.min("src").alias("node"))
         .withColumn("d", F.lit(0).cast("long"))
-        .localCheckpoint(eager=False)
     )
     for _ in range(SSSP_HOPS):
         relaxed = (
             edges.join(dist, edges.src == dist.node)
             .select(F.col("dst").alias("node"), (F.col("d") + F.col("len")).alias("d"))
         )
-        dist = (
+        dist = pin(
             dist.unionAll(relaxed)
             .groupBy("node")
             .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=False)
         )
     return (
         dist.orderBy("d", "node")
@@ -1133,7 +1111,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One round = two node-keyed hash joins (edge endpoints against the
     alive set) + one groupBy(src) count — O(|E|) work per round with no
     corpus-scaled single point, the Pregel peeling shape. alive sets and
-    the edge list are localCheckpoint-pinned so round k does not re-derive
+    the edge list are pinned so round k does not re-derive
     rounds 1..k-1 (q_pagerank lineage discipline). The full decomposition
     runs this exact round to a fixpoint (or uses the O(log n) distributed
     peeling of Esfandiari 2018); the bounded form is the deterministic
@@ -1143,15 +1121,13 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     presentation names 'graph traversal' as a target workload
     (presentation.pptx); this is its density-screen sibling on the same
     co-purchase graph as q_pagerank/q_triangle_count."""
-    edges = (
+    edges = pin(
         copurchase_edges(_year_lines(spark, sf_dir))
         .select("src", "dst")
-        .localCheckpoint(eager=False)
     )
-    alive = (
+    alive = pin(
         edges.select(F.col("src").alias("node"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     out = None
     for i in range(1, KCORE_ROUNDS + 1):
@@ -1161,9 +1137,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("src")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        survivors = deg.where(F.col("d") >= KCORE_K).localCheckpoint(
-            eager=False
-        )
+        survivors = pin(deg.where(F.col("d") >= KCORE_K))
         prev_n = alive.agg(F.count(F.lit(1)).alias("pn"))
         stats = survivors.agg(
             F.count(F.lit(1)).alias("n_remaining"),
@@ -1178,9 +1152,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("max_deg").cast("long").alias("max_deg"),
         )
         out = row if out is None else out.unionByName(row)
-        alive = survivors.select(F.col("src").alias("node")).localCheckpoint(
-            eager=False
-        )
+        alive = pin(survivors.select(F.col("src").alias("node")))
     return out
 
 
@@ -1248,7 +1220,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf100 (2m ≈ 4.5×10⁸ there) — with the single double division last."""
     edges = _counted_edges(_year_lines(spark, sf_dir))
     brand = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    lab = (
+    lab = pin(
         edges.join(
             F.broadcast(brand.select(F.col("p_partkey").alias("src"),
                                      F.col("p_brand").alias("cs"))),
@@ -1259,7 +1231,6 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      F.col("p_brand").alias("cd"))),
             "dst",
         )
-        .localCheckpoint(eager=False)  # feeds both 2m and the census
     )
     m2 = lab.agg(F.sum("w").alias("m2")).first()["m2"]
     if m2 is None:
@@ -1340,12 +1311,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (degrees ≤ nodes, Σx·y ≤ E·d²max ≪ 2⁶³ through sf100); only the
     final n·Σxy − Σx·Σy combination needs doubles, done identically in
     both engines."""
-    # pinned: feeds the degree census and the endpoint annotation
-    edges = (
-        copurchase_edges(_year_lines(spark, sf_dir))
-        .select("src", "dst")
-        .localCheckpoint(eager=False)
-    )
+    edges = copurchase_edges(_year_lines(spark, sf_dir)).select("src", "dst")
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )

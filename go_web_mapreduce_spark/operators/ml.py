@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from go_web_mapreduce_spark.functions import linalg_oracle
 from go_web_mapreduce_spark.functions.numeric import dsum
 from go_web_mapreduce_spark.registry import query
+from go_web_mapreduce_spark.sources.sinks import pin
 from go_web_mapreduce_spark.sources.tables import fan_out, load_table, local_frame
 
 ML_DIM = 64  # embeddings table dimension
@@ -95,7 +96,7 @@ def logreg_fit(
     # the source read + label projection (measured 6.0 s → 2.6 s at sf0.1,
     # bit-identical weights). At durable-cluster scale persist/checkpoint
     # to storage instead — the docstring's one-scan-per-iteration shape.
-    df = df.localCheckpoint(eager=False)
+    df = pin(df)
     w = np.zeros(dim + 1)
     for _ in range(iters):
         bw = w.copy()
@@ -826,8 +827,7 @@ def q_embedding_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
             - (F.col("s") / F.col("n")) * (F.col("s") / F.col("n"))
         ).alias("var_c"),
         "n",
-    ).localCheckpoint(eager=False)  # labels×dim rows, three consumers —
-    # unpinned, the posexplode + decimal-moment aggregation replays per leg
+    )
     disp = mu.groupBy("label").agg(
         F.max("n").alias("n"), dsum("var_c", 12).alias("disp")
     )
@@ -1179,10 +1179,7 @@ def q_conformal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coverage guarantee with it — measured 0.40 vs the 0.9 target before
     # this fix; the guarantee holds after (tests).
     split = emb.select("vec_id", "label", "embedding", part.alias("part"))
-    centarr = _centroid_arrays(
-        split.filter(F.col("part") <= 1)
-    ).localCheckpoint(eager=False)  # ≤|labels| rows; broadcast twice (the
-    # calibration and evaluation legs each re-reference scored's subtree)
+    centarr = _centroid_arrays(split.filter(F.col("part") <= 1))
     scored = split.join(F.broadcast(centarr), "label").select(
         "vec_id", "label", "part",
         F.aggregate(
@@ -1298,12 +1295,10 @@ def q_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup/tokenizer families use (functions/text.py::tokens). Extension
     mandate: a corpus pipeline's lang-ID model trained on the corpus
     itself (q_lang_id is the heuristic scorer; this is the learned one)."""
-    from go_web_mapreduce_spark.functions.text import tokens
+    from go_web_mapreduce_spark.operators.relational import tokenized
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang", F.explode(tokens("text")).alias("w")
-    )
+    toks = tokenized(docs, "doc_id", "lang").withColumnRenamed("word", "w")
     is_test = F.col("doc_id") % NB_TEST_MOD == 0
     train = toks.where(~is_test)
     cwc = train.groupBy(F.col("lang").alias("c"), "w").agg(
@@ -1690,7 +1685,6 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("segment", "part")
         .agg(F.sum("q1").alias("qty"), F.sum("rc1").alias("rev_cents"))
-        .localCheckpoint(eager=False)  # feeds the rank, the count, n_parts
     )
     from go_web_mapreduce_spark.operators.analytics import _ntile_from_pos
     from go_web_mapreduce_spark.operators.graph import range_prefix
@@ -1718,7 +1712,7 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gains = graded.select(
         "segment", "part", "qty", F.expr(_NDCG_GAIN_CASE).alias("gain")
-    ).localCheckpoint(eager=False)  # feeds both rank legs — one derivation
+    )
 
     def _top(order_cols) -> DataFrame:
         return (
@@ -1841,11 +1835,7 @@ def q_classification_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("price_cents"),
     )
     scored = orders.select("y", F.expr(_CLSRPT_PRED_SQL).alias("p"))
-    conf = (
-        scored.groupBy("y", "p")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)  # both marginals read the census
-    )
+    conf = scored.groupBy("y", "p").agg(F.count(F.lit(1)).alias("n"))
     by_true = conf.groupBy(F.col("y").alias("cls")).agg(
         F.sum("n").alias("support"),
         F.sum(F.when(F.col("y") == F.col("p"), F.col("n")).otherwise(0)).alias(
@@ -2466,18 +2456,13 @@ def q_huber_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = fan_out(li).join(F.broadcast(pt), li.l_partkey == pt.p_partkey).select(
         F.col("p_brand").alias("brand"), "cents"
     )
-    # the ≤|brands| estimate tables are each consumed by LATER stages: left
-    # unpinned, Catalyst inlines the producing subtree at every reference —
-    # the physical plan held SIX lineitem scans (m0's subtree replayed under
-    # m1's broadcast, under m2's chain, and in the final join) instead of
-    # the documented three. Pinning the TINY per-brand tables (25 rows —
-    # not the corpus; the q_itemsets3 OOM lesson concerns corpus-sized
-    # pins) makes each IRLS stage execute once: exactly one column-pruned
-    # corpus scan per stage at any scale (guide §2.4: remove recomputation).
+    # the ≤|brands| estimate tables are each consumed by LATER stages; each
+    # ends in its groupBy exchange, which AQE reuses at every reference, so
+    # each IRLS stage executes once: one column-pruned corpus scan per stage
     m0 = obs.groupBy("brand").agg(
         F.count(F.lit(1)).alias("n"),
         (F.sum("cents").cast("double") / F.count(F.lit(1))).alias("mu0"),
-    ).localCheckpoint(eager=False)
+    )
 
     def irls(prev: DataFrame, mu_col: str, out_col: str) -> DataFrame:
         j = obs.join(F.broadcast(prev.select("brand", mu_col)), "brand")
@@ -2494,11 +2479,9 @@ def q_huber_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias(out_col)
         )
 
-    m1 = irls(m0, "mu0", "mu1").localCheckpoint(eager=False)
+    m1 = irls(m0, "mu0", "mu1")
     m2 = irls(m1, "mu1", "mu2")
-    # pinned RDDs carry no size statistics, so hint the ≤|brands| estimate
-    # tables into the final join explicitly (the planner would otherwise
-    # sort-merge three 25-row tables)
+    # hint the ≤|brands| estimate tables into the final join explicitly
     return (
         m2.join(F.broadcast(m0), "brand")
         .join(F.broadcast(m1), "brand")

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.functions.numeric import dsum
 from go_web_mapreduce_spark.registry import query
+from go_web_mapreduce_spark.sources.sinks import pin
 from go_web_mapreduce_spark.sources.tables import fan_out, load_table
 
 FEATURE_DIM = 8
@@ -1342,12 +1343,11 @@ def q_image_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the single decode pass; every downstream aggregate (census, spread)
     # then works on the distinct-hash-sized table, so the Python decode
     # kernel runs exactly once per image (plan-gated in test_plans)
-    hs = (
+    hs = pin(
         hashed.groupBy("h", "source")
         .agg(F.count(F.lit(1)).alias("c"))
         # referenced twice (census + spread): pin the distinct-hash-sized
         # table so the decode lineage runs once
-        .localCheckpoint(eager=False)
     )
     spread = hs.groupBy("h").agg(F.count(F.lit(1)).alias("ns"))
     return (
@@ -1454,13 +1454,9 @@ def q_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = media.select("doc_id", "source", "mime", "payload").mapInPandas(
         run, "doc_id bigint, source string, h string"
     )
-    hs = (
-        hashed.groupBy("h", "source")
-        .agg(F.count(F.lit(1)).alias("c"))
-        # referenced twice (census + spread): pin the fingerprint-sized
-        # table so the decode lineage runs once
-        .localCheckpoint(eager=False)
-    )
+    # referenced twice (census + spread): pin the fingerprint-sized table so
+    # the decode lineage runs once
+    hs = pin(hashed.groupBy("h", "source").agg(F.count(F.lit(1)).alias("c")))
     spread = hs.groupBy("h").agg(F.count(F.lit(1)).alias("ns"))
     return (
         hs.join(spread, "h")

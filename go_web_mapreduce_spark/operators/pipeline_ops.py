@@ -35,7 +35,7 @@ from go_web_mapreduce_spark.functions.numeric import dsum
 from go_web_mapreduce_spark.functions.text import tokens
 from go_web_mapreduce_spark.operators.relational import token_counts
 from go_web_mapreduce_spark.registry import query
-from go_web_mapreduce_spark.sources.sinks import SCRATCH_TABLES, scratch_dir
+from go_web_mapreduce_spark.sources.sinks import pin, scratch_dir, scratch_table
 from go_web_mapreduce_spark.sources.tables import fan_out, load_table
 
 # ---------------------------------------------------------------------------
@@ -865,7 +865,7 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    # nonce-keyed scratch path (see sinks.scratch_dir): race-free, exit-cleaned
+    # nonce-keyed scratch path (see sinks.scratch_dir): race-free, scope-freed
     path = scratch_dir("jsonl")
     docs.write.mode("overwrite").json(path)
     back = (
@@ -1077,10 +1077,9 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize+explode+md5 of every gram ran once per consumer (measured
     # 3x, 7.5 s -> 2.9 s at sf0.1). The pinned table is (doc, bucket)-
     # sized, far below the exploded gram stream.
-    dcl = (
+    dcl = pin(
         grams.groupBy("doc_id", "lang", "b")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
     )
     bs = dcl.groupBy("b").agg(
         F.sum(
@@ -1346,11 +1345,12 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     wt = F.sqrt(F.sqrt(F.col("n").cast("double") * F.col("n") * F.col("n")))
     wt_dec = wt.cast("decimal(18,6)")
     w = W.orderBy("word").rowsBetween(W.unboundedPreceding, W.currentRow)
-    vocab = cnt.select(
+    # read by the build-time scalar below and by the query: pinned
+    vocab = pin(cnt.select(
         "word",
         (F.sum(wt_dec).over(w) - wt_dec).cast("double").alias("cp"),
         F.sum(wt_dec).over(w).cast("double").alias("cm"),
-    ).localCheckpoint(eager=False)
+    ))
     tot_w, n_vocab = vocab.agg(F.max("cm"), F.count(F.lit(1))).first()
     bw = F.lit(tot_w) / F.lit(n_vocab)
     seg = vocab.select(
@@ -1461,11 +1461,10 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from go_web_mapreduce_spark.functions.numeric import dsum
 
-    st = token_counts(
-        load_table(spark, sf_dir, "documents"), "source"
-    ).localCheckpoint(eager=False)  # vocabulary-bounded census, FOUR
-    # consumers (stot, ct, the total scalar, terms) — unpinned, the
-    # corpus tokenize+explode replays once per reference
+    # vocabulary-bounded census, FOUR consumers (stot, ct, the total
+    # scalar, terms); the scalar is a build-time action, so unpinned the
+    # corpus tokenize+explode runs again in the query itself
+    st = pin(token_counts(load_table(spark, sf_dir, "documents"), "source"))
     stot = st.groupBy("source").agg(F.sum("n").alias("ts"))
     ct = st.groupBy("word").agg(F.sum("n").alias("g"))
     total = st.agg(F.sum("n")).first()[0]
@@ -1536,12 +1535,10 @@ XENT_ALPHA = 1  # Laplace smoothing count for the corpus unigram LM
 def q_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_web_mapreduce_spark.functions.numeric import dsum
 
-    st = token_counts(
-        load_table(spark, sf_dir, "documents"), "source"
-    ).localCheckpoint(eager=False)  # vocabulary-bounded, feeds ct + terms
-    ct = st.groupBy("word").agg(F.sum("n").alias("g")).localCheckpoint(
-        eager=False  # vocabulary-bounded, feeds the totals scalar + the join
-    )
+    # both vocabulary-bounded; ct feeds the build-time totals scalar and the
+    # join, st feeds ct and the terms: pinned
+    st = pin(token_counts(load_table(spark, sf_dir, "documents"), "source"))
+    ct = pin(st.groupBy("word").agg(F.sum("n").alias("g")))
     t_total, vocab = ct.agg(F.sum("g"), F.count(F.lit(1))).first()
     # H = ln(T + aV) - sum(c ln(g + a))/n : the smoothing denominator folds
     # into one constant, so the per-term join carries only ln(g + a)
@@ -1743,7 +1740,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    # nonce-keyed scratch path (see sinks.scratch_dir): race-free, exit-cleaned
+    # nonce-keyed scratch path (see sinks.scratch_dir): race-free, scope-freed
     path = scratch_dir("orc")
     docs.write.mode("overwrite").orc(path)
     back = spark.read.schema(
@@ -1800,7 +1797,7 @@ def q_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    # nonce-keyed scratch path (see sinks.scratch_dir): race-free, exit-cleaned
+    # nonce-keyed scratch path (see sinks.scratch_dir): race-free, scope-freed
     path = scratch_dir("part")
     docs.write.mode("overwrite").partitionBy("lang").parquet(path)
     back = spark.read.schema(
@@ -1853,15 +1850,11 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 8 used at test scale; the write-side repartition(8, key) puts
     each bucket in exactly ONE file per side, which also removes the
     per-bucket merge-sort fan-in on read."""
-    import os
-
     # nonce-keyed path AND table names (see sinks.scratch_dir): two concurrent
-    # invocations can never race on the same catalog table or directory;
-    # the tables are registered for best-effort exit-time DROP
+    # invocations can never race on the same catalog table or directory
     base = scratch_dir("bucket")
-    key = os.path.basename(base).rsplit("_", 1)[-1]
-    tc, to = f"bkt_customer_{key}", f"bkt_orders_{key}"
-    SCRATCH_TABLES.extend([tc, to])
+    tc = scratch_table(spark, "bkt_customer")
+    to = scratch_table(spark, "bkt_orders")
     customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
@@ -2057,9 +2050,10 @@ def q_data_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.when(F.expr(pred), 1).otherwise(0)).alias(f"v{i}")
             )
         # 1-row pin, load-bearing: each check leg projects from this
-        # aggregate, and Catalyst does not dedupe repeated subplans — an
-        # unpinned `one` would re-scan the table once per expectation
-        one = df.agg(*aggs).localCheckpoint(eager=False)
+        # aggregate, and each leg prunes the aggregate to its own columns,
+        # so the legs share no exchange — unpinned, the table is re-scanned
+        # once per expectation
+        one = pin(df.agg(*aggs))
         for i, (col, check, _) in enumerate(checks):
             legs.append(
                 one.select(

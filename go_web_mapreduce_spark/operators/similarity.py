@@ -35,6 +35,7 @@ from go_web_mapreduce_spark.functions import ann_oracle, linalg_oracle
 from go_web_mapreduce_spark.functions.ann_config import cluster_count
 from go_web_mapreduce_spark.functions.vectors import cosine_similarity
 from go_web_mapreduce_spark.registry import query
+from go_web_mapreduce_spark.sources.sinks import pin
 from go_web_mapreduce_spark.sources.tables import load_table, local_frame
 
 TOP_K = 20
@@ -1513,7 +1514,7 @@ def ivfpq_build(
     # the full query at sf0.1); lazy-checkpoint the unit vectors because
     # KMeans fit iterations, the PQ training sample, and the encode scan
     # each re-execute this projection otherwise
-    unit = (
+    unit = pin(
         corpus.select(
             id_col, "embedding", l2_norm(F.col("embedding")).alias("__n")
         )
@@ -1526,7 +1527,6 @@ def ivfpq_build(
                 ),
             ).alias("embedding"),
         )
-        .localCheckpoint(eager=False)
     )
     assigned, centroids = ivf_assign(unit, num_centroids, id_col=id_col)
 
@@ -1539,7 +1539,7 @@ def ivfpq_build(
     )
     # checkpoint: pq_train's count + sample collect and pq_encode's scan
     # would each replay the KMeans transform + join + subtract otherwise
-    residuals = (
+    residuals = pin(
         assigned.join(cent_df, "cid")
         .select(
             id_col,
@@ -1548,7 +1548,6 @@ def ivfpq_build(
                 "res"
             ),
         )
-        .localCheckpoint(eager=False)
     )
     cb = pq_train(
         residuals.withColumnRenamed("res", "embedding"),
@@ -1919,11 +1918,10 @@ def q_cross_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matches bit-for-bit."""
     from go_web_mapreduce_spark.functions.text import tokens
 
-    fused = _rrf_fused(spark, sf_dir)
     # the 20-row candidate list feeds three consumers (doc features,
-    # vector features, the output spine): pin it so the two-leg
-    # retrieval pipeline runs ONCE (q_classification_report pattern)
-    fused = fused.localCheckpoint(eager=False)
+    # vector features, the output spine): pinned, so the two-leg retrieval
+    # pipeline runs once (1.56x unpinned, sf0.1)
+    fused = pin(_rrf_fused(spark, sf_dir))
     cand_ids = F.broadcast(fused.select("item_id"))
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2208,11 +2206,7 @@ def _mine_contrastive(kn: DataFrame) -> DataFrame:
     "knn_graph_ivf drops in unchanged as the 100 TB scale path",
 )
 def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # kn feeds BOTH the positive and the negative leg — pin it or the
-    # whole block-grid kNN build executes once per consumer
-    kn = knn_graph(load_table(spark, sf_dir, "embeddings"), k=CP_K).localCheckpoint(
-        eager=False
-    )
+    kn = knn_graph(load_table(spark, sf_dir, "embeddings"), k=CP_K)
     return _mine_contrastive(kn)
 
 
@@ -2256,10 +2250,7 @@ _CP_POSNEG_SQL = f"""
     "SCALE.md prices that)",
 )
 def q_contrastive_pairs_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pinned for the same two-consumer reason as q_contrastive_pairs
-    kn = knn_graph_ivf(
-        load_table(spark, sf_dir, "embeddings"), k=CP_K
-    ).localCheckpoint(eager=False)
+    kn = knn_graph_ivf(load_table(spark, sf_dir, "embeddings"), k=CP_K)
     return _mine_contrastive(kn)
 
 
@@ -2288,7 +2279,7 @@ def q_contrastive_pairs_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFram
         load_table(spark, sf_dir, "embeddings"),
         k=CP_K,
         num_centroids=KNN_IVF_SCALED_CENTROIDS,
-    ).localCheckpoint(eager=False)
+    )
     return _mine_contrastive(kn)
 
 
@@ -2457,13 +2448,13 @@ def q_kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tournament sampling; the docstringed plan is already O(k·n) work
     with O(1) driver state per round."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = emb.select(
+    q = pin(emb.select(
         "vec_id",
         F.expr(
             f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * "
             f"{KCENTER_SCALE}) AS BIGINT))"
         ).alias("v"),
-    ).localCheckpoint(eager=False)
+    ))
 
     def d2_to(vec: list[int]) -> str:
         lits = "array(" + ", ".join(f"{x}L" for x in vec) + ")"

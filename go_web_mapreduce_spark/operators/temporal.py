@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.functions.numeric import dsum
 from go_web_mapreduce_spark.registry import query
+from go_web_mapreduce_spark.sources.sinks import pin
 from go_web_mapreduce_spark.sources.tables import load_table
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes, in microseconds
@@ -1061,13 +1062,13 @@ def q_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("x"))
     # ISO day-of-week (1=Mon..7=Sun): Spark weekday() is 0=Mon, DuckDB
     # isodow() is 1=Mon — aligned here (dayofweek() disagrees across engines)
-    dow = daily.select(
+    dow = pin(daily.select(
         "event_type", (F.weekday("day") + 1).alias("dw"), "x"
-    ).localCheckpoint(eager=False)  # types×days rows, three consumers
-    prof = dow.groupBy("event_type", "dw").agg(
+    ))  # types×days rows, three consumers
+    prof = pin(dow.groupBy("event_type", "dw").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
         (F.sum("x").cast("double") / F.count(F.lit(1))).alias("dow_mean"),
-    ).localCheckpoint(eager=False)  # types×7 rows, two consumers
+    ))  # types×7 rows, two consumers
     glob = dow.groupBy("event_type").agg(
         (F.sum("x").cast("double") / F.count(F.lit(1))).alias("g_mean"),
         (dsum(F.col("x").cast("double") * F.col("x"), 2) / F.count(F.lit(1))).alias("g_m2"),
@@ -1469,9 +1470,6 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.last(touch, ignorenulls=True).over(w).alias("lt"),
         )
         .where(F.col("event_type") == ATTR_CONV)
-        # conversion-sized pin: both model legs read it, the corpus-sized
-        # window runs once
-        .localCheckpoint(eager=False)
     )
     legs = []
     for model, col in (("first_touch", "ft"), ("last_touch", "lt")):
@@ -1564,7 +1562,7 @@ def q_sequence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     firsts = firsts.select(
         "user_id", "session_id", "event_type",
         F.col("m.us").alias("us"), F.col("m.eid").alias("eid"),
-    ).localCheckpoint(eager=False)  # read three times: total, occ, both join legs
+    )
     tot = sess.select("user_id", "session_id").distinct().agg(
         F.count(F.lit(1)).alias("s")
     )

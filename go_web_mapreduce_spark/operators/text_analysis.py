@@ -23,8 +23,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.functions.text import token_count, tokens, word_shingles
-from go_web_mapreduce_spark.operators.relational import token_counts
+from go_web_mapreduce_spark.operators.relational import token_counts, tokenized
 from go_web_mapreduce_spark.registry import query
+from go_web_mapreduce_spark.sources.sinks import pin
 from go_web_mapreduce_spark.sources.tables import fan_out, load_table, local_frame
 
 # tiny per-language stopword lists (public common words); scoring = number of
@@ -793,8 +794,8 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     (distinct words — ~10M rows at 100 TB, trivial for a cluster). Each
     round is two narrow stages (pair expand + hash-agg) plus a ONE-ROW
     driver collect (the argmax — BPE's sequential step by definition),
-    then a vectorized string `replace` rewrite. Per-round lazy
-    localCheckpoint truncates lineage exactly like the pagerank loop
+    then a vectorized string `replace` rewrite. A per-round pin
+    truncates lineage exactly like the pagerank loop
     (graph.py), so round k does not replay rounds 1..k-1.
 
     Symbols are \\x01-delimited inside one string, so the merge is a
@@ -829,7 +830,7 @@ def bpe_train(
     i.e. the trained tokenizer applied to the whole vocabulary.
 
     Checkpoint discipline for real vocabulary depth (32+ merges): every
-    round truncates lineage with a LAZY localCheckpoint (else round k
+    round truncates lineage with a pin (else round k
     replays rounds 1..k-1 — the pagerank discipline), and every
     ``checkpoint_every`` rounds a DURABLE reliable checkpoint
     (``DataFrame.checkpoint``) lands under ``checkpoint_dir`` so a long
@@ -840,12 +841,12 @@ def bpe_train(
     spark = freq.sparkSession
     if checkpoint_every and checkpoint_dir:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
-    vocab = freq.select(
+    vocab = pin(freq.select(
         F.regexp_replace("word", "(?s)(.)", f"{_BPE_SEP}$1{_BPE_SEP}").alias(
             "enc"
         ),
         "n",
-    ).localCheckpoint(eager=False)
+    ))
 
     merges: list[tuple[int, str, int]] = []
     for step in range(1, steps + 1):
@@ -883,7 +884,7 @@ def bpe_train(
         if checkpoint_every and checkpoint_dir and step % checkpoint_every == 0:
             vocab = vocab.checkpoint(eager=True)
         else:
-            vocab = vocab.localCheckpoint(eager=False)
+            vocab = pin(vocab)
 
     return merges, vocab
 
@@ -1123,7 +1124,8 @@ def q_chi2_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pres = (
-        docs.select("doc_id", "lang", F.explode(tokens("text")).alias("token"))
+        tokenized(docs, "doc_id", "lang")
+        .withColumnRenamed("word", "token")
         .distinct()
     )
     n_docs = docs.select("doc_id").distinct().count()
@@ -1392,10 +1394,9 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not dedupe repeated subplans — without the pin the corpus-sized
     # tokenize+explode+shuffle runs once per consumer (measured 4x, 6.9 s
     # -> 2.6 s at sf0.1). The pinned table is vocabulary-sized.
-    cnt = (
+    cnt = pin(
         bg.groupBy("bg")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
     )
     total = cnt.agg(F.sum("c")).first()[0]
     w1 = F.split(F.col("bg"), " ").getItem(0)
@@ -1810,12 +1811,11 @@ CTFIDF_TOPK = 5
 def q_ctfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    cls = (
+    # feeds three aggregations + the score join: pinned, measured paying
+    # (1.25x unpinned, sf0.1)
+    cls = pin(
         token_counts(load_table(spark, sf_dir, "documents"), "source")
         .withColumnsRenamed({"word": "token", "n": "tf"})
-        # feeds three aggregations + the score join — pin the
-        # (source, token) census so the corpus explode runs once
-        .localCheckpoint(eager=False)
     )
     ctot = cls.groupBy("source").agg(F.sum("tf").alias("tc"))
     wtot = cls.groupBy("token").agg(F.sum("tf").alias("fw"))
@@ -1919,10 +1919,9 @@ def q_skipgram_ppmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         branches = part if branches is None else branches.unionAll(part)
     # one vocabulary-sized count table feeding four consumers — pinned
     # (same measured 4x-re-shuffle rationale as q_pmi_collocations)
-    cnt = (
+    cnt = pin(
         branches.groupBy("pr")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
     )
     total = cnt.agg(F.sum("c")).first()[0]
     w1 = F.split(F.col("pr"), " ").getItem(0)
@@ -2232,7 +2231,7 @@ def q_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("tk") >= 2)
         .select(F.explode(word_shingles(F.col("tk"), 2)).alias("bg"))
     )
-    cnt = (
+    cnt = pin(
         bg.groupBy("bg")
         .agg(F.count("*").alias("c"))
         .select(
@@ -2246,7 +2245,6 @@ def q_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the corpus explode+aggregate runs ONCE. Vocabulary^2-bounded;
         # at extreme type counts swap for the scratch-parquet pin
         # (the q_itemsets3 pattern)
-        .localCheckpoint(eager=False)
     )
     pre = cnt.groupBy("w1").agg(
         F.sum("c").alias("cw1"), F.count(F.lit(1)).alias("n1fw")

@@ -14,7 +14,7 @@ every micro-batch the finite source offers processed, and ``stop`` always
 queries go through ``drain_to_memory``, which drops the sink's temp view
 before returning, so no run leaves a view in the session catalog; path
 sinks and their checkpoints live under ``sources.sinks.scratch_dir``, one
-fresh directory per call inside a single exit-removed root.
+fresh directory per call, freed with the enclosing ``released()`` scope.
 
 Scale notes: at production scale the source becomes Kafka/object-store
 listing with ``maxFilesPerTrigger``; the aggregation state is per

@@ -26,6 +26,16 @@ def query_plan(spark, sf_dir, name: str) -> str:
     return P.executed_plan(REGISTRY[name].fn(spark, sf_dir))
 
 
+def final_plan(spark, sf_dir, name: str) -> str:
+    """The final AQE plan of ``name`` once its own QueryExecution has
+    run: a subtree built once and read again shows as a ReusedExchange."""
+    qe = REGISTRY[name].fn(spark, sf_dir)._jdf.queryExecution()
+    qe.toRdd().count()
+    plan = qe.executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    return plan.split("== Initial Plan ==")[0]
+
+
 def test_filter_pushes_into_scan(spark, sf_dir):
     plan = query_plan(spark, sf_dir, "q_filter_project")
     assert "PushedFilters: [" in plan
@@ -208,12 +218,7 @@ def test_block_grid_packs_the_corpus_once(spark, sf_dir):
     """Both sides of the exact kernels' block-pair join read ONE packing
     of the embeddings: on the final AQE plan the corpus is scanned once
     and the second side's collect_list exchange is a ReusedExchange."""
-    df = REGISTRY["q_knn_graph"].fn(spark, sf_dir)
-    qe = df._jdf.queryExecution()
-    qe.toRdd().count()
-    plan = qe.executedPlan().toString()
-    assert "isFinalPlan=true" in plan
-    final = plan.split("== Initial Plan ==")[0]
+    final = final_plan(spark, sf_dir, "q_knn_graph")
     scans = [ln for ln in final.splitlines() if "FileScan parquet" in ln]
     assert len(scans) == 1 and "embedding:array<float>" in scans[0], scans
     assert final.count("ReusedExchange") == 1
@@ -534,21 +539,20 @@ def test_scene_cut_decodes_once_per_clip(spark, sf_dir):
 
 
 def test_classification_report_single_corpus_census(spark, sf_dir):
-    """The corpus is aggregated exactly once: the (y, p) confusion census
-    sits behind a localCheckpoint boundary that BOTH marginals read (two
-    ExistingRDD scans of the same checkpoint, zero orders scans in the
-    final plan), and the census subtree itself is a partial-aggregated
-    single scan."""
+    """The corpus is aggregated exactly once: BOTH marginals read the
+    (y, p) confusion census, which the final plan builds from one orders
+    scan and reads again as a ReusedExchange, and the census subtree
+    itself is a partial-aggregated single scan."""
     from pyspark.sql import functions as F
 
     from go_web_mapreduce_spark.operators.ml import _CLSRPT_PRED_SQL
     from go_web_mapreduce_spark.sources.tables import load_table
 
-    plan = query_plan(spark, sf_dir, "q_classification_report")
+    plan = final_plan(spark, sf_dir, "q_classification_report")
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
-    assert plan.count("orders.parquet") == 0  # behind the checkpoint
-    assert plan.count("Scan ExistingRDD") == 2  # census read twice, built once
+    assert plan.count("orders.parquet") == 1  # census built once...
+    assert plan.count("ReusedExchange") == 1  # ...and read twice
     census = (
         load_table(spark, sf_dir, "orders")
         .select(

@@ -22,12 +22,15 @@ import sys
 import time
 
 RUNNER = r"""
-import importlib.util, json, os, sys, time
+import contextlib, importlib.util, json, os, sys, time
 sys.path.insert(0, sys.argv[1])
 os.chdir(sys.argv[1])
 names = json.loads(sys.argv[2])
 from go_web_mapreduce_spark.queries import REGISTRY
 from go_web_mapreduce_spark.session import get_spark
+from go_web_mapreduce_spark.sources import sinks
+# a tree from before sinks.released() frees nothing per query
+released = getattr(sinks, "released", contextlib.nullcontext)
 spec = importlib.util.spec_from_file_location("ab_bench_warm", sys.argv[3])
 bench = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(bench)
@@ -36,10 +39,11 @@ sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 bench.warm_up(spark, sf_dir)
 out = {}
 for n in names:
-    t0 = time.time()
-    df = REGISTRY[n].fn(spark, sf_dir)
-    df.write.mode("overwrite").format("noop").save()
-    out[n] = round(time.time() - t0, 3)
+    with released():
+        t0 = time.time()
+        df = REGISTRY[n].fn(spark, sf_dir)
+        df.write.mode("overwrite").format("noop").save()
+        out[n] = round(time.time() - t0, 3)
 out["__spin__"] = bench._calibration_spin()
 print("ABRESULT " + json.dumps(out))
 """

@@ -36,6 +36,7 @@ sys.path.insert(0, ".")
 
 from go_web_mapreduce_spark.queries import REGISTRY  # noqa: E402
 from go_web_mapreduce_spark.session import get_spark  # noqa: E402
+from go_web_mapreduce_spark.sources.sinks import released  # noqa: E402
 from go_web_mapreduce_spark.sources.tables import TABLES  # noqa: E402
 
 
@@ -104,12 +105,14 @@ def main() -> int:
         report[name] = rec
         t0 = time.time()
         try:
-            sdf = spec.fn(spark, sf_dir)
-            scols = sdf.columns
-            # pandas path, like the driver: dtype mismatches (e.g. an int64
-            # column arriving as float64) must be visible locally — fetchall
-            # converts to python objects and hides that whole failure class
-            spdf = sdf.toPandas()
+            with released():
+                sdf = spec.fn(spark, sf_dir)
+                scols = sdf.columns
+                # pandas path, like the driver: dtype mismatches (e.g. an
+                # int64 column arriving as float64) must be visible locally —
+                # fetchall converts to python objects and hides that whole
+                # failure class
+                spdf = sdf.toPandas()
             srows = [tuple(r) for r in spdf.itertuples(index=False)]
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")

@@ -101,7 +101,7 @@ HEADLINERS = {
     "q_image_dedup_phash": "perceptual image dedup: one decode+hash mapInPandas, pinned (hash,source) census, source rollup",
     "q_profile_table": "table profiler: one column-pruned single-row aggregate per column, unioned; per-column DISTINCT is the only wide agg",
     "q_holt_forecast": "Holt forecast: one corpus agg to the (type,day) grid, fold + forecasts on the dimension-sized series",
-    "q_item_cf": "item-item CF: distinct baskets checkpointed, orderkey-keyed pair join (bounded fan-out), degree joins, per-item window top-k",
+    "q_item_cf": "item-item CF: distinct baskets (shared with copurchase_edges), orderkey-keyed pair join (bounded fan-out), degree joins, per-item window top-k",
     "q_ctfidf_terms": "c-TF-IDF: pinned (source,token) census, class totals broadcast, vocab-sized token-total join + window",
     "q_classification_report": "classification report: ONE confusion census behind a checkpoint read by both marginals, broadcast join, classes^2 arithmetic",
     "q_readability": "Flesch banding: three codegen regex counters map-side, (source,band) partial agg, zero Python",
