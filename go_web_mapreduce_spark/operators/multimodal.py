@@ -6,6 +6,17 @@ feature-extract / resize / frame-sample run as Arrow-batched Pandas
 iterators (``mapInPandas``) so bytes move in columnar batches and never
 row-at-a-time.
 
+Every query of the family runs on three kernels:
+
+- :func:`synthesized` is the one synthesis pass: the ASCII documents fanned
+  out and encoded per document by a small encoder (image, WAV, JPEG,
+  video) into ``(doc_id, payload, mime, source)``;
+- :func:`per_payload` is the one decode pass: each ``(mime, payload)``
+  decoded through :func:`decode_payload` and reduced to value rows (one
+  per payload, or one per kept frame) emitted beside key columns;
+- :func:`hash_census` is the one pinned ``(h, source)`` census tail of the
+  perceptual-hash queries (image aHash, audio fingerprint).
+
 Decode is REAL for every format expressible without codec libraries:
 ``decode_bmp`` (24-bit BMP, pure struct/numpy header parse + de-pad + BGR
 flip), ``decode_png`` (non-interlaced 8-bit RGB/RGBA: zlib inflate +
@@ -39,11 +50,6 @@ from go_web_mapreduce_spark.sources.sinks import pin
 from go_web_mapreduce_spark.sources.tables import fan_out, load_table
 
 FEATURE_DIM = 8
-
-FEATURE_SCHEMA = (
-    "doc_id bigint, n_bytes bigint, digest string, "
-    f"features array<float>, source string"
-)
 
 # oracle-side twin of ascii_documents — keep the predicates in lockstep
 _ASCII_DOCS_SQL = (
@@ -343,10 +349,115 @@ def media_features(arr) -> list[float]:
     ]
 
 
+def ascii_documents(docs: DataFrame) -> DataFrame:
+    """Non-empty all-ASCII documents — the invariant the synthesis oracles
+    rely on (per-character ``ascii(substr(...))`` == the utf-8 byte), now
+    ENFORCED in the plan rather than assumed of the corpus: char length ==
+    byte length ⟺ every char is single-byte ASCII. The DuckDB oracles carry
+    the identical predicate (see _ASCII_DOCS_SQL)."""
+    return docs.filter(
+        (F.length("text") > 0) & (F.octet_length("text") == F.length("text"))
+    )
+
+
+def synthesized(docs: DataFrame, encode) -> DataFrame:
+    """The one synthesis pass: the ASCII documents (:func:`ascii_documents`)
+    fanned out over the cluster, each encoded by ``encode(doc_id,
+    utf8_bytes) -> (payload, mime)`` inside one Arrow-batched
+    ``mapInPandas``. Emits ``(doc_id, payload, mime, source)``."""
+
+    def run(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            enc = [
+                encode(doc_id, text.encode("utf-8"))
+                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
+            ]
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "payload": [payload for payload, _ in enc],
+                    "mime": [mime for _, mime in enc],
+                    "source": pdf["source"],
+                }
+            )
+
+    return fan_out(
+        ascii_documents(docs).select("doc_id", "text", "source")
+    ).mapInPandas(
+        run, "doc_id bigint, payload binary, mime string, source string"
+    )
+
+
+def per_payload(
+    media: DataFrame, keys: tuple[str, ...], fn, schema: str
+) -> DataFrame:
+    """The one decode pass over a media table, Arrow-batched.
+
+    ``fn(mime, payload_bytes)`` returns the value rows of one payload, a
+    list of tuples laid out as the DDL ``schema``: one row for a 1→1
+    reduction, one per kept frame for a 1→N step. Each row is emitted
+    after its payload's ``keys`` columns, so the output is ``keys`` then
+    ``schema``, and a 1→N fan-out stays inside the batch."""
+    key_ddl = ", ".join(
+        f"{k} {media.schema[k].dataType.simpleString()}" for k in keys
+    )
+
+    def run(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            at, rows = [], []
+            for i, (mime, payload) in enumerate(zip(pdf["mime"], pdf["payload"])):
+                for row in fn(mime, bytes(payload)):
+                    at.append(i)
+                    rows.append(row)
+            if rows:
+                # integer column labels: Spark assigns them by position
+                yield pd.concat(
+                    [
+                        pdf.iloc[at, : len(keys)].reset_index(drop=True),
+                        pd.DataFrame(rows),
+                    ],
+                    axis=1,
+                    ignore_index=True,
+                )
+
+    return media.select(*keys, "mime", "payload").mapInPandas(
+        run, f"{key_ddl}, {schema}"
+    )
+
+
+def hash_census(hashed: DataFrame, n: str, distinct: str, shared: str) -> DataFrame:
+    """The ``(h, source)`` census of a perceptual-hash table: per source,
+    the items (``n``), their distinct hashes (``distinct``), the
+    within-source duplicates (``n_dup_within``) and the items whose hash
+    recurs in ≥2 sources (``shared``).
+
+    The census is collapsed to ``(h, source)`` first, one map-side-combined
+    shuffle over the single decode pass, and every downstream aggregate
+    works on that distinct-hash-sized table. It is read twice (census and
+    spread), so it is pinned: the decode lineage below runs once per item
+    (plan-gated in test_plans)."""
+    hs = pin(hashed.groupBy("h", "source").agg(F.count(F.lit(1)).alias("c")))
+    spread = hs.groupBy("h").agg(F.count(F.lit(1)).alias("ns"))
+    return (
+        hs.join(spread, "h")
+        .groupBy("source")
+        .agg(
+            F.sum("c").alias(n),
+            F.count(F.lit(1)).alias(distinct),
+            (F.sum("c") - F.count(F.lit(1))).alias("n_dup_within"),
+            F.sum(F.when(F.col("ns") >= 2, F.col("c")).otherwise(0)).alias(shared),
+        )
+    )
+
+
 def extract_features(
     media: DataFrame, dim: int = FEATURE_DIM, double: bool = False
 ) -> DataFrame:
-    """Per-payload feature vector via Arrow-batched mapInPandas.
+    """Per-payload feature vector, one :func:`per_payload` pass.
 
     For decodable mimes (BMP/PNG/WAV — see DECODERS) the features are REAL
     content statistics of the decoded pixel/sample array
@@ -356,41 +467,23 @@ def extract_features(
     so exact-integer components (min/max/count) survive for hash-checked
     oracles; the default float32 matches the embeddings-table convention.
     """
-    schema = FEATURE_SCHEMA.replace("array<float>", "array<double>") if double else FEATURE_SCHEMA
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def features(mime: str, raw: bytes) -> list:
+        digest = hashlib.md5(raw).hexdigest()
+        dec = DECODERS.get(mime)
+        if dec is not None:
+            feats = media_features(dec(raw))[:dim]
+        else:
+            feats = [int(digest[4 * i : 4 * i + 4], 16) / 65535.0 for i in range(dim)]
+        return [(len(raw), digest, feats)]
 
-        for pdf in batches:
-            feats, digests, sizes = [], [], []
-            for mime, payload in zip(pdf["mime"], pdf["payload"]):
-                raw = bytes(payload)
-                digest = hashlib.md5(raw).hexdigest()
-                digests.append(digest)
-                sizes.append(len(raw))
-                dec = DECODERS.get(mime)
-                if dec is not None:
-                    feats.append(media_features(dec(raw))[:dim])
-                else:
-                    feats.append(
-                        [
-                            int(digest[4 * i : 4 * i + 4], 16) / 65535.0
-                            for i in range(dim)
-                        ]
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": sizes,
-                    "digest": digests,
-                    "features": feats,
-                    "source": pdf["source"],
-                }
-            )
-
-    return media.select("doc_id", "mime", "payload", "source").mapInPandas(
-        run, schema
-    )
+    element = "double" if double else "float"
+    return per_payload(
+        media,
+        ("doc_id", "source"),
+        features,
+        f"n_bytes bigint, digest string, features array<{element}>",
+    ).select("doc_id", "n_bytes", "digest", "features", "source")
 
 
 @query(
@@ -481,25 +574,16 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact pixel sums aggregate per source. The 1→N fan-out (one clip row
     → one row per kept frame) happens inside the Arrow batch."""
 
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        from go_web_mapreduce_spark.functions.avi import decode_avi_mjpeg
-
-        for pdf in batches:
-            out = {"source": [], "frame_no": [], "px_sum": []}
-            for source, payload in zip(pdf["source"], pdf["payload"]):
-                frames = decode_avi_mjpeg(bytes(payload))
-                for k in range(0, len(frames), FRAME_SAMPLE_EVERY):
-                    out["source"].append(source)
-                    out["frame_no"].append(k)
-                    out["px_sum"].append(int(frames[k].astype(np.int64).sum()))
-            yield pd.DataFrame(out)
+    def kept_frames(mime: str, raw: bytes) -> list:
+        frames = decode_payload(mime, raw).astype("int64")
+        return [
+            (k, int(frames[k].sum()))
+            for k in range(0, len(frames), FRAME_SAMPLE_EVERY)
+        ]
 
     media = synthesize_video_table(load_table(spark, sf_dir, "documents"))
-    sampled = media.select("source", "payload").mapInPandas(
-        run, "source string, frame_no int, px_sum bigint"
+    sampled = per_payload(
+        media, ("source",), kept_frames, "frame_no int, px_sum bigint"
     )
     return sampled.groupBy("source").agg(
         F.count("*").alias("n_sampled"),
@@ -543,28 +627,16 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer box average — so a decode bug, an off-by-one in the
     window grid, or a rounding-mode drift all hash-mismatch."""
 
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            sums, nbytes = [], []
-            for mime, payload in zip(pdf["mime"], pdf["payload"]):
-                px = decode_payload(mime, bytes(payload)).astype(np.int64)
-                thumb = (
-                    px[0::2, 0::2] + px[0::2, 1::2]
-                    + px[1::2, 0::2] + px[1::2, 1::2]
-                ) // 4
-                sums.append(int(thumb.sum()))
-                nbytes.append(int(thumb.size))
-            yield pd.DataFrame(
-                {"source": pdf["source"], "nb": nbytes, "s": sums}
-            )
+    def thumbnail(mime: str, raw: bytes) -> list:
+        px = decode_payload(mime, raw).astype("int64")
+        thumb = (
+            px[0::2, 0::2] + px[0::2, 1::2]
+            + px[1::2, 0::2] + px[1::2, 1::2]
+        ) // 4
+        return [(int(thumb.size), int(thumb.sum()))]
 
     media = synthesize_image_table(load_table(spark, sf_dir, "documents"))
-    thumbs = media.select("source", "mime", "payload").mapInPandas(
-        run, "source string, nb bigint, s bigint"
-    )
+    thumbs = per_payload(media, ("source",), thumbnail, "nb bigint, s bigint")
     return thumbs.groupBy("source").agg(
         F.count("*").alias("n_thumbs"),
         F.sum("nb").alias("total_thumb_bytes"),
@@ -579,15 +651,27 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 IMG_W = IMG_H = 16  # synthesized image dimensions (768 pixel bytes)
 
 
-def ascii_documents(docs: DataFrame) -> DataFrame:
-    """Non-empty all-ASCII documents — the invariant the synthesis oracles
-    rely on (per-character ``ascii(substr(...))`` == the utf-8 byte), now
-    ENFORCED in the plan rather than assumed of the corpus: char length ==
-    byte length ⟺ every char is single-byte ASCII. The DuckDB oracles carry
-    the identical predicate (see _ASCII_DOCS_SQL)."""
-    return docs.filter(
-        (F.length("text") > 0) & (F.octet_length("text") == F.length("text"))
+def _tiled(raw: bytes, n: int) -> bytes:
+    """``raw`` repeated to exactly ``n`` bytes: byte i is ``raw[i % len]``,
+    the tiling every synthesis oracle restates over the text."""
+    return (raw * -(-n // len(raw)))[:n]
+
+
+_IMAGE_CODECS = (
+    (encode_bmp, "image/bmp"),
+    (encode_png, "image/png"),
+    (encode_gif, "image/gif"),
+)
+
+
+def _encode_image(doc_id: int, raw: bytes) -> tuple[bytes, str]:
+    import numpy as np
+
+    px = np.frombuffer(_tiled(raw, IMG_W * IMG_H * 3), np.uint8).reshape(
+        IMG_H, IMG_W, 3
     )
+    encode, mime = _IMAGE_CODECS[doc_id % 3]
+    return encode(px), mime
 
 
 def synthesize_image_table(docs: DataFrame) -> DataFrame:
@@ -595,48 +679,12 @@ def synthesize_image_table(docs: DataFrame) -> DataFrame:
     tiled into a 16×16 RGB pixel block and encoded as a REAL image file —
     24-bit BMP (headers, padding, bottom-up rows) for doc_id % 3 == 0, PNG
     (zlib IDAT, cycling scanline filters 0–4) for % 3 == 1, GIF87a (palette
-    + genuine variable-width LZW) for % 3 == 2. Arrow-batched; every
-    payload is a valid file any image reader opens, and all three formats
-    decode to the identical pixel array, so one first-principles oracle
-    covers them all. (A 16×16 tile has ≤256 distinct colors by pigeonhole,
-    so the GIF palette constraint always holds.)"""
-
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        n_px = IMG_W * IMG_H * 3
-        for pdf in batches:
-            payloads, mimes = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = text.encode("utf-8")
-                reps = -(-n_px // len(raw))
-                px = np.frombuffer((raw * reps)[:n_px], np.uint8).reshape(
-                    IMG_H, IMG_W, 3
-                )
-                if doc_id % 3 == 0:
-                    payloads.append(encode_bmp(px))
-                    mimes.append("image/bmp")
-                elif doc_id % 3 == 1:
-                    payloads.append(encode_png(px))
-                    mimes.append("image/png")
-                else:
-                    payloads.append(encode_gif(px))
-                    mimes.append("image/gif")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "mime": mimes,
-                    "source": pdf["source"],
-                }
-            )
-
-    return fan_out(
-        ascii_documents(docs).select("doc_id", "text", "source")
-    ).mapInPandas(
-        run, "doc_id bigint, payload binary, mime string, source string"
-    )
+    + genuine variable-width LZW) for % 3 == 2. Every payload is a valid
+    file any image reader opens, and all three formats decode to the
+    identical pixel array, so one first-principles oracle covers them all.
+    (A 16×16 tile has ≤256 distinct colors by pigeonhole, so the GIF
+    palette constraint always holds.)"""
+    return synthesized(docs, _encode_image)
 
 
 @query(
@@ -683,27 +731,12 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single header-offset, padding, or unfilter bug in either codec would
     hash-mismatch."""
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            sums, counts = [], []
-            for mime, payload in zip(pdf["mime"], pdf["payload"]):
-                px = decode_payload(mime, bytes(payload))
-                sums.append(int(px.astype("int64").sum()))
-                counts.append(int(px.shape[0] * px.shape[1]))
-            yield pd.DataFrame(
-                {
-                    "source": pdf["source"],
-                    "n_px": counts,
-                    "px_sum": sums,
-                }
-            )
+    def pixels(mime: str, raw: bytes) -> list:
+        px = decode_payload(mime, raw)
+        return [(int(px.shape[0] * px.shape[1]), int(px.astype("int64").sum()))]
 
     media = synthesize_image_table(load_table(spark, sf_dir, "documents"))
-    decoded = media.select("source", "mime", "payload").mapInPandas(
-        run, "source string, n_px bigint, px_sum bigint"
-    )
+    decoded = per_payload(media, ("source",), pixels, "n_px bigint, px_sum bigint")
     return decoded.groupBy("source").agg(
         F.count("*").alias("n_images"),
         F.sum("n_px").alias("n_pixels"),
@@ -768,44 +801,24 @@ def q_multimodal_features_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 AUDIO_BYTES = 768  # payload bytes per synthesized clip → 384 mono samples
 
 
+def _encode_wav(doc_id: int, raw: bytes) -> tuple[bytes, str]:
+    import io
+    import wave
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as wf:
+        wf.setnchannels(1)
+        wf.setsampwidth(2)
+        wf.setframerate(16000)
+        wf.writeframes(_tiled(raw, AUDIO_BYTES))
+    return buf.getvalue(), "audio/wav"
+
+
 def synthesize_wav_table(docs: DataFrame) -> DataFrame:
     """Each document's utf-8 bytes tiled into AUDIO_BYTES of 16-bit PCM and
     wrapped in a genuine RIFF/WAV container via the stdlib ``wave`` writer —
     valid files any audio tool opens."""
-
-    def run(batches: Iterator) -> Iterator:
-        import io
-        import wave
-
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                raw = text.encode("utf-8")
-                reps = -(-AUDIO_BYTES // len(raw))
-                pcm = (raw * reps)[:AUDIO_BYTES]
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wf:
-                    wf.setnchannels(1)
-                    wf.setsampwidth(2)
-                    wf.setframerate(16000)
-                    wf.writeframes(pcm)
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "mime": "audio/wav",
-                    "source": pdf["source"],
-                }
-            )
-
-    return fan_out(
-        ascii_documents(docs).select("doc_id", "text", "source")
-    ).mapInPandas(
-        run, "doc_id bigint, payload binary, mime string, source string"
-    )
+    return synthesized(docs, _encode_wav)
 
 
 @query(
@@ -843,22 +856,13 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     int16 sample arrays out, exact integer statistics aggregated per
     source. A header-length or endianness bug would hash-mismatch."""
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            sums, counts = [], []
-            for mime, payload in zip(pdf["mime"], pdf["payload"]):
-                samples = decode_payload(mime, bytes(payload))
-                sums.append(int(samples.astype("int64").sum()))
-                counts.append(int(samples.shape[0]))
-            yield pd.DataFrame(
-                {"source": pdf["source"], "n_samples": counts, "s_sum": sums}
-            )
+    def samples(mime: str, raw: bytes) -> list:
+        s = decode_payload(mime, raw)
+        return [(int(s.shape[0]), int(s.astype("int64").sum()))]
 
     media = synthesize_wav_table(load_table(spark, sf_dir, "documents"))
-    decoded = media.select("source", "mime", "payload").mapInPandas(
-        run, "source string, n_samples bigint, s_sum bigint"
+    decoded = per_payload(
+        media, ("source",), samples, "n_samples bigint, s_sum bigint"
     )
     return decoded.groupBy("source").agg(
         F.count("*").alias("n_clips"),
@@ -875,6 +879,25 @@ JPEG_GRID = 2  # 2×2 grid of 8×8 blocks → 16×16 grayscale
 JPEG_BLOCKS = JPEG_GRID * JPEG_GRID
 
 
+def _blocks(vals: bytes):
+    """A 16×16 grayscale image of JPEG_BLOCKS constant 8×8 blocks, block k
+    (row-major on the grid) holding byte k of ``vals``."""
+    import numpy as np
+
+    grid = np.frombuffer(vals, np.uint8).reshape(JPEG_GRID, JPEG_GRID)
+    return grid.repeat(8, axis=0).repeat(8, axis=1)
+
+
+def _encode_jpeg(doc_id: int, raw: bytes) -> tuple[bytes, str]:
+    import numpy as np
+
+    px = _blocks(_tiled(raw, JPEG_BLOCKS))
+    if doc_id % 3 == 0:
+        return encode_jpeg_gray(px), "image/jpeg"
+    rgb = np.stack([px, px, px], axis=-1)
+    return encode_jpeg_color(rgb, subsample=bool(doc_id % 3 == 2)), "image/jpeg"
+
+
 def synthesize_jpeg_table(docs: DataFrame) -> DataFrame:
     """Each document becomes a genuine baseline JFIF JPEG: a 16×16 image
     of four 8×8 blocks, block k holding the constant value of the
@@ -887,44 +910,7 @@ def synthesize_jpeg_table(docs: DataFrame) -> DataFrame:
     2×2 box average is lossless), and each block has a single integral
     DCT coefficient — the oracle predicts the decoded pixels from first
     principles."""
-
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        ones = np.ones((8, 8), dtype=np.int64)
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = text.encode("utf-8")
-                vals = np.array(
-                    [raw[k % len(raw)] for k in range(JPEG_BLOCKS)],
-                    dtype=np.int64,
-                ).reshape(JPEG_GRID, JPEG_GRID)
-                px = np.kron(vals, ones).astype(np.uint8)
-                if doc_id % 3 == 0:
-                    payloads.append(encode_jpeg_gray(px))
-                else:
-                    payloads.append(
-                        encode_jpeg_color(
-                            np.stack([px, px, px], axis=-1),
-                            subsample=bool(doc_id % 3 == 2),
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "mime": "image/jpeg",
-                    "source": pdf["source"],
-                }
-            )
-
-    return fan_out(
-        ascii_documents(docs).select("doc_id", "text", "source")
-    ).mapInPandas(
-        run, "doc_id bigint, payload binary, mime string, source string"
-    )
+    return synthesized(docs, _encode_jpeg)
 
 
 @query(
@@ -968,23 +954,12 @@ def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere in functions/jpeg.py would hash-mismatch the per-source
     pixel sums."""
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            sums, counts = [], []
-            for mime, payload in zip(pdf["mime"], pdf["payload"]):
-                px = decode_payload(mime, bytes(payload))
-                sums.append(int(px.astype("int64").sum()))
-                counts.append(int(px.size))
-            yield pd.DataFrame(
-                {"source": pdf["source"], "n_px": counts, "px_sum": sums}
-            )
+    def values(mime: str, raw: bytes) -> list:
+        px = decode_payload(mime, raw)
+        return [(int(px.size), int(px.astype("int64").sum()))]
 
     media = synthesize_jpeg_table(load_table(spark, sf_dir, "documents"))
-    decoded = media.select("source", "mime", "payload").mapInPandas(
-        run, "source string, n_px bigint, px_sum bigint"
-    )
+    decoded = per_payload(media, ("source",), values, "n_px bigint, px_sum bigint")
     return decoded.groupBy("source").agg(
         F.count("*").alias("n_images"),
         F.sum("n_px").alias("n_pixels"),
@@ -996,46 +971,24 @@ def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_multimodal_video — REAL video decode: AVI container, MJPEG frames
 # ---------------------------------------------------------------------------
 
+def _encode_video(doc_id: int, raw: bytes) -> tuple[bytes, str]:
+    from go_web_mapreduce_spark.functions.avi import encode_avi_mjpeg
+
+    clip = _tiled(raw, JPEG_BLOCKS * VIDEO_FRAMES)
+    frames = [
+        _blocks(clip[JPEG_BLOCKS * k : JPEG_BLOCKS * (k + 1)])
+        for k in range(VIDEO_FRAMES)
+    ]
+    return encode_avi_mjpeg(frames), "video/x-msvideo"
+
+
 def synthesize_video_table(docs: DataFrame) -> DataFrame:
     """Each document becomes a genuine AVI-MJPEG video: VIDEO_FRAMES
     frames of 16×16 grayscale, frame k's four 8×8 blocks holding the
     document's bytes 4k..4k+3 (tiled) — so the whole clip walks the first
     16 bytes of the text. Every payload is a valid AVI any player with an
     MJPEG decoder opens."""
-
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        from go_web_mapreduce_spark.functions.avi import encode_avi_mjpeg
-
-        ones = np.ones((8, 8), dtype=np.int64)
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                raw = text.encode("utf-8")
-                frames = []
-                for k in range(VIDEO_FRAMES):
-                    vals = np.array(
-                        [raw[(4 * k + j) % len(raw)] for j in range(4)],
-                        dtype=np.int64,
-                    ).reshape(2, 2)
-                    frames.append(np.kron(vals, ones).astype(np.uint8))
-                payloads.append(encode_avi_mjpeg(frames))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "mime": "video/x-msvideo",
-                    "source": pdf["source"],
-                }
-            )
-
-    return fan_out(
-        ascii_documents(docs).select("doc_id", "text", "source")
-    ).mapInPandas(
-        run, "doc_id bigint, payload binary, mime string, source string"
-    )
+    return synthesized(docs, _encode_video)
 
 
 @query(
@@ -1069,26 +1022,12 @@ def q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     both are stdlib-expressible. A RIFF-walk, frame-count, JPEG, or
     index bug would hash-mismatch the per-source sums."""
 
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        from go_web_mapreduce_spark.functions.avi import decode_avi_mjpeg
-
-        for pdf in batches:
-            sums, counts = [], []
-            for payload in pdf["payload"]:
-                frames = decode_avi_mjpeg(bytes(payload))
-                sums.append(int(sum(f.astype(np.int64).sum() for f in frames)))
-                counts.append(len(frames))
-            yield pd.DataFrame(
-                {"source": pdf["source"], "n_frames": counts, "px_sum": sums}
-            )
+    def clip(mime: str, raw: bytes) -> list:
+        frames = decode_payload(mime, raw)
+        return [(len(frames), int(frames.astype("int64").sum()))]
 
     media = synthesize_video_table(load_table(spark, sf_dir, "documents"))
-    decoded = media.select("source", "payload").mapInPandas(
-        run, "source string, n_frames bigint, px_sum bigint"
-    )
+    decoded = per_payload(media, ("source",), clip, "n_frames bigint, px_sum bigint")
     return decoded.groupBy("source").agg(
         F.count("*").alias("n_videos"),
         F.sum("n_frames").alias("n_frames"),
@@ -1137,26 +1076,17 @@ def q_audio_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     and was consistent (per-clip 1e-6 relative gate, observed drift
     ~1e-12) while hashing the exact energies."""
 
-    def run(batches: Iterator) -> Iterator:
+    def parseval(mime: str, raw: bytes) -> list:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            energies, oks = [], []
-            for mime, payload in zip(pdf["mime"], pdf["payload"]):
-                x = decode_payload(mime, bytes(payload)).astype(np.float64).ravel()
-                td = float(np.sum(x * x))
-                X = np.fft.fft(x)
-                fd = float(np.sum(np.abs(X) ** 2) / len(x))
-                energies.append(int(round(td)))
-                oks.append(abs(fd - td) <= 1e-6 * max(td, 1.0))
-            yield pd.DataFrame(
-                {"source": pdf["source"], "energy": energies, "ok": oks}
-            )
+        x = decode_payload(mime, raw).astype(np.float64).ravel()
+        td = float(np.sum(x * x))
+        fd = float(np.sum(np.abs(np.fft.fft(x)) ** 2) / len(x))
+        return [(int(round(td)), abs(fd - td) <= 1e-6 * max(td, 1.0))]
 
     media = synthesize_wav_table(load_table(spark, sf_dir, "documents"))
-    decoded = media.select("source", "mime", "payload").mapInPandas(
-        run, "source string, energy bigint, ok boolean"
+    decoded = per_payload(
+        media, ("source",), parseval, "energy bigint, ok boolean"
     )
     return decoded.groupBy("source").agg(
         F.count("*").alias("n_clips"),
@@ -1219,30 +1149,18 @@ def q_media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source states. At 100 TB the content hash is the media dedup
     key (exact dedup of re-encoded copies); near-dup goes through the
     embedding/LSH family."""
-    import hashlib as _hl
-
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"doc_id": [], "source": [], "h": [], "s": []}
-            for doc_id, source, mime, payload in zip(
-                pdf["doc_id"], pdf["source"], pdf["mime"], pdf["payload"]
-            ):
-                px = decode_payload(mime, bytes(payload))
-                raw = np.ascontiguousarray(px, dtype=np.uint8).tobytes()
-                out["doc_id"].append(doc_id)
-                out["source"].append(source)
-                out["h"].append(_hl.md5(raw).hexdigest())
-                out["s"].append(int(px.astype(np.int64).sum()))
-            yield pd.DataFrame(out)
-
     from pyspark.sql import Window
 
+    def content(mime: str, raw: bytes) -> list:
+        import numpy as np
+
+        px = decode_payload(mime, raw)
+        flat = np.ascontiguousarray(px, dtype=np.uint8).tobytes()
+        return [(hashlib.md5(flat).hexdigest(), int(px.astype(np.int64).sum()))]
+
     media = synthesize_image_table(load_table(spark, sf_dir, "documents"))
-    decoded = media.select("doc_id", "source", "mime", "payload").mapInPandas(
-        run, "doc_id bigint, source string, h string, s bigint"
+    decoded = per_payload(
+        media, ("doc_id", "source"), content, "h string, s bigint"
     )
     w = Window.partitionBy("h")
     staged = decoded.withColumn(
@@ -1320,48 +1238,16 @@ def q_image_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     JPEG re-compression in the wild would flip only sub-threshold bits).
     Reference parity: none — extension mandate (multimodal pipeline ops)."""
 
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            hashes = []
-            for mime, payload in zip(pdf["mime"], pdf["payload"]):
-                px = decode_payload(mime, bytes(payload)).astype("int64")
-                g = px[:: 2, :: 2][:PHASH_GRID, :PHASH_GRID].sum(axis=2)
-                bits = (PHASH_GRID * PHASH_GRID * g >= g.sum()).astype("uint8")
-                hashes.append("".join("1" if b else "0" for b in bits.ravel()))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "source": pdf["source"], "h": hashes}
-            )
+    def ahash(mime: str, raw: bytes) -> list:
+        px = decode_payload(mime, raw).astype("int64")
+        g = px[::2, ::2][:PHASH_GRID, :PHASH_GRID].sum(axis=2)
+        bits = PHASH_GRID * PHASH_GRID * g >= g.sum()
+        return [("".join("1" if b else "0" for b in bits.ravel()),)]
 
     media = synthesize_image_table(load_table(spark, sf_dir, "documents"))
-    hashed = media.select("doc_id", "source", "mime", "payload").mapInPandas(
-        run, "doc_id bigint, source string, h string"
-    )
-    # collapse to (hash, source) FIRST — one map-side-combined shuffle over
-    # the single decode pass; every downstream aggregate (census, spread)
-    # then works on the distinct-hash-sized table, so the Python decode
-    # kernel runs exactly once per image (plan-gated in test_plans)
-    hs = pin(
-        hashed.groupBy("h", "source")
-        .agg(F.count(F.lit(1)).alias("c"))
-        # referenced twice (census + spread): pin the distinct-hash-sized
-        # table so the decode lineage runs once
-    )
-    spread = hs.groupBy("h").agg(F.count(F.lit(1)).alias("ns"))
-    return (
-        hs.join(spread, "h")
-        .groupBy("source")
-        .agg(
-            F.sum("c").alias("n_images"),
-            F.count(F.lit(1)).alias("distinct_hashes"),
-            (F.sum("c") - F.count(F.lit(1))).alias("n_dup_within"),
-            F.sum(F.when(F.col("ns") >= 2, F.col("c")).otherwise(0)).alias(
-                "n_shared_hash"
-            ),
-        )
-    )
+    hashed = per_payload(media, ("doc_id", "source"), ahash, "h string")
+    return hash_census(hashed, "n_images", "distinct_hashes", "n_shared_hash")
+
 
 # ---------------------------------------------------------------------------
 # q_audio_fingerprint — energy-contour perceptual hash dedup over real WAVs
@@ -1433,43 +1319,15 @@ def q_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     32639, so Σ of 32 squares ≤ 3.5·10¹⁰ — no float enters the hash).
     Reference parity: none — extension mandate (multimodal pipeline)."""
 
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np  # noqa: F811
-        import pandas as pd
-
-        for pdf in batches:
-            fps = []
-            for mime, payload in zip(pdf["mime"], pdf["payload"]):
-                s = decode_payload(mime, bytes(payload)).astype("int64")
-                en = (s * s).reshape(FP_WINDOWS, FP_WIN).sum(axis=1)
-                fps.append(
-                    "".join("1" if en[k + 1] > en[k] else "0"
-                            for k in range(FP_WINDOWS - 1))
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "source": pdf["source"], "h": fps}
-            )
+    def contour(mime: str, raw: bytes) -> list:
+        s = decode_payload(mime, raw).astype("int64")
+        en = (s * s).reshape(FP_WINDOWS, FP_WIN).sum(axis=1)
+        rises = (en[k + 1] > en[k] for k in range(FP_WINDOWS - 1))
+        return [("".join("1" if r else "0" for r in rises),)]
 
     media = synthesize_wav_table(load_table(spark, sf_dir, "documents"))
-    hashed = media.select("doc_id", "source", "mime", "payload").mapInPandas(
-        run, "doc_id bigint, source string, h string"
-    )
-    # referenced twice (census + spread): pin the fingerprint-sized table so
-    # the decode lineage runs once
-    hs = pin(hashed.groupBy("h", "source").agg(F.count(F.lit(1)).alias("c")))
-    spread = hs.groupBy("h").agg(F.count(F.lit(1)).alias("ns"))
-    return (
-        hs.join(spread, "h")
-        .groupBy("source")
-        .agg(
-            F.sum("c").alias("n_clips"),
-            F.count(F.lit(1)).alias("distinct_fps"),
-            (F.sum("c") - F.count(F.lit(1))).alias("n_dup_within"),
-            F.sum(F.when(F.col("ns") >= 2, F.col("c")).otherwise(0)).alias(
-                "n_shared_fp"
-            ),
-        )
-    )
+    hashed = per_payload(media, ("doc_id", "source"), contour, "h string")
+    return hash_census(hashed, "n_clips", "distinct_fps", "n_shared_fp")
 
 
 # ---------------------------------------------------------------------------
@@ -1520,9 +1378,8 @@ SCENE_CUT_SUM = 8 * 16 * 16
     "first-principles byte oracle",
 )
 def q_video_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode + temporal diff in ONE Arrow pass per clip (the diff needs
-    only two frames in memory at a time — at real clip lengths the frame
-    iterator streams, so executor memory is O(frame), not O(clip)). The
+    """Decode + temporal diff in ONE Arrow pass per clip: the clip decodes
+    to one (frames, h, w) stack and consecutive frames are differenced. The
     aggregation is map-side partial per source. This is the temporal
     sibling of q_image_dedup_phash's spatial hashing: shot boundaries
     partition a clip into near-duplicate-free segments, which is what a
@@ -1530,42 +1387,26 @@ def q_video_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary as q_multimodal_video: MJPEG-in-AVI decodes for real here,
     H.264/MP4 need ffmpeg and raise NotImplementedError upstream."""
 
-    def run(batches: Iterator) -> Iterator:
+    def transitions(mime: str, raw: bytes) -> list:
         import numpy as np
-        import pandas as pd
 
-        from go_web_mapreduce_spark.functions.avi import decode_avi_mjpeg
-
-        for pdf in batches:
-            cuts, sums, maxes, trans = [], [], [], []
-            for payload in pdf["payload"]:
-                frames = decode_avi_mjpeg(bytes(payload))
-                diffs = [
-                    int(
-                        np.abs(
-                            frames[k + 1].astype(np.int64)
-                            - frames[k].astype(np.int64)
-                        ).sum()
-                    )
-                    for k in range(len(frames) - 1)
-                ]
-                cuts.append(sum(1 for d in diffs if d >= SCENE_CUT_SUM))
-                sums.append(sum(diffs))
-                maxes.append(max(diffs) if diffs else 0)
-                trans.append(len(diffs))
-            yield pd.DataFrame(
-                {
-                    "source": pdf["source"],
-                    "n_trans": trans,
-                    "n_cuts": cuts,
-                    "d_sum": sums,
-                    "d_max": maxes,
-                }
+        frames = decode_payload(mime, raw).astype(np.int64)
+        diffs = np.abs(np.diff(frames, axis=0)).sum(axis=(1, 2))
+        return [
+            (
+                len(diffs),
+                int((diffs >= SCENE_CUT_SUM).sum()),
+                int(diffs.sum()),
+                int(diffs.max(initial=0)),
             )
+        ]
 
     media = synthesize_video_table(load_table(spark, sf_dir, "documents"))
-    scored = media.select("source", "payload").mapInPandas(
-        run, "source string, n_trans bigint, n_cuts bigint, d_sum bigint, d_max bigint"
+    scored = per_payload(
+        media,
+        ("source",),
+        transitions,
+        "n_trans bigint, n_cuts bigint, d_sum bigint, d_max bigint",
     )
     return scored.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_videos"),

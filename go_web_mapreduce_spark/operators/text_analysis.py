@@ -807,21 +807,15 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     training for LLM data pipelines).
 
     Deeper runs go through :func:`bpe_train` directly (32+ merges, where
-    merged symbols span earlier merges), which adds per-N-round DURABLE
-    checkpoints for long trainings and is property-tested against a pure-
-    Python reference implementation (tests/test_llm_ops.py).
+    merged symbols span earlier merges), which is property-tested against a
+    pure-Python reference implementation (tests/test_llm_ops.py).
     """
     freq = token_counts(load_table(spark, sf_dir, "documents"))
     merges, _ = bpe_train(freq, BPE_TRAIN_STEPS)
     return local_frame(spark, merges, "step int, pair string, cnt bigint")
 
 
-def bpe_train(
-    freq: DataFrame,
-    steps: int,
-    checkpoint_every: int | None = None,
-    checkpoint_dir: str | None = None,
-):
+def bpe_train(freq: DataFrame, steps: int):
     """The BPE merge loop over a ``(word, n)`` word-frequency table
     (:func:`token_counts`'s census).
 
@@ -829,18 +823,10 @@ def bpe_train(
     ``vocab`` the final \\x01-delimited encoding of every distinct word —
     i.e. the trained tokenizer applied to the whole vocabulary.
 
-    Checkpoint discipline for real vocabulary depth (32+ merges): every
-    round truncates lineage with a pin (else round k
-    replays rounds 1..k-1 — the pagerank discipline), and every
-    ``checkpoint_every`` rounds a DURABLE reliable checkpoint
-    (``DataFrame.checkpoint``) lands under ``checkpoint_dir`` so a long
-    training survives executor loss without replaying the merge chain —
-    at 100 TB the vocab table is ~10M rows, so the durable write is a
-    rounding error next to the corpus-sized freq build it protects.
+    At real vocabulary depth (32+ merges) every round truncates lineage
+    with a pin, else round k replays rounds 1..k-1 (the pagerank
+    discipline).
     """
-    spark = freq.sparkSession
-    if checkpoint_every and checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
     vocab = pin(freq.select(
         F.regexp_replace("word", "(?s)(.)", f"{_BPE_SEP}$1{_BPE_SEP}").alias(
             "enc"
@@ -881,10 +867,7 @@ def bpe_train(
                 F.lit(f"{_BPE_SEP}{l}{r}{_BPE_SEP}"),
             ),
         )
-        if checkpoint_every and checkpoint_dir and step % checkpoint_every == 0:
-            vocab = vocab.checkpoint(eager=True)
-        else:
-            vocab = pin(vocab)
+        vocab = pin(vocab)
 
     return merges, vocab
 

@@ -126,3 +126,38 @@ def test_truncated_gif_raises_or_decodes_exactly(cut):
     except ValueError:
         return
     assert np.array_equal(out, px)
+
+
+# decode_gif refuses animated/multi-image GIFs: silently decoding only the
+# first frame would be a wrong answer, not a degraded one
+
+
+def _animated_gif() -> bytes:
+    """Append a second image (copy of the first) before the trailer."""
+    px = np.zeros((4, 4, 3), np.uint8)
+    px[0, 0] = (255, 0, 0)
+    data = bytearray(encode_gif(px))
+    assert data[-1] == 0x3B
+    # locate the first image descriptor (0x2C) after the 13-byte header +
+    # global color table; splice a second copy of everything from there
+    # to the block terminator, in front of the trailer
+    pos = 13 + 3 * (2 << (data[10] & 0x07))
+    frame = bytes(data[pos:-1])  # descriptor .. block terminator
+    return bytes(data[:-1]) + frame + b"\x3b"
+
+
+def test_gif_single_image_roundtrip_still_works():
+    px = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
+    assert np.array_equal(decode_gif(encode_gif(px)), px)
+
+
+def test_gif_animated_refused():
+    with pytest.raises(ValueError, match="trailer|animated|multi-image"):
+        decode_gif(_animated_gif())
+
+
+def test_gif_missing_trailer_refused():
+    px = np.zeros((4, 4, 3), np.uint8)
+    data = encode_gif(px)[:-1]  # strip the 0x3B trailer
+    with pytest.raises(ValueError, match="trailer|animated|multi-image"):
+        decode_gif(data)

@@ -9,6 +9,7 @@ from go_web_mapreduce_spark.functions.jpeg import (
     _M,
     _Z,
     decode_jpeg as decode_jpeg_gray,
+    encode_jpeg_color,
     encode_jpeg_gray,
 )
 
@@ -210,3 +211,26 @@ def test_420_smooth_color_bounded_error():
     )
     back = decode_jpeg(encode_jpeg_color(px, subsample=True))
     assert np.abs(back.astype(int) - px.astype(int)).max() <= 8
+
+
+# quant tables must fit 8-bit DQT entries: a value >255 would wrap via
+# astype(uint8) and emit a file whose stored tables disagree with those
+# applied
+
+
+def test_jpeg_gray_quant_range_validated():
+    px = np.zeros((8, 8), np.uint8)
+    with pytest.raises(ValueError, match="quant"):
+        encode_jpeg_gray(px, quant=256)
+    with pytest.raises(ValueError, match="quant"):
+        encode_jpeg_gray(px, quant=0)
+    encode_jpeg_gray(px, quant=255)  # boundary is legal
+
+
+def test_jpeg_color_quant_range_validated():
+    px = np.zeros((8, 8, 3), np.uint8)
+    with pytest.raises(ValueError, match="quant"):
+        encode_jpeg_color(px, quant=300)
+    with pytest.raises(ValueError, match="quant"):
+        encode_jpeg_color(px, quant=2, chroma_quant=256)
+    encode_jpeg_color(px, quant=255, chroma_quant=255)

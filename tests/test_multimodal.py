@@ -1,12 +1,21 @@
 """Multimodal plumbing tests: schemas, batch shapes, 1→1 and 1→N fan-out,
-determinism, real BMP/WAV decode round trips, and the compressed-codec
-stub contract."""
+determinism, real BMP/WAV decode round trips, the compressed-codec stub
+contract, the one-kernel source gate, and the perceptual-hash and
+scene-cut queries against pure-Python replays."""
 
 from __future__ import annotations
 
+import ast
+from collections import defaultdict
+from pathlib import Path
+
 import pytest
 
+from go_web_mapreduce_spark.operators import multimodal
 from go_web_mapreduce_spark.operators.multimodal import (
+    DECODERS,
+    SCENE_CUT_SUM,
+    VIDEO_FRAMES,
     as_media_table,
     ascii_documents,
     decode_bmp,
@@ -17,6 +26,7 @@ from go_web_mapreduce_spark.operators.multimodal import (
     encode_png,
     extract_features,
     media_features,
+    q_video_scene_cut,
     synthesize_image_table,
 )
 from go_web_mapreduce_spark.sources.tables import load_table
@@ -204,3 +214,149 @@ def test_media_synthesis_parallelizes(spark, sf_dir):
     partitioning: the synthesized table carries >1 partition."""
     media = synthesize_image_table(load_table(spark, sf_dir, "documents"))
     assert media.rdd.getNumPartitions() > 1
+
+
+def _owners(tree: ast.Module, hit) -> list[str]:
+    """The top-level function (or ``<module>``) around each node under
+    ``tree`` for which ``hit(node)`` holds, one entry per node."""
+    out = []
+    for stmt in tree.body:
+        owner = stmt.name if isinstance(stmt, ast.FunctionDef) else "<module>"
+        out += [owner for n in ast.walk(stmt) if hit(n)]
+    return out
+
+
+def _calls(name: str):
+    return lambda n: isinstance(n, ast.Call) and name in (
+        getattr(n.func, "attr", None),
+        getattr(n.func, "id", None),
+    )
+
+
+def test_multimodal_family_runs_on_one_synthesis_and_one_decode_kernel():
+    """Every multimodal query goes through ``synthesized`` (the only
+    ``fan_out`` and one ``mapInPandas``), ``per_payload`` (the other
+    ``mapInPandas``) and ``hash_census`` (the only ``pin``), and the AVI
+    demuxer is reached only through its DECODERS entry."""
+    tree = ast.parse(Path(multimodal.__file__).read_text())
+    assert sorted(_owners(tree, _calls("mapInPandas"))) == [
+        "per_payload",
+        "synthesized",
+    ]
+    assert _owners(tree, _calls("fan_out")) == ["synthesized"]
+    assert _owners(tree, _calls("pin")) == ["hash_census"]
+    avi = _owners(
+        tree,
+        lambda n: (isinstance(n, ast.Name) and n.id == "decode_avi_mjpeg")
+        or (isinstance(n, ast.alias) and n.name == "decode_avi_mjpeg"),
+    )
+    assert set(avi) == {DECODERS["video/x-msvideo"].__name__}
+
+
+def test_image_phash_is_container_invariant_and_matches_replay(spark, sf_dir):
+    import numpy as np
+
+    from go_web_mapreduce_spark.operators.multimodal import (
+        IMG_H,
+        IMG_W,
+        PHASH_GRID,
+        decode_payload,
+        encode_bmp,
+        encode_gif,
+        encode_png,
+        q_image_dedup_phash,
+    )
+
+    # same pixels through all three containers -> identical perceptual hash
+    def ahash(px):
+        g = px.astype("int64")[::2, ::2][:PHASH_GRID, :PHASH_GRID].sum(axis=2)
+        return tuple((PHASH_GRID * PHASH_GRID * g >= g.sum()).ravel())
+
+    raw = b"the quick brown fox jumps over the lazy dog 0123456789 " * 14
+    n_px = IMG_W * IMG_H * 3
+    px = np.frombuffer((raw * 2)[:n_px], np.uint8).reshape(IMG_H, IMG_W, 3)
+    h_bmp = ahash(decode_payload("image/bmp", encode_bmp(px)))
+    h_png = ahash(decode_payload("image/png", encode_png(px)))
+    h_gif = ahash(decode_payload("image/gif", encode_gif(px)))
+    assert h_bmp == h_png == h_gif
+    # flipping bright pixels to dark must change the hash
+    px2 = px.copy()
+    px2[0, 0:8] = 255
+    assert ahash(px2) != h_bmp
+
+    # per-source census matches a pure-python replay over the tiled bytes
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
+    ).collect()
+    by_src: dict = defaultdict(list)
+    for r in docs:
+        raw = r["text"].encode("utf-8")
+        if not raw or len(raw) != len(r["text"]):
+            continue
+        reps = -(-n_px // len(raw))
+        px = np.frombuffer((raw * reps)[:n_px], np.uint8).reshape(IMG_H, IMG_W, 3)
+        by_src[r["source"]].append(ahash(px))
+    spread: dict = defaultdict(set)
+    for src, hs in by_src.items():
+        for h in hs:
+            spread[h].add(src)
+    got = {r["source"]: r for r in q_image_dedup_phash(spark, sf_dir).collect()}
+    assert set(got) == set(by_src)
+    for src, hs in by_src.items():
+        g = got[src]
+        assert g["n_images"] == len(hs)
+        assert g["distinct_hashes"] == len(set(hs))
+        assert g["n_dup_within"] == len(hs) - len(set(hs))
+        assert g["n_shared_hash"] == sum(1 for h in hs if len(spread[h]) >= 2)
+
+def test_audio_fingerprint_matches_pure_python_replay(spark, sf_dir):
+    from go_web_mapreduce_spark.operators.multimodal import (
+        AUDIO_BYTES,
+        FP_WIN,
+        FP_WINDOWS,
+        q_audio_fingerprint,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select("source", "text").collect()
+    fps = []
+    for r in docs:
+        raw = r["text"].encode("utf-8")
+        if not raw or len(raw) != len(r["text"]):
+            continue  # the ASCII gate both engines apply
+        pcm = (raw * (-(-AUDIO_BYTES // len(raw))))[:AUDIO_BYTES]
+        samples = [
+            pcm[2 * i] + 256 * pcm[2 * i + 1] for i in range(AUDIO_BYTES // 2)
+        ]
+        en = [
+            sum(s * s for s in samples[w * FP_WIN : (w + 1) * FP_WIN])
+            for w in range(FP_WINDOWS)
+        ]
+        fp = "".join(
+            "1" if en[k + 1] > en[k] else "0" for k in range(FP_WINDOWS - 1)
+        )
+        fps.append((r["source"], fp))
+    per_src: dict = defaultdict(list)
+    spread: dict = defaultdict(set)
+    for src, fp in fps:
+        per_src[src].append(fp)
+        spread[fp].add(src)
+
+    got = {r["source"]: r for r in q_audio_fingerprint(spark, sf_dir).collect()}
+    assert set(got) == set(per_src)
+    for src, lst in per_src.items():
+        g = got[src]
+        assert g["n_clips"] == len(lst)
+        assert g["distinct_fps"] == len(set(lst))
+        assert g["n_dup_within"] == len(lst) - len(set(lst))
+        assert g["n_shared_fp"] == sum(1 for fp in lst if len(spread[fp]) >= 2)
+
+def test_scene_cut_counts_are_consistent(spark, sf_dir):
+    rows = q_video_scene_cut(spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert r["n_transitions"] == r["n_videos"] * (VIDEO_FRAMES - 1)
+        assert 0 <= r["n_cuts"] <= r["n_transitions"]
+        # every counted cut contributes at least the threshold to the sum
+        assert r["diff_sum"] >= r["n_cuts"] * SCENE_CUT_SUM
+        # 16x16 uint8 frames bound any single transition diff
+        assert 0 <= r["max_diff"] <= 255 * 256

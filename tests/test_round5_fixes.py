@@ -1,78 +1,13 @@
-"""Round-5 ADVICE items, each pinned by a test:
-
-1. decode_gif refuses animated/multi-image GIFs (ADVICE r4 #3) — the
-   module's refuse-don't-fake posture: silently decoding only the first
-   frame would be a wrong answer, not a degraded one;
-2. encode_jpeg_gray/encode_jpeg_color validate quant tables fit 8-bit DQT
-   entries (ADVICE r4 #4) — >255 previously wrapped via astype(uint8),
-   emitting a file whose stored tables disagreed with those applied;
-3. q_csv_roundtrip pins the null/empty CSV dialect (ADVICE r4 #1): a
-   corpus containing empty and null texts must survive the round trip
-   with n_unique/sum_len intact.
+"""Round-5 ADVICE items, each pinned by a test. q_csv_roundtrip pins the
+null/empty CSV dialect (ADVICE r4 #1): a corpus containing empty and null
+texts must survive the round trip with n_unique/sum_len intact.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from go_web_mapreduce_spark.functions.text import tokens
-
-from go_web_mapreduce_spark.functions.gif import decode_gif, encode_gif
-from go_web_mapreduce_spark.functions.jpeg import (
-    encode_jpeg_color,
-    encode_jpeg_gray,
-)
-
-
-def _animated_gif() -> bytes:
-    """Append a second image (copy of the first) before the trailer."""
-    px = np.zeros((4, 4, 3), np.uint8)
-    px[0, 0] = (255, 0, 0)
-    data = bytearray(encode_gif(px))
-    assert data[-1] == 0x3B
-    # locate the first image descriptor (0x2C) after the 13-byte header +
-    # global color table; splice a second copy of everything from there
-    # to the block terminator, in front of the trailer
-    pos = 13 + 3 * (2 << (data[10] & 0x07))
-    frame = bytes(data[pos:-1])  # descriptor .. block terminator
-    return bytes(data[:-1]) + frame + b"\x3b"
-
-
-def test_gif_single_image_roundtrip_still_works():
-    px = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
-    assert np.array_equal(decode_gif(encode_gif(px)), px)
-
-
-def test_gif_animated_refused():
-    with pytest.raises(ValueError, match="trailer|animated|multi-image"):
-        decode_gif(_animated_gif())
-
-
-def test_gif_missing_trailer_refused():
-    px = np.zeros((4, 4, 3), np.uint8)
-    data = encode_gif(px)[:-1]  # strip the 0x3B trailer
-    with pytest.raises(ValueError, match="trailer|animated|multi-image"):
-        decode_gif(data)
-
-
-def test_jpeg_gray_quant_range_validated():
-    px = np.zeros((8, 8), np.uint8)
-    with pytest.raises(ValueError, match="quant"):
-        encode_jpeg_gray(px, quant=256)
-    with pytest.raises(ValueError, match="quant"):
-        encode_jpeg_gray(px, quant=0)
-    encode_jpeg_gray(px, quant=255)  # boundary is legal
-
-
-def test_jpeg_color_quant_range_validated():
-    px = np.zeros((8, 8, 3), np.uint8)
-    with pytest.raises(ValueError, match="quant"):
-        encode_jpeg_color(px, quant=300)
-    with pytest.raises(ValueError, match="quant"):
-        encode_jpeg_color(px, quant=2, chroma_quant=256)
-    encode_jpeg_color(px, quant=255, chroma_quant=255)
 
 
 def test_csv_dialect_preserves_empty_and_null(spark, tmp_path):

@@ -1,5 +1,5 @@
 """Tests for the round-8 additions: Adamic–Adar link prediction,
-passage-level dedup, multinomial naive Bayes, perceptual-hash image dedup."""
+passage-level dedup, multinomial naive Bayes."""
 
 from __future__ import annotations
 
@@ -148,63 +148,6 @@ def test_naive_bayes_matches_pure_python_replay(spark, sf_dir):
     }
     assert got == dict(confusion)
     assert sum(got.values()) == len(test)
-
-
-def test_image_phash_is_container_invariant_and_matches_replay(spark, sf_dir):
-    import numpy as np
-
-    from go_web_mapreduce_spark.operators.multimodal import (
-        IMG_H,
-        IMG_W,
-        PHASH_GRID,
-        decode_payload,
-        encode_bmp,
-        encode_gif,
-        encode_png,
-        q_image_dedup_phash,
-    )
-
-    # same pixels through all three containers -> identical perceptual hash
-    def ahash(px):
-        g = px.astype("int64")[::2, ::2][:PHASH_GRID, :PHASH_GRID].sum(axis=2)
-        return tuple((PHASH_GRID * PHASH_GRID * g >= g.sum()).ravel())
-
-    raw = b"the quick brown fox jumps over the lazy dog 0123456789 " * 14
-    n_px = IMG_W * IMG_H * 3
-    px = np.frombuffer((raw * 2)[:n_px], np.uint8).reshape(IMG_H, IMG_W, 3)
-    h_bmp = ahash(decode_payload("image/bmp", encode_bmp(px)))
-    h_png = ahash(decode_payload("image/png", encode_png(px)))
-    h_gif = ahash(decode_payload("image/gif", encode_gif(px)))
-    assert h_bmp == h_png == h_gif
-    # flipping bright pixels to dark must change the hash
-    px2 = px.copy()
-    px2[0, 0:8] = 255
-    assert ahash(px2) != h_bmp
-
-    # per-source census matches a pure-python replay over the tiled bytes
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text"
-    ).collect()
-    by_src: dict = defaultdict(list)
-    for r in docs:
-        raw = r["text"].encode("utf-8")
-        if not raw or len(raw) != len(r["text"]):
-            continue
-        reps = -(-n_px // len(raw))
-        px = np.frombuffer((raw * reps)[:n_px], np.uint8).reshape(IMG_H, IMG_W, 3)
-        by_src[r["source"]].append(ahash(px))
-    spread: dict = defaultdict(set)
-    for src, hs in by_src.items():
-        for h in hs:
-            spread[h].add(src)
-    got = {r["source"]: r for r in q_image_dedup_phash(spark, sf_dir).collect()}
-    assert set(got) == set(by_src)
-    for src, hs in by_src.items():
-        g = got[src]
-        assert g["n_images"] == len(hs)
-        assert g["distinct_hashes"] == len(set(hs))
-        assert g["n_dup_within"] == len(hs) - len(set(hs))
-        assert g["n_shared_hash"] == sum(1 for h in hs if len(spread[h]) >= 2)
 
 
 def test_profile_table_matches_pandas_census(spark, sf_dir):
@@ -623,48 +566,6 @@ def test_mutual_info_matches_bruteforce_and_is_nonnegative(spark, sf_dir):
         assert r["mi_nats"] == pytest.approx(mi, rel=1e-9, abs=1e-12)
         # MI of a true joint distribution is non-negative (Gibbs)
         assert r["mi_nats"] >= -1e-12
-
-
-def test_audio_fingerprint_matches_pure_python_replay(spark, sf_dir):
-    from go_web_mapreduce_spark.operators.multimodal import (
-        AUDIO_BYTES,
-        FP_WIN,
-        FP_WINDOWS,
-        q_audio_fingerprint,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("source", "text").collect()
-    fps = []
-    for r in docs:
-        raw = r["text"].encode("utf-8")
-        if not raw or len(raw) != len(r["text"]):
-            continue  # the ASCII gate both engines apply
-        pcm = (raw * (-(-AUDIO_BYTES // len(raw))))[:AUDIO_BYTES]
-        samples = [
-            pcm[2 * i] + 256 * pcm[2 * i + 1] for i in range(AUDIO_BYTES // 2)
-        ]
-        en = [
-            sum(s * s for s in samples[w * FP_WIN : (w + 1) * FP_WIN])
-            for w in range(FP_WINDOWS)
-        ]
-        fp = "".join(
-            "1" if en[k + 1] > en[k] else "0" for k in range(FP_WINDOWS - 1)
-        )
-        fps.append((r["source"], fp))
-    per_src: dict = defaultdict(list)
-    spread: dict = defaultdict(set)
-    for src, fp in fps:
-        per_src[src].append(fp)
-        spread[fp].add(src)
-
-    got = {r["source"]: r for r in q_audio_fingerprint(spark, sf_dir).collect()}
-    assert set(got) == set(per_src)
-    for src, lst in per_src.items():
-        g = got[src]
-        assert g["n_clips"] == len(lst)
-        assert g["distinct_fps"] == len(set(lst))
-        assert g["n_dup_within"] == len(lst) - len(set(lst))
-        assert g["n_shared_fp"] == sum(1 for fp in lst if len(spread[fp]) >= 2)
 
 
 def test_embedding_outliers_matches_numpy(spark, sf_dir):

@@ -1,5 +1,5 @@
-"""Round-9 operators: bounded k-core peeling, NDCG@k ranking eval, and
-video scene-cut detection — semantic invariants beyond the oracle hash."""
+"""Round-9 operators: bounded k-core peeling and NDCG@k ranking eval —
+semantic invariants beyond the oracle hash."""
 
 from __future__ import annotations
 
@@ -12,11 +12,6 @@ from go_web_mapreduce_spark.operators.ml import (
     NDCG_K,
     _NDCG_W,
     q_ndcg,
-)
-from go_web_mapreduce_spark.operators.multimodal import (
-    SCENE_CUT_SUM,
-    VIDEO_FRAMES,
-    q_video_scene_cut,
 )
 
 
@@ -80,18 +75,6 @@ def test_ndcg_bounded_and_ideal_dominates(spark, sf_dir):
         if r["idcg_scaled"] > 0:
             assert 0.0 <= r["ndcg"] <= 1.0
         assert r["n_parts"] > 0
-
-
-def test_scene_cut_counts_are_consistent(spark, sf_dir):
-    rows = q_video_scene_cut(spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert r["n_transitions"] == r["n_videos"] * (VIDEO_FRAMES - 1)
-        assert 0 <= r["n_cuts"] <= r["n_transitions"]
-        # every counted cut contributes at least the threshold to the sum
-        assert r["diff_sum"] >= r["n_cuts"] * SCENE_CUT_SUM
-        # 16x16 uint8 frames bound any single transition diff
-        assert 0 <= r["max_diff"] <= 255 * 256
 
 
 def test_key_skew_census_consistency(spark, sf_dir):

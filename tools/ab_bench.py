@@ -3,7 +3,8 @@
 The sandbox host's speed drifts by 2-3x across minutes, so raw seconds from
 runs taken at different times are not comparable. This harness runs the SAME
 query list in two checkouts in alternating fresh processes, several rounds,
-and reports per-query medians with the min-max range and every round's
+and reports per-query medians with the quartiles (q1-q3, the spread a
+change median is judged against), the min-max range and every round's
 seconds of each side, plus a calibration spin and the 1-minute loadavg per
 round. A query name may be listed once.
 
@@ -97,21 +98,26 @@ def main() -> None:
                   f"loadavg {os.getloadavg()[0]:.2f}",
                   file=sys.stderr, flush=True)
 
-    def side(tag: str, n: str) -> tuple[float, str, str]:
+    def side(tag: str, n: str) -> tuple[float, str, str, str]:
         xs = [r[n] for r in acc[tag]]
-        return (statistics.median(xs), f"{min(xs):.3f}-{max(xs):.3f}",
+        # inclusive quartiles interpolate between rounds, as numpy's do
+        q1, _, q3 = (statistics.quantiles(xs, n=4, method="inclusive")
+                     if len(xs) > 1 else xs * 3)
+        return (statistics.median(xs), f"{q1:.3f}-{q3:.3f}",
+                f"{min(xs):.3f}-{max(xs):.3f}",
                 " ".join(f"{x:.3f}" for x in xs))
 
-    print(f"{'query (median, min-max)':32s} {'before':>20s} {'after':>20s}  ratio"
-          "  per round: before | after")
+    print(f"{'query (median, q1-q3, min-max)':32s} {'before':>33s} "
+          f"{'after':>33s}  ratio  per round: before | after")
     tb = ta = 0.0
     for n in args.names:
-        b, rb, xb = side("before", n)
-        a, ra, xa = side("after", n)
+        b, qb, rb, xb = side("before", n)
+        a, qa, ra, xa = side("after", n)
         tb += b; ta += a
-        print(f"{n:32s} {b:7.3f} {rb:>12s} {a:7.3f} {ra:>12s}  {a/b:5.2f}"
-              f"  {xb} | {xa}")
-    print(f"{'TOTAL (sum of medians)':32s} {tb:7.3f} {'':12s} {ta:7.3f} {'':12s}  {ta/tb:5.2f}")
+        print(f"{n:32s} {b:7.3f} {qb:>12s} {rb:>12s} {a:7.3f} {qa:>12s} "
+              f"{ra:>12s}  {a/b:5.2f}  {xb} | {xa}")
+    print(f"{'TOTAL (sum of medians)':32s} {tb:7.3f} {'':25s} {ta:7.3f} "
+          f"{'':25s}  {ta/tb:5.2f}")
     spins_b = [r["__spin__"] for r in acc["before"]]
     spins_a = [r["__spin__"] for r in acc["after"]]
     print(f"spins before={spins_b} after={spins_a}")
